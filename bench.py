@@ -83,9 +83,8 @@ def run_bench(sf_dir: str, cpus: int, pages_rows: int | None = None) -> dict:
     throughput["kg_pages_per_sec"] = round(pages_rows / timings["kg_pipeline"], 1)
 
     # --- skos_forward (reference-comparable: concepts/sec) ------------------
-    # local strategy: a vocabulary is driver-sized; rendering one document
-    # through the distributed fixpoint would pay ~12 scheduler jobs for
-    # nothing (see operators.render.render_text_local)
+    # a vocabulary is driver-sized: one guarded collect plus the DFS
+    # kernel (see operators.render.render_text_local)
     n_concepts = 22_100  # BASELINE.md measurement size
     vt = synthesize_vocab(spark, n_concepts).localCheckpoint(eager=True)
     from skosconverter_spark.operators.render import render_text_local

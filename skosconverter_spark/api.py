@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
-from skosconverter_spark.operators.render import document_rows, render_documents, render_text_local
+from skosconverter_spark.operators.render import render_documents, render_text_local
 from skosconverter_spark.operators.validate import gate, validation_report
 from skosconverter_spark.sources.docs import docs_from_directory
 from skosconverter_spark.sources.parse_udf import doc_errors, extract_triples, ok_triples
@@ -133,8 +133,7 @@ def document_rows_per_doc(extracted: DataFrame, config: EngineConfig) -> DataFra
     vocabularies renders fully in parallel)."""
     import pandas as pd
 
-    from skosconverter_spark.operators.render import _DOC_ROWS_SCHEMA
-    from skosconverter_spark.plans.local_dfs import dfs_rows_local
+    from skosconverter_spark.plans.local_dfs import _DOC_ROWS_SCHEMA, dfs_rows_local
 
     src = extracted.filter(F.col("status") == "ok").select(
         "src_url", "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"

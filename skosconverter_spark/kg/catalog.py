@@ -183,7 +183,9 @@ class SnapshotCatalogAdapter:
             json.dumps(
                 {
                     "snapshot_id": v,
-                    "parent_snapshot_id": versions[-1] if versions else None,
+                    # the committed snapshot this write was staged
+                    # against; commit() re-stamps it at the pointer swap
+                    "parent_snapshot_id": self._current_version(base),
                     "manifest": manifest,
                     "summary": {},
                 },
@@ -192,15 +194,23 @@ class SnapshotCatalogAdapter:
         )
         self._inflight[str(base)] = v
 
+    def _committed_chain(self, base: Path) -> set[int]:
+        chain: set[int] = set()
+        v = self._current_version(base)
+        while v is not None and v not in chain:
+            chain.add(v)
+            v = self._load_meta(base, v)["parent_snapshot_id"]
+        return chain
+
     def _resolve(self, base: Path, snapshot_id: int | None) -> int:
         if snapshot_id is not None:
-            # time travel is over COMMITTED snapshots: an explicit id
-            # beyond the committed hint is either this instance's own
-            # in-flight write (visible to its writer) or a crash orphan,
-            # which must stay invisible
+            # time travel is over COMMITTED snapshots: the committed chain
+            # (hint -> parent -> ...) plus this instance's own in-flight
+            # write. A crash orphan is on no chain, whatever its id —
+            # including one numbered below a later commit
             committed = self._current_version(base)
             if snapshot_id != self._inflight.get(str(base)) and (
-                committed is None or snapshot_id > committed
+                snapshot_id not in self._committed_chain(base)
             ):
                 raise ValueError(
                     f"snapshot {snapshot_id} at {base} is not committed "
@@ -238,6 +248,11 @@ class SnapshotCatalogAdapter:
             v = self._versions(base)[-1]
         meta_path = self._meta_dir(base) / f"v{v}.json"
         meta = json.loads(meta_path.read_text())
+        # the parent is the version this commit replaces, so walking
+        # parents from the hint visits committed snapshots only
+        prev = self._current_version(base)
+        if prev != v:
+            meta["parent_snapshot_id"] = prev
         meta["summary"] = {
             self._COMMIT_PROP: input_fingerprint,
             "stage": stage,

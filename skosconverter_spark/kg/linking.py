@@ -7,9 +7,9 @@ at all in this stage.
 Score model (deterministic):
 - surface_jaccard: |tokens(mention) ∩ tokens(label)| / |union| — 1.0 for
   exact dictionary hits, discounts partial alt-label matches.
-- context_tfidf: cosine similarity between the page's token TF-IDF
-  vector and the concept's profile (its labels + definition tokens),
-  with document frequencies computed over the page corpus.
+- context_tfidf: cosine similarity between the page's mention TF-IDF
+  vector (vocabulary surfaces found on the page) and the concept's
+  surface set, with document frequencies computed over the pages.
 - score = 0.5 * surface_jaccard + 0.5 * context_tfidf; candidates below
   ``threshold`` are dropped (the theta part of J11 applied after the
   equi candidate-gen join).
@@ -19,106 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from skosconverter_spark.config import (
-    SKOS_ALT_LABEL,
-    SKOS_DEFINITION,
-    SKOS_PREF_LABEL,
-)
-
-_TOKEN_SPLIT = r"[^\w']+"
-
-
-def _tokens(col):
-    return F.filter(F.split(F.lower(col), _TOKEN_SPLIT), lambda t: t != F.lit(""))
-
-
-def page_tokens(pages_text: DataFrame) -> DataFrame:
-    """(url, token, tf): term frequencies per page."""
-    return (
-        pages_text.select("url", F.explode(_tokens(F.col("text"))).alias("token"))
-        .groupBy("url", "token")
-        .agg(F.count("*").alias("tf"))
-    )
-
-
-def concept_profile_tokens(triples: DataFrame) -> DataFrame:
-    """(uri, token): distinct tokens of a concept's labels + definition."""
-    src = triples.filter(
-        F.col("pred").isin(SKOS_PREF_LABEL, SKOS_ALT_LABEL, SKOS_DEFINITION)
-    ).select(F.col("subj").alias("uri"), F.col("obj").alias("text"))
-    return (
-        src.select("uri", F.explode(_tokens(F.col("text"))).alias("token"))
-        .distinct()
-    )
-
-
-def tfidf_context_scores(pages_text: DataFrame, triples: DataFrame) -> DataFrame:
-    """(url, uri, context_tfidf): cosine(page TF-IDF, concept profile),
-    computed over the PROFILE token subspace.
-
-    Scale rationale: the full page vocabulary is dominated by filler
-    words that occur on every page — grouping or joining 10^8+ token
-    rows on such keys is a textbook skewed shuffle. Restricting both the
-    weights and the page norm to tokens that occur in some concept
-    profile (a broadcast-sized set) makes every heavy path either
-    map-side (broadcast semi-join) or a uniform url-keyed partial
-    aggregation; the skewed token-keyed shuffle disappears entirely.
-    Scores are therefore "cosine in the profile subspace" — a standard
-    candidate-restricted scoring definition.
-    """
-    prof = concept_profile_tokens(triples)  # (uri, token) — broadcast-sized
-    prof_tokens = prof.select("token").distinct()
-    pt = (
-        pages_text.select("url", F.explode(_tokens(F.col("text"))).alias("token"))
-        .join(F.broadcast(prof_tokens), "token")  # map-side filter
-        .groupBy("url", "token")
-        .agg(F.count("*").alias("tf"))
-    )
-    # n_pages in-plan (contract: one row per url) — same no-driver-job
-    # rationale as mention_context_scores
-    np_df = pages_text.agg(F.count("*").alias("n_pages"))
-    # document frequency only for profile tokens: bounded by the profile
-    # vocabulary, so this aggregation is small no matter the corpus size
-    df_tok = pt.groupBy("token").agg(F.countDistinct("url").alias("df"))
-    tfidf = (
-        pt.join(F.broadcast(df_tok), "token")
-        .crossJoin(F.broadcast(np_df))
-        .withColumn(
-            "w",
-            F.col("tf")
-            * F.log(
-                (F.col("n_pages") + F.lit(1)).cast("double") / (F.col("df") + 1.0)
-            ),
-        )
-        .select("url", "token", "w")
-    )
-    page_norm = tfidf.groupBy("url").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("page_norm")
-    )
-    prof_norm = prof.groupBy("uri").agg(
-        F.sqrt(F.count("*").cast("double")).alias("prof_norm")
-    )
-    dots = (
-        tfidf.join(F.broadcast(prof), "token")
-        .groupBy("url", "uri")
-        .agg(F.sum("w").alias("dot"))
-    )
-    return (
-        dots.join(page_norm, "url")
-        .join(F.broadcast(prof_norm), "uri")
-        .select(
-            "url",
-            "uri",
-            (
-                F.col("dot")
-                / F.when(
-                    F.col("page_norm") * F.col("prof_norm") > 0,
-                    F.col("page_norm") * F.col("prof_norm"),
-                ).otherwise(F.lit(1.0))
-            ).alias("context_tfidf"),
-        )
-    )
 
 
 def mention_context_scores(

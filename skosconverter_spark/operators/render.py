@@ -6,15 +6,18 @@ Byte-identical re-expressions of the reference's four forward sinks
 
 Split in two layers:
 
-1. ``document_rows`` — Spark: the distributed DFS row table
-   (plans.hierarchy.dfs_rows) joined with per-concept metadata
-   (plans.views.concept_meta). All heavy relational work happens here.
+1. ``document_rows`` — the DFS row table with full concept metadata,
+   from the engine's one DFS (plans.local_dfs, exposed as a DataFrame by
+   plans.hierarchy.dfs_rows). A vocabulary is driver-sized, so this is
+   one guarded collect plus a Python pass; inputs above
+   ``MAX_DRIVER_ROWS`` triples fail loudly (an explicit non-goal).
+   ``sort_path`` is the row's zero-padded emission ordinal.
 2. ``render_{csv,markdown,json,xml}_rows`` — pure-Python kernels over
    the ordered row list of ONE vocabulary document. Golden-path string
    assembly stays in Python (never Spark SQL string functions — §4.3)
-   so bytes can't drift. They run inside ``applyInPandas`` — one
-   vocabulary = one group = one Python call; a corpus of many
-   vocabularies renders in parallel across executors.
+   so bytes can't drift. ``render_documents`` runs them inside
+   ``applyInPandas`` — one vocabulary = one group = one Python call; a
+   corpus of many vocabularies renders in parallel across executors.
 """
 
 from __future__ import annotations
@@ -27,8 +30,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
-from skosconverter_spark.plans import views
 from skosconverter_spark.plans.hierarchy import dfs_rows
+from skosconverter_spark.plans.local_dfs import (  # noqa: F401 - re-exported
+    _DOC_ROWS_SCHEMA,
+    MAX_DRIVER_ROWS,
+    collect_triples,
+    dfs_rows_local,
+    guard_driver_sized,
+)
 
 CSV_FIELDS = [
     "Title", "Parent", "Concept Scheme", "Definition",
@@ -36,88 +45,16 @@ CSV_FIELDS = [
 ]
 
 
-_DOC_ROWS_SCHEMA = (
-    "sort_path array<string>, section string, origin string, uri string, "
-    "label string, level int, parent_label string, scheme_label string, "
-    "top_idx int, has_children boolean, definition string, "
-    "alt_labels array<string>, notation string, same_as array<string>, "
-    "related array<string>"
-)
-
-
-# Driver-sized paths collect a whole table to one machine. A vocabulary
-# is driver-sized by construction; a pages/triples CORPUS is not. The
-# guard turns that contract into a loud failure instead of a driver OOM.
-MAX_DRIVER_ROWS = 5_000_000
-
-
-def guard_driver_sized(df: DataFrame, what: str, max_rows: int = MAX_DRIVER_ROWS) -> None:
-    """Fail fast when a driver-sized path is misused on a corpus-sized
-    table. limit(max_rows+1).count() early-exits the scan — it never
-    moves max_rows rows anywhere, it just proves whether row max_rows+1
-    exists. Set max_rows=0 to disable (caller takes responsibility)."""
-    if max_rows and df.limit(max_rows + 1).count() > max_rows:
-        raise ValueError(
-            f"{what} materializes rows on the driver and is gated at "
-            f"{max_rows} rows; this input exceeds it. Use the distributed "
-            "sink (render_documents / write_graph_table) for corpus-sized "
-            "tables, or raise max_rows explicitly."
-        )
-
-
-def collect_triples(triples: DataFrame, max_rows: int = MAX_DRIVER_ROWS) -> list[tuple]:
-    guard_driver_sized(triples, "collect_triples", max_rows)
-    # Arrow transfer instead of .collect(): the row path deserializes one
-    # pickled Row per triple and pays a __getattr__ field lookup per
-    # column (measured ~2 s of the 3 s skos_forward collect at 177k
-    # triples); the Arrow path moves six columnar batches and converts
-    # each column once.
-    tbl = triples.select(
-        "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
-    ).toArrow()
-    return list(
-        zip(*(tbl.column(i).to_pylist() for i in range(tbl.num_columns)))
-    )
-
-
 def render_text_local(triples: DataFrame, fmt: str, config: EngineConfig) -> str:
-    """Whole-document render via the driver-local DFS kernel
-    (plans.local_dfs): one collect, zero fixpoint jobs. The right path
-    for driver-sized vocabularies — which SKOS vocabularies are by
-    construction; the distributed dfs_rows path covers graphs that
-    aren't. A differential test pins both to identical output."""
-    from skosconverter_spark.plans.local_dfs import dfs_rows_local
-
+    """Whole-document render straight from the DFS kernel: one guarded
+    collect, no intermediate DataFrame."""
     rows = dfs_rows_local(collect_triples(triples), config)
     return _KERNELS[fmt](rows)
 
 
-def document_rows(
-    triples: DataFrame, config: EngineConfig, strategy: str = "distributed"
-) -> DataFrame:
-    """DFS-ordered row table with full concept metadata, ready to render.
-
-    strategy='local' collects the (vocabulary-sized) triples and runs
-    the driver-local kernel; 'distributed' runs the min-path fixpoint.
-    """
-    if strategy == "local":
-        from skosconverter_spark.plans.local_dfs import dfs_rows_local
-
-        local = dfs_rows_local(collect_triples(triples), config)
-        return triples.sparkSession.createDataFrame(local, _DOC_ROWS_SCHEMA)
-    rows = dfs_rows(triples, config)
-    meta = views.concept_meta(
-        triples, config, rows.filter(F.col("uri").isNotNull()).select("uri").distinct()
-    ).drop("label")
-    empty = F.array().cast("array<string>")
-    return rows.join(meta, "uri", "left").select(
-        rows["*"],
-        F.coalesce(F.col("definition"), F.lit("")).alias("definition"),
-        F.coalesce(F.col("alt_labels"), empty).alias("alt_labels"),
-        F.coalesce(F.col("notation"), F.lit("")).alias("notation"),
-        F.coalesce(F.col("same_as"), empty).alias("same_as"),
-        F.coalesce(F.col("related"), empty).alias("related"),
-    )
+def document_rows(triples: DataFrame, config: EngineConfig) -> DataFrame:
+    """DFS-ordered row table with full concept metadata, ready to render."""
+    return dfs_rows(triples, config)
 
 
 # --------------------------------------------------------------------------

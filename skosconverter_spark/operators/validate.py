@@ -339,9 +339,11 @@ def _bounded(df: DataFrame, k: int) -> tuple[list, int]:
 
 
 def _labels_for(triples: DataFrame, uris: set[str]) -> dict[str, str]:
-    """simple_label restricted to the uris a report line will actually
-    print — a broadcast semi-filter BEFORE the label aggregation, so the
-    driver never holds a label for every concept in the vocabulary."""
+    """_get_simple_label (skos_converter.py:376-394: pref → alt → rdfs
+    in store order, no language ranking) restricted to the uris a report
+    line will actually print — a broadcast semi-filter BEFORE the label
+    aggregation, so the driver never holds a label for every concept in
+    the vocabulary."""
     if not uris:
         return {}
     uris_df = triples.sparkSession.createDataFrame(

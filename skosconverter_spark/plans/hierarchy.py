@@ -1,22 +1,20 @@
-"""Hierarchy assembly + distributed DFS ordering (SURVEY.md §2.3, §2.8).
+"""Hierarchy assembly as DataFrame ops, plus the DFS row table (SURVEY.md §2.3, §2.8).
 
 Re-expresses the reference's ``build_hierarchy`` (skos_converter.py:664-762)
-and the recursive ``add_concept_row`` DFS (:772-802) as DataFrame ops:
+as set-oriented relational pieces, which the validator and the driver
+queries consume directly:
 
 - scheme/top-concept/inScheme assignment → rank-window picks (J2, J3)
 - parent-child union-of-inverses with one-parent-per-child dedup (J4)
 - orphan detection → anti-join logic (J7)
-- global DFS pre-order → an iterative min-path fixpoint over
-  ``sort_path ARRAY<STRING>`` (O3/R3): array comparison is lexicographic,
-  so ordering by sort_path IS the reference's depth-first emission order
-  with alphabetical siblings, and taking the MIN path per concept IS the
-  reference's ``processed``-set first-encounter-wins semantics.
 
-Scale posture: every step is a shuffle on uri-sized keys; the fixpoint
-iterates at most max_iterations times (hierarchies are shallow — the
-reference warns above 7 levels, hard-caps depth 20), localCheckpointing
-each round to truncate lineage. The same fixpoint shape serves the
-web-scale canonicalization closure (kg.canonicalize).
+The DFS itself (``add_concept_row``, :772-802) has exactly one
+implementation: the driver-local kernel in plans.local_dfs. ``dfs_rows``
+is its DataFrame face — one guarded collect, the kernel, then
+``createDataFrame``. A vocabulary is driver-sized by construction (the
+reference holds it in RAM too); vocabularies above
+``local_dfs.MAX_DRIVER_ROWS`` (5M) triples are an explicit non-goal and
+fail loudly in the guard instead of degrading.
 
 Determinism register (SURVEY §2.10 D6): the reference resolves
 multi-parent/multi-scheme ties by Python set iteration order; this
@@ -39,12 +37,11 @@ from skosconverter_spark.config import (
     SKOS_TOP_CONCEPT_OF,
 )
 from skosconverter_spark.plans import views
-
-_SI_PAD = 8  # zero-pad width for scheme sort index path segments
-
-
-def _pad(col):
-    return F.lpad(col.cast("string"), _SI_PAD, "0")
+from skosconverter_spark.plans.local_dfs import (
+    _DOC_ROWS_SCHEMA,
+    collect_triples,
+    dfs_rows_local,
+)
 
 
 def scheme_table(triples: DataFrame, config: EngineConfig) -> DataFrame:
@@ -173,285 +170,25 @@ def orphan_concepts(
 
 
 def dfs_rows(triples: DataFrame, config: EngineConfig) -> DataFrame:
-    """The global DFS pre-order row table every sink renders from.
+    """The global DFS pre-order row table every sink renders from, with
+    full concept metadata (``local_dfs._DOC_ROWS_SCHEMA``).
 
-    Returns one row per emitted entry:
-    (sort_path ARRAY<STRING>, section, origin, uri, label, level,
-     parent_label, scheme_label, top_idx)
+    One row per emitted entry. section ∈ scheme | top | orph_hdr |
+    orphan | unass_hdr | unassigned — header/scheme rows are synthetic
+    (uri null for headers); ``origin`` is 'anchor' for rows emitted at
+    their section slot, 'child' for rows emitted under a tree parent, and
+    'ghost' for a top slot whose concept was already emitted elsewhere
+    (the reference still appends its '' separator at that slot when
+    i > 0 — to_notion_markdown :1017-1019 — so the renderer needs the
+    slot even though no block is emitted); ``level`` is the CSV level
+    (markdown/xml/json levels derive from it per section).
+    ``has_children`` mirrors ``concept in hierarchy`` in the reference
+    (:911-915). ``sort_path`` is the zero-padded emission ordinal:
+    ordering by it IS the reference's depth-first emission order.
 
-    section ∈ scheme | top | orph_hdr | orphan | unass_hdr | unassigned —
-    header/scheme rows are synthetic (uri null for headers); ``origin``
-    is 'anchor' for rows emitted at their section slot, 'child' for rows
-    emitted under a tree parent, and 'ghost' for a top slot whose concept
-    was already emitted elsewhere (the reference still appends its ''
-    separator at that slot when i > 0 — to_notion_markdown :1017-1019 —
-    so the renderer needs the slot even though no block is emitted);
-    ``level`` is the CSV level (markdown/xml/json levels derive from it
-    per section). ``has_children`` mirrors ``concept in hierarchy`` in
-    the reference (:911-915): true iff the node has tree children after
-    the one-parent dedup, whether or not those children were emitted
-    under it — it drives the markdown pre-children separator.
-
-    Algorithm (O3/R3): seed candidate paths at every anchor slot, then
-    iterate path(child) = path(parent) + [label, uri] keeping the MIN
-    path per concept until fixpoint. First-encounter-wins (the
-    reference's ``processed`` set) is exactly the min path; concepts
-    unreachable from any anchor (pure cycles) are never emitted, like
-    the reference.
+    Collects the triples through the driver-size guard (fails above
+    MAX_DRIVER_ROWS) and runs the kernel; concepts unreachable from any
+    anchor (pure cycles) are never emitted, like the reference.
     """
-    spark = triples.sparkSession
-    schemes_df = scheme_table(triples, config).cache()
-
-    all_nodes = (
-        views.concepts(triples)
-        .select("uri")
-        .unionByName(top_concept_slots(triples).select(F.col("concept").alias("uri")))
-        .unionByName(parent_edges(triples).select(F.col("child").alias("uri")))
-        .distinct()
-    )
-    label_df = views.best_label(triples, config, all_nodes).cache()
-
-    def with_label(df, key):
-        return df.join(
-            label_df.select(F.col("uri").alias(key), F.col("label").alias(f"{key}_label")),
-            key,
-        )
-
-    # ---- anchor candidates -------------------------------------------------
-    tops = with_label(
-        top_concept_slots(triples).join(schemes_df, "scheme"), "concept"
-    )
-    w_top = Window.partitionBy("scheme").orderBy("concept_label", "concept")
-    top_anchor = tops.withColumn("top_idx", F.row_number().over(w_top) - 1).select(
-        F.col("concept").alias("uri"),
-        F.array(
-            _pad(F.col("scheme_sort_idx")),
-            F.lit("1"),
-            F.col("concept_label"),
-            F.col("concept"),
-        ).alias("sort_path"),
-        F.lit("top").alias("section"),
-        F.lit("anchor").alias("origin"),
-        F.lit(1).alias("level"),
-        F.concat(F.lit("[SCHEME] "), F.col("scheme_label")).alias("parent_label"),
-        F.col("scheme_label"),
-        "top_idx",
-        F.col("concept_label").alias("label"),
-    )
-
-    edges_raw = parent_edges(triples).localCheckpoint(eager=True)
-    orphans = orphan_concepts(triples, schemes_df, edges_raw).cache()
-    orph_scheme = with_label(
-        orphans.filter(F.col("scheme").isNotNull()).join(schemes_df, "scheme"),
-        "concept",
-    ).select(
-        F.col("concept").alias("uri"),
-        F.array(
-            _pad(F.col("scheme_sort_idx")),
-            F.lit("2"),
-            F.col("concept_label"),
-            F.col("concept"),
-        ).alias("sort_path"),
-        F.lit("orphan").alias("section"),
-        F.lit("anchor").alias("origin"),
-        F.lit(2).alias("level"),
-        F.concat(F.lit("[Other Concepts in "), F.col("scheme_label"), F.lit("]")).alias(
-            "parent_label"
-        ),
-        F.col("scheme_label"),
-        F.lit(-1).alias("top_idx"),
-        F.col("concept_label").alias("label"),
-    )
-
-    orph_unassigned = with_label(
-        orphans.filter(F.col("scheme").isNull()), "concept"
-    ).select(
-        F.col("concept").alias("uri"),
-        F.array(
-            F.lit("~" * _SI_PAD), F.lit("3"), F.col("concept_label"), F.col("concept")
-        ).alias("sort_path"),
-        F.lit("unassigned").alias("section"),
-        F.lit("anchor").alias("origin"),
-        F.lit(1).alias("level"),
-        F.lit("[UNASSIGNED CONCEPTS]").alias("parent_label"),
-        F.lit("").alias("scheme_label"),
-        F.lit(-1).alias("top_idx"),
-        F.col("concept_label").alias("label"),
-    )
-
-    ROW_FIELDS = [
-        "sort_path", "section", "origin", "level",
-        "parent_label", "scheme_label", "top_idx", "label",
-    ]
-
-    def min_by_path(df):
-        # first-encounter-wins == smallest sort_path; struct min is a hash
-        # aggregation (partial map-side), cheaper than a sort window
-        return df.groupBy("uri").agg(
-            F.min(F.struct(*ROW_FIELDS)).alias("r")
-        ).select("uri", "r.*")
-
-    anchors = min_by_path(
-        top_anchor.unionByName(orph_scheme).unionByName(orph_unassigned)
-    ).localCheckpoint(eager=True)
-
-    edges = with_label(edges_raw, "child")
-
-    def expand(frontier):
-        return edges.join(frontier.withColumnRenamed("uri", "parent"), "parent").select(
-            F.col("child").alias("uri"),
-            F.concat(
-                F.col("sort_path"), F.array(F.col("child_label"), F.col("child"))
-            ).alias("sort_path"),
-            "section",
-            F.lit("child").alias("origin"),
-            (F.col("level") + 1).alias("level"),
-            F.col("label").alias("parent_label"),
-            "scheme_label",
-            F.lit(-1).alias("top_idx"),
-            F.col("child_label").alias("label"),
-        )
-
-    # Fast path: after one-parent dedup the graph is a forest, so unless
-    # some ANCHOR node is also an edge child (a top concept that is
-    # somebody's narrower — rare), every node has exactly one candidate
-    # path and plain level-synchronous BFS needs no per-round min-merge.
-    conflicted = not anchors.join(
-        edges.select(F.col("child").alias("uri")), "uri", "semi"
-    ).isEmpty()
-
-    if not conflicted:
-        parts = [anchors]
-        frontier = anchors
-        for _ in range(config.max_iterations):
-            frontier = expand(frontier)
-            if frontier.isEmpty():
-                break
-            parts.append(frontier)
-        best = parts[0]
-        for p in parts[1:]:
-            best = best.unionByName(p)
-    else:
-        # min-merge fixpoint: keep the smallest path per node each round,
-        # re-expanding only improved rows, until no path improves
-        best = anchors
-        frontier = anchors
-        for _ in range(config.max_iterations):
-            merged = min_by_path(best.unionByName(expand(frontier))).localCheckpoint(
-                eager=True
-            )
-            frontier = (
-                merged.join(
-                    best.select("uri", F.col("sort_path").alias("old_path")),
-                    "uri",
-                    "left",
-                )
-                .filter(
-                    F.col("old_path").isNull()
-                    | (F.col("sort_path") != F.col("old_path"))
-                )
-                .drop("old_path")
-            )
-            improved = frontier.count()
-            best = merged
-            if improved == 0:
-                break
-
-    # downstream consumes the row table through joins (has_children,
-    # ghost winner lookup) — on the BFS fast path `best` is a deep union
-    # of chained join frontiers, and planning joins over that tree (let
-    # alone referencing it twice) explodes AQE stage creation; one eager
-    # lineage cut keeps every following join trivially plannable
-    best = best.localCheckpoint(eager=True)
-
-    # has_children = node is a parent in the deduped hierarchy (the
-    # reference's `concept in hierarchy`), independent of emission
-    parents = edges_raw.select(F.col("parent").alias("uri")).distinct()
-    concept_rows = (
-        best.join(parents.withColumn("hc", F.lit(True)), "uri", "left")
-        .withColumn("has_children", F.coalesce(F.col("hc"), F.lit(False)))
-        .drop("hc")
-    )
-
-    # ghost separator slots: a top slot at index i>0 whose concept's
-    # winning (min) path is a DIFFERENT slot — the reference appends ''
-    # there and skips the block (processed-set semantics)
-    ghost_rows = (
-        top_anchor.filter(F.col("top_idx") > 0)
-        .join(best.select("uri", F.col("sort_path").alias("win_path")), "uri")
-        .filter(F.col("sort_path") != F.col("win_path"))
-        .select(
-            "uri", "sort_path", "section",
-            F.lit("ghost").alias("origin"),
-            "level", "parent_label", "scheme_label", "top_idx", "label",
-            F.lit(False).alias("has_children"),
-        )
-    )
-
-    # ---- synthetic scheme / section-header rows -----------------------------
-    scheme_rows = schemes_df.select(
-        F.col("scheme").alias("uri"),
-        F.array(_pad(F.col("scheme_sort_idx")), F.lit("0")).alias("sort_path"),
-        F.lit("scheme").alias("section"),
-        F.lit("anchor").alias("origin"),
-        F.lit(0).alias("level"),
-        F.lit("").alias("parent_label"),
-        "scheme_label",
-        F.lit(-1).alias("top_idx"),
-        F.col("scheme_label").alias("label"),
-        F.lit(False).alias("has_children"),
-    )
-    orph_hdr = (
-        orphans.filter(F.col("scheme").isNotNull())
-        .join(schemes_df, "scheme")
-        .groupBy("scheme", "scheme_label", "scheme_sort_idx")
-        .count()
-        .select(
-            F.lit(None).cast("string").alias("uri"),
-            F.array(_pad(F.col("scheme_sort_idx")), F.lit("2")).alias("sort_path"),
-            F.lit("orph_hdr").alias("section"),
-            F.lit("anchor").alias("origin"),
-            F.lit(1).alias("level"),
-            F.concat(F.lit("[SCHEME] "), F.col("scheme_label")).alias("parent_label"),
-            "scheme_label",
-            F.lit(-1).alias("top_idx"),
-            F.concat(
-                F.lit("[Other Concepts in "), F.col("scheme_label"), F.lit("]")
-            ).alias("label"),
-            F.lit(False).alias("has_children"),
-        )
-    )
-    unass_hdr = (
-        orphans.filter(F.col("scheme").isNull())
-        .groupBy()
-        .count()
-        .filter(F.col("count") > 0)
-        .select(
-            F.lit(None).cast("string").alias("uri"),
-            F.array(F.lit("~" * _SI_PAD), F.lit("3")).alias("sort_path"),
-            F.lit("unass_hdr").alias("section"),
-            F.lit("anchor").alias("origin"),
-            F.lit(0).alias("level"),
-            F.lit("").alias("parent_label"),
-            F.lit("").alias("scheme_label"),
-            F.lit(-1).alias("top_idx"),
-            F.lit("[UNASSIGNED CONCEPTS]").alias("label"),
-            F.lit(False).alias("has_children"),
-        )
-    )
-
-    out = (
-        concept_rows.select(
-            "uri", "sort_path", "section", "origin", "level",
-            "parent_label", "scheme_label", "top_idx", "label", "has_children",
-        )
-        .unionByName(ghost_rows)
-        .unionByName(scheme_rows)
-        .unionByName(orph_hdr)
-        .unionByName(unass_hdr)
-    )
-    schemes_df.unpersist()
-    orphans.unpersist()
-    label_df.unpersist()
-    edges.unpersist()
-    return out
+    rows = dfs_rows_local(collect_triples(triples), config)
+    return triples.sparkSession.createDataFrame(rows, _DOC_ROWS_SCHEMA)

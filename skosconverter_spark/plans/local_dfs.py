@@ -1,25 +1,31 @@
-"""Driver-local hierarchy/DFS kernel — the small-vocabulary fast path.
+"""The engine's one DFS: hierarchy assembly + pre-order walk, driver-local.
 
 A SKOS vocabulary is driver-sized by construction (controlled thesauri
 top out at millions of triples; the 100 TB axis of this engine is the
-*pages* corpus, not the concept graph). For that regime, running ~12
-Spark jobs of fixpoint machinery per vocabulary is pure scheduling
-overhead, exactly like shuffling a broadcast-sized join side. This
-kernel computes the same DFS row table as plans.hierarchy.dfs_rows in
-one pass of plain Python over the collected triple list — semantically
-the reference's build_hierarchy + add_concept_row recursion
-(skos_converter.py:664-802) with seq-ordered determinism.
+*pages* corpus, not the concept graph). So the row table every sink
+renders from is computed in one pass of plain Python over the collected
+triple list — semantically the reference's build_hierarchy +
+add_concept_row recursion (skos_converter.py:664-802), which also runs
+in one process over a vocabulary held in RAM, with seq-ordered
+determinism.
 
-Strategy selection lives in operators.render.document_rows:
-'distributed' = hierarchy.dfs_rows (arbitrarily large graphs),
-'local' = this kernel. A differential pytest asserts both produce
-identical rows on the fixture corpus, so the fast path can never drift
-from the scale path.
+Whole-table callers (plans.hierarchy.dfs_rows, the DataFrame face of
+this kernel, and render.render_text_local) reach it through
+``collect_triples``, which fails loudly above ``MAX_DRIVER_ROWS`` (5M)
+triples instead of OOMing the driver: vocabularies beyond that are an
+explicit non-goal. The batch path (api.document_rows_per_doc) runs it
+once per document inside a grouped-map call. The golden-byte tests pin
+its renders against the reference's bytes.
+
+``sort_path`` is a one-element array holding the row's zero-padded
+emission ordinal; consumers only sort by it.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
+
+from pyspark.sql import DataFrame
 
 from skosconverter_spark.config import (
     EngineConfig,
@@ -41,6 +47,49 @@ from skosconverter_spark.config import (
 
 _KIND_RANK = {SKOS_PREF_LABEL: 0, SKOS_ALT_LABEL: 1, RDFS_LABEL: 2}
 
+_DOC_ROWS_SCHEMA = (
+    "sort_path array<string>, section string, origin string, uri string, "
+    "label string, level int, parent_label string, scheme_label string, "
+    "top_idx int, has_children boolean, definition string, "
+    "alt_labels array<string>, notation string, same_as array<string>, "
+    "related array<string>"
+)
+
+
+# Driver-sized paths collect a whole table to one machine. A vocabulary
+# is driver-sized by construction; a pages/triples CORPUS is not. The
+# guard turns that contract into a loud failure instead of a driver OOM.
+MAX_DRIVER_ROWS = 5_000_000
+
+
+def guard_driver_sized(df: DataFrame, what: str, max_rows: int = MAX_DRIVER_ROWS) -> None:
+    """Fail fast when a driver-sized path is misused on a corpus-sized
+    table. limit(max_rows+1).count() early-exits the scan — it never
+    moves max_rows rows anywhere, it just proves whether row max_rows+1
+    exists. Set max_rows=0 to disable (caller takes responsibility)."""
+    if max_rows and df.limit(max_rows + 1).count() > max_rows:
+        raise ValueError(
+            f"{what} materializes rows on the driver and is gated at "
+            f"{max_rows} rows; this input exceeds it. Use the distributed "
+            "sink (render_documents / write_graph_table) for corpus-sized "
+            "tables, or raise max_rows explicitly."
+        )
+
+
+def collect_triples(triples: DataFrame, max_rows: int = MAX_DRIVER_ROWS) -> list[tuple]:
+    guard_driver_sized(triples, "collect_triples", max_rows)
+    # Arrow transfer instead of .collect(): the row path deserializes one
+    # pickled Row per triple and pays a __getattr__ field lookup per
+    # column (measured ~2 s of the 3 s skos_forward collect at 177k
+    # triples); the Arrow path moves six columnar batches and converts
+    # each column once.
+    tbl = triples.select(
+        "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
+    ).toArrow()
+    return list(
+        zip(*(tbl.column(i).to_pylist() for i in range(tbl.num_columns)))
+    )
+
 
 def _local_part(uri: str) -> str:
     return str(uri).split("/")[-1].split("#")[-1]
@@ -48,8 +97,8 @@ def _local_part(uri: str) -> str:
 
 def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
     """triple_rows: iterable of (subj, pred, obj, obj_is_literal,
-    obj_lang, seq). Returns DFS row dicts matching dfs_rows' schema plus
-    metadata columns (ready for the render kernels)."""
+    obj_lang, seq). Returns one dict per ``_DOC_ROWS_SCHEMA`` row, in
+    emission order (ready for the render kernels)."""
     triple_rows = sorted(triple_rows, key=lambda t: t[5])
 
     by_sp: dict[tuple, list] = defaultdict(list)  # (subj, pred) -> [(obj, lang)]

@@ -1,7 +1,7 @@
 """Relational views over the ``triples`` table (SURVEY.md §1.2).
 
 Every helper here replaces a per-node ``graph.objects(...)`` lookup in
-the reference (skos_converter.py:623-657, :376-464) with one
+the reference (skos_converter.py:376-464) with one
 set-oriented DataFrame op: a filter+project, a broadcast join, or a
 min(seq) window. Nothing in this module calls Python per row.
 
@@ -13,22 +13,17 @@ the smallest seq.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import (
     EngineConfig,
-    OWL_SAME_AS,
     RDF_TYPE,
     RDFS_LABEL,
     SKOS_ALT_LABEL,
     SKOS_CONCEPT,
     SKOS_CONCEPT_SCHEME,
-    SKOS_DEFINITION,
-    SKOS_NOTATION,
     SKOS_PREF_LABEL,
-    SKOS_RELATED,
-    SKOS_SCOPE_NOTE,
 )
 
 
@@ -129,65 +124,6 @@ def best_label(triples: DataFrame, config: EngineConfig, uris: DataFrame | None 
     )
 
 
-def simple_label(triples: DataFrame, uris: DataFrame | None = None) -> DataFrame:
-    """_get_simple_label (skos_converter.py:376-394): pref[0] → alt[0] →
-    rdfs[0] → URI fragment. NO language ranking — store order only."""
-    lab = labels(triples)
-    picked = lab.groupBy("uri").agg(
-        F.min(F.struct("kind_rank", "seq", "label"))["label"].alias("label")
-    )
-    if uris is None:
-        return picked
-    return uris.select("uri").join(picked, "uri", "left").select(
-        "uri", F.coalesce(F.col("label"), uri_local_part(F.col("uri"))).alias("label")
-    )
-
-
-def _first_by_seq(triples: DataFrame, pred: str, out_name: str) -> DataFrame:
-    return (
-        triples.filter(F.col("pred") == pred)
-        .select(F.col("subj").alias("uri"), F.col("obj").alias(out_name), "seq")
-        .groupBy("uri")
-        .agg(F.min(F.struct("seq", out_name))[out_name].alias(out_name))
-    )
-
-
-def definitions(triples: DataFrame) -> DataFrame:
-    """get_definition (F4): first definition, scopeNote fallback, '' default
-    applied at join time via coalesce (skos_converter.py:628-637)."""
-    d = _first_by_seq(triples, SKOS_DEFINITION, "definition")
-    s = _first_by_seq(triples, SKOS_SCOPE_NOTE, "scope_note")
-    return (
-        d.join(s, "uri", "full")
-        .select(
-            "uri",
-            F.coalesce(F.col("definition"), F.col("scope_note")).alias("definition"),
-        )
-    )
-
-
-def notations(triples: DataFrame) -> DataFrame:
-    """get_notation (F5): notations[0] (skos_converter.py:654-657)."""
-    return _first_by_seq(triples, SKOS_NOTATION, "notation")
-
-
-def collected(triples: DataFrame, pred: str, out_name: str) -> DataFrame:
-    """Multi-valued objects in store order → (uri, array) — the
-    get_alt_labels / get_same_as / get_related list shape
-    (skos_converter.py:639-652). sort_array on (seq, value) structs then
-    project: insertion order preserved exactly."""
-    return (
-        triples.filter(F.col("pred") == pred)
-        .groupBy(F.col("subj").alias("uri"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", F.col("obj").alias("v")))),
-                lambda s: s["v"],
-            ).alias(out_name)
-        )
-    )
-
-
 def labels_by_language(triples: DataFrame, pred: str = SKOS_PREF_LABEL) -> DataFrame:
     """get_all_labels_by_language (skos_converter.py:453-464, A6):
     (uri, labels MAP<lang, ARRAY<label>>), 'no-lang' for untagged,
@@ -216,74 +152,4 @@ def uri_fragment_from_label(col):
     API parity as a pure column expression.)"""
     return F.lower(
         F.regexp_replace(F.regexp_replace(col, r"[^\w\s-]", ""), r"\s+", "_")
-    )
-
-
-def concept_meta(triples: DataFrame, config: EngineConfig, uris: DataFrame) -> DataFrame:
-    """The full per-concept metadata record (_get_concept_metadata,
-    skos_converter.py:934-944) for every uri in ``uris``.
-
-    ONE hash aggregation over the relevant triples computes every field
-    (conditional min-struct picks and seq-sorted collect_lists), then one
-    join onto ``uris`` — instead of five separate join+window subtrees.
-    The reference does ~7 indexed lookups per concept; this is the same
-    information in a single shuffle.
-    """
-    rel = triples.filter(
-        F.col("pred").isin(
-            SKOS_PREF_LABEL, SKOS_ALT_LABEL, RDFS_LABEL, SKOS_DEFINITION,
-            SKOS_SCOPE_NOTE, SKOS_NOTATION, OWL_SAME_AS, SKOS_RELATED,
-        )
-    )
-    kind_rank = (
-        F.when(F.col("pred") == SKOS_PREF_LABEL, F.lit(0))
-        .when(F.col("pred") == SKOS_ALT_LABEL, F.lit(1))
-        .when(F.col("pred") == RDFS_LABEL, F.lit(2))
-    )
-    lang_rank = _lang_rank(config)
-    src = rel.select(
-        F.col("subj").alias("uri"),
-        "pred",
-        F.col("obj"),
-        F.coalesce(F.col("obj_lang")).alias("lang"),
-        "seq",
-        kind_rank.alias("kind_rank"),
-    ).withColumn("lang_rank", lang_rank)
-
-    def first_of(pred):
-        return F.min(
-            F.when(F.col("pred") == pred, F.struct("seq", "obj"))
-        )["obj"]
-
-    def list_of(pred):
-        return F.transform(
-            F.array_sort(
-                F.collect_list(F.when(F.col("pred") == pred, F.struct("seq", "obj")))
-            ),
-            lambda s: s["obj"],
-        )
-
-    agg = src.groupBy("uri").agg(
-        F.min(
-            F.when(
-                F.col("kind_rank").isNotNull(),
-                F.struct("kind_rank", "lang_rank", "seq", F.col("obj").alias("label")),
-            )
-        )["label"].alias("label"),
-        first_of(SKOS_DEFINITION).alias("definition_"),
-        first_of(SKOS_SCOPE_NOTE).alias("scope_note_"),
-        first_of(SKOS_NOTATION).alias("notation"),
-        list_of(SKOS_ALT_LABEL).alias("alt_labels"),
-        list_of(OWL_SAME_AS).alias("same_as"),
-        list_of(SKOS_RELATED).alias("related"),
-    )
-    empty = F.array().cast("array<string>")
-    return uris.select("uri").join(agg, "uri", "left").select(
-        "uri",
-        F.coalesce(F.col("label"), uri_local_part(F.col("uri"))).alias("label"),
-        F.coalesce(F.col("definition_"), F.col("scope_note_"), F.lit("")).alias("definition"),
-        F.coalesce(F.col("alt_labels"), empty).alias("alt_labels"),
-        F.coalesce(F.col("notation"), F.lit("")).alias("notation"),
-        F.coalesce(F.col("same_as"), empty).alias("same_as"),
-        F.coalesce(F.col("related"), empty).alias("related"),
     )

@@ -83,7 +83,9 @@ def test_driver_size_guards_trip(spark):
     corpus-sized table fails loudly instead of OOMing the driver."""
     from skosconverter_spark.operators.export import export_turtle_text
     from skosconverter_spark.operators.render import (
+        MAX_DRIVER_ROWS,
         collect_triples,
+        document_rows,
         guard_driver_sized,
         render_document_text,
     )
@@ -104,3 +106,34 @@ def test_driver_size_guards_trip(spark):
     # render path: the guard fires before any row is pulled to the driver
     with pytest.raises(ValueError):
         render_document_text(big.selectExpr("subj"), "csv", max_rows=10)
+    # the DFS row table: a vocabulary over the driver limit is a
+    # non-goal that fails in the guard, never a collect
+    over = spark.range(MAX_DRIVER_ROWS + 1).selectExpr(
+        "cast(id as string) subj", "'p' pred", "'o' obj",
+        "true obj_is_literal", "cast(null as string) obj_lang", "id seq",
+    )
+    with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
+        document_rows(over, EngineConfig())
+
+
+def test_document_rows_job_count(spark):
+    """The DFS row table is one guarded collect plus the driver-local
+    kernel: a handful of Spark jobs, not one per hierarchy level."""
+    from skosconverter_spark.operators.render import document_rows
+    from skosconverter_spark.tpch_bridge import triples_from_tpch
+
+    from .test_extensions import SF_DIR
+
+    triples = triples_from_tpch(spark, SF_DIR).cache()
+    triples.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("document_rows_job_count", "document_rows job count")
+    try:
+        rows = document_rows(triples, EngineConfig()).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("document_rows_job_count")
+    assert len(rows) == 34
+    assert len(jobs) <= 4, f"document_rows issued {len(jobs)} Spark jobs"
+    triples.unpersist()

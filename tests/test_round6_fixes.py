@@ -184,3 +184,23 @@ def test_time_travel_rejects_uncommitted_orphan(spark, tmp_path):
         fresh.read(spark, base, snapshot_id=1)
     writer.commit(base, "t", "fp", 5, 0)
     assert fresh.read(spark, base, snapshot_id=1).count() == 5
+
+
+def test_time_travel_rejects_orphan_below_later_commit(spark, tmp_path):
+    """An orphan numbered BELOW a later commit is still not committed:
+    explicit ids resolve only along the committed parent chain."""
+    from skosconverter_spark.kg.catalog import SnapshotCatalogAdapter
+
+    base = tmp_path / "t"
+    ad = SnapshotCatalogAdapter()
+    ad.write(spark.range(1).toDF("doc_id"), base)
+    ad.commit(base, "t", "fp1", 1, 0)  # v1 committed
+    SnapshotCatalogAdapter().write(spark.range(2).toDF("doc_id"), base)  # v2 orphan
+    ad.write(spark.range(3).toDF("doc_id"), base)
+    ad.commit(base, "t", "fp3", 3, 0)  # v3 committed
+    fresh = SnapshotCatalogAdapter()
+    with pytest.raises(ValueError, match="not committed"):
+        fresh.read(spark, base, snapshot_id=2)
+    assert fresh.read(spark, base).count() == 3
+    assert fresh.read(spark, base, snapshot_id=1).count() == 1
+    assert ad._load_meta(base, 3)["parent_snapshot_id"] == 1
