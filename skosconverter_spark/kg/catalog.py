@@ -7,7 +7,7 @@ never to the storage layer directly, so swapping parquet → Iceberg is
 an adapter change, not a pipeline rewrite:
 
 ==================  ============================  =========================
-concern             ParquetCatalogAdapter          IcebergCatalogAdapter
+concern             ParquetCatalogAdapter          Iceberg table (production)
 ==================  ============================  =========================
 stage output        <base>/data parquet files      table commit (snapshot)
 commit record       <base>/_MANIFEST.json          snapshot summary props
@@ -17,11 +17,13 @@ partitioned sink    write.partitionBy(...)         partitioned + bucketed
                                                    table spec
 ==================  ============================  =========================
 
-Both adapters expose the same five operations; everything else in
-kg/pipeline.py is adapter-agnostic.
+An adapter exposes five operations (committed_fingerprint, write, read,
+partition_rows, commit); everything else in kg/pipeline.py is
+adapter-agnostic. No Iceberg adapter ships: it needs the Iceberg runtime
+on the session, which an offline build cannot have.
 
-``SnapshotCatalogAdapter`` sits between them: it runs in this sandbox
-(plain filesystem, no Iceberg jars) but implements the Iceberg
+``SnapshotCatalogAdapter`` sits between the two columns: it runs on a
+plain filesystem (no Iceberg jars) but implements the Iceberg
 HadoopCatalog COMMIT PROTOCOL faithfully — immutable snapshot data
 directories, versioned metadata JSON carrying summary properties and
 manifest entries, and a version-hint pointer swap as the atomic commit.
@@ -265,66 +267,3 @@ class SnapshotCatalogAdapter:
         tmp.write_text(str(v))
         tmp.replace(hint)  # the atomic pointer swap IS the commit
         self._inflight.pop(str(base), None)
-
-
-@dataclass
-class IcebergCatalogAdapter:
-    """The production shape: each stage is an Iceberg table under
-    ``namespace``; a commit IS the snapshot, the resume fingerprint is
-    read from the snapshot the stage was committed against, lineage
-    comes from the snapshot's manifest entries. Requires an Iceberg
-    catalog on the session (spark.sql.catalog.<name> configured with
-    the iceberg runtime jar — not present in this sandbox, hence the
-    guarded probe)."""
-
-    namespace: str = "kg"
-    catalog: str = "spark_catalog"
-
-    _COMMIT_PROP = "skosconverter.input_fingerprint"
-
-    def _table(self, base: Path) -> str:
-        return f"{self.catalog}.{self.namespace}.{base.name}"
-
-    def _require_iceberg(self, spark: SparkSession) -> None:
-        if (
-            spark.conf.get(f"spark.sql.catalog.{self.catalog}", None) is None
-        ):  # pragma: no cover - sandbox has no iceberg runtime
-            raise NotImplementedError(
-                f"IcebergCatalogAdapter needs spark.sql.catalog.{self.catalog} "
-                "configured with the Iceberg runtime; this environment has "
-                "plain parquet only — use ParquetCatalogAdapter."
-            )
-
-    def committed_fingerprint(self, base: Path) -> str | None:  # pragma: no cover
-        raise NotImplementedError(
-            "read snapshot summary property "
-            f"{self._COMMIT_PROP} of {self._table(base)} (requires catalog)"
-        )
-
-    def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:  # pragma: no cover
-        self._require_iceberg(df.sparkSession)
-        w = df.writeTo(self._table(base)).using("iceberg")
-        if partition_by:
-            # one varargs call: DataFrameWriterV2.partitionedBy REPLACES the
-            # partitioning each call, so a per-column loop would keep only
-            # the last column of a multi-column spec
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*(F.col(c) for c in partition_by))
-        w.createOrReplace()
-
-    def read(self, spark: SparkSession, base: Path) -> DataFrame:  # pragma: no cover
-        self._require_iceberg(spark)
-        return spark.read.table(self._table(base))
-
-    def partition_rows(self, base: Path) -> list[tuple[int, int]]:  # pragma: no cover
-        raise NotImplementedError(
-            f"SELECT file, record_count FROM {self._table(base)}.files "
-            "(requires catalog)"
-        )
-
-    def commit(self, base: Path, stage: str, input_fingerprint: str, rows: int, wall_ms: int) -> None:  # pragma: no cover
-        raise NotImplementedError(
-            "ALTER TABLE ... SET TBLPROPERTIES on the committed snapshot "
-            "(requires catalog)"
-        )

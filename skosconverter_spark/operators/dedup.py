@@ -185,13 +185,20 @@ def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
       reference (see shingles_of_tokens), and the shuffle carries one
       token array per doc rather than n exploded shingle rows;
     - the exchange hash-partitions BY doc_id, which satisfies the
-      clustered distribution of the dedup aggregation AND of every
-      downstream doc-keyed consumer — the k×md5 minhash signature
-      groupBy, the prefix-filter row_number window, the verify-stage
-      collect_set — so none of them shuffles again. Before this the
-      signature stage's partial aggregation alone shipped 134 MB of hex
-      partials (docs × partitions × k rows: round-robin input put every
-      doc in every partition)."""
+      clustered distribution of the dedup aggregation and, when a
+      doc-keyed consumer reads this plan directly (e.g.
+      ``minhash_band_rows(doc_shingles(docs))``), of that consumer too,
+      so it adds no exchange. Before this the signature stage's partial
+      aggregation alone shipped 134 MB of hex partials (docs ×
+      partitions × k rows: round-robin input put every doc in every
+      partition).
+
+    The production callers — ``minhash_lsh_pairs`` and
+    ``ngram_jaccard_pairs`` / ``ngram_jaccard_prefix`` — localCheckpoint
+    this table first. A checkpoint drops the output partitioning, so a
+    doc-keyed aggregation or window after it plans its own exchange: the
+    no-extra-exchange property holds only for the non-checkpointed
+    composition."""
     par = docs.sparkSession.sparkContext.defaultParallelism
     toks = docs.select(
         "doc_id", norm_tokens(F.col(text_col)).alias("_toks")

@@ -1,8 +1,8 @@
 """Hierarchy assembly as DataFrame ops, plus the DFS row table (SURVEY.md §2.3, §2.8).
 
 Re-expresses the reference's ``build_hierarchy`` (skos_converter.py:664-762)
-as set-oriented relational pieces, which the validator and the driver
-queries consume directly:
+as set-oriented relational pieces, which the driver queries consume
+directly (the validator runs driver-local, operators/validate.py):
 
 - scheme/top-concept/inScheme assignment → rank-window picks (J2, J3)
 - parent-child union-of-inverses with one-parent-per-child dedup (J4)

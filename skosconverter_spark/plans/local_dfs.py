@@ -45,8 +45,6 @@ from skosconverter_spark.config import (
     SKOS_TOP_CONCEPT_OF,
 )
 
-_KIND_RANK = {SKOS_PREF_LABEL: 0, SKOS_ALT_LABEL: 1, RDFS_LABEL: 2}
-
 _DOC_ROWS_SCHEMA = (
     "sort_path array<string>, section string, origin string, uri string, "
     "label string, level int, parent_label string, scheme_label string, "
@@ -95,24 +93,28 @@ def _local_part(uri: str) -> str:
     return str(uri).split("/")[-1].split("#")[-1]
 
 
-def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
-    """triple_rows: iterable of (subj, pred, obj, obj_is_literal,
-    obj_lang, seq). Returns one dict per ``_DOC_ROWS_SCHEMA`` row, in
-    emission order (ready for the render kernels)."""
-    triple_rows = sorted(triple_rows, key=lambda t: t[5])
+def index_triples(triple_rows) -> tuple[dict, dict, dict]:
+    """The engine's one triple index, shared by the DFS and the
+    validator. triple_rows: iterable of (subj, pred, obj, obj_is_literal,
+    obj_lang, seq). Every list is in store order (seq order), so a first
+    element is the reference's ``labels[0]`` pick.
 
-    by_sp: dict[tuple, list] = defaultdict(list)  # (subj, pred) -> [(obj, lang)]
-    by_po: dict[tuple, list] = defaultdict(list)  # (pred, obj) -> [subj]
-    by_p: dict[str, list] = defaultdict(list)     # pred -> [(subj, obj, seq)]
-    for subj, pred, obj, _lit, lang, seq in triple_rows:
+    Returns (by_sp, by_po, by_p): (subj, pred) -> [(obj, lang)],
+    (pred, obj) -> [subj], pred -> [(subj, obj, lang, seq)]."""
+    by_sp: dict[tuple, list] = defaultdict(list)
+    by_po: dict[tuple, list] = defaultdict(list)
+    by_p: dict[str, list] = defaultdict(list)
+    for subj, pred, obj, _lit, lang, seq in sorted(triple_rows, key=lambda t: t[5]):
         by_sp[(subj, pred)].append((obj, lang))
         by_po[(pred, obj)].append(subj)
-        by_p[pred].append((subj, obj, seq))
+        by_p[pred].append((subj, obj, lang, seq))
+    return by_sp, by_po, by_p
 
-    concepts = list(dict.fromkeys(by_po[(RDF_TYPE, SKOS_CONCEPT)]))
-    schemes = list(dict.fromkeys(by_po[(RDF_TYPE, SKOS_CONCEPT_SCHEME)]))
-    concept_set = set(concepts)
 
+def best_label_fn(by_sp: dict, config: EngineConfig):
+    """LanguageHelper.get_best_label over the index: prefLabel → altLabel
+    → rdfs:label, the preferred language first, then the fallback list,
+    then store order; the uri's local part when unlabeled."""
     lang_ranks: dict[str | None, int] = {}
     r = 0
     if config.preferred_language:
@@ -146,6 +148,19 @@ def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
         _bl_cache[uri] = out
         return out
 
+    return best_label
+
+
+def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
+    """triple_rows: iterable of (subj, pred, obj, obj_is_literal,
+    obj_lang, seq). Returns one dict per ``_DOC_ROWS_SCHEMA`` row, in
+    emission order (ready for the render kernels)."""
+    by_sp, by_po, by_p = index_triples(triple_rows)
+    concepts = list(dict.fromkeys(by_po[(RDF_TYPE, SKOS_CONCEPT)]))
+    schemes = list(dict.fromkeys(by_po[(RDF_TYPE, SKOS_CONCEPT_SCHEME)]))
+    concept_set = set(concepts)
+    best_label = best_label_fn(by_sp, config)
+
     def meta(uri: str) -> dict:
         defs = by_sp.get((uri, SKOS_DEFINITION)) or by_sp.get((uri, SKOS_SCOPE_NOTE))
         notations = by_sp.get((uri, SKOS_NOTATION))
@@ -176,17 +191,17 @@ def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
 
     # one-parent-per-child dedup by min seq (J4, D6 policy)
     cand: dict[str, tuple] = {}
-    for subj, obj, seq in by_p[SKOS_NARROWER]:
+    for subj, obj, _, seq in by_p[SKOS_NARROWER]:
         if subj in concept_set and subj != obj and (obj not in cand or seq < cand[obj][0]):
             cand[obj] = (seq, subj)
-    for subj, obj, seq in by_p[SKOS_BROADER]:
+    for subj, obj, _, seq in by_p[SKOS_BROADER]:
         if obj in concept_set and subj != obj and (subj not in cand or seq < cand[subj][0]):
             cand[subj] = (seq, obj)
     children_of: dict[str, list] = defaultdict(list)
     for child, (_, parent) in cand.items():
         children_of[parent].append(child)
 
-    has_broader = {s for s, _, _ in by_p[SKOS_BROADER]}
+    has_broader = {s for s, *_ in by_p[SKOS_BROADER]}
     orphans = [
         c for c in concepts
         if c not in has_broader and c not in top_set and c not in cand

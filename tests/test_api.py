@@ -114,6 +114,17 @@ def test_driver_size_guards_trip(spark):
     )
     with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
         document_rows(over, EngineConfig())
+    # the validator is driver-local too: the report and each public
+    # check fail in the same guard
+    from skosconverter_spark.operators.validate import (
+        circular_references,
+        validation_report,
+    )
+
+    with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
+        validation_report(over, EngineConfig())
+    with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
+        circular_references(over, EngineConfig())
 
 
 def test_document_rows_job_count(spark):
@@ -136,4 +147,29 @@ def test_document_rows_job_count(spark):
     jobs = sc.statusTracker().getJobIdsForGroup("document_rows_job_count")
     assert len(rows) == 34
     assert len(jobs) <= 4, f"document_rows issued {len(jobs)} Spark jobs"
+    triples.unpersist()
+
+
+def test_validation_report_job_count(spark):
+    """The 11 checks are one guarded collect plus the driver-local
+    kernel: a handful of Spark jobs, not one or more per check and per
+    cycle/depth round."""
+    from skosconverter_spark.operators.validate import validation_report
+
+    docs = spark.createDataFrame(
+        [("vocab_cycle", "vocab_cycle", "ttl", load_fixture_text("vocab_cycle"))],
+        schema=DOCS,
+    )
+    triples = ok_triples(extract_triples(docs, EngineConfig())).cache()
+    triples.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("validation_report_job_count", "validation_report job count")
+    try:
+        issues, _ = validation_report(triples, EngineConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("validation_report_job_count")
+    assert any(line.startswith("Circular reference detected") for line in issues)
+    assert len(jobs) <= 4, f"validation_report issued {len(jobs)} Spark jobs"
     triples.unpersist()

@@ -198,14 +198,8 @@ def test_salted_repartition_bounds_skew(spark, pages):
 
 def test_catalog_adapter_seam(spark, pages, vocab, tmp_path):
     """StageRunner delegates storage/commit to a CatalogAdapter: an
-    explicit parquet adapter behaves like the default, and the Iceberg
-    adapter fails loudly (not silently) without a configured catalog."""
-    import pytest as _pytest
-
-    from skosconverter_spark.kg.catalog import (
-        IcebergCatalogAdapter,
-        ParquetCatalogAdapter,
-    )
+    explicit parquet adapter behaves like the default."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
     from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
 
     runner = StageRunner(
@@ -222,10 +216,6 @@ def test_catalog_adapter_seam(spark, pages, vocab, tmp_path):
     assert out2.count() == pages.count() and not calls
     # lineage came from the adapter's commit metadata
     assert runner.stage_metrics().count() > 0
-
-    ice = StageRunner(spark, str(tmp_path / "ice"), catalog=IcebergCatalogAdapter())
-    with _pytest.raises(NotImplementedError, match="requires catalog"):
-        ice.run_stage("10_extract", fp, lambda: pages.select("url"))
 
 
 def test_pipeline_adversarial_pages(spark, vocab, tmp_path):

@@ -126,9 +126,12 @@ def test_dot_guard_falls_back_for_other_dims(spark):
 
 
 def test_doc_shingles_partitioning_feeds_signature_agg(spark):
-    """The minhash signature groupBy(doc_id) must reuse doc_shingles'
-    doc_id hash partitioning instead of inserting its own exchange
-    (the 134 MB partial-aggregation pathology of round 6)."""
+    """Composed directly (no checkpoint between them), the minhash
+    signature groupBy(doc_id) reuses doc_shingles' doc_id hash
+    partitioning instead of inserting its own exchange (the 134 MB
+    partial-aggregation pathology of round 6). The production callers
+    (minhash_lsh_pairs, ngram_jaccard_*) localCheckpoint the shingles
+    first, which drops that partitioning; this test does not cover them."""
     from skosconverter_spark.operators.dedup import doc_shingles, minhash_band_rows
 
     docs = spark.createDataFrame(
