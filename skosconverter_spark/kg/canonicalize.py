@@ -1,18 +1,19 @@
 """Canonicalization closure (north_star; SURVEY.md §2.8 R4).
 
-Two distributed fixpoints, both driver-loop + localCheckpoint per
-iteration (lineage truncation):
-
 - ``connected_components``: equivalence closure over undirected edges
-  (skos:exactMatch ∪ owl:sameAs) via min-id label propagation — the
-  alternating small-star/large-star contraction specialized to the
-  shallow equivalence graphs vocabularies produce. Each iteration is
-  one join + one groupBy; convergence when no node's component id
-  changes. Component id = min uri in the component (deterministic).
+  (skos:exactMatch ∪ owl:sameAs, or near-duplicate doc pairs). One
+  guarded Arrow collect of the edge pairs, then ``components_local``, a
+  driver-local BFS from each component's minimum, then
+  ``createDataFrame`` (a LocalRelation, so joins against it broadcast).
+  Component id = min node id in the component. The edge set is
+  driver-sized like the vocabulary it comes from: more than
+  ``local_dfs.MAX_DRIVER_ROWS`` (5M) edges is an explicit non-goal that
+  fails loudly in ``guard_driver_sized`` before any row moves.
 
 - ``transitive_closure``: ancestor reachability over directed edges
-  (skos:broader), doubling the reach per iteration (path doubling:
-  O(log depth) rounds instead of O(depth)).
+  (skos:broader), a distributed fixpoint doubling the reach per
+  iteration (path doubling: O(log depth) rounds instead of O(depth)),
+  driver-loop + localCheckpoint per iteration (lineage truncation).
 
 ``canonicalize_triples`` rewrites subj/obj through the component map so
 all aliases collapse onto the canonical node.
@@ -20,79 +21,67 @@ all aliases collapse onto the canonical node.
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from skosconverter_spark.config import OWL_SAME_AS, SKOS_EXACT_MATCH
+from skosconverter_spark.plans.local_dfs import guard_driver_sized
+
+
+def _equivalence_pairs(triples: DataFrame) -> DataFrame:
+    return triples.filter(F.col("pred").isin(SKOS_EXACT_MATCH, OWL_SAME_AS)).select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst")
+    )
 
 
 def equivalence_edges(triples: DataFrame) -> DataFrame:
     """Undirected (src, dst) pairs from exactMatch/sameAs."""
-    e = triples.filter(F.col("pred").isin(SKOS_EXACT_MATCH, OWL_SAME_AS)).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
+    e = _equivalence_pairs(triples)
     return e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 25
-) -> DataFrame:
-    """(uri, component): min-uri label propagation to fixpoint.
+def _collect_pairs(edges: DataFrame, what: str) -> list[tuple]:
+    guard_driver_sized(edges, what)
+    tbl = edges.select("src", "dst").toArrow()
+    return list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
 
-    Nodes not in ``edges`` are their own components by definition and
-    need no rows here (callers coalesce on join).
 
-    Raises RuntimeError if the fixpoint has not converged after
-    ``max_iterations`` single-hop rounds (graph diameter > budget) —
-    a silently split component would mean silently-wrong downstream
-    results (e.g. retained near-duplicates in prepare_corpus).
-    """
-    if edges.isEmpty():
-        # no equivalence edges (the common case for a plain web corpus):
-        # skip the eager-checkpoint fixpoint machinery entirely. Empty
-        # result derives its schema from the input so callers with
-        # non-string node ids (e.g. long doc_ids) compose cleanly.
-        return edges.select(
-            F.col("src").alias("uri"), F.col("src").alias("component")
-        ).limit(0)
-    comp = (
-        edges.select(F.col("src").alias("uri"))
-        .unionByName(edges.select(F.col("dst").alias("uri")))
-        .distinct()
-        .withColumn("component", F.col("uri"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(comp.withColumnRenamed("uri", "dst"), "dst")
-            .groupBy(F.col("src").alias("uri"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_comp = (
-            comp.join(neighbor_min, "uri", "left")
-            .select(
-                "uri",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "uri")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
+def components_local(pairs, max_iterations: int = 25) -> dict:
+    """node -> min node of its component, over (a, b) pairs taken as
+    undirected. Nodes are visited in ascending order, so each unvisited
+    one is its component's minimum and a BFS from it labels the rest.
+    Python orders str by code point, which is Spark's UTF-8 binary order.
+
+    Raises RuntimeError when D + 1 > max_iterations, D being the largest
+    hop distance from a node to its component minimum (the rounds a
+    single-hop min-label propagation needs to see no change)."""
+    adj: dict = defaultdict(set)
+    for a, b in pairs:
+        if a is not None and b is not None:  # null ids never join anything
+            adj[a].add(b)
+            adj[b].add(a)
+    comp: dict = {}
+    depth = 0
+    for root in sorted(adj):
+        if root in comp:
+            continue
+        comp[root] = root
+        frontier, d = [root], 0
+        while frontier:
+            depth = max(depth, d)
+            nxt = []
+            for u in frontier:
+                for v in adj[u] - comp.keys():
+                    comp[v] = root
+                    nxt.append(v)
+            frontier, d = nxt, d + 1
+    if comp and depth + 1 > max_iterations:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations (graph diameter exceeds the budget); raise "
@@ -101,20 +90,38 @@ def connected_components(
     return comp
 
 
+def _frame(like: DataFrame, col: str, comp: dict, names: tuple[str, str]) -> DataFrame:
+    """(node, min) rows typed like ``like[col]``, as a LocalRelation."""
+    t = like.schema[col].dataType
+    schema = StructType([StructField(n, t) for n in names])
+    tbl = pa.table({names[0]: list(comp), names[1]: list(comp.values())})
+    return like.sparkSession.createDataFrame(tbl, schema)
+
+
+def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
+    """(uri, component) for every node of ``edges`` (src, dst).
+
+    Nodes not in ``edges`` are their own components by definition and
+    need no rows here (callers coalesce on join). Raises RuntimeError
+    past ``max_iterations`` (see ``components_local``) rather than
+    silently split a component (e.g. keep near-duplicates in
+    prepare_corpus)."""
+    comp = components_local(_collect_pairs(edges, "connected_components"), max_iterations)
+    return _frame(edges, "src", comp, ("uri", "component"))
+
+
 def transitive_closure(
     edges: DataFrame, max_iterations: int = 25
 ) -> DataFrame:
     """(descendant, ancestor) reachability over directed (child, parent)
-    edges, by path doubling — reach 2^k hops after k rounds."""
-    if edges.isEmpty():
-        return edges.sparkSession.createDataFrame(
-            [], "descendant string, ancestor string"
-        )
+    edges, by path doubling — reach 2^k hops after k rounds. Each round
+    counts only the new reach; the previous round's count is carried."""
     reach = edges.select(
         F.col("child").alias("descendant"), F.col("parent").alias("ancestor")
     ).distinct().localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iterations):
+    n = reach.count()
+    converged = n == 0
+    for _ in range(max_iterations if n else 0):
         doubled = (
             reach.alias("a")
             .join(
@@ -132,11 +139,10 @@ def transitive_closure(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if new_reach.count() == reach.count():
-            reach = new_reach
+        reach, n_prev, n = new_reach, n, new_reach.count()
+        if n == n_prev:
             converged = True
             break
-        reach = new_reach
     if not converged:
         raise RuntimeError(
             f"transitive_closure did not converge in {max_iterations} "
@@ -146,31 +152,40 @@ def transitive_closure(
     return reach
 
 
+def _canonical(triples: DataFrame, max_iterations: int) -> dict:
+    pairs = _collect_pairs(_equivalence_pairs(triples), "canonical_map")
+    return components_local(pairs, max_iterations)
+
+
 def canonical_map(triples: DataFrame, max_iterations: int = 25) -> DataFrame:
     """(uri, canonical): every aliased node → its component's min uri."""
-    comp = connected_components(equivalence_edges(triples), max_iterations)
-    return comp.select("uri", F.col("component").alias("canonical"))
+    return _frame(triples, "subj", _canonical(triples, max_iterations), ("uri", "canonical"))
+
+
+def _dedup(t: DataFrame) -> DataFrame:
+    return (
+        t.groupBy("subj", "pred", "obj", "obj_lang")
+        .agg(
+            # deterministic pick (min-seq discipline, D6) — see
+            # sources.parse_udf.ok_triples
+            F.min(F.struct("seq", "src_url", "obj_is_literal"))[
+                "obj_is_literal"
+            ].alias("obj_is_literal"),
+            F.min("src_url").alias("src_url"),
+            F.min("seq").alias("seq"),
+        )
+        .select("subj", "pred", "obj", "obj_is_literal", "obj_lang", "src_url", "seq")
+    )
 
 
 def canonicalize_triples(triples: DataFrame, max_iterations: int = 25) -> DataFrame:
     """Rewrite subj/obj through the canonical map (identity for nodes
     outside any equivalence class); drop equivalence self-loops; dedup."""
-    cmap = canonical_map(triples, max_iterations)
-    if cmap.isEmpty():
+    canon = _canonical(triples, max_iterations)
+    if not canon:
         # nothing to rewrite: the dedup aggregation is the whole job
-        return (
-            triples.groupBy("subj", "pred", "obj", "obj_lang")
-            .agg(
-                F.min(F.struct("seq", "src_url", "obj_is_literal"))[
-                    "obj_is_literal"
-                ].alias("obj_is_literal"),
-                F.min("src_url").alias("src_url"),
-                F.min("seq").alias("seq"),
-            )
-            .select(
-                "subj", "pred", "obj", "obj_is_literal", "obj_lang", "src_url", "seq"
-            )
-        )
+        return _dedup(triples)
+    cmap = _frame(triples, "subj", canon, ("uri", "canonical"))
     t = (
         triples.join(
             cmap.select(F.col("uri").alias("subj"), F.col("canonical").alias("subj_c")),
@@ -202,16 +217,4 @@ def canonicalize_triples(triples: DataFrame, max_iterations: int = 25) -> DataFr
             & (F.col("subj") == F.col("obj"))
         )
     )
-    return (
-        t.groupBy("subj", "pred", "obj", "obj_lang")
-        .agg(
-            # deterministic pick (min-seq discipline, D6) — see
-            # sources.parse_udf.ok_triples
-            F.min(F.struct("seq", "src_url", "obj_is_literal"))[
-                "obj_is_literal"
-            ].alias("obj_is_literal"),
-            F.min("src_url").alias("src_url"),
-            F.min("seq").alias("seq"),
-        )
-        .select("subj", "pred", "obj", "obj_is_literal", "obj_lang", "src_url", "seq")
-    )
+    return _dedup(t)

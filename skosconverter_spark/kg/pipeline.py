@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -247,111 +248,119 @@ def run_pipeline(
 
     lt = label_table(vocab_triples).localCheckpoint(eager=True)
 
-    # stage DAG: mentions and page-triples only depend on extract — submit
-    # them concurrently (SparkSession job submission is thread-safe; the
-    # scheduler interleaves their tasks, so the cluster never idles while
-    # one stage's tail tasks drain)
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import Future, ThreadPoolExecutor
 
     graph_base = Path(root) / "60_graph"
+    futures: dict[str, Future] = {}
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_mentions = pool.submit(
-            runner.run_stage,
-            "20_mentions",
-            f"{fp_pages}|{fp_vocab}",
-            lambda: scan_mentions(pages_text, vocab_triples, label_tbl=lt),
-            persist_intermediate,
+    mentions_task = partial(
+        runner.run_stage,
+        "20_mentions",
+        f"{fp_pages}|{fp_vocab}",
+        lambda: scan_mentions(pages_text, vocab_triples, label_tbl=lt),
+        persist_intermediate,
+    )
+    page_triples_task = partial(
+        runner.run_stage,
+        "40_page_triples",
+        fp_pages,
+        lambda: ok_triples(
+            extract_triples(
+                pages_text.select(
+                    F.col("url"),
+                    F.lit("md").alias("fmt"),
+                    F.col("text").alias("payload"),
+                ),
+                config,
+            )
+        ),
+        persist_intermediate,
+    )
+
+    # the scorer's vocabulary-only lookup tables depend on nothing
+    # but the label table: materialize them concurrently with the
+    # mention scan so their aggregation/broadcast rounds overlap
+    # work that must happen anyway instead of sitting on the links
+    # stage's critical path
+    from skosconverter_spark.kg.linking import vocab_score_tables
+
+    def _prebuild_score_tables():
+        jl, la = vocab_score_tables(lt)
+        return (
+            jl.localCheckpoint(eager=True),
+            la.localCheckpoint(eager=True),
         )
-        f_page_triples = pool.submit(
-            runner.run_stage,
-            "40_page_triples",
-            fp_pages,
-            lambda: ok_triples(
-                extract_triples(
-                    pages_text.select(
-                        F.col("url"),
-                        F.lit("md").alias("fmt"),
-                        F.col("text").alias("payload"),
+
+    # downstream chains as dependency-submitted futures rather than a
+    # second barrier pool: 30_links starts the moment 20_mentions is
+    # done (not at max(20, 40)), 50_canonical the moment
+    # 40_page_triples is, and the 60_graph sink overlaps the links
+    # stage instead of running after everything (r6: the graph write +
+    # read-back was ~1 s of serial tail under a 5 s links stage).
+    def _links_chain():
+        # one url-keyed exchange up front makes the whole scoring DAG
+        # downstream exchange-free: hashpartitioning(url) satisfies
+        # the clustered distribution of every aggregation and join in
+        # score_candidates / mention_context_scores / link_best
+        # (their keys all have url as a prefix — candidate distinct,
+        # tf, page_norm, dots, the ctx join, the span-winner agg), so
+        # Catalyst plans them back-to-back in one stage instead of
+        # the r6-measured chain of seven small shuffles that made
+        # 30_links the pipeline's critical path (5.6 s of 12.4 s;
+        # plan: 46 → 31 exchanges).
+        mentions_by_url = futures["mentions"].result().repartition(parts, "url")
+        return runner.run_stage(
+            "30_links",
+            f"{fp_pages}|{fp_vocab}|t={link_threshold}",
+            lambda: link_best(
+                score_candidates(
+                    mention_candidates(
+                        mentions_by_url, vocab_triples, label_tbl=lt
                     ),
-                    config,
+                    mentions_by_url,
+                    vocab_triples,
+                    threshold=link_threshold,
+                    label_tbl=lt,
+                    score_tables=futures["score_tables"].result(),
                 )
             ),
-            persist_intermediate,
         )
 
-        # the scorer's vocabulary-only lookup tables depend on nothing
-        # but the label table: materialize them concurrently with the
-        # mention scan so their aggregation/broadcast rounds overlap
-        # work that must happen anyway instead of sitting on the links
-        # stage's critical path
-        from skosconverter_spark.kg.linking import vocab_score_tables
+    def _canonical_graph_chain():
+        triples_ = runner.run_stage(
+            "50_canonical",
+            f"{fp_pages}|{fp_vocab}",
+            lambda: canonicalize_triples(
+                futures["page_triples"].result().unionByName(vocab_triples),
+                config.max_iterations,
+            ),
+        )
+        # final graph table: pred-partitioned so triple-pattern scans
+        # prune (committed through the catalog adapter like every
+        # stage; on Iceberg this is a partitioned+bucketed table spec)
+        runner.catalog.write(triples_, graph_base, partition_by=("pred",))
+        return triples_, runner.catalog.read(spark, graph_base)
 
-        def _prebuild_score_tables():
-            jl, la = vocab_score_tables(lt)
-            return (
-                jl.localCheckpoint(eager=True),
-                la.localCheckpoint(eager=True),
-            )
-
-        f_score_tables = pool.submit(_prebuild_score_tables)
-
-        # downstream chains as dependency-submitted futures rather than a
-        # second barrier pool: 30_links starts the moment 20_mentions is
-        # done (not at max(20, 40)), 50_canonical the moment
-        # 40_page_triples is, and the 60_graph sink overlaps the links
-        # stage instead of running after everything (r6: the graph write +
-        # read-back was ~1 s of serial tail under a 5 s links stage).
-        def _links_chain():
-            # one url-keyed exchange up front makes the whole scoring DAG
-            # downstream exchange-free: hashpartitioning(url) satisfies
-            # the clustered distribution of every aggregation and join in
-            # score_candidates / mention_context_scores / link_best
-            # (their keys all have url as a prefix — candidate distinct,
-            # tf, page_norm, dots, the ctx join, the span-winner agg), so
-            # Catalyst plans them back-to-back in one stage instead of
-            # the r6-measured chain of seven small shuffles that made
-            # 30_links the pipeline's critical path (5.6 s of 12.4 s;
-            # plan: 46 → 31 exchanges).
-            mentions_by_url = f_mentions.result().repartition(parts, "url")
-            return runner.run_stage(
-                "30_links",
-                f"{fp_pages}|{fp_vocab}|t={link_threshold}",
-                lambda: link_best(
-                    score_candidates(
-                        mention_candidates(
-                            mentions_by_url, vocab_triples, label_tbl=lt
-                        ),
-                        mentions_by_url,
-                        vocab_triples,
-                        threshold=link_threshold,
-                        label_tbl=lt,
-                        score_tables=f_score_tables.result(),
-                    )
-                ),
-            )
-
-        def _canonical_graph_chain():
-            triples_ = runner.run_stage(
-                "50_canonical",
-                f"{fp_pages}|{fp_vocab}",
-                lambda: canonicalize_triples(
-                    f_page_triples.result().unionByName(vocab_triples),
-                    config.max_iterations,
-                ),
-            )
-            # final graph table: pred-partitioned so triple-pattern scans
-            # prune (committed through the catalog adapter like every
-            # stage; on Iceberg this is a partitioned+bucketed table spec)
-            runner.catalog.write(triples_, graph_base, partition_by=("pred",))
-            return triples_, runner.catalog.read(spark, graph_base)
-
-        f_links = pool.submit(_links_chain)
-        f_cg = pool.submit(_canonical_graph_chain)
-        mentions = f_mentions.result()
-        page_triples = f_page_triples.result()
-        links = f_links.result()
-        triples, graph = f_cg.result()
+    # stage DAG: mentions and page-triples only depend on extract — run
+    # them concurrently (SparkSession job submission is thread-safe; the
+    # scheduler interleaves their tasks, so the cluster never idles while
+    # one stage's tail tasks drain). The two chains block on sibling
+    # futures inside a worker, so a pool smaller than this list
+    # deadlocks; dependency order submits a chain after what it awaits.
+    tasks = {
+        "mentions": mentions_task,
+        "page_triples": page_triples_task,
+        "score_tables": _prebuild_score_tables,
+        "links": _links_chain,
+        "canonical_graph": _canonical_graph_chain,
+    }
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        for name, task in tasks.items():
+            futures[name] = pool.submit(task)
+        mentions = futures["mentions"].result()
+        page_triples = futures["page_triples"].result()
+        links = futures["links"].result()
+        triples, graph = futures["canonical_graph"].result()
 
     return {
         "pages_text": pages_text,

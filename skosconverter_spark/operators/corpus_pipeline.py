@@ -11,9 +11,9 @@ the expensive stages see the fewest documents:
 3. near-dup dedup  (operators.dedup.minhash_lsh_pairs over the exact
                     survivors → undirected duplicate graph →
                     kg.canonicalize.connected_components → keep each
-                    component's min doc_id). Reusing the KG engine's CC
-                    fixpoint for dedup clustering is the point: one
-                    verified primitive, two domains.
+                    component's min doc_id). One driver-local CC kernel
+                    for KG canonicalization and dedup clustering (over
+                    5M duplicate edges fails its driver-size guard).
 4. optional deterministic downsample (operators.filter.hash_sample)
 
 Everything is a DataFrame composition — one definition serves batch at
@@ -65,9 +65,9 @@ def prepare_corpus_ids(
 ) -> DataFrame:
     """(doc_id): the surviving ids — the oracle-checkable projection.
 
-    ``cc_max_iterations`` bounds the near-dup clustering fixpoint;
-    connected_components raises (rather than silently splitting a long
-    duplicate chain) if the duplicate graph's diameter exceeds it.
+    ``cc_max_iterations`` bounds the near-dup clustering: connected_components
+    raises when a document sits ``cc_max_iterations`` or more hops from
+    its component's min doc_id (rather than silently split a chain).
     ``quality_ids`` lets a caller that already materialized the quality
     pass (corpus_stats) reuse it instead of paying a second scan."""
     passed = (

@@ -412,18 +412,6 @@ def shared_passages(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", k: int = N_MINHASH
-) -> DataFrame:
-    """(doc_id, h0..h{k-1}): md5-based min-hash signature per document."""
-    sh = doc_shingles(docs, text_col)
-    aggs = [
-        F.min(F.md5(F.encode(F.concat(F.lit(f"{i}:"), F.col("shingle")), "utf-8"))).alias(f"h{i}")
-        for i in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_band_rows(
     sh: DataFrame, k: int = N_MINHASH, bands: int = N_BANDS
 ) -> DataFrame:

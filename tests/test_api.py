@@ -125,6 +125,14 @@ def test_driver_size_guards_trip(spark):
         validation_report(over, EngineConfig())
     with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
         circular_references(over, EngineConfig())
+    # the equivalence closure collects its edges too
+    from skosconverter_spark.kg.canonicalize import connected_components
+
+    over_edges = spark.range(MAX_DRIVER_ROWS + 1).selectExpr(
+        "cast(id as string) src", "cast(id + 1 as string) dst"
+    )
+    with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
+        connected_components(over_edges)
 
 
 def test_document_rows_job_count(spark):
@@ -172,4 +180,36 @@ def test_validation_report_job_count(spark):
     jobs = sc.statusTracker().getJobIdsForGroup("validation_report_job_count")
     assert any(line.startswith("Circular reference detected") for line in issues)
     assert len(jobs) <= 4, f"validation_report issued {len(jobs)} Spark jobs"
+    triples.unpersist()
+
+
+def test_canonicalize_job_count(spark):
+    """The equivalence closure is one guarded collect plus the
+    driver-local kernel: a handful of Spark jobs, not several per hop of
+    alias-chain length."""
+    from skosconverter_spark.config import SKOS_EXACT_MATCH, SKOS_PREF_LABEL
+    from skosconverter_spark.kg.canonicalize import canonicalize_triples
+
+    rows = []
+    for c in range(20):
+        uris = [f"http://x/c{c}_{i}" for i in range(10)]
+        rows += [(a, SKOS_EXACT_MATCH, b, False) for a, b in zip(uris, uris[1:])]
+        rows += [(u, SKOS_PREF_LABEL, f"label {u}", True) for u in uris]
+    triples = spark.createDataFrame(
+        [(s, p, o, lit, None, "u", i) for i, (s, p, o, lit) in enumerate(rows)],
+        "subj string, pred string, obj string, obj_is_literal boolean, "
+        "obj_lang string, src_url string, seq long",
+    ).cache()
+    triples.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("canonicalize_job_count", "canonicalize job count")
+    try:
+        out = canonicalize_triples(triples).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("canonicalize_job_count")
+    assert {r.subj for r in out} == {f"http://x/c{c}_0" for c in range(20)}
+    assert len(out) == 200
+    assert len(jobs) <= 6, f"canonicalize_triples issued {len(jobs)} Spark jobs"
     triples.unpersist()
