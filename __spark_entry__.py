@@ -379,29 +379,19 @@ def q_kg_links(spark, sf_dir):
     (url, surface, winning concept, mention count, score) — begin/end
     offsets collapse out because score is a function of (url, surface,
     uri), which is what makes the stage oracle-expressible."""
-    from skosconverter_spark.kg.linking import link_best, score_candidates
-    from skosconverter_spark.kg.mentions import (
-        label_table,
-        mention_candidates,
-        scan_mentions,
-    )
+    from skosconverter_spark.kg.linking import link_stage
+    from skosconverter_spark.kg.mentions import label_table, scan_mentions
 
     pages = _docs(spark, sf_dir).select(
         F.concat(F.lit("doc:"), F.col("doc_id")).alias("url"), "text"
     )
     triples = _kg_vocab_triples(spark)
-    # same plan moves as the KG pipeline's 30_links (r6): share one
-    # label-table build across scanner/candidates/scorer, and partition
-    # mentions by url once so the whole scoring DAG (all keys are
-    # url-prefixed, including this query's final aggregation) plans
-    # exchange-free behind it
+    # one label table for scanner, candidates and scorer; the final
+    # aggregation is url-prefixed, so it plans exchange-free too
     lt = label_table(triples).localCheckpoint(eager=True)
-    mentions = scan_mentions(pages, triples, label_tbl=lt).localCheckpoint(
-        eager=True
-    ).repartition(spark.sparkContext.defaultParallelism, "url")
-    cands = mention_candidates(mentions, triples, label_tbl=lt)
-    best = link_best(
-        score_candidates(cands, mentions, triples, threshold=0.25, label_tbl=lt)
+    mentions = scan_mentions(pages, triples, label_tbl=lt).localCheckpoint(eager=True)
+    best = link_stage(
+        mentions, triples, lt, spark.sparkContext.defaultParallelism, 0.25
     )
     return best.groupBy("url", "norm_surface", "concept_uri").agg(
         F.count("*").alias("n_mentions"),

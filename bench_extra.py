@@ -1,8 +1,9 @@
 """Extra benchmarks for optimization work (guide §1.4): per-phase
-timings with noop-sink isolation, Spark REST stage metrics (GC, shuffle
-bytes), and .explain("formatted") capture. bench.py stays frozen; this
-file is the measurement scratchpad whose numbers OPTIMIZATION_r06.md
-cites.
+timings with noop-sink isolation and .explain("formatted") capture.
+bench.py stays frozen; this file is the measurement scratchpad whose
+numbers OPTIMIZATION_r06.md cites. Per-stage walls come from the
+pipeline's ``stage_metrics``; per-layer jobs, CPU and shuffle from
+``perfbench/run.py --trace 1``.
 
 Usage:
     python bench_extra.py kg            # kg_pipeline staged breakdown
@@ -14,24 +15,20 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
 import time
-import urllib.request
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def get_session(ui: bool = True):
+def get_session():
     from skosconverter_spark.session import get_spark
 
-    extra = {"spark.ui.enabled": "true"} if ui else {}
     return get_spark(
-        app_name="bench-extra", master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS, extra_conf=extra,
+        app_name="bench-extra", master=f"local[{CPUS}]", shuffle_partitions=CPUS
     )
 
 
@@ -51,43 +48,8 @@ def timed(label, fn, spark=None):
     return out, dt
 
 
-def rest_stage_summary(port: int = 4040, top: int = 12):
-    """Aggregate per-stage metrics from the UI REST API."""
-    try:
-        apps = json.load(
-            urllib.request.urlopen(f"http://localhost:{port}/api/v1/applications")
-        )
-        app_id = apps[0]["id"]
-        stages = json.load(
-            urllib.request.urlopen(
-                f"http://localhost:{port}/api/v1/applications/{app_id}/stages?status=complete"
-            )
-        )
-    except Exception as e:  # pragma: no cover
-        print(f"  [rest unavailable: {e}]")
-        return
-    tot_run = sum(s["executorRunTime"] for s in stages)
-    tot_gc = sum(s["jvmGcTime"] for s in stages)
-    tot_sr = sum(s["shuffleReadBytes"] for s in stages)
-    tot_sw = sum(s["shuffleWriteBytes"] for s in stages)
-    print(
-        f"  stages={len(stages)} executorRunTime={tot_run/1000:.1f}s "
-        f"gc={tot_gc/1000:.1f}s shuffleRead={tot_sr/1e6:.1f}MB "
-        f"shuffleWrite={tot_sw/1e6:.1f}MB"
-    )
-    byname = sorted(stages, key=lambda s: -s["executorRunTime"])[:top]
-    for s in byname:
-        print(
-            f"    stage {s['stageId']:4d} run={s['executorRunTime']/1000:7.2f}s "
-            f"gc={s['jvmGcTime']/1000:5.2f}s tasks={s['numCompleteTasks']:3d} "
-            f"in={s['inputBytes']/1e6:7.1f}MB sr={s['shuffleReadBytes']/1e6:6.1f}MB "
-            f"sw={s['shuffleWriteBytes']/1e6:6.1f}MB  {s['name'][:60]}"
-        )
-
-
 def bench_kg():
-    os.environ["SPARK_GRAFT_DEBUG_STAGES"] = "1"
-    from pyspark.sql import functions as F  # noqa
+    from pyspark.sql import functions as F
 
     from skosconverter_spark.config import EngineConfig
     from skosconverter_spark.kg.pipeline import run_pipeline
@@ -115,7 +77,9 @@ def bench_kg():
             spark,
         )
         _, dt2 = timed("triples.count()", lambda: out["triples"].count(), spark)
-    rest_stage_summary()
+        walls = out["metrics"].groupBy("stage").agg(F.max("wall_ms").alias("ms"))
+        for r in walls.orderBy("stage").collect():
+            print(f"    [{r.stage}] {r.ms / 1000:.2f}s", flush=True)
     spark.stop()
 
 
@@ -163,7 +127,6 @@ def bench_minhash():
     print(f"  TOTAL decomposed: {time.time()-t0:.3f}s")
     # whole-query single shot for comparison
     timed("whole query count", lambda: em.queries()["dedup_minhash_lsh"](spark, SF_DIR).count(), spark)
-    rest_stage_summary()
     spark.stop()
 
 
@@ -176,7 +139,7 @@ def bench_forward():
     from skosconverter_spark.plans.local_dfs import dfs_rows_local
     from skosconverter_spark.sources.vocab_gen import synthesize_vocab
 
-    spark = get_session(ui=False)
+    spark = get_session()
     cfg = EngineConfig()
     vt = synthesize_vocab(spark, 22_100).localCheckpoint(eager=True)
     triples, _ = timed("collect_triples", lambda: collect_triples(vt), spark)
@@ -198,14 +161,13 @@ def bench_queries(names):
     qs = em.queries()
     for name in names:
         timed(name, lambda n=name: noop(qs[n](spark, SF_DIR)), spark)
-    rest_stage_summary()
     spark.stop()
 
 
 def dump_plans(names, suffix):
     import __spark_entry__ as em
 
-    spark = get_session(ui=False)
+    spark = get_session()
     qs = em.queries()
     os.makedirs("plans/r06", exist_ok=True)
     for name in names:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from skosconverter_spark.kg.mentions import label_table, mention_candidates
+
 
 def mention_context_scores(
     mentions: DataFrame, triples: DataFrame, label_tbl: DataFrame | None = None
@@ -36,8 +38,6 @@ def mention_context_scores(
     surface. Co-occurring vocabulary mentions are the context signal;
     no token explode, every shuffle is bounded by |mentions|.
     """
-    from skosconverter_spark.kg.mentions import label_table
-
     tf = mentions.groupBy("url", "norm_surface").agg(F.count("*").alias("tf"))
     # n_pages as an in-plan broadcast scalar (single-row aggregate +
     # crossJoin), NOT a driver-side .count(): a separate blocking job
@@ -148,8 +148,6 @@ def score_candidates(
     candidate-side shuffle is one narrow distinct() that collapses
     pref/alt kind duplicates.
     """
-    from skosconverter_spark.kg.mentions import label_table
-
     lt_src = label_tbl if label_tbl is not None else label_table(triples)
     # LEFT join + coalesce fallback, not inner: under exact generation the
     # lookup always hits (precondition above), but a looser candidate
@@ -231,4 +229,35 @@ def link_best(scored: DataFrame) -> DataFrame:
         "end",
         F.col("m.concept_uri").alias("concept_uri"),
         F.col("m.score").alias("score"),
+    )
+
+
+def link_stage(
+    mentions: DataFrame,
+    triples: DataFrame,
+    label_tbl: DataFrame,
+    parts: int,
+    threshold: float,
+    score_tables: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """Mentions → candidates → scored links → one best concept per
+    mention span: the KG pipeline's 30_links and the kg_links query.
+
+    One url-keyed exchange up front makes the scoring DAG downstream
+    exchange-free: hashpartitioning(url) satisfies the clustered
+    distribution of every aggregation and join in score_candidates /
+    mention_context_scores / link_best (all keyed with url as a prefix),
+    so Catalyst plans them in one stage instead of a chain of seven
+    small shuffles (r6: 30_links was 5.6 s of a 12.4 s pipeline; plan
+    46 → 31 exchanges)."""
+    by_url = mentions.repartition(parts, "url")
+    return link_best(
+        score_candidates(
+            mention_candidates(by_url, triples, label_tbl=label_tbl),
+            by_url,
+            triples,
+            threshold=threshold,
+            label_tbl=label_tbl,
+            score_tables=score_tables,
+        )
     )

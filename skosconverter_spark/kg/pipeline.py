@@ -9,6 +9,15 @@ Stage graph (north_star):
     raw_triples ∪ vocabulary ──canonicalization closure──▶ triples
     triples ─▶ partitioned graph table (pred-partitioned parquet)
 
+Scheduling: ``run_pipeline`` builds this graph per call as a node table,
+``name → (deps, fn(inputs))``, over the input fingerprints, the shared
+label table, the scorer's lookup tables and the stages. ``_run_graph``
+runs it as Dryad does (Isard et al., EuroSys 2007): a node starts once
+its inputs have resolved, and no pool thread waits on a sibling. So
+10_extract overlaps the label table, 20_mentions overlaps
+40_page_triples, 30_links starts when 20_mentions and the score tables
+are done, and 50_canonical when 40_page_triples is.
+
 Resumability (north_rule): every stage writes a parquet checkpoint plus
 a ``_MANIFEST.json`` recording the stage name, its input fingerprint
 and row count. On rerun, a stage whose manifest matches the current
@@ -22,26 +31,24 @@ counts into ``stage_metrics`` parquet alongside the checkpoint. The
 counts come from the written parquet FOOTERS (one tiny metadata read
 per file, driver-side) — the local analogue of reading an Iceberg
 manifest — so lineage costs zero extra Spark jobs and zero data scans.
-Through round 2 this was a full second scan of every stage's output
-(groupBy(spark_partition_id).count), which dominated the pipeline's
-measured 8→32 scaling (BASELINE.md: eff 0.27).
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
-from functools import partial
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.kg.canonicalize import canonicalize_triples
 from skosconverter_spark.kg.extract import extract_text, salted_repartition
-from skosconverter_spark.kg.linking import link_best, score_candidates
-from skosconverter_spark.kg.mentions import mention_candidates, scan_mentions
+from skosconverter_spark.kg.linking import link_stage, vocab_score_tables
+from skosconverter_spark.kg.mentions import label_table, scan_mentions
 from skosconverter_spark.sources.parse_udf import extract_triples, ok_triples
 
 
@@ -95,16 +102,11 @@ class StageRunner:
             and self.catalog.committed_fingerprint(base) == input_fingerprint
         ):
             return self.catalog.read(self.spark, base)
-        import os
-
-        debug = os.environ.get("SPARK_GRAFT_DEBUG_STAGES")
         t0 = time.time()
         df = build()
         if not persist:
             out = df.localCheckpoint(eager=True)
             wall_ms = int((time.time() - t0) * 1000)
-            if debug:
-                print(f"    [{stage}] local: {time.time() - t0:.2f}s", flush=True)
             # lineage over the cached blocks (JVM memory scan — cheap,
             # and these stages have no parquet footers to read)
             per_part_rows = [
@@ -123,8 +125,6 @@ class StageRunner:
             )
             return out
         self.catalog.write(df, base)
-        if debug:
-            print(f"    [{stage}] write: {time.time() - t0:.2f}s", flush=True)
         out = self.catalog.read(self.spark, base)
         wall_ms = int((time.time() - t0) * 1000)
         # per-partition lineage from the catalog's commit metadata
@@ -144,16 +144,18 @@ class StageRunner:
         return out
 
     def stage_metrics(self) -> DataFrame:
-        """All stages' per-partition lineage metrics."""
+        """All stages' per-partition lineage metrics. The schema is the
+        one the writer used, so the read infers nothing and runs no job."""
         paths = [str(p) for p in Path(self.root).glob("*/metrics") if p.exists()]
-        return self.spark.read.parquet(*paths)
+        ddl = ", ".join(f"{name} {typ}" for name, typ in _METRICS_SCHEMA)
+        return self.spark.read.schema(ddl).parquet(*paths)
 
 
 _METRICS_SCHEMA = (
     ("stage", "string"),
-    ("partition_id", "int32"),
-    ("rows_out", "int64"),
-    ("wall_ms", "int64"),
+    ("partition_id", "int"),
+    ("rows_out", "bigint"),
+    ("wall_ms", "bigint"),
     ("input_fingerprint", "string"),
 )
 
@@ -170,10 +172,11 @@ def _write_metrics_parquet(metrics: Path, rows: list[tuple]) -> None:
     if metrics.exists():
         shutil.rmtree(metrics)
     metrics.mkdir(parents=True, exist_ok=True)
+    arrow = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64()}
     cols = list(zip(*rows))
     table = pa.table(
         {
-            name: pa.array(cols[i], type=getattr(pa, typ)())
+            name: pa.array(cols[i], type=arrow[typ])
             for i, (name, typ) in enumerate(_METRICS_SCHEMA)
         }
     )
@@ -189,6 +192,44 @@ def fingerprint_of(df: DataFrame, sample_cols: list[str]) -> str:
         F.count("*").alias("c"),
     ).collect()[0]
     return f"{agg['c']}:{agg['h']}"
+
+
+def _run_graph(nodes: dict, max_workers: int) -> dict:
+    """Run ``nodes`` (``name → (deps, fn(inputs))``); return each node's
+    value by name.
+
+    Only the calling thread waits (in ``wait(FIRST_COMPLETED)``), so any
+    pool of one or more workers finishes the graph. Tasks are wrapped in
+    ``inheritable_thread_target`` at submit time: their Spark jobs keep
+    the caller's local properties (job group, scheduler pool, tags) and
+    are described by the node's name. On the first failure, nodes not
+    yet started are cancelled, running ones finish, and it is raised."""
+    spark = SparkSession.active()
+
+    def run(name, fn, inputs):
+        spark.sparkContext.setLocalProperty("spark.job.description", name)
+        return fn(inputs)
+
+    pending, done, running = dict(nodes), {}, {}
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        while pending or running:
+            for name, (deps, fn) in list(pending.items()):
+                if all(d in done for d in deps):
+                    del pending[name]
+                    task = inheritable_thread_target(spark)(run)
+                    inputs = {d: done[d] for d in deps}
+                    running[pool.submit(task, name, fn, inputs)] = name
+            if not running:
+                raise ValueError(f"unresolvable dependencies: {sorted(pending)}")
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                if fut.exception() is not None:
+                    for other in running:
+                        other.cancel()
+                    raise fut.exception()
+                done[name] = fut.result()
+    return done
 
 
 def run_pipeline(
@@ -216,158 +257,96 @@ def run_pipeline(
     config = config or EngineConfig()
     parts = partitions or spark.sparkContext.defaultParallelism
     runner = StageRunner(spark, root, config, force=force, codec=codec)
-
-    # the two input fingerprints are independent single-row aggregations;
-    # submit them concurrently so the second is not a serial round on the
-    # pipeline's critical path
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=2) as _fp_pool:
-        _f_pages = _fp_pool.submit(fingerprint_of, pages, ["url"])
-        _f_vocab = _fp_pool.submit(
-            fingerprint_of, vocab_triples, ["subj", "pred", "obj"]
-        )
-        fp_pages = _f_pages.result()
-        fp_vocab = _f_vocab.result()
-
-    # checkpoint pruning: no downstream stage re-reads the raw html —
-    # `text` IS the extraction product and html is reproducible from the
-    # input table — so the binary payload (roughly half the stage's
-    # bytes) never hits the checkpoint disk
-    pages_text = runner.run_stage(
-        "10_extract",
-        fp_pages,
-        lambda: salted_repartition(extract_text(pages), parts).drop("html"),
-    )
-
-    # the vocabulary's label table is consumed by three stages (mention
-    # scanner surfaces, candidate join, scorer profile); compute its
-    # distinct aggregation once and share the vocab-sized result instead
-    # of re-running the shuffle+broadcast build per consumer
-    from skosconverter_spark.kg.mentions import label_table
-
-    lt = label_table(vocab_triples).localCheckpoint(eager=True)
-
-    from concurrent.futures import Future, ThreadPoolExecutor
-
     graph_base = Path(root) / "60_graph"
-    futures: dict[str, Future] = {}
 
-    mentions_task = partial(
-        runner.run_stage,
-        "20_mentions",
-        f"{fp_pages}|{fp_vocab}",
-        lambda: scan_mentions(pages_text, vocab_triples, label_tbl=lt),
-        persist_intermediate,
-    )
-    page_triples_task = partial(
-        runner.run_stage,
-        "40_page_triples",
-        fp_pages,
-        lambda: ok_triples(
-            extract_triples(
-                pages_text.select(
-                    F.col("url"),
-                    F.lit("md").alias("fmt"),
-                    F.col("text").alias("payload"),
-                ),
-                config,
-            )
+    def stage(name, fingerprint, build, persist=True):
+        # positional (name, fingerprint, build, persist): a tracer wrapping
+        # run_stage reads the stage name from its first argument
+        return lambda i: runner.run_stage(name, fingerprint(i), lambda: build(i), persist)
+
+    def fp_pages(i):
+        return i["fp_pages"]
+
+    def fp_both(i):
+        return f"{i['fp_pages']}|{i['fp_vocab']}"
+
+    def extract(i):
+        # checkpoint pruning: no downstream stage re-reads the raw html —
+        # `text` IS the extraction product and html is reproducible from
+        # the input table — so the binary payload (roughly half the
+        # stage's bytes) never hits the checkpoint disk
+        return salted_repartition(extract_text(pages), parts).drop("html")
+
+    def mentions(i):
+        return scan_mentions(i["10_extract"], vocab_triples, label_tbl=i["labels"])
+
+    def page_triples(i):
+        md = i["10_extract"].select(
+            F.col("url"), F.lit("md").alias("fmt"), F.col("text").alias("payload")
+        )
+        return ok_triples(extract_triples(md, config))
+
+    def score_tables(i):
+        # vocabulary-only lookup tables: they need only the label table, so
+        # their aggregation rounds overlap the mention scan instead of
+        # sitting on the links stage's critical path
+        return tuple(
+            t.localCheckpoint(eager=True) for t in vocab_score_tables(i["labels"])
+        )
+
+    def links(i):
+        return link_stage(
+            i["20_mentions"], vocab_triples, i["labels"], parts, link_threshold,
+            i["score_tables"],
+        )
+
+    def canonical(i):
+        return canonicalize_triples(
+            i["40_page_triples"].unionByName(vocab_triples), config.max_iterations
+        )
+
+    def graph(i):
+        # pred-partitioned so triple-pattern scans prune (on Iceberg this
+        # is a partitioned+bucketed table spec)
+        runner.catalog.write(i["50_canonical"], graph_base, partition_by=("pred",))
+        return runner.catalog.read(spark, graph_base)
+
+    # built per call, never at import: a tracer that rebinds the engine's
+    # module functions must see every call the nodes make
+    fps = ("fp_pages", "fp_vocab")
+    nodes = {
+        "fp_pages": ((), lambda i: fingerprint_of(pages, ["url"])),
+        "fp_vocab": ((), lambda i: fingerprint_of(vocab_triples, ["subj", "pred", "obj"])),
+        # one label table serves the mention scanner, the candidate join
+        # and the scorer profile: its distinct aggregation runs once
+        "labels": ((), lambda i: label_table(vocab_triples).localCheckpoint(eager=True)),
+        "score_tables": (("labels",), score_tables),
+        "10_extract": (("fp_pages",), stage("10_extract", fp_pages, extract)),
+        "20_mentions": (
+            ("10_extract", "labels", *fps),
+            stage("20_mentions", fp_both, mentions, persist_intermediate),
         ),
-        persist_intermediate,
-    )
-
-    # the scorer's vocabulary-only lookup tables depend on nothing
-    # but the label table: materialize them concurrently with the
-    # mention scan so their aggregation/broadcast rounds overlap
-    # work that must happen anyway instead of sitting on the links
-    # stage's critical path
-    from skosconverter_spark.kg.linking import vocab_score_tables
-
-    def _prebuild_score_tables():
-        jl, la = vocab_score_tables(lt)
-        return (
-            jl.localCheckpoint(eager=True),
-            la.localCheckpoint(eager=True),
-        )
-
-    # downstream chains as dependency-submitted futures rather than a
-    # second barrier pool: 30_links starts the moment 20_mentions is
-    # done (not at max(20, 40)), 50_canonical the moment
-    # 40_page_triples is, and the 60_graph sink overlaps the links
-    # stage instead of running after everything (r6: the graph write +
-    # read-back was ~1 s of serial tail under a 5 s links stage).
-    def _links_chain():
-        # one url-keyed exchange up front makes the whole scoring DAG
-        # downstream exchange-free: hashpartitioning(url) satisfies
-        # the clustered distribution of every aggregation and join in
-        # score_candidates / mention_context_scores / link_best
-        # (their keys all have url as a prefix — candidate distinct,
-        # tf, page_norm, dots, the ctx join, the span-winner agg), so
-        # Catalyst plans them back-to-back in one stage instead of
-        # the r6-measured chain of seven small shuffles that made
-        # 30_links the pipeline's critical path (5.6 s of 12.4 s;
-        # plan: 46 → 31 exchanges).
-        mentions_by_url = futures["mentions"].result().repartition(parts, "url")
-        return runner.run_stage(
-            "30_links",
-            f"{fp_pages}|{fp_vocab}|t={link_threshold}",
-            lambda: link_best(
-                score_candidates(
-                    mention_candidates(
-                        mentions_by_url, vocab_triples, label_tbl=lt
-                    ),
-                    mentions_by_url,
-                    vocab_triples,
-                    threshold=link_threshold,
-                    label_tbl=lt,
-                    score_tables=futures["score_tables"].result(),
-                )
-            ),
-        )
-
-    def _canonical_graph_chain():
-        triples_ = runner.run_stage(
-            "50_canonical",
-            f"{fp_pages}|{fp_vocab}",
-            lambda: canonicalize_triples(
-                futures["page_triples"].result().unionByName(vocab_triples),
-                config.max_iterations,
-            ),
-        )
-        # final graph table: pred-partitioned so triple-pattern scans
-        # prune (committed through the catalog adapter like every
-        # stage; on Iceberg this is a partitioned+bucketed table spec)
-        runner.catalog.write(triples_, graph_base, partition_by=("pred",))
-        return triples_, runner.catalog.read(spark, graph_base)
-
-    # stage DAG: mentions and page-triples only depend on extract — run
-    # them concurrently (SparkSession job submission is thread-safe; the
-    # scheduler interleaves their tasks, so the cluster never idles while
-    # one stage's tail tasks drain). The two chains block on sibling
-    # futures inside a worker, so a pool smaller than this list
-    # deadlocks; dependency order submits a chain after what it awaits.
-    tasks = {
-        "mentions": mentions_task,
-        "page_triples": page_triples_task,
-        "score_tables": _prebuild_score_tables,
-        "links": _links_chain,
-        "canonical_graph": _canonical_graph_chain,
+        "40_page_triples": (
+            ("10_extract", "fp_pages"),
+            stage("40_page_triples", fp_pages, page_triples, persist_intermediate),
+        ),
+        "30_links": (
+            ("20_mentions", "labels", "score_tables", *fps),
+            stage("30_links", lambda i: f"{fp_both(i)}|t={link_threshold}", links),
+        ),
+        "50_canonical": (
+            ("40_page_triples", *fps),
+            stage("50_canonical", fp_both, canonical),
+        ),
+        "60_graph": (("50_canonical",), graph),
     }
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        for name, task in tasks.items():
-            futures[name] = pool.submit(task)
-        mentions = futures["mentions"].result()
-        page_triples = futures["page_triples"].result()
-        links = futures["links"].result()
-        triples, graph = futures["canonical_graph"].result()
-
+    out = _run_graph(nodes, max_workers=len(nodes))
     return {
-        "pages_text": pages_text,
-        "mentions": mentions,
-        "links": links,
-        "page_triples": page_triples,
-        "triples": triples,
-        "graph": graph,
+        "pages_text": out["10_extract"],
+        "mentions": out["20_mentions"],
+        "links": out["30_links"],
+        "page_triples": out["40_page_triples"],
+        "triples": out["50_canonical"],
+        "graph": out["60_graph"],
         "metrics": runner.stage_metrics(),
     }

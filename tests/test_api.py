@@ -213,3 +213,39 @@ def test_canonicalize_job_count(spark):
     assert len(out) == 200
     assert len(jobs) <= 6, f"canonicalize_triples issued {len(jobs)} Spark jobs"
     triples.unpersist()
+
+
+def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):
+    """Every Spark job run_pipeline issues, including those from its
+    pool threads, carries the caller's job group, so cancelJobGroup can
+    stop a running pipeline."""
+    from skosconverter_spark.kg.pipeline import run_pipeline
+    from skosconverter_spark.sources.pages import synthesize_pages
+
+    from .test_kg_pipeline import vocab_ttl
+
+    pages = synthesize_pages(spark, 40, partitions=4).cache()
+    docs = spark.createDataFrame([("v", "v", "ttl", vocab_ttl())], schema=DOCS)
+    vocab = ok_triples(extract_triples(docs, EngineConfig())).cache()
+    pages.count(), vocab.count()
+    sc = spark.sparkContext
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    try:
+        first = max(marker("pipeline_marker_before"))
+        sc.setJobGroup("pipeline_caller", "run_pipeline under a job group")
+        run_pipeline(spark, pages, vocab, str(tmp_path / "kg"), partitions=4)
+        last = min(marker("pipeline_marker_after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    between = set(range(first + 1, last))
+    in_group = set(sc.statusTracker().getJobIdsForGroup("pipeline_caller"))
+    assert between, "run_pipeline issued no Spark jobs"
+    assert between <= in_group, f"{len(between - in_group)} of {len(between)} jobs left the group"
+    pages.unpersist()
+    vocab.unpersist()

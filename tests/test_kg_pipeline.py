@@ -5,6 +5,7 @@ canonicalization closure, checkpoint/resume, lineage metrics."""
 from __future__ import annotations
 
 import hashlib
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -248,3 +249,88 @@ def test_pipeline_adversarial_pages(spark, vocab, tmp_path):
     urls_with_mentions = {r.url for r in out["mentions"].select("url").distinct().collect()}
     assert urls_with_mentions == {"http://x.test/huge"}
     assert out["triples"].count() > 0  # vocabulary triples survive canonicalization
+
+
+def test_run_graph_diamond_on_one_worker(spark):
+    """Only the calling thread waits on futures, so one worker runs a
+    diamond; each node receives its dependencies' values."""
+    from skosconverter_spark.kg.pipeline import _run_graph
+
+    nodes = {
+        "a": ((), lambda i: 1),
+        "b": (("a",), lambda i: i["a"] + 1),
+        "c": (("a",), lambda i: i["a"] * 10),
+        "d": (("b", "c"), lambda i: (i["b"], i["c"])),
+    }
+    assert _run_graph(nodes, max_workers=1) == {"a": 1, "b": 2, "c": 10, "d": (2, 10)}
+
+
+def test_run_graph_failure_raises_and_skips_dependents(spark):
+    from skosconverter_spark.kg.pipeline import _run_graph
+
+    started = []
+
+    def fail(i):
+        raise RuntimeError("node b failed")
+
+    nodes = {
+        "a": ((), lambda i: started.append("a")),
+        "b": (("a",), fail),
+        "d": (("b",), lambda i: started.append("d")),
+    }
+    with pytest.raises(RuntimeError, match="node b failed"):
+        _run_graph(nodes, max_workers=1)
+    assert started == ["a"]
+
+
+def test_stage_metrics_read_with_explicit_schema(spark, pages, tmp_path):
+    """stage_metrics reads the writer's schema instead of inferring it:
+    no Spark job, and the same schema and rows inference would give."""
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    runner.run_stage("10_extract", "fp", lambda: pages.select("url"))
+    runner.run_stage("20_mentions", "fp", lambda: pages.select("url"), False)
+    sc = spark.sparkContext
+    sc.setJobGroup("stage_metrics_job_count", "stage_metrics job count")
+    try:
+        metrics = runner.stage_metrics()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("stage_metrics_job_count") == []
+    inferred = spark.read.parquet(*[str(p) for p in (tmp_path / "kg").glob("*/metrics")])
+    assert metrics.schema == inferred.schema
+    assert sorted(metrics.collect()) == sorted(inferred.collect())
+
+
+def test_pipeline_resumes_after_failed_commit(spark, pages, vocab, tmp_path, monkeypatch):
+    """A commit that fails in 50_canonical fails the run; the rerun
+    recomputes that stage and leaves the committed stages untouched."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+
+    root = tmp_path / "kg"
+    commit = ParquetCatalogAdapter.commit
+
+    def failing_commit(self, base, stage, *args):
+        if stage == "50_canonical":
+            raise RuntimeError("injected commit failure")
+        return commit(self, base, stage, *args)
+
+    monkeypatch.setattr(ParquetCatalogAdapter, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    monkeypatch.undo()
+    assert not (root / "50_canonical" / "_MANIFEST.json").exists()
+
+    def committed():
+        stages = ("10_extract", "20_mentions", "40_page_triples")
+        files = [root / s / "_MANIFEST.json" for s in stages]
+        return [(f.read_bytes(), f.stat().st_mtime_ns) for f in files]
+
+    before = committed()
+    out = run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    assert out["triples"].count() > 0
+    assert committed() == before
+    manifest = json.loads((root / "50_canonical" / "_MANIFEST.json").read_text())
+    assert manifest["stage"] == "50_canonical"

@@ -46,8 +46,8 @@ from skosconverter_spark.session import get_spark
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.kg.pipeline import run_pipeline
 from skosconverter_spark.kg.extract import extract_text
-from skosconverter_spark.kg.mentions import scan_mentions, mention_candidates
-from skosconverter_spark.kg.linking import score_candidates, link_best
+from skosconverter_spark.kg.mentions import label_table, scan_mentions
+from skosconverter_spark.kg.linking import link_stage
 from skosconverter_spark.functions.text import lang_id
 from skosconverter_spark.schemas import DOCS
 from skosconverter_spark.sources.pages import synthesize_pages
@@ -79,7 +79,7 @@ def compute_job():
     m = scan_mentions(pt, vocab).localCheckpoint(eager=True)
     branches = [
         lambda: ok_triples(extract_triples(docs, cfg)).count(),
-        lambda: link_best(score_candidates(mention_candidates(m, vocab), m, vocab)).count(),
+        lambda: link_stage(m, vocab, label_table(vocab), cpus, 0.25).count(),
         lambda: lang_id(pt.selectExpr("monotonically_increasing_id() as doc_id", "text")).count(),
     ]
     with ThreadPoolExecutor(max_workers=3) as pool:
