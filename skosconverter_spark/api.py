@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.operators.render import render_documents, render_text_local
 from skosconverter_spark.operators.validate import gate, validation_report
+from skosconverter_spark.plans.local_dfs import arrow_rows, guard_driver_sized
 from skosconverter_spark.sources.docs import docs_from_directory
 from skosconverter_spark.sources.parse_udf import doc_errors, extract_triples, ok_triples
 
@@ -111,12 +112,11 @@ def convert_directory(
         )
         # one row per input FILE (not per triple) — but a million-file
         # batch would still overwhelm the driver loop, so guard it too
-        from skosconverter_spark.operators.render import guard_driver_sized
-
-        guard_driver_sized(per_doc, "convert_directory per-file render", 100_000)
-        for r in per_doc.collect():
-            name = Path(r.vocab_id).stem + _EXT[fmt]
-            (out_root / name).write_text(r.payload, encoding="utf-8")
+        for vocab_id, payload in arrow_rows(
+            guard_driver_sized(per_doc, "convert_directory per-file render", 100_000)
+        ):
+            name = Path(vocab_id).stem + _EXT[fmt]
+            (out_root / name).write_text(payload, encoding="utf-8")
 
     ok_urls = docs.select(F.col("url")).join(
         errors.select("url"), "url", "left_anti"

@@ -2,13 +2,15 @@
 
 - ``connected_components``: equivalence closure over undirected edges
   (skos:exactMatch ∪ owl:sameAs, or near-duplicate doc pairs). One
-  guarded Arrow collect of the edge pairs, then ``components_local``, a
+  guarded Arrow collect of the edge pairs (``guard_driver_sized``: one
+  Spark job, no separate count), then ``components_local``, a
   driver-local BFS from each component's minimum, then
   ``createDataFrame`` (a LocalRelation, so joins against it broadcast).
   Component id = min node id in the component. The edge set is
   driver-sized like the vocabulary it comes from: more than
   ``local_dfs.MAX_DRIVER_ROWS`` (5M) edges is an explicit non-goal that
-  fails loudly in ``guard_driver_sized`` before any row moves.
+  fails loudly in ``guard_driver_sized``, which ships at most 5M + 1
+  pairs before it raises.
 
 - ``transitive_closure``: ancestor reachability over directed edges
   (skos:broader), a distributed fixpoint doubling the reach per
@@ -29,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from skosconverter_spark.config import OWL_SAME_AS, SKOS_EXACT_MATCH
-from skosconverter_spark.plans.local_dfs import guard_driver_sized
+from skosconverter_spark.plans.local_dfs import arrow_rows, guard_driver_sized
 
 
 def _equivalence_pairs(triples: DataFrame) -> DataFrame:
@@ -44,12 +46,6 @@ def equivalence_edges(triples: DataFrame) -> DataFrame:
     return e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-
-
-def _collect_pairs(edges: DataFrame, what: str) -> list[tuple]:
-    guard_driver_sized(edges, what)
-    tbl = edges.select("src", "dst").toArrow()
-    return list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
 
 
 def components_local(pairs, max_iterations: int = 25) -> dict:
@@ -106,7 +102,8 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     past ``max_iterations`` (see ``components_local``) rather than
     silently split a component (e.g. keep near-duplicates in
     prepare_corpus)."""
-    comp = components_local(_collect_pairs(edges, "connected_components"), max_iterations)
+    pairs = arrow_rows(guard_driver_sized(edges.select("src", "dst"), "connected_components"))
+    comp = components_local(pairs, max_iterations)
     return _frame(edges, "src", comp, ("uri", "component"))
 
 
@@ -153,7 +150,7 @@ def transitive_closure(
 
 
 def _canonical(triples: DataFrame, max_iterations: int) -> dict:
-    pairs = _collect_pairs(_equivalence_pairs(triples), "canonical_map")
+    pairs = arrow_rows(guard_driver_sized(_equivalence_pairs(triples), "canonical_map"))
     return components_local(pairs, max_iterations)
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import SKOS_ALT_LABEL, SKOS_PREF_LABEL
+from skosconverter_spark.plans.local_dfs import guard_driver_sized
 
 _WORD_RE = re.compile(r"\w+(?:'\w+)?", re.UNICODE)
 
@@ -202,11 +203,10 @@ def scan_mentions(
     alternation scan 1.3 s with byte-identical output."""
     spark = pages_text.sparkSession
     lt = label_tbl if label_tbl is not None else label_table(triples)
-    surfaces = [
-        r.norm_surface
-        for r in lt.select("norm_surface").distinct().collect()
-        if r.norm_surface
-    ]
+    surfaces = guard_driver_sized(
+        lt.select("norm_surface").distinct().filter(F.col("norm_surface") != ""),
+        "scan_mentions surfaces",
+    ).column(0).to_pylist()
     trie_bc = spark.sparkContext.broadcast(_Trie(surfaces))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

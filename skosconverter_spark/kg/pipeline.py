@@ -58,16 +58,13 @@ class StageRunner:
     root: str
     config: EngineConfig = field(default_factory=EngineConfig)
     force: bool = False  # recompute even when a manifest matches
-    codec: str = "zstd"  # checkpoint compression (zstd ≈ 2× smaller than
-    # snappy on text-heavy stages → half the bytes through the shared
-    # checkpoint store; decode cost is amortized across executors)
     catalog: object | None = None  # CatalogAdapter; default parquet+manifest
 
     def __post_init__(self):
         if self.catalog is None:
             from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
 
-            self.catalog = ParquetCatalogAdapter(codec=self.codec)
+            self.catalog = ParquetCatalogAdapter()
 
     def _base(self, stage: str) -> Path:
         return Path(self.root) / stage
@@ -242,7 +239,6 @@ def run_pipeline(
     link_threshold: float = 0.25,
     force: bool = False,
     persist_intermediate: bool = True,
-    codec: str = "zstd",
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full KG pipeline; returns the stage outputs.
 
@@ -256,7 +252,7 @@ def run_pipeline(
     always persisted."""
     config = config or EngineConfig()
     parts = partitions or spark.sparkContext.defaultParallelism
-    runner = StageRunner(spark, root, config, force=force, codec=codec)
+    runner = StageRunner(spark, root, config, force=force)
     graph_base = Path(root) / "60_graph"
 
     def stage(name, fingerprint, build, persist=True):

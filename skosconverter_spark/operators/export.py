@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import RDF_TYPE, SKOS_CONCEPT, SKOS_CONCEPT_SCHEME
+from skosconverter_spark.plans.local_dfs import MAX_DRIVER_ROWS, arrow_rows, guard_driver_sized
 from skosconverter_spark.sources.markdown_parse import Triple
 from skosconverter_spark.sources.turtle import serialize_turtle
 
@@ -34,14 +35,12 @@ def export_turtle_text(
     counts (:1567-1573): triples, concepts, schemes. Guarded: one Turtle
     document is driver-sized by contract; a corpus-sized graph must go
     through write_graph_table instead."""
-    from skosconverter_spark.operators.render import MAX_DRIVER_ROWS, guard_driver_sized
-
-    guard_driver_sized(
-        triples, "export_turtle_text",
+    tbl = guard_driver_sized(
+        triples.select("subj", "pred", "obj", "obj_is_literal", "obj_lang"),
+        "export_turtle_text",
         MAX_DRIVER_ROWS if max_rows is None else max_rows,
     )
-    rows = triples.select("subj", "pred", "obj", "obj_is_literal", "obj_lang").collect()
-    ts = [Triple(r.subj, r.pred, r.obj, r.obj_is_literal, r.obj_lang) for r in rows]
+    ts = [Triple(*r) for r in arrow_rows(tbl)]
     concepts = {t.subj for t in ts if t.pred == RDF_TYPE and t.obj == SKOS_CONCEPT}
     schemes = {t.subj for t in ts if t.pred == RDF_TYPE and t.obj == SKOS_CONCEPT_SCHEME}
     text = serialize_turtle(ts, prefixes)

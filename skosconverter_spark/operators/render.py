@@ -318,11 +318,15 @@ _KERNELS = {
     "xml": render_xml_rows,
 }
 
-_ROW_COLS = [
-    "section", "origin", "uri", "label", "level", "parent_label",
-    "scheme_label", "top_idx", "has_children", "definition", "alt_labels",
-    "notation", "same_as", "related",
-]
+
+def _render_rows(rows: list[dict], kernel) -> str:
+    """One document from its row-table dicts: sort_path order, list
+    columns as lists."""
+    rows.sort(key=lambda r: tuple(r["sort_path"]))
+    for r in rows:
+        for c in ("alt_labels", "same_as", "related"):
+            r[c] = [] if r[c] is None else list(r[c])
+    return kernel(rows)
 
 
 def render_documents(
@@ -341,13 +345,8 @@ def render_documents(
     )
 
     def render(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("sort_path", key=lambda s: s.map(tuple))
-        for c in ("alt_labels", "same_as", "related"):
-            pdf[c] = pdf[c].map(lambda v: [] if v is None else list(v))
-        rows = pdf[_ROW_COLS].to_dict("records")
-        return pd.DataFrame(
-            {"vocab_id": [pdf["vocab_id"].iloc[0]], "payload": [kernel(rows)]}
-        )
+        payload = _render_rows(pdf.to_dict("records"), kernel)
+        return pd.DataFrame({"vocab_id": [pdf["vocab_id"].iloc[0]], "payload": [payload]})
 
     return src.groupBy("vocab_id").applyInPandas(
         render, "vocab_id string, payload string"
@@ -360,13 +359,10 @@ def render_document_text(
     """Single-vocabulary convenience: the whole corpus as one document.
 
     A single output document is driver-sized by definition (the
-    reference writes ONE file), so this collects the row table via Arrow
-    and runs the kernel driver-side — skipping the one-group shuffle the
-    grouped-map path would force. Guarded: misuse on a corpus-sized row
-    table fails loudly instead of OOMing the driver."""
-    guard_driver_sized(doc_rows, "render_document_text", max_rows)
-    pdf = doc_rows.toPandas()
-    pdf = pdf.sort_values("sort_path", key=lambda s: s.map(tuple))
-    for c in ("alt_labels", "same_as", "related"):
-        pdf[c] = pdf[c].map(lambda v: [] if v is None else list(v))
-    return _KERNELS[fmt](pdf[_ROW_COLS].to_dict("records"))
+    reference writes ONE file), so this takes the row table from
+    ``guard_driver_sized`` (one Spark job, Arrow) and runs the kernel
+    driver-side — skipping the one-group shuffle the grouped-map path
+    would force. Misuse on a corpus-sized row table fails loudly instead
+    of OOMing the driver."""
+    rows = guard_driver_sized(doc_rows, "render_document_text", max_rows).to_pylist()
+    return _render_rows(rows, _KERNELS[fmt])

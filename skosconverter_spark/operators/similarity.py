@@ -250,10 +250,11 @@ def embedding_neardup_pairs(
     """(id_a, id_b, score) with cosine ≥ τ. EXACT over all n²/2 pairs —
     a nested-loop self-join. This is the small-corpus VERIFIER (recall
     oracle for the bucketed plan below), never the scale path: at corpus
-    scale use ``embedding_neardup_bucketed`` or ``_srp``. Guarded like
-    render.guard_driver_sized: limit(max_rows+1).count() proves whether
-    row max_rows+1 exists without moving data, and raises rather than
-    launching an n² join on a corpus (max_rows=0 disables)."""
+    scale use ``embedding_neardup_bucketed`` or ``_srp``. Guarded by a
+    count, not by ``guard_driver_sized``: this path collects nothing, so
+    limit(max_rows+1).count() proves whether row max_rows+1 exists
+    without moving data, and raises rather than launching an n² join on
+    a corpus (max_rows=0 disables)."""
     if max_rows and vectors.limit(max_rows + 1).count() > max_rows:
         raise ValueError(
             f"embedding_neardup_pairs is the exact O(n²) verifier and is "

@@ -4,8 +4,9 @@ Re-expresses SKOSValidator (skos_converter.py:96-411), which runs its
 checks in one process over a vocabulary held in RAM; so does this
 engine. ``validate_local`` runs the checks over the triple index the DFS
 uses (plans.local_dfs.index_triples). ``validation_report`` and every
-public check reach it through ``collect_triples``: one guarded collect,
-the kernel, then strings or ``createDataFrame``. A vocabulary is
+public check reach it through ``collect_triples``: one guarded Arrow
+collect (one Spark job, no separate count), the kernel, then strings or
+``createDataFrame``. A vocabulary is
 driver-sized by construction; vocabularies above
 ``local_dfs.MAX_DRIVER_ROWS`` (5M) triples are an explicit non-goal and
 fail loudly in the guard instead of degrading.

@@ -11,9 +11,10 @@ determinism.
 
 Whole-table callers (plans.hierarchy.dfs_rows, the DataFrame face of
 this kernel, and render.render_text_local) reach it through
-``collect_triples``, which fails loudly above ``MAX_DRIVER_ROWS`` (5M)
-triples instead of OOMing the driver: vocabularies beyond that are an
-explicit non-goal. The batch path (api.document_rows_per_doc) runs it
+``collect_triples``: one Spark job through ``guard_driver_sized``, which
+ships the triples as Arrow and fails loudly above ``MAX_DRIVER_ROWS``
+(5M) triples instead of OOMing the driver: vocabularies beyond that are
+an explicit non-goal. The batch path (api.document_rows_per_doc) runs it
 once per document inside a grouped-map call. The golden-byte tests pin
 its renders against the reference's bytes.
 
@@ -25,6 +26,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from skosconverter_spark.config import (
@@ -60,33 +62,35 @@ _DOC_ROWS_SCHEMA = (
 MAX_DRIVER_ROWS = 5_000_000
 
 
-def guard_driver_sized(df: DataFrame, what: str, max_rows: int = MAX_DRIVER_ROWS) -> None:
-    """Fail fast when a driver-sized path is misused on a corpus-sized
-    table. limit(max_rows+1).count() early-exits the scan — it never
-    moves max_rows rows anywhere, it just proves whether row max_rows+1
-    exists. Set max_rows=0 to disable (caller takes responsibility)."""
-    if max_rows and df.limit(max_rows + 1).count() > max_rows:
+def guard_driver_sized(df: DataFrame, what: str, max_rows: int = MAX_DRIVER_ROWS) -> pa.Table:
+    """The engine's one way to move a table to the driver: the rows it
+    admits, as Arrow, in one Spark job. limit(max_rows+1) plans a
+    CollectLimit (one single-partition exchange, not executeTake rounds),
+    so at most max_rows+1 rows reach the driver; more than max_rows
+    raises. Arrow, not Rows: the Row path pays a pickled Row and a
+    __getattr__ per field (~2 s of a 3 s collect at 177k triples).
+    Set max_rows=0 to disable (caller takes responsibility)."""
+    tbl = (df.limit(max_rows + 1) if max_rows else df).toArrow()
+    if max_rows and tbl.num_rows > max_rows:
         raise ValueError(
             f"{what} materializes rows on the driver and is gated at "
             f"{max_rows} rows; this input exceeds it. Use the distributed "
             "sink (render_documents / write_graph_table) for corpus-sized "
             "tables, or raise max_rows explicitly."
         )
+    return tbl
+
+
+def arrow_rows(tbl: pa.Table) -> list[tuple]:
+    """The rows of an Arrow table as tuples, in column order."""
+    return list(zip(*(c.to_pylist() for c in tbl.columns)))
 
 
 def collect_triples(triples: DataFrame, max_rows: int = MAX_DRIVER_ROWS) -> list[tuple]:
-    guard_driver_sized(triples, "collect_triples", max_rows)
-    # Arrow transfer instead of .collect(): the row path deserializes one
-    # pickled Row per triple and pays a __getattr__ field lookup per
-    # column (measured ~2 s of the 3 s skos_forward collect at 177k
-    # triples); the Arrow path moves six columnar batches and converts
-    # each column once.
-    tbl = triples.select(
-        "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
-    ).toArrow()
-    return list(
-        zip(*(tbl.column(i).to_pylist() for i in range(tbl.num_columns)))
-    )
+    return arrow_rows(guard_driver_sized(
+        triples.select("subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"),
+        "collect_triples", max_rows,
+    ))
 
 
 def _local_part(uri: str) -> str:

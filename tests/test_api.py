@@ -249,3 +249,115 @@ def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):
     assert between <= in_group, f"{len(between - in_group)} of {len(between)} jobs left the group"
     pages.unpersist()
     vocab.unpersist()
+
+
+def _jobs_of(spark, group, fn):
+    """(fn(), the number of Spark jobs fn issued)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_guard_returns_the_rows_it_admits(spark):
+    """guard_driver_sized is the guarded collect itself: it returns the
+    admitted rows as an Arrow table, or raises past the gate."""
+    from skosconverter_spark.operators.render import guard_driver_sized
+
+    df = spark.range(7).selectExpr("id", "cast(id as string) s")
+    tbl = guard_driver_sized(df, "test", 7)
+    assert tbl.num_rows == 7 and tbl.column_names == ["id", "s"]
+    assert sorted(tbl.column("s").to_pylist()) == [str(i) for i in range(7)]
+    assert guard_driver_sized(df, "test", 0).num_rows == 7  # gate disabled
+    with pytest.raises(ValueError, match="gated at 6 rows"):
+        guard_driver_sized(df, "test", 6)
+
+
+def test_collect_triples_is_one_job(spark):
+    """The guard and the collect are one Spark job, also over many
+    partitions (a limit + count probe before the collect ran 3)."""
+    from skosconverter_spark.operators.render import collect_triples
+
+    triples = spark.range(2808).selectExpr(
+        "cast(id as string) subj", "'p' pred", "'o' obj",
+        "true obj_is_literal", "cast(null as string) obj_lang", "id seq",
+    ).repartition(8).cache()
+    triples.count()
+    rows, jobs = _jobs_of(spark, "collect_triples_one_job", lambda: collect_triples(triples))
+    assert len(rows) == 2808
+    assert jobs == 1, f"collect_triples issued {jobs} Spark jobs"
+    triples.unpersist()
+
+
+def test_skos_to_notion_job_count(spark):
+    """Validation and render each take the vocabulary in one guarded
+    collect: two Spark jobs in all (six with a count before each)."""
+    docs = spark.createDataFrame(
+        [("v", "v", "ttl", load_fixture_text("vocab_cycle"))], schema=DOCS
+    )
+    triples = ok_triples(extract_triples(docs, EngineConfig())).cache()
+    triples.count()
+    (text, issues, _), jobs = _jobs_of(
+        spark, "skos_to_notion_job_count",
+        lambda: skos_to_notion(triples, "csv", force=True),
+    )
+    assert text.startswith("Title,") and issues
+    assert jobs <= 2, f"skos_to_notion issued {jobs} Spark jobs"
+    triples.unpersist()
+
+
+def test_convert_directory_job_count(spark, tmp_path):
+    """The per-file render runs once: the guard's collect is the only
+    action over the parse → DFS → render grouped map (seven jobs when a
+    count ran it a second time)."""
+    _, jobs = _jobs_of(
+        spark, "convert_directory_job_count",
+        lambda: convert_directory(spark, str(DATA), str(tmp_path / "out"), fmt="csv"),
+    )
+    for name in ttl_fixture_names():
+        assert (tmp_path / "out" / f"{name}.csv").exists(), name
+    assert jobs <= 4, f"convert_directory issued {jobs} Spark jobs"
+
+
+def test_driver_bound_reads_go_through_the_guard():
+    """Every driver-bound table moves through guard_driver_sized. The
+    only other driver reads are bounded one-row lookups, named here."""
+    import ast
+    from pathlib import Path
+
+    import skosconverter_spark
+
+    actions = {"collect", "toPandas", "toArrow", "toLocalIterator", "first", "take", "head", "tail"}
+    allowed = {
+        ("plans/local_dfs.py", "guard_driver_sized"),
+        ("kg/pipeline.py", "fingerprint_of"),  # one aggregate row
+        ("kg/pipeline.py", "run_stage"),  # persist=False: one row per partition
+        ("operators/dedup.py", "ngram_jaccard_pairs"),  # the Σdf² cost row
+        ("operators/temporal.py", "asof_join"),  # limit(1) duplicate probe
+    }
+    root = Path(skosconverter_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+
+        def visit(node, func):
+            for child in ast.iter_child_nodes(node):
+                name = func
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = child.name
+                elif (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in actions
+                ):
+                    found.add((rel, func, child.func.attr, child.lineno))
+                visit(child, name)
+
+        visit(ast.parse(path.read_text(encoding="utf-8")), None)
+    stray = sorted(f for f in found if f[:2] not in allowed)
+    assert not stray, f"driver reads outside guard_driver_sized: {stray}"
+    assert {f[:2] for f in found} == allowed, "allow-list names a read that is gone"
