@@ -6,10 +6,9 @@ engine. ``validate_local`` runs the checks over the triple index the DFS
 uses (plans.local_dfs.index_triples). ``validation_report`` and every
 public check reach it through ``collect_triples``: one guarded Arrow
 collect (one Spark job, no separate count), the kernel, then strings or
-``createDataFrame``. A vocabulary is
-driver-sized by construction; vocabularies above
-``local_dfs.MAX_DRIVER_ROWS`` (5M) triples are an explicit non-goal and
-fail loudly in the guard instead of degrading.
+``createDataFrame``. A vocabulary is driver-sized by construction;
+vocabularies above ``local_dfs.MAX_DRIVER_ROWS`` (5M) triples are an
+explicit non-goal and fail loudly in the guard instead of degrading.
 
 Output contract: ``validation_report`` returns (issues, warnings) —
 the same strings the reference logs, in the same check order
