@@ -62,6 +62,10 @@ class ParquetCatalogAdapter:
         return json.loads(manifest.read_text()).get("input_fingerprint")
 
     def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:
+        # withdraw the previous commit record before its rows are
+        # overwritten: a crash before commit() must leave no manifest
+        # vouching for data it did not describe
+        (base / "_MANIFEST.json").unlink(missing_ok=True)
         w = df.write.mode("overwrite").option("compression", self.codec)
         if partition_by:
             w = w.partitionBy(*partition_by)

@@ -4,19 +4,19 @@ Stage graph (north_star):
 
     pages ──extract_text──▶ pages_text ──salted repartition──▶
       ├─ mention scan (broadcast trie) ─▶ mentions
-      ├─ candidate join + TF-IDF/Jaccard scoring ─▶ links
+      ├─ candidate join + TF-IDF context scoring ─▶ links
       └─ page-markdown triple extraction ─▶ raw_triples
     raw_triples ∪ vocabulary ──canonicalization closure──▶ triples
     triples ─▶ partitioned graph table (pred-partitioned parquet)
 
 Scheduling: ``run_pipeline`` builds this graph per call as a node table,
 ``name → (deps, fn(inputs))``, over the input fingerprints, the shared
-label table, the scorer's lookup tables and the stages. ``_run_graph``
-runs it as Dryad does (Isard et al., EuroSys 2007): a node starts once
-its inputs have resolved, and no pool thread waits on a sibling. So
+label table and the stages. ``_run_graph`` runs it as Dryad does (Isard
+et al., EuroSys 2007): a node starts once its inputs have resolved, and
+no pool thread waits on a sibling. So
 10_extract overlaps the label table, 20_mentions overlaps
-40_page_triples, 30_links starts when 20_mentions and the score tables
-are done, and 50_canonical when 40_page_triples is.
+40_page_triples, 30_links starts when 20_mentions is done, and
+50_canonical when 40_page_triples is.
 
 Resumability (north_rule): every stage writes a parquet checkpoint plus
 a ``_MANIFEST.json`` recording the stage name, its input fingerprint
@@ -46,8 +46,12 @@ from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.kg.canonicalize import canonicalize_triples
-from skosconverter_spark.kg.extract import extract_text, salted_repartition
-from skosconverter_spark.kg.linking import link_stage, vocab_score_tables
+from skosconverter_spark.kg.extract import (
+    EXTRACTOR_VERSION,
+    extract_text,
+    salted_repartition,
+)
+from skosconverter_spark.kg.linking import link_stage
 from skosconverter_spark.kg.mentions import label_table, scan_mentions
 from skosconverter_spark.sources.parse_udf import extract_triples, ok_triples
 
@@ -282,19 +286,8 @@ def run_pipeline(
         )
         return ok_triples(extract_triples(md, config))
 
-    def score_tables(i):
-        # vocabulary-only lookup tables: they need only the label table, so
-        # their aggregation rounds overlap the mention scan instead of
-        # sitting on the links stage's critical path
-        return tuple(
-            t.localCheckpoint(eager=True) for t in vocab_score_tables(i["labels"])
-        )
-
     def links(i):
-        return link_stage(
-            i["20_mentions"], vocab_triples, i["labels"], parts, link_threshold,
-            i["score_tables"],
-        )
+        return link_stage(i["20_mentions"], vocab_triples, i["labels"], parts, link_threshold)
 
     def canonical(i):
         return canonicalize_triples(
@@ -311,12 +304,15 @@ def run_pipeline(
     # module functions must see every call the nodes make
     fps = ("fp_pages", "fp_vocab")
     nodes = {
-        "fp_pages": ((), lambda i: fingerprint_of(pages, ["url"])),
-        "fp_vocab": ((), lambda i: fingerprint_of(vocab_triples, ["subj", "pred", "obj"])),
+        # every input column: the stages read more than the keys (extract
+        # keeps `text` and reads `html`; the vocabulary's language tags and
+        # seq order labels). The extractor version is part of the pages'
+        # fingerprint, so a new extractor re-runs every stage downstream.
+        "fp_pages": ((), lambda i: f"{fingerprint_of(pages, pages.columns)}|x={EXTRACTOR_VERSION}"),
+        "fp_vocab": ((), lambda i: fingerprint_of(vocab_triples, vocab_triples.columns)),
         # one label table serves the mention scanner, the candidate join
         # and the scorer profile: its distinct aggregation runs once
         "labels": ((), lambda i: label_table(vocab_triples).localCheckpoint(eager=True)),
-        "score_tables": (("labels",), score_tables),
         "10_extract": (("fp_pages",), stage("10_extract", fp_pages, extract)),
         "20_mentions": (
             ("10_extract", "labels", *fps),
@@ -327,7 +323,7 @@ def run_pipeline(
             stage("40_page_triples", fp_pages, page_triples, persist_intermediate),
         ),
         "30_links": (
-            ("20_mentions", "labels", "score_tables", *fps),
+            ("20_mentions", "labels", *fps),
             stage("30_links", lambda i: f"{fp_both(i)}|t={link_threshold}", links),
         ),
         "50_canonical": (

@@ -251,6 +251,52 @@ def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):
     vocab.unpersist()
 
 
+def test_run_pipeline_job_count(spark, tmp_path):
+    """A fresh run_pipeline over 40 pages issues at most 41 Spark jobs:
+    39 with the links score as 0.5 + 0.5·context, 47 while the constant
+    surface term was computed from vocabulary lookup tables."""
+    from skosconverter_spark.kg.pipeline import run_pipeline
+    from skosconverter_spark.sources.pages import synthesize_pages
+
+    from .test_kg_pipeline import vocab_ttl
+
+    pages = synthesize_pages(spark, 40, partitions=4).cache()
+    docs = spark.createDataFrame([("v", "v", "ttl", vocab_ttl())], schema=DOCS)
+    vocab = ok_triples(extract_triples(docs, EngineConfig())).cache()
+    pages.count(), vocab.count()
+    _, jobs = _jobs_of(
+        spark,
+        "run_pipeline_job_count",
+        lambda: run_pipeline(spark, pages, vocab, str(tmp_path / "kg"), partitions=4),
+    )
+    assert jobs <= 41, f"run_pipeline issued {jobs} Spark jobs"
+    pages.unpersist()
+    vocab.unpersist()
+
+
+def test_traced_benchmark_targets_exist():
+    """perfbench's --trace 1 wraps engine functions by (module, attribute)
+    from perfbench/layers.py WRAPPED; deleting or renaming one makes the
+    traced run fail with AttributeError."""
+    import ast
+    import importlib
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "layers.py"
+    (wrapped,) = [
+        ast.literal_eval(node.value)
+        for node in ast.parse(path.read_text(encoding="utf-8")).body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "WRAPPED" for t in node.targets)
+    ]
+    missing = [
+        (module, attr)
+        for module, attr, _ in wrapped
+        if not hasattr(importlib.import_module(module), attr)
+    ]
+    assert wrapped and not missing, f"traced targets gone: {missing}"
+
+
 def _jobs_of(spark, group, fn):
     """(fn(), the number of Spark jobs fn issued)."""
     sc = spark.sparkContext

@@ -334,3 +334,106 @@ def test_pipeline_resumes_after_failed_commit(spark, pages, vocab, tmp_path, mon
     assert committed() == before
     manifest = json.loads((root / "50_canonical" / "_MANIFEST.json").read_text())
     assert manifest["stage"] == "50_canonical"
+
+
+def test_link_stage_scores_half_plus_half_context(spark):
+    """Candidates are exact dictionary hits, so every link scores
+    0.5 + 0.5·context_tfidf. p3's only surface occurs on every page, so
+    its context vector is zero and its link scores exactly 0.5."""
+    import math
+
+    from skosconverter_spark.config import SKOS_ALT_LABEL, SKOS_PREF_LABEL
+    from skosconverter_spark.kg.linking import link_stage, mention_context_scores
+    from skosconverter_spark.kg.mentions import MENTION_SCHEMA, label_table
+
+    vocab = spark.createDataFrame(
+        [
+            ("urn:c1", SKOS_PREF_LABEL, "Alpha Beta"),
+            ("urn:c1", SKOS_ALT_LABEL, "Alpha"),
+            ("urn:c2", SKOS_PREF_LABEL, "Gamma"),
+            ("urn:c3", SKOS_PREF_LABEL, "Delta"),
+            ("urn:c4", SKOS_PREF_LABEL, "Epsilon"),
+            ("urn:c4", SKOS_ALT_LABEL, "Delta"),  # ambiguous with c3
+        ],
+        "subj string, pred string, obj string",
+    )
+    mentions = spark.createDataFrame(
+        [
+            ("p1", "Alpha Beta", "alpha beta", 0, 10),
+            ("p1", "Gamma", "gamma", 11, 16),
+            ("p2", "gamma", "gamma", 0, 5),
+            ("p2", "Delta", "delta", 6, 11),
+            ("p3", "GAMMA", "gamma", 0, 5),
+        ],
+        MENTION_SCHEMA,
+    )
+    lt = label_table(vocab)
+    links = {
+        (r.url, r.begin): (r.concept_uri, r.score)
+        for r in link_stage(mentions, vocab, lt, 2, 0.25).collect()
+    }
+    # 3 pages; "gamma" is on all of them (idf ln(4/4) = 0), every other
+    # surface on one (idf ln(4/2)). c1's profile has 2 surfaces, c4's 2.
+    half_sqrt2 = 0.5 + 0.5 / math.sqrt(2.0)
+    want = {
+        ("p1", 0): ("urn:c1", half_sqrt2),
+        ("p1", 11): ("urn:c2", 0.5),
+        ("p2", 0): ("urn:c2", 0.5),
+        ("p2", 6): ("urn:c3", 1.0),  # c3's cosine 1 beats c4's 1/√2
+        ("p3", 0): ("urn:c2", 0.5),
+    }
+    assert {k: c for k, (c, _) in links.items()} == {k: c for k, (c, _) in want.items()}
+    for k, (_, score) in want.items():
+        assert links[k][1] == pytest.approx(score, rel=1e-12), k
+    assert links[("p3", 0)][1] == 0.5
+    ctx = {
+        (r.url, r.uri): r.context_tfidf
+        for r in mention_context_scores(mentions, lt).collect()
+    }
+    for (url, _), (uri, score) in links.items():
+        assert score == 0.5 + 0.5 * ctx.get((url, uri), 0.0), (url, uri)
+
+
+def test_failed_commit_withdraws_previous_manifest(spark, tmp_path, monkeypatch):
+    """Overwriting a committed stage withdraws its manifest first: after
+    a write whose commit fails, a rerun under the OLD fingerprint must
+    rebuild, not serve the uncommitted rows under the old record."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+
+    def rows(x):
+        return lambda: spark.createDataFrame([(x,)], "x int")
+
+    def xs(df):
+        return [r.x for r in df.collect()]
+
+    assert xs(runner.run_stage("30_links", "A", rows(1))) == [1]
+
+    def failing_commit(self, *args):
+        raise RuntimeError("injected commit failure")
+
+    monkeypatch.setattr(ParquetCatalogAdapter, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        runner.run_stage("30_links", "B", rows(2))
+    monkeypatch.undo()
+    assert runner.catalog.committed_fingerprint(tmp_path / "kg" / "30_links") is None
+    assert xs(runner.run_stage("30_links", "A", rows(1))) == [1]
+
+
+def test_changed_page_text_reruns_extract(spark, pages, vocab, tmp_path):
+    """The pages' fingerprint covers every column, not just the urls: a
+    rerun over the same urls with one page's text changed serves the new
+    text, not the 10_extract checkpoint of the old one."""
+    root = str(tmp_path / "kg")
+    url = pages.select("url").orderBy("url").first().url
+    run_pipeline(spark, pages, vocab, root, partitions=4)
+    edited = pages.withColumn(
+        "text",
+        F.when(F.col("url") == url, F.lit("an edited page")).otherwise(F.col("text")),
+    )
+    out = run_pipeline(spark, edited, vocab, root, partitions=4)
+    texts = {r.url: r.text for r in out["pages_text"].select("url", "text").collect()}
+    assert texts[url] == "an edited page"
+    assert len(texts) == pages.count()

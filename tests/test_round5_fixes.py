@@ -6,8 +6,6 @@
   the separator before handing it to F.split (Java regex).
 - normalize_url matches the query only in the pre-fragment substring
   (SPA fragments like #/view?tab=1 must not resurrect params).
-- score_candidates degrades loose-generator candidates to a computed
-  max-over-labels jaccard discount instead of silently dropping them.
 """
 
 from __future__ import annotations
@@ -515,38 +513,3 @@ def test_decode_still_loud_without_pillow():
             M.decode_media(b"\x89PNG", "image")
         with pytest.raises(NotImplementedError):
             M.real_resize(b"\x89PNG", 2, 2)
-
-
-# ---------------------------------------------------------------------------
-# score_candidates: loose generators discount, never drop
-# ---------------------------------------------------------------------------
-
-
-def test_score_candidates_loose_generator_discounts(spark):
-    from skosconverter_spark.config import SKOS_PREF_LABEL
-    from skosconverter_spark.kg.linking import score_candidates
-
-    triples = spark.createDataFrame(
-        [("urn:c1", SKOS_PREF_LABEL, "Alpha Beta")], "subj string, pred string, obj string"
-    )
-    mentions = spark.createDataFrame([], "url string, norm_surface string")
-    candidates = spark.createDataFrame(
-        [
-            # exact dictionary hit: precomputed lookup path
-            ("u1", "Alpha Beta", "alpha beta", 0, 10, "urn:c1", "pref"),
-            # loose generator: surface is NOT a label of c1 — must be
-            # scored with jaccard({alpha},{alpha,beta}) = 0.5, not dropped
-            ("u1", "Alpha", "alpha", 20, 25, "urn:c1", "loose"),
-        ],
-        "url string, surface string, norm_surface string, begin int, "
-        "end int, concept_uri string, kind string",
-    )
-    got = {
-        (r.norm_surface): r.score
-        for r in score_candidates(
-            candidates, mentions, triples, threshold=0.01
-        ).collect()
-    }
-    # empty mentions → context_tfidf coalesces to 0 → score = 0.5 * jaccard
-    assert got["alpha beta"] == 0.5
-    assert got["alpha"] == 0.25
