@@ -390,9 +390,7 @@ def q_kg_links(spark, sf_dir):
     # aggregation is url-prefixed, so it plans exchange-free too
     lt = label_table(triples).localCheckpoint(eager=True)
     mentions = scan_mentions(pages, triples, label_tbl=lt).localCheckpoint(eager=True)
-    best = link_stage(
-        mentions, triples, lt, spark.sparkContext.defaultParallelism, 0.25
-    )
+    best = link_stage(mentions, triples, lt, spark.sparkContext.defaultParallelism)
     return best.groupBy("url", "norm_surface", "concept_uri").agg(
         F.count("*").alias("n_mentions"),
         F.round(F.min("score"), 6).alias("score"),

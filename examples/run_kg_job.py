@@ -10,7 +10,7 @@ Cluster usage (tools/make_submit.py builds the zip):
 Local smoke:
 
     python examples/run_kg_job.py --pages <dir> --vocab <ttl> --out <dir> \
-        [--no-persist-intermediate] [--partitions N]
+        [--partitions N]
 
 Reads the pages table (url, warc_ts, html, text, lang), parses the SKOS
 vocabulary, runs extract -> mention scan -> linking -> canonicalize ->
@@ -33,13 +33,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     ap.add_argument("--vocab", required=True, help="SKOS vocabulary file (.ttl)")
     ap.add_argument("--out", required=True, help="pipeline root (stages + graph)")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--link-threshold", type=float, default=0.25)
-    ap.add_argument(
-        "--no-persist-intermediate",
-        action="store_true",
-        help="keep re-derivable middle stages executor-local "
-        "(faster on shared-store-bound clusters; resume restarts from extract)",
-    )
     args = ap.parse_args(argv)
 
     from skosconverter_spark.config import EngineConfig
@@ -68,8 +61,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             args.out,
             config=cfg,
             partitions=args.partitions,
-            link_threshold=args.link_threshold,
-            persist_intermediate=not args.no_persist_intermediate,
         )
         for name in ("pages_text", "mentions", "links", "triples", "graph"):
             print(f"{name}: {out[name].count()} rows")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
+from skosconverter_spark.operators.export import write_graph_table
 from skosconverter_spark.operators.render import render_documents, render_text_local
 from skosconverter_spark.operators.validate import gate, validation_report
 from skosconverter_spark.plans.local_dfs import arrow_rows, guard_driver_sized
@@ -103,9 +104,7 @@ def convert_directory(
     errors = doc_errors(extracted).cache()
 
     if operation == "notion2skos":
-        triples.write.mode("overwrite").partitionBy("pred").parquet(
-            str(out_root / "triples")
-        )
+        write_graph_table(triples, str(out_root / "triples"))
     else:
         per_doc = render_documents(
             document_rows_per_doc(extracted, cfg), fmt, vocab_col="vocab_id"

@@ -11,7 +11,7 @@ concern             ParquetCatalogAdapter          Iceberg table (production)
 ==================  ============================  =========================
 stage output        <base>/data parquet files      table commit (snapshot)
 commit record       <base>/_MANIFEST.json          snapshot summary props
-input fingerprint   count:xor-hash of the input    input table snapshot id
+input fingerprint   count:hash-sum of the input    input table snapshot id
 per-part lineage    parquet FOOTER row counts      manifest-file row counts
 partitioned sink    write.partitionBy(...)         partitioned + bucketed
                                                    table spec

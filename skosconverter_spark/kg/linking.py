@@ -12,9 +12,9 @@ Score model (deterministic):
 - context_tfidf: cosine similarity between the page's mention TF-IDF
   vector (vocabulary surfaces found on the page) and the concept's
   surface set, with document frequencies computed over the pages.
-- score = 0.5 + 0.5 * context_tfidf; candidates below ``threshold`` are
-  dropped (the theta part of J11 applied after the equi candidate-gen
-  join).
+- score = 0.5 + 0.5 * context_tfidf. TF-IDF weights are non-negative
+  (df ≤ n_pages), so the cosine lies in [0, 1] and every score in
+  [0.5, 1]; no threshold is applied.
 """
 
 from __future__ import annotations
@@ -101,10 +101,9 @@ def score_candidates(
     candidates: DataFrame,
     mentions: DataFrame,
     label_tbl: DataFrame,
-    threshold: float = 0.25,
 ) -> DataFrame:
     """candidates (url, surface, norm_surface, begin, end, concept_uri,
-    kind) → scored links above threshold.
+    kind) → scored links.
 
     Contract: ``candidates`` come from mention_candidates over the same
     ``label_tbl``, so every (concept_uri, norm_surface) is one of the
@@ -126,7 +125,6 @@ def score_candidates(
         .withColumn(
             "score", 0.5 + 0.5 * F.coalesce(F.col("context_tfidf"), F.lit(0.0))
         )
-        .filter(F.col("score") >= threshold)
     )
     return scored.select(
         "url", "surface", "norm_surface", "begin", "end", "concept_uri", "score"
@@ -168,7 +166,6 @@ def link_stage(
     triples: DataFrame,
     label_tbl: DataFrame,
     parts: int,
-    threshold: float,
 ) -> DataFrame:
     """Mentions → candidates → scored links → one best concept per
     mention span: the KG pipeline's 30_links and the kg_links query.
@@ -186,6 +183,5 @@ def link_stage(
             mention_candidates(by_url, triples, label_tbl=label_tbl),
             by_url,
             label_tbl,
-            threshold=threshold,
         )
     )

@@ -7,7 +7,7 @@ Stage graph (north_star):
       ├─ candidate join + TF-IDF context scoring ─▶ links
       └─ page-markdown triple extraction ─▶ raw_triples
     raw_triples ∪ vocabulary ──canonicalization closure──▶ triples
-    triples ─▶ partitioned graph table (pred-partitioned parquet)
+    triples ─▶ 60_graph (the same rows, pred-partitioned parquet)
 
 Scheduling: ``run_pipeline`` builds this graph per call as a node table,
 ``name → (deps, fn(inputs))``, over the input fingerprints, the shared
@@ -18,13 +18,15 @@ no pool thread waits on a sibling. So
 40_page_triples, 30_links starts when 20_mentions is done, and
 50_canonical when 40_page_triples is.
 
-Resumability (north_rule): every stage writes a parquet checkpoint plus
-a ``_MANIFEST.json`` recording the stage name, its input fingerprint
-and row count. On rerun, a stage whose manifest matches the current
-input fingerprint is loaded instead of recomputed — resume-from-any-
-completed-stage with no extra bookkeeping. (This container has plain
-parquet; on a real deployment these writes are Iceberg commits and the
-fingerprint is the input snapshot id.)
+Resumability (north_rule): every stage, the 60_graph sink included,
+goes through ``StageRunner.run_stage``: it writes a parquet checkpoint
+plus a ``_MANIFEST.json`` recording the stage name, its input
+fingerprint and row count. On rerun, a stage whose manifest matches the
+current input fingerprint is loaded instead of recomputed — resume-from-
+any-completed-stage with no extra bookkeeping, and a full rerun writes
+no file. (The default catalog is plain parquet; on a real deployment
+these writes are Iceberg commits and the fingerprint is the input
+snapshot id.)
 
 Lineage/metrics (north_rule): each stage emits per-output-partition row
 counts into ``stage_metrics`` parquet alongside the checkpoint. The
@@ -46,6 +48,7 @@ from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.kg.canonicalize import canonicalize_triples
+from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
 from skosconverter_spark.kg.extract import (
     EXTRACTOR_VERSION,
     extract_text,
@@ -60,15 +63,7 @@ from skosconverter_spark.sources.parse_udf import extract_triples, ok_triples
 class StageRunner:
     spark: SparkSession
     root: str
-    config: EngineConfig = field(default_factory=EngineConfig)
-    force: bool = False  # recompute even when a manifest matches
-    catalog: object | None = None  # CatalogAdapter; default parquet+manifest
-
-    def __post_init__(self):
-        if self.catalog is None:
-            from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
-
-            self.catalog = ParquetCatalogAdapter()
+    catalog: object = field(default_factory=ParquetCatalogAdapter)  # a CatalogAdapter
 
     def _base(self, stage: str) -> Path:
         return Path(self.root) / stage
@@ -78,54 +73,23 @@ class StageRunner:
         stage: str,
         input_fingerprint: str,
         build,  # () -> DataFrame
-        persist: bool = True,
+        partition_by: tuple[str, ...] = (),
     ) -> DataFrame:
-        """Build-or-load one stage; write checkpoint + manifest + metrics.
-
-        ``persist=False`` materializes the stage executor-locally
-        (localCheckpoint → memory/local-disk blocks) instead of writing
-        a parquet checkpoint: downstream stages still read a
-        materialized boundary (no python-stage fusion, results reusable
-        by two consumers), but the bytes never cross the shared
-        checkpoint store. The trade: the stage is NOT resumable (no
-        manifest) — a rerun rebuilds it from its persisted inputs. A
-        matching manifest from a previous persisted run is still
-        honored either way.
+        """Build-or-load one stage: build → write → read back → footer
+        lineage → metrics → commit. A stage whose committed fingerprint
+        matches ``input_fingerprint`` is read back without building or
+        writing anything. ``partition_by`` lays the written files out by
+        those columns (the graph sink's pred partitioning).
 
         Storage/commit mechanics live behind ``self.catalog``
         (kg/catalog.py): parquet + JSON manifest here, Iceberg snapshot
         commits on a real deployment — the pipeline never touches the
         storage layer directly."""
         base = self._base(stage)
-        metrics = base / "metrics"
-        if (
-            not self.force
-            and self.catalog.committed_fingerprint(base) == input_fingerprint
-        ):
+        if self.catalog.committed_fingerprint(base) == input_fingerprint:
             return self.catalog.read(self.spark, base)
         t0 = time.time()
-        df = build()
-        if not persist:
-            out = df.localCheckpoint(eager=True)
-            wall_ms = int((time.time() - t0) * 1000)
-            # lineage over the cached blocks (JVM memory scan — cheap,
-            # and these stages have no parquet footers to read)
-            per_part_rows = [
-                (r["pid"], r["rows"])
-                for r in out.groupBy(
-                    F.spark_partition_id().alias("pid")
-                ).count().withColumnRenamed("count", "rows").collect()
-            ]
-            _write_metrics_parquet(
-                metrics,
-                [
-                    (stage, pid, n, wall_ms, input_fingerprint)
-                    for pid, n in sorted(per_part_rows)
-                ]
-                or [(stage, -1, 0, wall_ms, input_fingerprint)],
-            )
-            return out
-        self.catalog.write(df, base)
+        self.catalog.write(build(), base, partition_by=partition_by)
         out = self.catalog.read(self.spark, base)
         wall_ms = int((time.time() - t0) * 1000)
         # per-partition lineage from the catalog's commit metadata
@@ -134,7 +98,7 @@ class StageRunner:
         per_part_rows = self.catalog.partition_rows(base)
         rows = sum(n for _, n in per_part_rows)
         _write_metrics_parquet(
-            metrics,
+            base / "metrics",
             [
                 (stage, pid, n, wall_ms, input_fingerprint)
                 for pid, n in per_part_rows
@@ -185,11 +149,17 @@ def _write_metrics_parquet(metrics: Path, rows: list[tuple]) -> None:
 
 
 def fingerprint_of(df: DataFrame, sample_cols: list[str]) -> str:
-    """Cheap order-insensitive content fingerprint: count + xor-ish hash
-    over a column projection. At real scale this is the Iceberg snapshot
-    id; here it must detect input changes across runs."""
+    """Cheap order-insensitive content fingerprint: count + the sum of a
+    per-row hash over a column projection. At real scale this is the
+    Iceberg snapshot id; here it must detect input changes across runs.
+
+    The row hash interleaves each column with its null flag, because
+    ``xxhash64`` skips nulls: (u, null, x) and (u, x, null) would hash
+    alike. The rows combine by an exact decimal sum, not ``bit_xor``,
+    under which two identical rows cancel out."""
+    row = F.xxhash64(*(x for c in sample_cols for x in (F.col(c), F.col(c).isNull())))
     agg = df.select(
-        F.expr(f"bit_xor(xxhash64({', '.join(sample_cols)}))").alias("h"),
+        F.sum(row.cast("decimal(38,0)")).alias("h"),
         F.count("*").alias("c"),
     ).collect()[0]
     return f"{agg['c']}:{agg['h']}"
@@ -240,29 +210,18 @@ def run_pipeline(
     root: str,
     config: EngineConfig | None = None,
     partitions: int | None = None,
-    link_threshold: float = 0.25,
-    force: bool = False,
-    persist_intermediate: bool = True,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full KG pipeline; returns the stage outputs.
-
-    ``persist_intermediate=False`` keeps the re-derivable middle stages
-    (20_mentions, 40_page_triples) executor-local instead of writing
-    them to the checkpoint store: resume then restarts from 10_extract
-    rather than mid-DAG, but every byte of intermediate state stays off
-    the shared disk — the right trade when checkpoint I/O, not compute,
-    bounds scaling (BASELINE.md's single-box pipeline measurements).
-    10_extract (the expensive Arrow stage) and the final sinks are
-    always persisted."""
+    Every stage is committed, so a rerun resumes after the last
+    committed stage and a full rerun builds and writes nothing."""
     config = config or EngineConfig()
     parts = partitions or spark.sparkContext.defaultParallelism
-    runner = StageRunner(spark, root, config, force=force)
-    graph_base = Path(root) / "60_graph"
+    runner = StageRunner(spark, root)
 
-    def stage(name, fingerprint, build, persist=True):
-        # positional (name, fingerprint, build, persist): a tracer wrapping
-        # run_stage reads the stage name from its first argument
-        return lambda i: runner.run_stage(name, fingerprint(i), lambda: build(i), persist)
+    def stage(name, fingerprint, build, partition_by=()):
+        # positional (name, fingerprint, build, partition_by): a tracer
+        # wrapping run_stage reads the stage name from its first argument
+        return lambda i: runner.run_stage(name, fingerprint(i), lambda: build(i), partition_by)
 
     def fp_pages(i):
         return i["fp_pages"]
@@ -287,18 +246,12 @@ def run_pipeline(
         return ok_triples(extract_triples(md, config))
 
     def links(i):
-        return link_stage(i["20_mentions"], vocab_triples, i["labels"], parts, link_threshold)
+        return link_stage(i["20_mentions"], vocab_triples, i["labels"], parts)
 
     def canonical(i):
         return canonicalize_triples(
             i["40_page_triples"].unionByName(vocab_triples), config.max_iterations
         )
-
-    def graph(i):
-        # pred-partitioned so triple-pattern scans prune (on Iceberg this
-        # is a partitioned+bucketed table spec)
-        runner.catalog.write(i["50_canonical"], graph_base, partition_by=("pred",))
-        return runner.catalog.read(spark, graph_base)
 
     # built per call, never at import: a tracer that rebinds the engine's
     # module functions must see every call the nodes make
@@ -316,21 +269,26 @@ def run_pipeline(
         "10_extract": (("fp_pages",), stage("10_extract", fp_pages, extract)),
         "20_mentions": (
             ("10_extract", "labels", *fps),
-            stage("20_mentions", fp_both, mentions, persist_intermediate),
+            stage("20_mentions", fp_both, mentions),
         ),
         "40_page_triples": (
             ("10_extract", "fp_pages"),
-            stage("40_page_triples", fp_pages, page_triples, persist_intermediate),
+            stage("40_page_triples", fp_pages, page_triples),
         ),
         "30_links": (
             ("20_mentions", "labels", *fps),
-            stage("30_links", lambda i: f"{fp_both(i)}|t={link_threshold}", links),
+            stage("30_links", fp_both, links),
         ),
         "50_canonical": (
             ("40_page_triples", *fps),
             stage("50_canonical", fp_both, canonical),
         ),
-        "60_graph": (("50_canonical",), graph),
+        # pred-partitioned so triple-pattern scans prune (on Iceberg this
+        # is a partitioned+bucketed table spec)
+        "60_graph": (
+            ("50_canonical", *fps),
+            stage("60_graph", fp_both, lambda i: i["50_canonical"], ("pred",)),
+        ),
     }
     out = _run_graph(nodes, max_workers=len(nodes))
     return {

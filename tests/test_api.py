@@ -381,7 +381,6 @@ def test_driver_bound_reads_go_through_the_guard():
     allowed = {
         ("plans/local_dfs.py", "guard_driver_sized"),
         ("kg/pipeline.py", "fingerprint_of"),  # one aggregate row
-        ("kg/pipeline.py", "run_stage"),  # persist=False: one row per partition
         ("operators/dedup.py", "ngram_jaccard_pairs"),  # the Σdf² cost row
         ("operators/temporal.py", "asof_join"),  # limit(1) duplicate probe
     }

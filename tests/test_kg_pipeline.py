@@ -152,33 +152,25 @@ def test_pipeline_end_to_end_and_resume(spark, pages, vocab, tmp_path):
     assert resume_s < 30, f"resume took {resume_s:.1f}s — checkpoints not reused?"
 
 
-def test_pipeline_unpersisted_intermediates_identical(spark, pages, vocab, tmp_path):
-    """persist_intermediate=False keeps 20_mentions/40_page_triples
-    executor-local: same results, lineage metrics still present, and no
-    parquet checkpoint written for those stages."""
-    persisted = run_pipeline(
-        spark, pages, vocab, str(tmp_path / "kg_p"), partitions=4
-    )
-    local = run_pipeline(
-        spark,
-        pages,
-        vocab,
-        str(tmp_path / "kg_l"),
-        partitions=4,
-        persist_intermediate=False,
-    )
-    key = lambda df: sorted(
-        (r.subj, r.pred, r.obj, r.obj_lang) for r in df.collect()
-    )
-    assert key(local["triples"]) == key(persisted["triples"])
-    assert local["links"].count() == persisted["links"].count()
-    for stage in ("20_mentions", "40_page_triples"):
-        base = tmp_path / "kg_l" / stage
-        assert not (base / "data").exists()
-        assert not (base / "_MANIFEST.json").exists()
-        assert (base / "metrics").exists()
-    stages = {r.stage for r in local["metrics"].select("stage").distinct().collect()}
-    assert {"10_extract", "20_mentions", "30_links", "40_page_triples", "50_canonical"} <= stages
+def test_full_rerun_writes_no_file(spark, pages, vocab, tmp_path):
+    """Every stage, the 60_graph sink included, is committed: a rerun
+    over the same inputs is answered from the manifests and leaves every
+    file under the root byte- and mtime-identical."""
+    root = tmp_path / "kg"
+    run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    assert (root / "60_graph" / "_MANIFEST.json").exists()
+
+    def files():
+        return {
+            f.relative_to(root): (f.read_bytes(), f.stat().st_mtime_ns)
+            for f in root.rglob("*")
+            if f.is_file()
+        }
+
+    before = files()
+    out = run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    assert out["graph"].count() == out["triples"].count()
+    assert files() == before
 
 
 def test_salted_repartition_bounds_skew(spark, pages):
@@ -290,7 +282,7 @@ def test_stage_metrics_read_with_explicit_schema(spark, pages, tmp_path):
 
     runner = StageRunner(spark, str(tmp_path / "kg"))
     runner.run_stage("10_extract", "fp", lambda: pages.select("url"))
-    runner.run_stage("20_mentions", "fp", lambda: pages.select("url"), False)
+    runner.run_stage("60_graph", "fp", lambda: pages.select("url", "lang"), ("lang",))
     sc = spark.sparkContext
     sc.setJobGroup("stage_metrics_job_count", "stage_metrics job count")
     try:
@@ -370,7 +362,7 @@ def test_link_stage_scores_half_plus_half_context(spark):
     lt = label_table(vocab)
     links = {
         (r.url, r.begin): (r.concept_uri, r.score)
-        for r in link_stage(mentions, vocab, lt, 2, 0.25).collect()
+        for r in link_stage(mentions, vocab, lt, 2).collect()
     }
     # 3 pages; "gamma" is on all of them (idf ln(4/4) = 0), every other
     # surface on one (idf ln(4/2)). c1's profile has 2 surfaces, c4's 2.
@@ -437,3 +429,29 @@ def test_changed_page_text_reruns_extract(spark, pages, vocab, tmp_path):
     texts = {r.url: r.text for r in out["pages_text"].select("url", "text").collect()}
     assert texts[url] == "an edited page"
     assert len(texts) == pages.count()
+
+
+def test_fingerprint_sees_duplicated_rows(spark):
+    """Two identical rows must not cancel: these inputs differ in every
+    duplicated row and agree elsewhere."""
+    from skosconverter_spark.kg.pipeline import fingerprint_of
+
+    def fp(rows):
+        return fingerprint_of(spark.createDataFrame(rows, "u string, v string"), ["u", "v"])
+
+    a = [("u1", "x"), ("u1", "x"), ("u2", "y")]
+    b = [("u3", "z"), ("u3", "z"), ("u2", "y")]
+    assert fp(a) != fp(b)
+    assert fp(a) == fp(list(reversed(a)))  # still order-insensitive
+
+
+def test_fingerprint_sees_where_the_nulls_are(spark):
+    """A value moved between adjacent nullable columns changes the
+    fingerprint, though the non-null values hash in the same order."""
+    from skosconverter_spark.kg.pipeline import fingerprint_of
+
+    def fp(rows):
+        df = spark.createDataFrame(rows, "u string, v string, w string")
+        return fingerprint_of(df, ["u", "v", "w"])
+
+    assert fp([("u1", None, "x")]) != fp([("u1", "x", None)])

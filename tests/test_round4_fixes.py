@@ -225,8 +225,7 @@ def test_run_kg_job_script(spark, tmp_path, capsys):
     vocab_file.write_text(vocab_ttl(), encoding="utf-8")
     rc = run_kg_job.main(
         ["--pages", pages_dir, "--vocab", str(vocab_file),
-         "--out", str(tmp_path / "kg"), "--partitions", "2",
-         "--no-persist-intermediate"],
+         "--out", str(tmp_path / "kg"), "--partitions", "2"],
         spark=spark,
     )
     assert rc == 0

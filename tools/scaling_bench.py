@@ -79,7 +79,7 @@ def compute_job():
     m = scan_mentions(pt, vocab).localCheckpoint(eager=True)
     branches = [
         lambda: ok_triples(extract_triples(docs, cfg)).count(),
-        lambda: link_stage(m, vocab, label_table(vocab), cpus, 0.25).count(),
+        lambda: link_stage(m, vocab, label_table(vocab), cpus).count(),
         lambda: lang_id(pt.selectExpr("monotonically_increasing_id() as doc_id", "text")).count(),
     ]
     with ThreadPoolExecutor(max_workers=3) as pool:
@@ -100,24 +100,12 @@ out = run_pipeline(spark, pages, vocab, work + "/kg", partitions=cpus)
 n_triples = out["triples"].count()
 pipe_s = time.time() - t0
 
-# ---- timed: pipeline with executor-local intermediates ----
-# (persist_intermediate=False: 20_mentions/40_page_triples stay in
-# executor memory/local disk — the per-node-storage deployment shape)
-t0 = time.time()
-out2 = run_pipeline(spark, pages, vocab, work + "/kg_local", partitions=cpus,
-                    persist_intermediate=False)
-n2 = out2["triples"].count()
-pipe_local_s = time.time() - t0
-assert n2 == n_triples, (n2, n_triples)
-
 print(json.dumps({{
     "cpus": cpus, "rows": rows,
     "compute_sec": round(comp_s, 2),
     "compute_pages_per_sec": round(rows / comp_s, 1),
     "pipeline_sec": round(pipe_s, 2),
     "pipeline_pages_per_sec": round(rows / pipe_s, 1),
-    "pipeline_local_sec": round(pipe_local_s, 2),
-    "pipeline_local_pages_per_sec": round(rows / pipe_local_s, 1),
     "triples": n_triples,
     "triples_per_sec": round(n_triples / pipe_s, 1),
 }}))
@@ -147,9 +135,6 @@ def main():
     large = run_at(args.n * 4, args.rows)
     eff_c = (large["compute_pages_per_sec"] / small["compute_pages_per_sec"]) / 4.0
     eff_p = (large["pipeline_pages_per_sec"] / small["pipeline_pages_per_sec"]) / 4.0
-    eff_l = (
-        large["pipeline_local_pages_per_sec"] / small["pipeline_local_pages_per_sec"]
-    ) / 4.0
     report = {
         "rows": args.rows,
         f"local[{args.n}]": small,
@@ -162,12 +147,6 @@ def main():
             large["pipeline_pages_per_sec"] / small["pipeline_pages_per_sec"], 2
         ),
         "pipeline_scaling_efficiency": round(eff_p, 3),
-        "pipeline_local_speedup": round(
-            large["pipeline_local_pages_per_sec"]
-            / small["pipeline_local_pages_per_sec"],
-            2,
-        ),
-        "pipeline_local_scaling_efficiency": round(eff_l, 3),
     }
     print(json.dumps(report, indent=2))
 
@@ -190,9 +169,6 @@ def main():
             f"| full checkpointed pipeline (incl. stage parquet writes) "
             f"| {small['pipeline_pages_per_sec']} | {large['pipeline_pages_per_sec']} "
             f"| {report['pipeline_speedup']}x | {report['pipeline_scaling_efficiency']} |\n"
-            f"| pipeline, executor-local intermediates (persist_intermediate=False) "
-            f"| {small['pipeline_local_pages_per_sec']} | {large['pipeline_local_pages_per_sec']} "
-            f"| {report['pipeline_local_speedup']}x | {report['pipeline_local_scaling_efficiency']} |\n"
             f"{end}"
         )
         text = md.read_text()
