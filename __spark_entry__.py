@@ -386,8 +386,9 @@ def q_kg_links(spark, sf_dir):
         F.concat(F.lit("doc:"), F.col("doc_id")).alias("url"), "text"
     )
     triples = _kg_vocab_triples(spark)
-    # one label table for scanner, candidates and scorer; the final
-    # aggregation is url-prefixed, so it plans exchange-free too
+    # one label table for the scanner and the links vocabulary; the
+    # final aggregation is url-prefixed, so it reuses the links stage's
+    # url partitioning
     lt = label_table(triples).localCheckpoint(eager=True)
     mentions = scan_mentions(pages, triples, label_tbl=lt).localCheckpoint(eager=True)
     best = link_stage(mentions, triples, lt, spark.sparkContext.defaultParallelism)
@@ -1706,8 +1707,10 @@ def _kg_links_sql() -> str:
     dictionary hits, so surface_jaccard is identically 1.0 (max over the
     concept's own labels always includes the matched one) and the score
     reduces to 0.5 + 0.5*context; the context term is the mention-based
-    TF-IDF cosine of kg.linking.mention_context_scores, reproduced here
-    with the same ln weights, norms and zero-denominator guard."""
+    TF-IDF cosine of kg.linking's score model (its module docstring),
+    which kg.linking evaluates page by page in one kernel pass; here it
+    is one global query with the same ln weights, norms and
+    zero-denominator guard."""
     surfaces = sorted({label for _, _, label in _KG_VOCAB})
     uni = [s for s in surfaces if " " not in s]
     bi = [s for s in surfaces if " " in s]

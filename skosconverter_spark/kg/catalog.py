@@ -15,12 +15,21 @@ input fingerprint   count:hash-sum of the input    input table snapshot id
 per-part lineage    parquet FOOTER row counts      manifest-file row counts
 partitioned sink    write.partitionBy(...)         partitioned + bucketed
                                                    table spec
+schema              "schema" in _MANIFEST.json     table schema in the
+                                                   metadata JSON
 ==================  ============================  =========================
 
 An adapter exposes five operations (committed_fingerprint, write, read,
 partition_rows, commit); everything else in kg/pipeline.py is
 adapter-agnostic. No Iceberg adapter ships: it needs the Iceberg runtime
 on the session, which an offline build cannot have.
+
+Reads plan from the commit record, not from the data: ``write`` notes
+the schema a read-back will have (``read_back_schema``: every field
+nullable, partition columns last) and ``read`` passes it to
+``spark.read.schema(...)``, so a read runs no schema-inference job. A
+commit record without a schema (written before schemas were recorded)
+counts as uncommitted: the stage recomputes once.
 
 ``SnapshotCatalogAdapter`` sits between the two columns: it runs on a
 plain filesystem (no Iceberg jars) but implements the Iceberg
@@ -41,6 +50,28 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def read_back_schema(df: DataFrame, partition_by: tuple[str, ...] = ()) -> StructType:
+    """The schema ``spark.read.parquet`` infers for ``df`` written with
+    ``partition_by``: file sources read every field (nested ones too) as
+    nullable, and partition columns come last, in partition order."""
+    fields = {f.name: f for f in _nullable(df.schema).fields}
+    order = [n for n in fields if n not in partition_by] + list(partition_by)
+    return StructType([fields[n] for n in order])
 
 
 @dataclass
@@ -52,14 +83,24 @@ class ParquetCatalogAdapter:
     # through the shared checkpoint store; decode cost is amortized
     # across executors
     codec: str = "zstd"
+    # read-back schemas of writes not yet committed (base -> schema): the
+    # writer reads its own write back before commit() records the schema
+    _pending: dict = field(default_factory=dict)
+
+    def _manifest(self, base: Path) -> dict | None:
+        """The commit record, or None if absent or written before
+        schemas were recorded."""
+        manifest = base / "_MANIFEST.json"
+        if not manifest.exists():
+            return None
+        record = json.loads(manifest.read_text())
+        return record if "schema" in record else None
 
     def committed_fingerprint(self, base: Path) -> str | None:
         """The input fingerprint recorded by the last commit at this
         location, or None if never committed."""
-        manifest = base / "_MANIFEST.json"
-        if not manifest.exists():
-            return None
-        return json.loads(manifest.read_text()).get("input_fingerprint")
+        record = self._manifest(base)
+        return record["input_fingerprint"] if record else None
 
     def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:
         # withdraw the previous commit record before its rows are
@@ -70,9 +111,16 @@ class ParquetCatalogAdapter:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(str(base / "data"))
+        self._pending[str(base)] = read_back_schema(df, partition_by)
 
     def read(self, spark: SparkSession, base: Path) -> DataFrame:
-        return spark.read.parquet(str(base / "data"))
+        schema = self._pending.get(str(base))
+        if schema is None:
+            record = self._manifest(base)
+            if record is None:
+                raise FileNotFoundError(f"no committed stage at {base}")
+            schema = StructType.fromJson(record["schema"])
+        return spark.read.schema(schema).parquet(str(base / "data"))
 
     def partition_rows(self, base: Path) -> list[tuple[int, int]]:
         """(write_partition_id, rows) per output file, from parquet
@@ -102,6 +150,7 @@ class ParquetCatalogAdapter:
                     "input_fingerprint": input_fingerprint,
                     "rows": rows,
                     "wall_ms": wall_ms,
+                    "schema": self._pending.pop(str(base)).jsonValue(),
                 },
                 indent=2,
             )
@@ -163,7 +212,9 @@ class SnapshotCatalogAdapter:
         v = self._current_version(base)
         if v is None:
             return None
-        return self._load_meta(base, v)["summary"].get(self._COMMIT_PROP)
+        meta = self._load_meta(base, v)
+        # metadata without a schema predates schema-carrying reads
+        return meta["summary"].get(self._COMMIT_PROP) if "schema" in meta else None
 
     def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:
         versions = self._versions(base)
@@ -196,6 +247,7 @@ class SnapshotCatalogAdapter:
                     # against; commit() re-stamps it at the pointer swap
                     "parent_snapshot_id": self._current_version(base),
                     "manifest": manifest,
+                    "schema": read_back_schema(df, partition_by).jsonValue(),
                     "summary": {},
                 },
                 indent=2,
@@ -234,8 +286,12 @@ class SnapshotCatalogAdapter:
     def read(
         self, spark: SparkSession, base: Path, snapshot_id: int | None = None
     ) -> DataFrame:
-        return spark.read.parquet(
-            str(base / f"snap-{self._resolve(base, snapshot_id)}")
+        v = self._resolve(base, snapshot_id)
+        meta = self._load_meta(base, v)
+        if "schema" not in meta:
+            raise ValueError(f"snapshot {v} at {base} records no schema: not committed")
+        return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(
+            str(base / f"snap-{v}")
         )
 
     def partition_rows(self, base: Path) -> list[tuple[int, int]]:

@@ -1,163 +1,192 @@
 """Entity linking: TF-IDF context scoring of exact dictionary hits (north_star).
 
-Everything is built-in DataFrame algebra — explode/groupBy/join — so
-Catalyst plans it with partial aggregation and broadcast joins; no UDFs
-at all in this stage.
-
 Score model (deterministic):
-- candidates are exact dictionary hits: mention_candidates equi-joins a
-  mention's normalized surface to a label of the concept, so the
-  mention-to-label surface match is always total and contributes the
-  constant 0.5.
-- context_tfidf: cosine similarity between the page's mention TF-IDF
-  vector (vocabulary surfaces found on the page) and the concept's
-  surface set, with document frequencies computed over the pages.
-- score = 0.5 + 0.5 * context_tfidf. TF-IDF weights are non-negative
+- candidates are exact dictionary hits: a mention (url, surface,
+  norm_surface, begin, end) is a candidate for every concept with a
+  label of the same normalized surface (``mention_candidates`` is the
+  same match as an equi-join), so the mention-to-label surface match is
+  always total and contributes the constant 0.5.
+- tf(url, s) counts the page's mention rows of surface s (duplicate rows
+  count); df(s) is the number of distinct urls with a mention of s;
+  n_pages the number of distinct urls with any mention;
+  idf(s) = ln((n_pages + 1) / (df(s) + 1)) and w(url, s) = tf · idf.
+- context(url, c) = Σ_{s ∈ S(c)} w(url, s) / (‖w(url)‖ · √|S(c)|): the
+  cosine between the page's weight vector over all its mention surfaces
+  and the concept's distinct surface set S(c) as a 0/1 vector. A zero
+  denominator divides by 1 instead.
+- score = 0.5 + 0.5 · context. The weights are non-negative
   (df ≤ n_pages), so the cosine lies in [0, 1] and every score in
   [0.5, 1]; no threshold is applied.
+- one link per mention span (url, begin, end): the candidate with the
+  smallest (−score, concept_uri, surface, norm_surface), i.e. the
+  highest score with ties to the smaller uri.
+
+Two rounds:
+1. On the driver, two guarded collects of vocabulary-sized tables: idf
+   per surface (df and n_pages in Spark, ``log`` included, so the kernel
+   multiplies the same doubles a Spark plan would), and the label
+   table's (norm_surface, uri) pairs. Both are broadcast.
+2. On the executors, one ``mapInArrow`` pass over the mentions,
+   hash-partitioned by url and sorted by url within each partition,
+   scores each page whole and emits its links.
+
+Equivalence: every term of the score except df and n_pages — tf, w,
+‖w(url)‖, the dot products, the scores and the per-span pick — reads
+one page's mentions alone. The url partitioning puts all of a page's
+mentions in one task, contiguous after the sort, so the page-at-a-time
+kernel with df and n_pages broadcast evaluates the same formula as a
+global plan of joins and aggregations over the mentions table. The one
+freedom left is the order of floating additions: the kernel sums in
+sorted-surface order, so its scores agree with any other evaluation
+order to within a few ulp.
 """
 
 from __future__ import annotations
 
+import functools
+import math
+from collections import Counter, defaultdict
+from itertools import groupby
+from operator import itemgetter
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from skosconverter_spark.kg.mentions import mention_candidates
+from skosconverter_spark.plans.local_dfs import guard_driver_sized
 
-
-def vocab_score_tables(label_tbl: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(prof, prof_norm): the vocabulary side of the context cosine —
-    each concept's distinct surface set (uri, norm_surface) and its
-    Euclidean norm (uri, prof_norm) as a 0/1 vector."""
-    prof = label_tbl.select("uri", "norm_surface").distinct()
-    prof_norm = prof.groupBy("uri").agg(
-        F.sqrt(F.count("*").cast("double")).alias("prof_norm")
-    )
-    return prof, prof_norm
-
-
-def mention_context_scores(mentions: DataFrame, label_tbl: DataFrame) -> DataFrame:
-    """(url, uri, context_tfidf): cosine between the page's MENTION
-    vector and the concept's surface set, with IDF over pages.
-
-    Scale rationale: the naive context model (TF-IDF over full page
-    text) explodes O(corpus tokens) rows — tens of billions at target
-    scale — only to discard everything outside the vocabulary. The
-    mention scanner has already found every vocabulary occurrence, so
-    the context vector is derivable from the mentions table alone:
-    tf(url, surface) = mention counts, idf over page frequency of the
-    surface. Co-occurring vocabulary mentions are the context signal;
-    no token explode, every shuffle is bounded by |mentions|.
-    """
-    tf = mentions.groupBy("url", "norm_surface").agg(F.count("*").alias("tf"))
-    # n_pages as an in-plan broadcast scalar (single-row aggregate +
-    # crossJoin), NOT a driver-side .count(): a separate blocking job
-    # would re-scan the mentions table once per pipeline run just to
-    # fetch one integer
-    np_df = mentions.agg(F.countDistinct("url").alias("n_pages"))
-    # (url, norm_surface) is tf's grouping key, so rows are unique per
-    # pair and count(*) ≡ countDistinct(url) — without the extra
-    # expand/two-phase distinct aggregation countDistinct plans
-    df_s = tf.groupBy("norm_surface").agg(F.count("*").alias("df"))
-    w = (
-        tf.join(F.broadcast(df_s), "norm_surface")
-        .crossJoin(F.broadcast(np_df))
-        .withColumn(
-            "w",
-            F.col("tf")
-            * F.log(
-                (F.col("n_pages") + F.lit(1)).cast("double") / (F.col("df") + 1.0)
-            ),
-        )
-        .select("url", "norm_surface", "w")
-    )
-    page_norm = w.groupBy("url").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("page_norm")
-    )
-    prof, prof_norm = vocab_score_tables(label_tbl)
-    dots = (
-        w.join(F.broadcast(prof), "norm_surface")
-        .groupBy("url", "uri")
-        .agg(F.sum("w").alias("dot"))
-    )
-    return (
-        dots.join(page_norm, "url")
-        .join(F.broadcast(prof_norm), "uri")
-        .select(
-            "url",
-            "uri",
-            (
-                F.col("dot")
-                / F.when(
-                    F.col("page_norm") * F.col("prof_norm") > 0,
-                    F.col("page_norm") * F.col("prof_norm"),
-                ).otherwise(F.lit(1.0))
-            ).alias("context_tfidf"),
-        )
-    )
+_LINK_ARROW = pa.schema(
+    [
+        ("url", pa.string()),
+        ("surface", pa.string()),
+        ("norm_surface", pa.string()),
+        ("begin", pa.int32()),
+        ("end", pa.int32()),
+        ("concept_uri", pa.string()),
+        ("score", pa.float64()),
+    ]
+)
 
 
-def score_candidates(
-    candidates: DataFrame,
-    mentions: DataFrame,
+def vocab_score_tables(
     label_tbl: DataFrame,
-) -> DataFrame:
-    """candidates (url, surface, norm_surface, begin, end, concept_uri,
-    kind) → scored links.
-
-    Contract: ``candidates`` come from mention_candidates over the same
-    ``label_tbl``, so every (concept_uri, norm_surface) is one of the
-    concept's labels and the surface term of the score is exactly 1.0:
-    score = 0.5 + 0.5 * context_tfidf. A candidate from any other
-    generator would be scored as an exact hit; nothing checks this,
-    because the check would cost a join against the label table. The
-    only candidate-side shuffle is one narrow distinct() that collapses
-    pref/alt kind duplicates."""
-    ctx = mention_context_scores(mentions, label_tbl).withColumnRenamed(
-        "uri", "concept_uri"
+) -> tuple[dict[str, tuple[str, ...]], dict[str, float]]:
+    """(concepts, prof_norm): the vocabulary side of the context cosine,
+    from one guarded collect of the label table's (norm_surface, uri)
+    pairs, deduplicated here rather than by a Spark shuffle. ``concepts``
+    maps a normalized surface to its concepts' uris, sorted; ``prof_norm``
+    maps a uri to √|S(c)|, the norm of its distinct surface set as a 0/1
+    vector."""
+    tbl = guard_driver_sized(label_tbl.select("norm_surface", "uri"), "link vocabulary")
+    concepts: dict[str, list[str]] = defaultdict(list)
+    sizes: Counter = Counter()
+    for surface, uri in set(zip(*(c.to_pylist() for c in tbl.columns))):
+        sizes[uri] += 1
+        if surface is not None:  # a null surface matches no mention
+            concepts[surface].append(uri)
+    return (
+        {s: tuple(sorted(uris)) for s, uris in concepts.items()},
+        {uri: math.sqrt(n) for uri, n in sizes.items()},
     )
-    scored = (
-        candidates.select(
-            "url", "surface", "norm_surface", "begin", "end", "concept_uri"
-        )
+
+
+def _idf(mentions: DataFrame) -> dict[str, float]:
+    """idf per mention surface, from one guarded collect: at most one
+    row per distinct surface, i.e. per distinct label surface when the
+    mentions come from the scanner."""
+    df = (
+        mentions.select("url", "norm_surface")
         .distinct()
-        .join(ctx, ["url", "concept_uri"], "left")
-        .withColumn(
-            "score", 0.5 + 0.5 * F.coalesce(F.col("context_tfidf"), F.lit(0.0))
-        )
+        .groupBy("norm_surface")
+        .agg(F.count("*").alias("df"))
     )
-    return scored.select(
-        "url", "surface", "norm_surface", "begin", "end", "concept_uri", "score"
+    n_pages = mentions.agg(F.countDistinct("url").alias("n_pages"))
+    idf = F.log((F.col("n_pages") + F.lit(1)).cast("double") / (F.col("df") + 1.0))
+    tbl = guard_driver_sized(
+        df.crossJoin(n_pages).select("norm_surface", idf.alias("idf")), "link statistics"
+    )
+    return dict(zip(*(c.to_pylist() for c in tbl.columns)))
+
+
+def _score_page(tables, url: str | None, rows: list[tuple]) -> list[tuple]:
+    """One page's mention rows (url, surface, norm_surface, begin, end)
+    → its links, one per span (see the module docstring)."""
+    idf, concepts, prof_norm = tables.value
+    tf = Counter(ns for _, _, ns, _, _ in rows if ns is not None)
+    dots: dict[str, float] = {}
+    page_norm = 0.0
+    if url is not None:  # a page without a url has no context vector
+        w = {s: tf[s] * idf[s] for s in sorted(tf)}
+        page_norm = math.sqrt(sum(x * x for x in w.values()))
+        for s, x in w.items():
+            for uri in concepts.get(s, ()):
+                dots[uri] = dots.get(uri, 0.0) + x
+    best: dict[tuple, tuple] = {}
+    for _, surface, ns, begin, end in set(rows):
+        for uri in concepts.get(ns, ()):
+            denom = page_norm * prof_norm[uri]
+            score = 0.5 + 0.5 * (dots.get(uri, 0.0) / (denom if denom > 0 else 1.0))
+            key = (-score, uri, surface, ns)
+            if (begin, end) not in best or key < best[(begin, end)]:
+                best[(begin, end)] = key
+    return [
+        (url, surface, ns, begin, end, uri, -neg)
+        for (begin, end), (neg, uri, surface, ns) in best.items()
+    ]
+
+
+def _links_batch(links: list[tuple]) -> pa.RecordBatch:
+    cols = list(zip(*links)) if links else [()] * len(_LINK_ARROW)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, _LINK_ARROW)], schema=_LINK_ARROW
     )
 
 
-def link_best(scored: DataFrame) -> DataFrame:
-    """One concept per mention span: highest score, ties to the smaller
-    uri (deterministic).
+def score_candidates(mentions: DataFrame, label_tbl: DataFrame):
+    """Round 1, on the driver: collect idf and the vocabulary, broadcast
+    them, and return the per-page scorer ``score_page(url, rows)`` the
+    kernel runs.
 
-    A hash aggregation — min over (−score, uri, payload) structs, the
-    house first-value-wins pattern — NOT a row_number window: the window
-    shuffles and per-partition-sorts every candidate row, while the agg
-    map-side-combines to one partial winner per span per partition
-    before the shuffle. Negating an IEEE double is exact, so the struct
-    order is precisely (score desc, concept_uri asc)."""
-    pick = F.min(
-        F.struct(
-            (-F.col("score")).alias("neg_score"),
-            F.col("concept_uri").alias("concept_uri"),
-            F.col("surface").alias("surface"),
-            F.col("norm_surface").alias("norm_surface"),
-            F.col("score").alias("score"),
-        )
-    ).alias("m")
-    return scored.groupBy("url", "begin", "end").agg(pick).select(
-        "url",
-        F.col("m.surface").alias("surface"),
-        F.col("m.norm_surface").alias("norm_surface"),
-        "begin",
-        "end",
-        F.col("m.concept_uri").alias("concept_uri"),
-        F.col("m.score").alias("score"),
+    Contract: the candidates it scores are exact dictionary hits of the
+    same ``label_tbl``, so the surface term of the score is exactly 1.0;
+    a looser candidate generator would need its own surface term."""
+    tables = mentions.sparkSession.sparkContext.broadcast(
+        (_idf(mentions), *vocab_score_tables(label_tbl))
+    )
+    # a partial over a module-level function, so the executor-side
+    # closure names no function a tracer may have rebound
+    return functools.partial(_score_page, tables)
+
+
+def link_best(mentions: DataFrame, score_page, parts: int) -> DataFrame:
+    """Round 2: the links of every page, from one ``mapInArrow`` pass
+    over the mentions hash-partitioned by url and sorted by url within
+    each partition, so a page's rows arrive together. They can span
+    Arrow batches, so the open page is carried across batch boundaries
+    and scored once its last row has been seen."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        url, rows = None, []  # the open page
+        for batch in batches:
+            links: list[tuple] = []
+            page_rows = zip(*(c.to_pylist() for c in batch.columns))
+            for u, group in groupby(page_rows, key=itemgetter(0)):
+                if rows and u != url:
+                    links += score_page(url, rows)
+                    rows = []
+                url = u
+                rows.extend(group)
+            yield _links_batch(links)
+        if rows:
+            yield _links_batch(score_page(url, rows))
+
+    return (
+        mentions.select("url", "surface", "norm_surface", "begin", "end")
+        .repartition(parts, "url")
+        .sortWithinPartitions("url")
+        .mapInArrow(kernel, from_arrow_schema(_LINK_ARROW))
     )
 
 
@@ -167,21 +196,11 @@ def link_stage(
     label_tbl: DataFrame,
     parts: int,
 ) -> DataFrame:
-    """Mentions → candidates → scored links → one best concept per
-    mention span: the KG pipeline's 30_links and the kg_links query.
+    """Mentions → one best concept per mention span: the KG pipeline's
+    30_links and the kg_links query. ``label_tbl`` is ``label_table`` of
+    ``triples``; the candidates are its exact hits.
 
-    One url-keyed exchange up front makes the scoring DAG downstream
-    exchange-free: hashpartitioning(url) satisfies the clustered
-    distribution of every aggregation and join in score_candidates /
-    mention_context_scores / link_best (all keyed with url as a prefix),
-    so Catalyst plans them in one stage instead of a chain of seven
-    small shuffles (r6: 30_links was 5.6 s of a 12.4 s pipeline; plan
-    46 → 31 exchanges)."""
-    by_url = mentions.repartition(parts, "url")
-    return link_best(
-        score_candidates(
-            mention_candidates(by_url, triples, label_tbl=label_tbl),
-            by_url,
-            label_tbl,
-        )
-    )
+    Two rounds (module docstring): the statistics and vocabulary
+    collects, then one kernel pass over the mentions — a plan of
+    Scan → Exchange(url) → Sort → MapInArrow."""
+    return link_best(mentions, score_candidates(mentions, label_tbl), parts)

@@ -6,10 +6,10 @@ token-trie; an Arrow-batched ``mapInPandas`` slides word windows over
 each page's text and emits mention rows. One Python call per batch; the
 only shuffle in this stage is the caller's salted repartition.
 
-Candidate generation stays relational: mentions equi-join the label
-table on the normalized surface (broadcast hash join — the vocabulary
-side is small by construction), and similarity scoring/thresholding
-happens in kg.linking as pure DataFrame ops.
+Candidates are the concepts whose label has the mention's normalized
+surface: ``mention_candidates`` states that as an equi-join (broadcast
+hash join — the vocabulary side is small by construction), and
+kg.linking scores them with a lookup in its per-page kernel.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ Stage graph (north_star):
 
     pages ──extract_text──▶ pages_text ──salted repartition──▶
       ├─ mention scan (broadcast trie) ─▶ mentions
-      ├─ candidate join + TF-IDF context scoring ─▶ links
+      ├─ TF-IDF context scoring, one kernel per page ─▶ links
       └─ page-markdown triple extraction ─▶ raw_triples
     raw_triples ∪ vocabulary ──canonicalization closure──▶ triples
     triples ─▶ 60_graph (the same rows, pred-partitioned parquet)
@@ -21,7 +21,8 @@ no pool thread waits on a sibling. So
 Resumability (north_rule): every stage, the 60_graph sink included,
 goes through ``StageRunner.run_stage``: it writes a parquet checkpoint
 plus a ``_MANIFEST.json`` recording the stage name, its input
-fingerprint and row count. On rerun, a stage whose manifest matches the
+fingerprint, row count and read-back schema (so reads infer nothing and
+run no Spark job). On rerun, a stage whose manifest matches the
 current input fingerprint is loaded instead of recomputed — resume-from-
 any-completed-stage with no extra bookkeeping, and a full rerun writes
 no file. (The default catalog is plain parquet; on a real deployment
@@ -263,8 +264,8 @@ def run_pipeline(
         # fingerprint, so a new extractor re-runs every stage downstream.
         "fp_pages": ((), lambda i: f"{fingerprint_of(pages, pages.columns)}|x={EXTRACTOR_VERSION}"),
         "fp_vocab": ((), lambda i: fingerprint_of(vocab_triples, vocab_triples.columns)),
-        # one label table serves the mention scanner, the candidate join
-        # and the scorer profile: its distinct aggregation runs once
+        # one label table serves the mention scanner and the links
+        # vocabulary: its distinct aggregation runs once
         "labels": ((), lambda i: label_table(vocab_triples).localCheckpoint(eager=True)),
         "10_extract": (("fp_pages",), stage("10_extract", fp_pages, extract)),
         "20_mentions": (

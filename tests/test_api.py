@@ -252,9 +252,12 @@ def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):
 
 
 def test_run_pipeline_job_count(spark, tmp_path):
-    """A fresh run_pipeline over 40 pages issues at most 41 Spark jobs:
-    39 with the links score as 0.5 + 0.5·context, 47 while the constant
-    surface term was computed from vocabulary lookup tables."""
+    """Spark jobs of run_pipeline over 40 pages, each bound the measured
+    count plus 2: a fresh build 26 (39 with the links stage as one
+    DataFrame plan), a full rerun 6 (12 while every catalog read inferred
+    its schema), a rerun after deleting 30_links 15 (28)."""
+    import shutil
+
     from skosconverter_spark.kg.pipeline import run_pipeline
     from skosconverter_spark.sources.pages import synthesize_pages
 
@@ -264,12 +267,20 @@ def test_run_pipeline_job_count(spark, tmp_path):
     docs = spark.createDataFrame([("v", "v", "ttl", vocab_ttl())], schema=DOCS)
     vocab = ok_triples(extract_triples(docs, EngineConfig())).cache()
     pages.count(), vocab.count()
-    _, jobs = _jobs_of(
-        spark,
-        "run_pipeline_job_count",
-        lambda: run_pipeline(spark, pages, vocab, str(tmp_path / "kg"), partitions=4),
-    )
-    assert jobs <= 41, f"run_pipeline issued {jobs} Spark jobs"
+    root = tmp_path / "kg"
+
+    def run(group):
+        return _jobs_of(
+            spark, group, lambda: run_pipeline(spark, pages, vocab, str(root), partitions=4)
+        )[1]
+
+    fresh = run("run_pipeline_job_count")
+    assert fresh <= 28, f"run_pipeline issued {fresh} Spark jobs"
+    rerun = run("run_pipeline_rerun_job_count")
+    assert rerun <= 8, f"a full rerun issued {rerun} Spark jobs"
+    shutil.rmtree(root / "30_links")
+    relink = run("run_pipeline_relink_job_count")
+    assert relink <= 17, f"a rerun after deleting 30_links issued {relink} Spark jobs"
     pages.unpersist()
     vocab.unpersist()
 

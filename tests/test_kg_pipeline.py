@@ -335,7 +335,7 @@ def test_link_stage_scores_half_plus_half_context(spark):
     import math
 
     from skosconverter_spark.config import SKOS_ALT_LABEL, SKOS_PREF_LABEL
-    from skosconverter_spark.kg.linking import link_stage, mention_context_scores
+    from skosconverter_spark.kg.linking import link_stage
     from skosconverter_spark.kg.mentions import MENTION_SCHEMA, label_table
 
     vocab = spark.createDataFrame(
@@ -378,12 +378,178 @@ def test_link_stage_scores_half_plus_half_context(spark):
     for k, (_, score) in want.items():
         assert links[k][1] == pytest.approx(score, rel=1e-12), k
     assert links[("p3", 0)][1] == 0.5
-    ctx = {
-        (r.url, r.uri): r.context_tfidf
-        for r in mention_context_scores(mentions, lt).collect()
+    brute = _brute_force_links(
+        [tuple(r) for r in mentions.collect()],
+        [(r.uri, r.norm_surface) for r in lt.collect()],
+    )
+    for (url, begin), (uri, score) in links.items():
+        (want_uri, want_score), = [v[:2] for k, v in brute.items() if k[:2] == (url, begin)]
+        assert uri == want_uri and _within_ulps(score, want_score), (url, begin)
+
+
+def _brute_force_links(mentions, labels):
+    """The links score model evaluated literally, page by page:
+    mentions (url, surface, norm_surface, begin, end) and label pairs
+    (uri, norm_surface) → {(url, begin, end): (uri, score, surface,
+    norm_surface)}, the best candidate per span."""
+    import math
+    from collections import Counter
+
+    profile = {}
+    for uri, s in labels:
+        profile.setdefault(uri, set()).add(s)
+    urls = {m[0] for m in mentions}
+    df = Counter(s for _, s in {(m[0], m[2]) for m in mentions})
+    best = {}
+    for url in urls:
+        rows = [m for m in mentions if m[0] == url]
+        tf = Counter(m[2] for m in rows)
+        w = {s: n * math.log((len(urls) + 1) / (df[s] + 1.0)) for s, n in tf.items()}
+        page_norm = math.sqrt(sum(x * x for x in w.values()))
+        for _, surface, ns, begin, end in rows:
+            for uri, surfaces in profile.items():
+                if ns not in surfaces:
+                    continue
+                denom = page_norm * math.sqrt(len(surfaces))
+                dot = sum(w.get(s, 0.0) for s in surfaces)
+                score = 0.5 + 0.5 * dot / (denom if denom > 0 else 1.0)
+                key = (-score, uri, surface, ns)
+                best[(url, begin, end)] = min(best.get((url, begin, end), key), key)
+    return {k: (uri, -neg, surface, ns) for k, (neg, uri, surface, ns) in best.items()}
+
+
+def _within_ulps(a: float, b: float, n: int = 4) -> bool:
+    import math
+
+    return abs(a - b) <= n * math.ulp(max(abs(a), abs(b)))
+
+
+def test_link_kernel_matches_brute_force(spark):
+    """The url-partitioned links kernel against a literal evaluation of
+    the score model: pages split across Arrow batches, duplicate mention
+    rows (tf counts both, one link), a surface shared by two concepts
+    with tied scores (the smaller uri wins), a page whose only surface
+    is on every page (score exactly 0.5), and a concept with several
+    surfaces. Same winners, scores within 4 ulp, at any batch size."""
+    from skosconverter_spark.config import SKOS_ALT_LABEL, SKOS_PREF_LABEL
+    from skosconverter_spark.kg.linking import link_stage
+    from skosconverter_spark.kg.mentions import MENTION_SCHEMA, label_table
+
+    vocab = spark.createDataFrame(
+        [
+            ("urn:multi", SKOS_PREF_LABEL, "Red"),
+            ("urn:multi", SKOS_ALT_LABEL, "Crimson"),
+            ("urn:multi", SKOS_ALT_LABEL, "Scarlet Red"),
+            ("urn:tie-b", SKOS_PREF_LABEL, "Twin"),
+            ("urn:tie-a", SKOS_PREF_LABEL, "Twin"),
+            ("urn:common", SKOS_PREF_LABEL, "Common"),
+            ("urn:blue", SKOS_PREF_LABEL, "Blue"),
+        ],
+        "subj string, pred string, obj string",
+    )
+    rows = [
+        # p1: 6 rows, one duplicated, spread over batches of 2
+        ("p1", "Red", "red", 0, 3),
+        ("p1", "Crimson", "crimson", 4, 11),
+        ("p1", "Scarlet Red", "scarlet red", 12, 23),
+        ("p1", "red", "red", 24, 27),
+        ("p1", "red", "red", 24, 27),
+        ("p1", "Common", "common", 28, 34),
+        # p2: the tied surface, twice, plus a blue
+        ("p2", "Twin", "twin", 0, 4),
+        ("p2", "twin", "twin", 5, 9),
+        ("p2", "Blue", "blue", 10, 14),
+        ("p2", "common", "common", 15, 21),
+        # p3: only the surface on every page
+        ("p3", "COMMON", "common", 0, 6),
+        ("p4", "Blue", "blue", 0, 4),
+        ("p4", "Common", "common", 5, 11),
+        ("p4", "Crimson", "crimson", 12, 19),
+    ]
+    mentions = spark.createDataFrame(rows, MENTION_SCHEMA)
+    lt = label_table(vocab)
+    want = _brute_force_links(rows, [(r.uri, r.norm_surface) for r in lt.collect()])
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    runs = []
+    try:
+        for batch in ("2", before):
+            spark.conf.set(conf, batch)
+            runs.append(
+                {
+                    (r.url, r.begin, r.end): (r.concept_uri, r.score, r.surface, r.norm_surface)
+                    for r in link_stage(mentions, vocab, lt, 2).collect()
+                }
+            )
+    finally:
+        spark.conf.set(conf, before)
+    assert runs[0] == runs[1]
+    got = runs[0]
+    assert got.keys() == want.keys()
+    for k, (uri, score, surface, ns) in want.items():
+        assert got[k][0] == uri and got[k][2:] == (surface, ns), k
+        assert _within_ulps(got[k][1], score), (k, got[k][1], score)
+    assert got[("p2", 0, 4)][0] == "urn:tie-a"
+    assert got[("p3", 0, 6)][1] == 0.5
+    assert {got[("p1", b, e)][0] for b, e in [(0, 3), (4, 11), (12, 23)]} == {"urn:multi"}
+
+
+STAGES = {
+    "10_extract": "pages_text",
+    "20_mentions": "mentions",
+    "30_links": "links",
+    "40_page_triples": "page_triples",
+    "50_canonical": "triples",
+    "60_graph": "graph",
+}
+
+
+def test_commit_records_the_read_back_schema(spark, pages, vocab, tmp_path):
+    """Both adapters record each stage's read-back schema (every field
+    nullable, the pred partition last) equal to what schema inference
+    reads; a committed read passes it on and runs no Spark job, and a
+    commit record without a schema counts as uncommitted."""
+    from pyspark.sql.types import StructType
+
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter, SnapshotCatalogAdapter
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    from .test_api import _jobs_of
+
+    root, snap_root = tmp_path / "kg", tmp_path / "snap"
+    out = run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    snap = SnapshotCatalogAdapter()
+    runner = StageRunner(spark, str(snap_root), catalog=snap)
+    for stage, key in STAGES.items():
+        partition_by = ("pred",) if stage == "60_graph" else ()
+        runner.run_stage(stage, "fp", lambda df=out[key]: df, partition_by)
+    adapters = {
+        "parquet": (ParquetCatalogAdapter(), root, "data"),
+        "snapshot": (SnapshotCatalogAdapter(), snap_root, "snap-1"),
     }
-    for (url, _), (uri, score) in links.items():
-        assert score == 0.5 + 0.5 * ctx.get((url, uri), 0.0), (url, uri)
+    for stage in STAGES:
+        recorded = {
+            "parquet": json.loads((root / stage / "_MANIFEST.json").read_text())["schema"],
+            "snapshot": snap._load_meta(snap_root / stage, 1)["schema"],
+        }
+        for name, (adapter, base, data) in adapters.items():
+            inferred = spark.read.parquet(str(base / stage / data)).schema
+            assert StructType.fromJson(recorded[name]) == inferred, (name, stage)
+            df, jobs = _jobs_of(spark, f"read_{name}_{stage}", lambda: adapter.read(spark, base / stage))
+            assert jobs == 0, (name, stage, jobs)
+            assert df.schema == inferred, (name, stage)
+        if stage == "60_graph":
+            assert inferred.fieldNames()[-1] == "pred"
+    manifest = root / "30_links" / "_MANIFEST.json"
+    old = json.loads(manifest.read_text())
+    del old["schema"]
+    manifest.write_text(json.dumps(old))
+    assert ParquetCatalogAdapter().committed_fingerprint(root / "30_links") is None
+    meta = snap_root / "30_links" / "metadata" / "v1.json"
+    old = json.loads(meta.read_text())
+    del old["schema"]
+    meta.write_text(json.dumps(old))
+    assert SnapshotCatalogAdapter().committed_fingerprint(snap_root / "30_links") is None
 
 
 def test_failed_commit_withdraws_previous_manifest(spark, tmp_path, monkeypatch):
