@@ -391,7 +391,7 @@ def q_kg_links(spark, sf_dir):
     # url partitioning
     lt = label_table(triples).localCheckpoint(eager=True)
     mentions = scan_mentions(pages, triples, label_tbl=lt).localCheckpoint(eager=True)
-    best = link_stage(mentions, triples, lt, spark.sparkContext.defaultParallelism)
+    best = link_stage(mentions, lt, spark.sparkContext.defaultParallelism)
     return best.groupBy("url", "norm_surface", "concept_uri").agg(
         F.count("*").alias("n_mentions"),
         F.round(F.min("score"), 6).alias("score"),

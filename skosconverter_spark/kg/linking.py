@@ -190,15 +190,10 @@ def link_best(mentions: DataFrame, score_page, parts: int) -> DataFrame:
     )
 
 
-def link_stage(
-    mentions: DataFrame,
-    triples: DataFrame,
-    label_tbl: DataFrame,
-    parts: int,
-) -> DataFrame:
+def link_stage(mentions: DataFrame, label_tbl: DataFrame, parts: int) -> DataFrame:
     """Mentions → one best concept per mention span: the KG pipeline's
     30_links and the kg_links query. ``label_tbl`` is ``label_table`` of
-    ``triples``; the candidates are its exact hits.
+    the vocabulary; the candidates are its exact hits.
 
     Two rounds (module docstring): the statistics and vocabulary
     collects, then one kernel pass over the mentions — a plan of

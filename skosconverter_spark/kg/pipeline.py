@@ -19,21 +19,25 @@ no pool thread waits on a sibling. So
 50_canonical when 40_page_triples is.
 
 Resumability (north_rule): every stage, the 60_graph sink included,
-goes through ``StageRunner.run_stage``: it writes a parquet checkpoint
-plus a ``_MANIFEST.json`` recording the stage name, its input
-fingerprint, row count and read-back schema (so reads infer nothing and
-run no Spark job). On rerun, a stage whose manifest matches the
-current input fingerprint is loaded instead of recomputed — resume-from-
-any-completed-stage with no extra bookkeeping, and a full rerun writes
-no file. (The default catalog is plain parquet; on a real deployment
-these writes are Iceberg commits and the fingerprint is the input
-snapshot id.)
+goes through ``StageRunner.run_stage``: it writes a new immutable parquet
+snapshot of the stage, then atomically replaces the stage's
+``_MANIFEST.json``, which records the stage name, its input fingerprint,
+row count, read-back schema (so reads infer nothing and run no Spark
+job) and the snapshot it names. On rerun, a stage whose manifest matches
+the current input fingerprint is loaded instead of recomputed —
+resume-from-any-completed-stage with no extra bookkeeping, and a full
+rerun writes no file. A crash or a failed commit leaves the previous
+commit in force; a recompute leaves the DataFrames of the previous run
+readable (kg/catalog.py: retention). On a real deployment these writes
+are Iceberg commits and the fingerprint is the input snapshot id.
 
-Lineage/metrics (north_rule): each stage emits per-output-partition row
-counts into ``stage_metrics`` parquet alongside the checkpoint. The
-counts come from the written parquet FOOTERS (one tiny metadata read
-per file, driver-side) — the local analogue of reading an Iceberg
-manifest — so lineage costs zero extra Spark jobs and zero data scans.
+Lineage/metrics (north_rule): the commit record also lists the
+snapshot's (file, rows) pairs, read from the written parquet FOOTERS
+(one tiny metadata read per file, driver-side) — the local analogue of
+Iceberg manifest entries. ``stage_metrics`` builds the per-output-
+partition table from the committed records on the driver, so lineage
+costs zero Spark jobs and zero data scans, and a write whose commit
+failed reports nothing.
 """
 
 from __future__ import annotations
@@ -49,7 +53,7 @@ from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.kg.canonicalize import canonicalize_triples
-from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+from skosconverter_spark.kg.catalog import ParquetCatalogAdapter, file_rows
 from skosconverter_spark.kg.extract import (
     EXTRACTOR_VERSION,
     extract_text,
@@ -64,7 +68,7 @@ from skosconverter_spark.sources.parse_udf import extract_triples, ok_triples
 class StageRunner:
     spark: SparkSession
     root: str
-    catalog: object = field(default_factory=ParquetCatalogAdapter)  # a CatalogAdapter
+    catalog: ParquetCatalogAdapter = field(default_factory=ParquetCatalogAdapter, init=False)
 
     def _base(self, stage: str) -> Path:
         return Path(self.root) / stage
@@ -77,15 +81,15 @@ class StageRunner:
         partition_by: tuple[str, ...] = (),
     ) -> DataFrame:
         """Build-or-load one stage: build → write → read back → footer
-        lineage → metrics → commit. A stage whose committed fingerprint
-        matches ``input_fingerprint`` is read back without building or
-        writing anything. ``partition_by`` lays the written files out by
-        those columns (the graph sink's pred partitioning).
+        lineage → commit. A stage whose committed fingerprint matches
+        ``input_fingerprint`` is read back without building or writing
+        anything. ``partition_by`` lays the written files out by those
+        columns (the graph sink's pred partitioning).
 
         Storage/commit mechanics live behind ``self.catalog``
-        (kg/catalog.py): parquet + JSON manifest here, Iceberg snapshot
-        commits on a real deployment — the pipeline never touches the
-        storage layer directly."""
+        (kg/catalog.py): parquet snapshots + a JSON commit record here,
+        Iceberg snapshot commits on a real deployment — the pipeline
+        never touches the storage layer directly."""
         base = self._base(stage)
         if self.catalog.committed_fingerprint(base) == input_fingerprint:
             return self.catalog.read(self.spark, base)
@@ -93,60 +97,33 @@ class StageRunner:
         self.catalog.write(build(), base, partition_by=partition_by)
         out = self.catalog.read(self.spark, base)
         wall_ms = int((time.time() - t0) * 1000)
-        # per-partition lineage from the catalog's commit metadata
+        # per-partition lineage from the catalog's write metadata
         # (parquet footers / Iceberg manifest entries) — metadata-only,
         # no Spark job, no second scan of the stage output
-        per_part_rows = self.catalog.partition_rows(base)
-        rows = sum(n for _, n in per_part_rows)
-        _write_metrics_parquet(
-            base / "metrics",
-            [
-                (stage, pid, n, wall_ms, input_fingerprint)
-                for pid, n in per_part_rows
-            ]
-            or [(stage, -1, 0, wall_ms, input_fingerprint)],
-        )
+        rows = sum(n for _, n in self.catalog.partition_rows(base))
         self.catalog.commit(base, stage, input_fingerprint, rows, wall_ms)
         return out
 
     def stage_metrics(self) -> DataFrame:
-        """All stages' per-partition lineage metrics. The schema is the
-        one the writer used, so the read infers nothing and runs no job."""
-        paths = [str(p) for p in Path(self.root).glob("*/metrics") if p.exists()]
-        ddl = ", ".join(f"{name} {typ}" for name, typ in _METRICS_SCHEMA)
-        return self.spark.read.schema(ddl).parquet(*paths)
+        """Every committed stage's per-partition lineage, one row per
+        output file, from the commit records: built on the driver, no
+        Spark job. A stage with no file reports partition -1, 0 rows."""
+        rows = []
+        for manifest in sorted(Path(self.root).glob("*/_MANIFEST.json")):
+            record = self.catalog.committed(manifest.parent)
+            if record is None:
+                continue
+            rows += [
+                (record["stage"], pid, n, record["wall_ms"], record["input_fingerprint"])
+                for pid, n in file_rows(record["files"]) or [(-1, 0)]
+            ]
+        return self.spark.createDataFrame(rows, _METRICS_SCHEMA)
 
 
 _METRICS_SCHEMA = (
-    ("stage", "string"),
-    ("partition_id", "int"),
-    ("rows_out", "bigint"),
-    ("wall_ms", "bigint"),
-    ("input_fingerprint", "string"),
+    "stage string, partition_id int, rows_out bigint, wall_ms bigint, "
+    "input_fingerprint string"
 )
-
-
-def _write_metrics_parquet(metrics: Path, rows: list[tuple]) -> None:
-    """Driver-side parquet write of a handful of lineage rows (types
-    matching what the Spark writer produced through round 2, so old and
-    new metrics dirs union cleanly in stage_metrics)."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if metrics.exists():
-        shutil.rmtree(metrics)
-    metrics.mkdir(parents=True, exist_ok=True)
-    arrow = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64()}
-    cols = list(zip(*rows))
-    table = pa.table(
-        {
-            name: pa.array(cols[i], type=arrow[typ])
-            for i, (name, typ) in enumerate(_METRICS_SCHEMA)
-        }
-    )
-    pq.write_table(table, metrics / "part-00000.parquet")
 
 
 def fingerprint_of(df: DataFrame, sample_cols: list[str]) -> str:
@@ -247,7 +224,7 @@ def run_pipeline(
         return ok_triples(extract_triples(md, config))
 
     def links(i):
-        return link_stage(i["20_mentions"], vocab_triples, i["labels"], parts)
+        return link_stage(i["20_mentions"], i["labels"], parts)
 
     def canonical(i):
         return canonicalize_triples(

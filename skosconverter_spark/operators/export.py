@@ -57,6 +57,3 @@ def write_graph_table(triples: DataFrame, path: str) -> None:
     attached — plain parquet has no bucketing without a metastore."""
     triples.write.mode("overwrite").partitionBy("pred").parquet(path)
 
-
-def read_graph_table(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)

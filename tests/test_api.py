@@ -287,25 +287,38 @@ def test_run_pipeline_job_count(spark, tmp_path):
 
 def test_traced_benchmark_targets_exist():
     """perfbench's --trace 1 wraps engine functions by (module, attribute)
-    from perfbench/layers.py WRAPPED; deleting or renaming one makes the
-    traced run fail with AttributeError."""
+    from perfbench/layers.py WRAPPED, the ParquetCatalogAdapter methods
+    named in CATALOG_METHODS and StageRunner.run_stage; deleting or
+    renaming one makes the traced run fail with AttributeError."""
     import ast
     import importlib
     from pathlib import Path
 
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+    from skosconverter_spark.kg.pipeline import StageRunner
+
     path = Path(__file__).resolve().parents[1] / "perfbench" / "layers.py"
-    (wrapped,) = [
-        ast.literal_eval(node.value)
+    tables = {
+        t.id: ast.literal_eval(node.value)
         for node in ast.parse(path.read_text(encoding="utf-8")).body
         if isinstance(node, ast.Assign)
-        and any(getattr(t, "id", None) == "WRAPPED" for t in node.targets)
-    ]
+        for t in node.targets
+        if getattr(t, "id", None) in ("WRAPPED", "CATALOG_METHODS")
+    }
+    wrapped, catalog_methods = tables["WRAPPED"], tables["CATALOG_METHODS"]
     missing = [
         (module, attr)
         for module, attr, _ in wrapped
         if not hasattr(importlib.import_module(module), attr)
     ]
-    assert wrapped and not missing, f"traced targets gone: {missing}"
+    missing += [
+        ("ParquetCatalogAdapter", m)
+        for m in catalog_methods
+        if not hasattr(ParquetCatalogAdapter, m)
+    ]
+    if not hasattr(StageRunner, "run_stage"):
+        missing.append(("StageRunner", "run_stage"))
+    assert wrapped and catalog_methods and not missing, f"traced targets gone: {missing}"
 
 
 def _jobs_of(spark, group, fn):

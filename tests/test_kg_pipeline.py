@@ -190,14 +190,11 @@ def test_salted_repartition_bounds_skew(spark, pages):
 
 
 def test_catalog_adapter_seam(spark, pages, vocab, tmp_path):
-    """StageRunner delegates storage/commit to a CatalogAdapter: an
-    explicit parquet adapter behaves like the default."""
-    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+    """StageRunner delegates storage/commit to the catalog adapter: a
+    commit serves the next call, and lineage comes from its record."""
     from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
 
-    runner = StageRunner(
-        spark, str(tmp_path / "kg"), catalog=ParquetCatalogAdapter(codec="snappy")
-    )
+    runner = StageRunner(spark, str(tmp_path / "kg"))
     fp = fingerprint_of(pages, ["url"])
     out = runner.run_stage("10_extract", fp, lambda: pages.select("url"))
     assert out.count() == pages.count()
@@ -276,24 +273,36 @@ def test_run_graph_failure_raises_and_skips_dependents(spark):
 
 
 def test_stage_metrics_read_with_explicit_schema(spark, pages, tmp_path):
-    """stage_metrics reads the writer's schema instead of inferring it:
-    no Spark job, and the same schema and rows inference would give."""
+    """stage_metrics is built from the commit records on the driver: no
+    Spark job, the writer's column types, and one row per file the
+    records list, whose rows sum to each stage's row count."""
+    from skosconverter_spark.kg.catalog import file_rows
     from skosconverter_spark.kg.pipeline import StageRunner
 
-    runner = StageRunner(spark, str(tmp_path / "kg"))
+    from .test_api import _jobs_of
+
+    root = tmp_path / "kg"
+    runner = StageRunner(spark, str(root))
     runner.run_stage("10_extract", "fp", lambda: pages.select("url"))
     runner.run_stage("60_graph", "fp", lambda: pages.select("url", "lang"), ("lang",))
-    sc = spark.sparkContext
-    sc.setJobGroup("stage_metrics_job_count", "stage_metrics job count")
-    try:
-        metrics = runner.stage_metrics()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup("stage_metrics_job_count") == []
-    inferred = spark.read.parquet(*[str(p) for p in (tmp_path / "kg").glob("*/metrics")])
-    assert metrics.schema == inferred.schema
-    assert sorted(metrics.collect()) == sorted(inferred.collect())
+    metrics, jobs = _jobs_of(spark, "stage_metrics_job_count", runner.stage_metrics)
+    assert jobs == 0
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in metrics.schema] == [
+        ("stage", "string", True),
+        ("partition_id", "int", True),
+        ("rows_out", "bigint", True),
+        ("wall_ms", "bigint", True),
+        ("input_fingerprint", "string", True),
+    ]
+    expected = []
+    for stage in ("10_extract", "60_graph"):
+        record = json.loads((root / stage / "_MANIFEST.json").read_text())
+        assert record["rows"] == pages.count()
+        expected += [
+            (stage, pid, n, record["wall_ms"], "fp") for pid, n in file_rows(record["files"])
+        ]
+    assert sorted(tuple(r) for r in metrics.collect()) == sorted(expected)
+    assert not list(root.glob("*/metrics"))
 
 
 def test_pipeline_resumes_after_failed_commit(spark, pages, vocab, tmp_path, monkeypatch):
@@ -326,6 +335,30 @@ def test_pipeline_resumes_after_failed_commit(spark, pages, vocab, tmp_path, mon
     assert committed() == before
     manifest = json.loads((root / "50_canonical" / "_MANIFEST.json").read_text())
     assert manifest["stage"] == "50_canonical"
+
+
+def test_failed_commit_reports_no_lineage(spark, pages, vocab, tmp_path, monkeypatch):
+    """Lineage is read from commit records only: after a 50_canonical
+    commit fails on a fresh root, stage_metrics has no row for it but
+    keeps the stages that did commit."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    root = tmp_path / "kg"
+    commit = ParquetCatalogAdapter.commit
+
+    def failing_commit(self, base, stage, *args):
+        if stage == "50_canonical":
+            raise RuntimeError("injected commit failure")
+        return commit(self, base, stage, *args)
+
+    monkeypatch.setattr(ParquetCatalogAdapter, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    monkeypatch.undo()
+    stages = {r.stage for r in StageRunner(spark, str(root)).stage_metrics().collect()}
+    assert "50_canonical" not in stages
+    assert {"10_extract", "20_mentions", "40_page_triples"} <= stages
 
 
 def test_link_stage_scores_half_plus_half_context(spark):
@@ -362,7 +395,7 @@ def test_link_stage_scores_half_plus_half_context(spark):
     lt = label_table(vocab)
     links = {
         (r.url, r.begin): (r.concept_uri, r.score)
-        for r in link_stage(mentions, vocab, lt, 2).collect()
+        for r in link_stage(mentions, lt, 2).collect()
     }
     # 3 pages; "gamma" is on all of them (idf ln(4/4) = 0), every other
     # surface on one (idf ln(4/2)). c1's profile has 2 surfaces, c4's 2.
@@ -478,7 +511,7 @@ def test_link_kernel_matches_brute_force(spark):
             runs.append(
                 {
                     (r.url, r.begin, r.end): (r.concept_uri, r.score, r.surface, r.norm_surface)
-                    for r in link_stage(mentions, vocab, lt, 2).collect()
+                    for r in link_stage(mentions, lt, 2).collect()
                 }
             )
     finally:
@@ -505,39 +538,26 @@ STAGES = {
 
 
 def test_commit_records_the_read_back_schema(spark, pages, vocab, tmp_path):
-    """Both adapters record each stage's read-back schema (every field
-    nullable, the pred partition last) equal to what schema inference
-    reads; a committed read passes it on and runs no Spark job, and a
-    commit record without a schema counts as uncommitted."""
+    """The commit record holds each stage's read-back schema (every
+    field nullable, the pred partition last) equal to what schema
+    inference reads; a committed read passes it on and runs no Spark
+    job, and a commit record without a schema counts as uncommitted."""
     from pyspark.sql.types import StructType
 
-    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter, SnapshotCatalogAdapter
-    from skosconverter_spark.kg.pipeline import StageRunner
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
 
     from .test_api import _jobs_of
 
-    root, snap_root = tmp_path / "kg", tmp_path / "snap"
-    out = run_pipeline(spark, pages, vocab, str(root), partitions=4)
-    snap = SnapshotCatalogAdapter()
-    runner = StageRunner(spark, str(snap_root), catalog=snap)
-    for stage, key in STAGES.items():
-        partition_by = ("pred",) if stage == "60_graph" else ()
-        runner.run_stage(stage, "fp", lambda df=out[key]: df, partition_by)
-    adapters = {
-        "parquet": (ParquetCatalogAdapter(), root, "data"),
-        "snapshot": (SnapshotCatalogAdapter(), snap_root, "snap-1"),
-    }
+    root = tmp_path / "kg"
+    run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    adapter = ParquetCatalogAdapter()
     for stage in STAGES:
-        recorded = {
-            "parquet": json.loads((root / stage / "_MANIFEST.json").read_text())["schema"],
-            "snapshot": snap._load_meta(snap_root / stage, 1)["schema"],
-        }
-        for name, (adapter, base, data) in adapters.items():
-            inferred = spark.read.parquet(str(base / stage / data)).schema
-            assert StructType.fromJson(recorded[name]) == inferred, (name, stage)
-            df, jobs = _jobs_of(spark, f"read_{name}_{stage}", lambda: adapter.read(spark, base / stage))
-            assert jobs == 0, (name, stage, jobs)
-            assert df.schema == inferred, (name, stage)
+        record = json.loads((root / stage / "_MANIFEST.json").read_text())
+        inferred = spark.read.parquet(str(root / stage / f"snap-{record['snapshot_id']}")).schema
+        assert StructType.fromJson(record["schema"]) == inferred, stage
+        df, jobs = _jobs_of(spark, f"read_{stage}", lambda: adapter.read(spark, root / stage))
+        assert jobs == 0, (stage, jobs)
+        assert df.schema == inferred, stage
         if stage == "60_graph":
             assert inferred.fieldNames()[-1] == "pred"
     manifest = root / "30_links" / "_MANIFEST.json"
@@ -545,24 +565,26 @@ def test_commit_records_the_read_back_schema(spark, pages, vocab, tmp_path):
     del old["schema"]
     manifest.write_text(json.dumps(old))
     assert ParquetCatalogAdapter().committed_fingerprint(root / "30_links") is None
-    meta = snap_root / "30_links" / "metadata" / "v1.json"
-    old = json.loads(meta.read_text())
-    del old["schema"]
-    meta.write_text(json.dumps(old))
-    assert SnapshotCatalogAdapter().committed_fingerprint(snap_root / "30_links") is None
 
 
-def test_failed_commit_withdraws_previous_manifest(spark, tmp_path, monkeypatch):
-    """Overwriting a committed stage withdraws its manifest first: after
-    a write whose commit fails, a rerun under the OLD fingerprint must
-    rebuild, not serve the uncommitted rows under the old record."""
+def test_failed_commit_keeps_previous_commit(spark, tmp_path, monkeypatch):
+    """A write whose commit fails publishes nothing: the previous commit
+    stays in force with its own immutable rows, so a rerun under the OLD
+    fingerprint serves them without building, and never serves the
+    uncommitted rows."""
     from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
     from skosconverter_spark.kg.pipeline import StageRunner
 
     runner = StageRunner(spark, str(tmp_path / "kg"))
 
+    built = []
+
     def rows(x):
-        return lambda: spark.createDataFrame([(x,)], "x int")
+        def build():
+            built.append(x)
+            return spark.createDataFrame([(x,)], "x int")
+
+        return build
 
     def xs(df):
         return [r.x for r in df.collect()]
@@ -576,8 +598,60 @@ def test_failed_commit_withdraws_previous_manifest(spark, tmp_path, monkeypatch)
     with pytest.raises(RuntimeError, match="injected commit failure"):
         runner.run_stage("30_links", "B", rows(2))
     monkeypatch.undo()
-    assert runner.catalog.committed_fingerprint(tmp_path / "kg" / "30_links") is None
+    assert runner.catalog.committed_fingerprint(tmp_path / "kg" / "30_links") == "A"
     assert xs(runner.run_stage("30_links", "A", rows(1))) == [1]
+    assert built == [1, 2]
+
+
+def test_earlier_stage_result_survives_recompute(spark, tmp_path):
+    """Stage data is immutable: a DataFrame an earlier run_stage returned
+    still reads its own rows after the stage is recomputed once."""
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    first = runner.run_stage("10_extract", "A", lambda: spark.range(100).toDF("x"))
+    second = runner.run_stage("10_extract", "B", lambda: spark.range(7).toDF("x"))
+    assert first.count() == 100
+    assert second.count() == 7
+
+
+def test_store_keeps_at_most_two_committed_snapshots(spark, tmp_path):
+    """Retention: after 5 recomputes of one stage the store holds the
+    current snapshot and its parent, plus any write still in flight."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    base = tmp_path / "kg" / "10_extract"
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    for i in range(6):
+        runner.run_stage("10_extract", f"fp{i}", lambda i=i: spark.range(i + 1).toDF("x"))
+    assert sorted(p.name for p in base.glob("snap-*")) == ["snap-5", "snap-6"]
+    assert runner.catalog.read(spark, base, snapshot_id=5).count() == 5
+    inflight = ParquetCatalogAdapter()
+    inflight.write(spark.range(3).toDF("x"), base)
+    runner.run_stage("10_extract", "fp6", lambda: spark.range(9).toDF("x"))
+    assert sorted(p.name for p in base.glob("snap-*")) == ["snap-6", "snap-7", "snap-8"]
+    assert inflight.read(spark, base).count() == 3
+
+
+def test_torn_manifest_counts_as_uncommitted(spark, tmp_path):
+    """A commit record cut off mid-write never counts as committed: a
+    fresh adapter reports the stage uncommitted instead of raising, and
+    the stage recomputes."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    root = tmp_path / "kg"
+    StageRunner(spark, str(root)).run_stage("10_extract", "A", lambda: spark.range(4).toDF("x"))
+    manifest = root / "10_extract" / "_MANIFEST.json"
+    manifest.write_text(manifest.read_text()[:40])
+    assert ParquetCatalogAdapter().committed_fingerprint(root / "10_extract") is None
+    calls = []
+    out = StageRunner(spark, str(root)).run_stage(
+        "10_extract", "A", lambda: calls.append(1) or spark.range(4).toDF("x")
+    )
+    assert out.count() == 4 and calls == [1]
+    assert ParquetCatalogAdapter().committed_fingerprint(root / "10_extract") == "A"
 
 
 def test_changed_page_text_reruns_extract(spark, pages, vocab, tmp_path):

@@ -11,6 +11,7 @@
 from __future__ import annotations
 
 import hashlib
+import json
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Window
@@ -229,7 +230,7 @@ def test_srp_flips2_operating_point(spark):
 
 
 # ---------------------------------------------------------------------------
-# SnapshotCatalogAdapter: Iceberg commit protocol, exercised for real
+# ParquetCatalogAdapter: Iceberg commit protocol, exercised for real
 # ---------------------------------------------------------------------------
 
 
@@ -237,13 +238,10 @@ def test_snapshot_catalog_stage_roundtrip(spark, tmp_path):
     """StageRunner through the snapshot-commit adapter: stage = snapshot
     commit, resume = fingerprint match on the committed snapshot (no
     rebuild), lineage = manifest entries recorded at write time."""
-    from skosconverter_spark.kg.catalog import SnapshotCatalogAdapter
     from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
 
     docs = spark.range(100).select(F.col("id").alias("doc_id"))
-    runner = StageRunner(
-        spark, str(tmp_path / "kg"), catalog=SnapshotCatalogAdapter()
-    )
+    runner = StageRunner(spark, str(tmp_path / "kg"))
     fp = fingerprint_of(docs, ["doc_id"])
     assert runner.run_stage("10_extract", fp, lambda: docs).count() == 100
     calls = []
@@ -261,27 +259,27 @@ def test_snapshot_catalog_time_travel_and_orphans(spark, tmp_path):
     """Changed input -> new snapshot; the old snapshot stays readable by
     id (time travel); an uncommitted write is an orphan no restart can
     resolve (crash between write and commit must not satisfy resume)."""
-    from skosconverter_spark.kg.catalog import SnapshotCatalogAdapter
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
     from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
 
     base = tmp_path / "kg" / "10_extract"
     v1 = spark.range(10).select(F.col("id").alias("doc_id"))
     v2 = spark.range(25).select(F.col("id").alias("doc_id"))
-    ad = SnapshotCatalogAdapter()
-    runner = StageRunner(spark, str(tmp_path / "kg"), catalog=ad)
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    ad = runner.catalog
     fp1, fp2 = fingerprint_of(v1, ["doc_id"]), fingerprint_of(v2, ["doc_id"])
     runner.run_stage("10_extract", fp1, lambda: v1)
     runner.run_stage("10_extract", fp2, lambda: v2)  # input changed: rebuild
     assert ad.committed_fingerprint(base) == fp2
     assert ad.read(spark, base).count() == 25
     assert ad.read(spark, base, snapshot_id=1).count() == 10  # time travel
-    meta = ad._load_meta(base, 2)
-    assert meta["parent_snapshot_id"] == 1
-    assert meta["summary"]["total-records"] == 25
+    record = json.loads((base / "_MANIFEST.json").read_text())
+    assert record["snapshot_id"] == 2 and record["parent_snapshot_id"] == 1
+    assert record["rows"] == 25
     # crash simulation: write without commit, then a fresh adapter
     # (process restart) must still resolve the committed snapshot
     ad.write(spark.range(3).select(F.col("id").alias("doc_id")), base)
-    fresh = SnapshotCatalogAdapter()
+    fresh = ParquetCatalogAdapter()
     assert fresh.committed_fingerprint(base) == fp2
     assert fresh.read(spark, base).count() == 25, "orphan must be invisible"
 

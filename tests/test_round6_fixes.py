@@ -14,6 +14,8 @@ correctness fix taken from ADVICE.md) to its observable contract:
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,36 +155,33 @@ def test_doc_shingles_partitioning_feeds_signature_agg(spark):
 
 
 def test_partitioned_write_manifest_not_empty(spark, tmp_path):
-    from skosconverter_spark.kg.catalog import (
-        ParquetCatalogAdapter,
-        SnapshotCatalogAdapter,
-    )
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
 
     df = spark.createDataFrame(
         [(i, ["a", "b", "c"][i % 3]) for i in range(30)], "id long, pred string"
     )
-    pq_ad = ParquetCatalogAdapter()
-    pq_ad.write(df, tmp_path / "t1", partition_by=("pred",))
-    assert sum(n for _, n in pq_ad.partition_rows(tmp_path / "t1")) == 30
-
-    sn_ad = SnapshotCatalogAdapter()
-    sn_ad.write(df, tmp_path / "t2", partition_by=("pred",))
-    assert sum(n for _, n in sn_ad.partition_rows(tmp_path / "t2")) == 30
+    ad = ParquetCatalogAdapter()
+    ad.write(df, tmp_path / "t", partition_by=("pred",))
+    assert sum(n for _, n in ad.partition_rows(tmp_path / "t")) == 30
+    ad.commit(tmp_path / "t", "t", "fp", 30, 0)
+    record = json.loads((tmp_path / "t" / "_MANIFEST.json").read_text())
+    assert {f.split("/")[0] for f, _ in record["files"]} == {"pred=a", "pred=b", "pred=c"}
+    assert sum(n for _, n in ParquetCatalogAdapter().partition_rows(tmp_path / "t")) == 30
 
 
 def test_time_travel_rejects_uncommitted_orphan(spark, tmp_path):
-    """read(snapshot_id=...) beyond the committed hint must fail for any
-    adapter that did not itself stage that write — an uncommitted crash
-    orphan is exactly the state the protocol exists to hide."""
-    from skosconverter_spark.kg.catalog import SnapshotCatalogAdapter
+    """read(snapshot_id=...) beyond the committed record must fail for
+    any adapter that did not itself stage that write — an uncommitted
+    crash orphan is exactly the state the protocol exists to hide."""
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
 
     base = tmp_path / "t"
     df = spark.range(5).select(F.col("id").alias("doc_id"))
-    writer = SnapshotCatalogAdapter()
+    writer = ParquetCatalogAdapter()
     writer.write(df, base)  # staged, never committed
     # the writer itself may read its in-flight snapshot
     assert writer.read(spark, base, snapshot_id=1).count() == 5
-    fresh = SnapshotCatalogAdapter()
+    fresh = ParquetCatalogAdapter()
     with pytest.raises(ValueError, match="not committed"):
         fresh.read(spark, base, snapshot_id=1)
     writer.commit(base, "t", "fp", 5, 0)
@@ -192,18 +191,18 @@ def test_time_travel_rejects_uncommitted_orphan(spark, tmp_path):
 def test_time_travel_rejects_orphan_below_later_commit(spark, tmp_path):
     """An orphan numbered BELOW a later commit is still not committed:
     explicit ids resolve only along the committed parent chain."""
-    from skosconverter_spark.kg.catalog import SnapshotCatalogAdapter
+    from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
 
     base = tmp_path / "t"
-    ad = SnapshotCatalogAdapter()
+    ad = ParquetCatalogAdapter()
     ad.write(spark.range(1).toDF("doc_id"), base)
     ad.commit(base, "t", "fp1", 1, 0)  # v1 committed
-    SnapshotCatalogAdapter().write(spark.range(2).toDF("doc_id"), base)  # v2 orphan
+    ParquetCatalogAdapter().write(spark.range(2).toDF("doc_id"), base)  # v2 orphan
     ad.write(spark.range(3).toDF("doc_id"), base)
     ad.commit(base, "t", "fp3", 3, 0)  # v3 committed
-    fresh = SnapshotCatalogAdapter()
+    fresh = ParquetCatalogAdapter()
     with pytest.raises(ValueError, match="not committed"):
         fresh.read(spark, base, snapshot_id=2)
     assert fresh.read(spark, base).count() == 3
     assert fresh.read(spark, base, snapshot_id=1).count() == 1
-    assert ad._load_meta(base, 3)["parent_snapshot_id"] == 1
+    assert json.loads((base / "_MANIFEST.json").read_text())["parent_snapshot_id"] == 1

@@ -79,7 +79,7 @@ def compute_job():
     m = scan_mentions(pt, vocab).localCheckpoint(eager=True)
     branches = [
         lambda: ok_triples(extract_triples(docs, cfg)).count(),
-        lambda: link_stage(m, vocab, label_table(vocab), cpus).count(),
+        lambda: link_stage(m, label_table(vocab), cpus).count(),
         lambda: lang_id(pt.selectExpr("monotonically_increasing_id() as doc_id", "text")).count(),
     ]
     with ThreadPoolExecutor(max_workers=3) as pool:
