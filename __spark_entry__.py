@@ -51,8 +51,9 @@ def _emb(spark, sf_dir):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the full forward path (views → hierarchy fixpoint → DFS
-    row table) over the vocabulary bridged from region/nation."""
+    """Flagship: the full forward path (guarded triple collect →
+    hierarchy assembly → DFS row table) over the vocabulary bridged from
+    region/nation."""
     from skosconverter_spark.operators.render import document_rows
 
     triples = triples_from_tpch(spark, "/root/testdata/sf0.001")
@@ -77,31 +78,40 @@ def q_skos_levels(spark, sf_dir):
     )
 
 
-def q_skos_closure(spark, sf_dir):
-    from skosconverter_spark.kg.canonicalize import transitive_closure
-    from skosconverter_spark.plans.hierarchy import parent_edges
+def _bridge_index(spark, sf_dir):
+    """The bridge vocabulary's triple index, from one guarded collect."""
+    from skosconverter_spark.plans.local_dfs import collect_triples, index_triples
 
-    t = triples_from_tpch(spark, sf_dir)
-    return transitive_closure(parent_edges(t)).select("descendant", "ancestor")
+    return index_triples(collect_triples(triples_from_tpch(spark, sf_dir)))
+
+
+def q_skos_closure(spark, sf_dir):
+    from skosconverter_spark.kg.canonicalize import closure_local
+    from skosconverter_spark.plans.local_dfs import assemble
+
+    parent = assemble(_bridge_index(spark, sf_dir)).parent
+    return spark.createDataFrame(
+        closure_local(parent.items()), "descendant string, ancestor string"
+    )
 
 
 def q_skos_best_label(spark, sf_dir):
-    from skosconverter_spark.plans import views
+    from skosconverter_spark.plans.local_dfs import assemble, best_label_fn
 
-    t = triples_from_tpch(spark, sf_dir)
-    cfg = EngineConfig(preferred_language="fr")
-    nodes = (
-        views.concepts(t).select("uri").unionByName(views.schemes(t).select("uri"))
+    index = _bridge_index(spark, sf_dir)
+    h = assemble(index)
+    best_label = best_label_fn(index[0], EngineConfig(preferred_language="fr"))
+    return spark.createDataFrame(
+        [(u, best_label(u)) for u in h.concepts + h.schemes], "uri string, label string"
     )
-    return views.best_label(t, cfg, nodes).select("uri", "label")
 
 
 def q_skos_orphans(spark, sf_dir):
-    from skosconverter_spark.plans.hierarchy import orphan_concepts, scheme_table
+    from skosconverter_spark.plans.local_dfs import assemble
 
-    t = triples_from_tpch(spark, sf_dir)
-    return orphan_concepts(t, scheme_table(t, EngineConfig())).select(
-        F.col("concept").alias("uri"), "scheme"
+    h = assemble(_bridge_index(spark, sf_dir))
+    return spark.createDataFrame(
+        [(o, h.concept_to_scheme.get(o)) for o in h.orphans], "uri string, scheme string"
     )
 
 

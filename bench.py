@@ -8,7 +8,7 @@ Headline jobs (chosen to hit every scale-relevant path):
                      triples) on a synthesized pages corpus; the primary
                      throughput metric (triples emitted / sec) mirrors
                      BASELINE.md.
-- skos_forward     : 22k-concept vocabulary → hierarchy fixpoint → DFS
+- skos_forward     : 22k-concept vocabulary → hierarchy assembly → DFS
                      rows → CSV render (the reference's measured
                      skos2notion path: 2,730 concepts/s single-core).
 - notion2skos      : markdown → triples Arrow extraction (reference:

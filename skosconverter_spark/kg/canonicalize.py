@@ -12,10 +12,13 @@
   fails loudly in ``guard_driver_sized``, which ships at most 5M + 1
   pairs before it raises.
 
-- ``transitive_closure``: ancestor reachability over directed edges
-  (skos:broader), a distributed fixpoint doubling the reach per
-  iteration (path doubling: O(log depth) rounds instead of O(depth)),
-  driver-loop + localCheckpoint per iteration (lineage truncation).
+- ``transitive_closure``: ancestor reachability over directed
+  (child, parent) edges, the same shape: one guarded collect of the
+  edges, ``closure_local`` (a driver-local BFS from each node), then
+  ``createDataFrame``. The closure can be quadratic in its input, so
+  its output pairs pass the same ``MAX_DRIVER_ROWS`` gate.
+  ``q_skos_closure`` runs ``closure_local`` on the hierarchy assembly's
+  parent map (``local_dfs.assemble``) instead.
 
 ``canonicalize_triples`` rewrites subj/obj through the component map so
 all aliases collapse onto the canonical node.
@@ -31,7 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from skosconverter_spark.config import OWL_SAME_AS, SKOS_EXACT_MATCH
-from skosconverter_spark.plans.local_dfs import arrow_rows, guard_driver_sized
+from skosconverter_spark.plans.local_dfs import (
+    MAX_DRIVER_ROWS,
+    arrow_rows,
+    check_driver_sized,
+    guard_driver_sized,
+)
 
 
 def _equivalence_pairs(triples: DataFrame) -> DataFrame:
@@ -86,11 +94,12 @@ def components_local(pairs, max_iterations: int = 25) -> dict:
     return comp
 
 
-def _frame(like: DataFrame, col: str, comp: dict, names: tuple[str, str]) -> DataFrame:
-    """(node, min) rows typed like ``like[col]``, as a LocalRelation."""
+def _frame(like: DataFrame, col: str, pairs, names: tuple[str, str]) -> DataFrame:
+    """(a, b) pairs as rows typed like ``like[col]``, as a LocalRelation."""
     t = like.schema[col].dataType
     schema = StructType([StructField(n, t) for n in names])
-    tbl = pa.table({names[0]: list(comp), names[1]: list(comp.values())})
+    pairs = list(pairs)
+    tbl = pa.table({names[0]: [a for a, _ in pairs], names[1]: [b for _, b in pairs]})
     return like.sparkSession.createDataFrame(tbl, schema)
 
 
@@ -104,49 +113,59 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     prepare_corpus)."""
     pairs = arrow_rows(guard_driver_sized(edges.select("src", "dst"), "connected_components"))
     comp = components_local(pairs, max_iterations)
-    return _frame(edges, "src", comp, ("uri", "component"))
+    return _frame(edges, "src", comp.items(), ("uri", "component"))
+
+
+def closure_local(pairs, max_iterations: int = 25) -> list[tuple]:
+    """(node, reached) for every node reached from ``node`` over one or
+    more directed (child, parent) pairs, never (x, x): a BFS from each
+    node. A node's BFS level is its shortest-path hop distance, so the
+    deepest level of any BFS is D, the largest shortest-path distance.
+
+    Raises RuntimeError when D > 2^(max_iterations - 1): path doubling
+    reaches 2^k hops after k rounds and sees no change one round after
+    it has reached D, so that is exactly when it did not converge within
+    ``max_iterations`` rounds. Raises the driver guard's ValueError once
+    the pairs exceed ``MAX_DRIVER_ROWS``."""
+    adj: dict = defaultdict(set)
+    for a, b in pairs:
+        if a is not None and b is not None:  # null ids reach nothing
+            adj[a].add(b)
+    out: list[tuple] = []
+    depth = 0
+    for start in adj:
+        seen, frontier, d = {start}, [start], 0
+        while frontier:
+            depth = max(depth, d)
+            nxt = []
+            for u in frontier:
+                for v in adj.get(u, ()):
+                    if v not in seen:
+                        seen.add(v)
+                        nxt.append(v)
+                        out.append((start, v))
+            frontier, d = nxt, d + 1
+        check_driver_sized(len(out), "transitive_closure", MAX_DRIVER_ROWS)
+    if depth > 2 ** (max_iterations - 1):
+        raise RuntimeError(
+            f"transitive_closure did not converge in {max_iterations} "
+            f"doubling rounds (a shortest path of {depth} hops exceeds "
+            f"2^{max_iterations - 1}); raise max_iterations"
+        )
+    return out
 
 
 def transitive_closure(
     edges: DataFrame, max_iterations: int = 25
 ) -> DataFrame:
     """(descendant, ancestor) reachability over directed (child, parent)
-    edges, by path doubling — reach 2^k hops after k rounds. Each round
-    counts only the new reach; the previous round's count is carried."""
-    reach = edges.select(
-        F.col("child").alias("descendant"), F.col("parent").alias("ancestor")
-    ).distinct().localCheckpoint(eager=True)
-    n = reach.count()
-    converged = n == 0
-    for _ in range(max_iterations if n else 0):
-        doubled = (
-            reach.alias("a")
-            .join(
-                reach.alias("b"),
-                F.col("a.ancestor") == F.col("b.descendant"),
-            )
-            .select(
-                F.col("a.descendant").alias("descendant"),
-                F.col("b.ancestor").alias("ancestor"),
-            )
-        )
-        new_reach = (
-            reach.unionByName(doubled)
-            .filter(F.col("descendant") != F.col("ancestor"))  # cycles don't self-report
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        reach, n_prev, n = new_reach, n, new_reach.count()
-        if n == n_prev:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"transitive_closure did not converge in {max_iterations} "
-            "doubling rounds (path depth exceeds 2^budget); raise "
-            "max_iterations"
-        )
-    return reach
+    edges, typed like ``child``: a guarded collect of the edges,
+    ``closure_local``, then ``createDataFrame``."""
+    pairs = arrow_rows(guard_driver_sized(
+        edges.select("child", "parent"), "transitive_closure", MAX_DRIVER_ROWS
+    ))
+    reach = closure_local(pairs, max_iterations)
+    return _frame(edges, "child", reach, ("descendant", "ancestor"))
 
 
 def _canonical(triples: DataFrame, max_iterations: int) -> dict:
@@ -156,7 +175,7 @@ def _canonical(triples: DataFrame, max_iterations: int) -> dict:
 
 def canonical_map(triples: DataFrame, max_iterations: int = 25) -> DataFrame:
     """(uri, canonical): every aliased node → its component's min uri."""
-    return _frame(triples, "subj", _canonical(triples, max_iterations), ("uri", "canonical"))
+    return _frame(triples, "subj", _canonical(triples, max_iterations).items(), ("uri", "canonical"))
 
 
 def _dedup(t: DataFrame) -> DataFrame:
@@ -182,7 +201,7 @@ def canonicalize_triples(triples: DataFrame, max_iterations: int = 25) -> DataFr
     if not canon:
         # nothing to rewrite: the dedup aggregation is the whole job
         return _dedup(triples)
-    cmap = _frame(triples, "subj", canon, ("uri", "canonical"))
+    cmap = _frame(triples, "subj", canon.items(), ("uri", "canonical"))
     t = (
         triples.join(
             cmap.select(F.col("uri").alias("subj"), F.col("canonical").alias("subj_c")),

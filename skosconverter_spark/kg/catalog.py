@@ -44,8 +44,10 @@ or one that does not parse, counts as uncommitted: the stage recomputes.
 
 Retention: at commit, every ``snap-<k>`` with ``k`` below the new
 commit's parent is deleted, so a stage holds at most two committed
-snapshots. A DataFrame read from a stage stays readable through the next
-recompute of that stage and fails after the one after it.
+snapshots, and so is every other directory in the stage root (an older
+layout's ``data/`` and ``metrics/``); files are left alone. A DataFrame
+read from a stage stays readable through the next recompute of that
+stage and fails after the one after it.
 """
 
 from __future__ import annotations
@@ -190,8 +192,13 @@ class ParquetCatalogAdapter:
         tmp.write_text(json.dumps(record, indent=2))
         os.replace(tmp, base / "_MANIFEST.json")  # the atomic swap IS the commit
         # retention: keep the new snapshot and its parent, drop the rest
-        # below the parent (older commits and crash orphans)
-        if parent:
-            for k in _snapshot_ids(base):
-                if k < parent["snapshot_id"] and k != snap["snapshot_id"]:
-                    shutil.rmtree(base / f"snap-{k}", ignore_errors=True)
+        # below the parent (older commits and crash orphans) and every
+        # directory that is no snapshot (an older layout's data/ and
+        # metrics/). Files stay: another writer's manifest temp file may
+        # be among them.
+        floor = parent.get("snapshot_id") or 0
+        for p in base.iterdir():
+            k = p.name[5:]
+            stale = int(k) < floor if p.name.startswith("snap-") and k.isdigit() else p.is_dir()
+            if stale:
+                shutil.rmtree(p, ignore_errors=True)

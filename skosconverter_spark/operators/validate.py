@@ -372,7 +372,7 @@ def validation_report(
 
     def top_line(r) -> str:
         # scheme names are the language-ranked best label of a typed
-        # scheme (hierarchy.scheme_table), else the simple label
+        # scheme (as the DFS's scheme rows show it), else the simple label
         s = r["scheme"]
         name = best_label(s) if s in schemes else lab(s)
         shown = ", ".join(lab(c) for c in r["concepts"][:3])

@@ -1,4 +1,4 @@
-"""The engine's one DFS: hierarchy assembly + pre-order walk, driver-local.
+"""The engine's one hierarchy assembly and one DFS pre-order walk, driver-local.
 
 A SKOS vocabulary is driver-sized by construction (controlled thesauri
 top out at millions of triples; the 100 TB axis of this engine is the
@@ -18,6 +18,14 @@ an explicit non-goal. The batch path (api.document_rows_per_doc) runs it
 once per document inside a grouped-map call. The golden-byte tests pin
 its renders against the reference's bytes.
 
+``assemble`` is the reference's build_hierarchy (:664-762) over the
+triple index: schemes, top slots, the concept→scheme assignment, one
+parent per child and the orphans. The DFS renders from it, and the
+skos_orphans / skos_closure queries read it (one guarded collect,
+``index_triples``, ``assemble``, ``createDataFrame``), so a query and a
+render cannot disagree about where a concept sits; skos_best_label
+reads ``best_label_fn`` the same way.
+
 ``sort_path`` is a one-element array holding the row's zero-padded
 emission ordinal; consumers only sort by it.
 """
@@ -25,6 +33,7 @@ emission ordinal; consumers only sort by it.
 from __future__ import annotations
 
 from collections import defaultdict
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -71,14 +80,20 @@ def guard_driver_sized(df: DataFrame, what: str, max_rows: int = MAX_DRIVER_ROWS
     __getattr__ per field (~2 s of a 3 s collect at 177k triples).
     Set max_rows=0 to disable (caller takes responsibility)."""
     tbl = (df.limit(max_rows + 1) if max_rows else df).toArrow()
-    if max_rows and tbl.num_rows > max_rows:
+    check_driver_sized(tbl.num_rows, what, max_rows)
+    return tbl
+
+
+def check_driver_sized(n_rows: int, what: str, max_rows: int) -> None:
+    """The guard's gate on its own, for a table a driver-local kernel
+    builds (a closure can be quadratic in the rows it was given)."""
+    if max_rows and n_rows > max_rows:
         raise ValueError(
             f"{what} materializes rows on the driver and is gated at "
             f"{max_rows} rows; this input exceeds it. Use the distributed "
             "sink (render_documents / write_graph_table) for corpus-sized "
             "tables, or raise max_rows explicitly."
         )
-    return tbl
 
 
 def arrow_rows(tbl: pa.Table) -> list[tuple]:
@@ -118,7 +133,10 @@ def index_triples(triple_rows) -> tuple[dict, dict, dict]:
 def best_label_fn(by_sp: dict, config: EngineConfig):
     """LanguageHelper.get_best_label over the index: prefLabel → altLabel
     → rdfs:label, the preferred language first, then the fallback list,
-    then store order; the uri's local part when unlabeled."""
+    then store order; the uri's local part when unlabeled. An untagged
+    literal's lang is None, never '' (rdflib's Literal.language), so the
+    default '' fallback entry never matches a parsed label, as in the
+    reference (the vocab_nolang golden pins it)."""
     lang_ranks: dict[str | None, int] = {}
     r = 0
     if config.preferred_language:
@@ -155,26 +173,25 @@ def best_label_fn(by_sp: dict, config: EngineConfig):
     return best_label
 
 
-def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
-    """triple_rows: iterable of (subj, pred, obj, obj_is_literal,
-    obj_lang, seq). Returns one dict per ``_DOC_ROWS_SCHEMA`` row, in
-    emission order (ready for the render kernels)."""
-    by_sp, by_po, by_p = index_triples(triple_rows)
+class Hierarchy(NamedTuple):
+    """The reference's build_hierarchy result (skos_converter.py:664-762)."""
+
+    concepts: list  # typed Concepts, store order
+    schemes: list  # typed ConceptSchemes, store order
+    top_slots: dict  # scheme -> [top concept], store order, distinct
+    concept_to_scheme: dict  # concept -> scheme
+    parent: dict  # child -> its one parent
+    children_of: dict  # parent -> [child]
+    orphans: list  # concepts with no broader, top slot or parent; store order
+
+
+def assemble(index: tuple[dict, dict, dict]) -> Hierarchy:
+    """The engine's one hierarchy assembly, over ``index_triples``'
+    index: the DFS renders from it and the skos_* queries read it."""
+    by_sp, by_po, by_p = index
     concepts = list(dict.fromkeys(by_po[(RDF_TYPE, SKOS_CONCEPT)]))
     schemes = list(dict.fromkeys(by_po[(RDF_TYPE, SKOS_CONCEPT_SCHEME)]))
     concept_set = set(concepts)
-    best_label = best_label_fn(by_sp, config)
-
-    def meta(uri: str) -> dict:
-        defs = by_sp.get((uri, SKOS_DEFINITION)) or by_sp.get((uri, SKOS_SCOPE_NOTE))
-        notations = by_sp.get((uri, SKOS_NOTATION))
-        return {
-            "definition": defs[0][0] if defs else "",
-            "alt_labels": [o for o, _ in by_sp.get((uri, SKOS_ALT_LABEL), [])],
-            "notation": notations[0][0] if notations else "",
-            "same_as": [o for o, _ in by_sp.get((uri, "http://www.w3.org/2002/07/owl#sameAs"), [])],
-            "related": [o for o, _ in by_sp.get((uri, "http://www.w3.org/2004/02/skos/core#related"), [])],
-        }
 
     # scheme assignment + top slots (skos_converter.py:685-714 semantics)
     top_slots: dict[str, list] = defaultdict(list)  # scheme -> [concept] (seq order)
@@ -201,20 +218,45 @@ def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
     for subj, obj, _, seq in by_p[SKOS_BROADER]:
         if obj in concept_set and subj != obj and (subj not in cand or seq < cand[subj][0]):
             cand[subj] = (seq, obj)
+    parent = {child: p for child, (_, p) in cand.items()}
     children_of: dict[str, list] = defaultdict(list)
-    for child, (_, parent) in cand.items():
-        children_of[parent].append(child)
+    for child, p in parent.items():
+        children_of[p].append(child)
 
     has_broader = {s for s, *_ in by_p[SKOS_BROADER]}
     orphans = [
         c for c in concepts
-        if c not in has_broader and c not in top_set and c not in cand
+        if c not in has_broader and c not in top_set and c not in parent
     ]
+    return Hierarchy(concepts, schemes, top_slots, concept_to_scheme, parent, children_of, orphans)
+
+
+def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
+    """triple_rows: iterable of (subj, pred, obj, obj_is_literal,
+    obj_lang, seq). Returns one dict per ``_DOC_ROWS_SCHEMA`` row, in
+    emission order (ready for the render kernels)."""
+    index = index_triples(triple_rows)
+    by_sp = index[0]
+    h = assemble(index)
+    schemes, top_slots, children_of = h.schemes, h.top_slots, h.children_of
+    best_label = best_label_fn(by_sp, config)
+
+    def meta(uri: str) -> dict:
+        defs = by_sp.get((uri, SKOS_DEFINITION)) or by_sp.get((uri, SKOS_SCOPE_NOTE))
+        notations = by_sp.get((uri, SKOS_NOTATION))
+        return {
+            "definition": defs[0][0] if defs else "",
+            "alt_labels": [o for o, _ in by_sp.get((uri, SKOS_ALT_LABEL), [])],
+            "notation": notations[0][0] if notations else "",
+            "same_as": [o for o, _ in by_sp.get((uri, "http://www.w3.org/2002/07/owl#sameAs"), [])],
+            "related": [o for o, _ in by_sp.get((uri, "http://www.w3.org/2004/02/skos/core#related"), [])],
+        }
+
     orphans_by_scheme: dict[str, list] = defaultdict(list)
     orphans_no_scheme = []
-    for o in orphans:
-        if o in concept_to_scheme:
-            orphans_by_scheme[concept_to_scheme[o]].append(o)
+    for o in h.orphans:
+        if o in h.concept_to_scheme:
+            orphans_by_scheme[h.concept_to_scheme[o]].append(o)
         else:
             orphans_no_scheme.append(o)
 

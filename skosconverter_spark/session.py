@@ -40,17 +40,6 @@ def get_spark(
         # core-count parallelism; at production data volumes partitions are
         # far above either floor, so the setting is inert there.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        # allow joins to co-partition on a SUBSET of the join keys when
-        # both sides already share that partitioning (e.g. url-keyed
-        # mention tables joining on (url, concept_uri)): the default
-        # true forces a full-key re-shuffle of both sides, which costs
-        # two exchanges + sorts per such join (measured r6 in the
-        # links scoring DAG). The guard the default provides — skew
-        # when the subset key is coarse — does not apply here: every
-        # deliberate subset key in this engine (url, doc_id) is a
-        # uniform high-cardinality key by design, and AQE skew-join
-        # handling stays on regardless.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -133,6 +133,11 @@ def test_driver_size_guards_trip(spark):
     )
     with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
         connected_components(over_edges)
+    # and so does the ancestor closure
+    from skosconverter_spark.kg.canonicalize import transitive_closure
+
+    with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
+        transitive_closure(over_edges.selectExpr("src child", "dst parent"))
 
 
 def test_document_rows_job_count(spark):
@@ -213,6 +218,42 @@ def test_canonicalize_job_count(spark):
     assert len(out) == 200
     assert len(jobs) <= 6, f"canonicalize_triples issued {len(jobs)} Spark jobs"
     triples.unpersist()
+
+
+def _chain_edges(spark, n):
+    edges = spark.createDataFrame(
+        [(f"c{i}", f"c{i + 1}") for i in range(n)], "child string, parent string"
+    ).cache()
+    edges.count()
+    return edges
+
+
+def test_transitive_closure_job_count(spark):
+    """The ancestor closure is one guarded collect plus the driver-local
+    kernel, not a checkpoint and a count per doubling round."""
+    from skosconverter_spark.kg.canonicalize import transitive_closure
+
+    edges = _chain_edges(spark, 9)
+    rows, jobs = _jobs_of(
+        spark, "transitive_closure_job_count", lambda: transitive_closure(edges).collect()
+    )
+    assert len(rows) == 9 * 10 // 2
+    assert jobs <= 2, f"transitive_closure issued {jobs} Spark jobs"
+    edges.unpersist()
+
+
+def test_transitive_closure_output_is_gated(spark, monkeypatch):
+    """A closure can be quadratic in its input, so its output pairs are
+    gated like a collect: 9 edges of a chain reach 45 pairs."""
+    from skosconverter_spark.kg import canonicalize
+
+    edges = _chain_edges(spark, 9)
+    monkeypatch.setattr(canonicalize, "MAX_DRIVER_ROWS", 44)
+    with pytest.raises(ValueError, match="gated at 44 rows"):
+        canonicalize.transitive_closure(edges)
+    monkeypatch.setattr(canonicalize, "MAX_DRIVER_ROWS", 45)
+    assert canonicalize.transitive_closure(edges).count() == 45
+    edges.unpersist()
 
 
 def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):

@@ -634,6 +634,29 @@ def test_store_keeps_at_most_two_committed_snapshots(spark, tmp_path):
     assert inflight.read(spark, base).count() == 3
 
 
+def test_old_layout_directories_are_removed(spark, tmp_path):
+    """A stage root written by the older layout (data/, metrics/, a
+    record with no schema or snapshot id) keeps only its manifest and
+    snapshots once it recomputes; a file such as another writer's
+    manifest temp file stays."""
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    base = tmp_path / "kg" / "10_extract"
+    for d in ("data", "metrics"):
+        (base / d).mkdir(parents=True)
+        (base / d / "part-00000.parquet").write_bytes(b"old")
+    (base / "_MANIFEST.json").write_text(
+        json.dumps({"stage": "10_extract", "input_fingerprint": "A", "rows": 1})
+    )
+    (base / "_MANIFEST.json.9.tmp").write_text("{}")
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    for fp in ("A", "B"):
+        runner.run_stage("10_extract", fp, lambda: spark.range(2).toDF("x"))
+    assert sorted(p.name for p in base.iterdir()) == [
+        "_MANIFEST.json", "_MANIFEST.json.9.tmp", "snap-1", "snap-2",
+    ]
+
+
 def test_torn_manifest_counts_as_uncommitted(spark, tmp_path):
     """A commit record cut off mid-write never counts as committed: a
     fresh adapter reports the stage uncommitted instead of raising, and

@@ -37,8 +37,6 @@ ALLOWLIST = {
     "text_ngram_topk": "rank window over the global top-k rows (k=20) "
     "after a TakeOrdered",
     "tpch_q3": "final top-10 sort after aggregation (LIMIT pushes TakeOrdered)",
-    "skos_orphans": "scheme_order ordinal window over the schemes table "
-    "(one row per ConceptScheme — vocabulary-bounded, not corpus-sized)",
 }
 
 
