@@ -231,19 +231,10 @@ def _dedup_corpus(spark, sf_dir):
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" the end")).alias("text"),
     )
-    out = d.unionByName(exact).unionByName(near)
-    # scale-adaptive scan parallelism: the local corpus is ONE single-row-
-    # group parquet file, so this 3-branch union scans as 3 tasks and every
-    # CPU-dense downstream pass (shingle explode, k×md5 signatures) is
-    # serialized on 3 cores (measured: 10 s + 29 s of task CPU on 3 and 10
-    # tasks respectively). Fan the tiny corpus out to the session's
-    # parallelism once; when the input already carries at least that many
-    # scan partitions (any real multi-file corpus), this is a no-op and no
-    # shuffle is added.
-    par = spark.sparkContext.defaultParallelism
-    if out.rdd.getNumPartitions() < par:
-        out = out.repartition(par)
-    return out
+    # the 3-branch union scans as 3 tasks, serializing every CPU-dense
+    # downstream pass (shingle explode, k×md5 signatures) on 3 cores
+    # (measured: 10 s + 29 s of task CPU on 3 and 10 tasks respectively)
+    return _fan_out(spark, d.unionByName(exact).unionByName(near))
 
 
 _DEDUP_CORPUS_SQL = """

@@ -100,15 +100,12 @@ def convert_directory(
     if operation == "skos2notion":
         docs = docs.filter(F.col("fmt") != "md")
     extracted = extract_triples(docs, cfg)
-    triples = ok_triples(extracted)
     errors = doc_errors(extracted).cache()
 
     if operation == "notion2skos":
-        write_graph_table(triples, str(out_root / "triples"))
+        write_graph_table(ok_triples(extracted), str(out_root / "triples"))
     else:
-        per_doc = render_documents(
-            document_rows_per_doc(extracted, cfg), fmt, vocab_col="vocab_id"
-        )
+        per_doc = render_documents(extracted.filter(F.col("status") == "ok"), fmt, cfg)
         # one row per input FILE (not per triple) — but a million-file
         # batch would still overwhelm the driver loop, so guard it too
         for vocab_id, payload in arrow_rows(
@@ -124,35 +121,3 @@ def convert_directory(
         errors.select("url", F.lit("error").alias("status"), "error")
     )
 
-
-def document_rows_per_doc(extracted: DataFrame, config: EngineConfig) -> DataFrame:
-    """DFS row tables for MANY documents at once: group triples by source
-    document and run the local DFS kernel per group (one vocabulary = one
-    grouped-map call — documents are independent, so a directory of
-    vocabularies renders fully in parallel)."""
-    import pandas as pd
-
-    from skosconverter_spark.plans.local_dfs import _DOC_ROWS_SCHEMA, dfs_rows_local
-
-    src = extracted.filter(F.col("status") == "ok").select(
-        "src_url", "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
-    )
-
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = dfs_rows_local(
-            list(
-                zip(
-                    pdf["subj"], pdf["pred"], pdf["obj"],
-                    pdf["obj_is_literal"], pdf["obj_lang"], pdf["seq"],
-                )
-            ),
-            config,
-        )
-        out = pd.DataFrame(rows) if rows else pd.DataFrame(
-            columns=[f.split()[0] for f in _DOC_ROWS_SCHEMA.split(", ")]
-        )
-        out["vocab_id"] = pdf["src_url"].iloc[0]
-        return out
-
-    schema = _DOC_ROWS_SCHEMA + ", vocab_id string"
-    return src.groupBy("src_url").applyInPandas(per_doc, schema)

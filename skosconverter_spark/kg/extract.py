@@ -5,17 +5,18 @@ extractor is a pure function of the html bytes, so the per-url
 byte-identical invariant (BASELINE.json input_hint) holds across runs,
 partitionings and cluster sizes — enforced by a sha256-manifest pytest.
 
-Two extractor versions behind EXTRACTOR_VERSION (results are versioned
-because re-extraction must be reproducible per url):
+The stage runs extractor v2, a dependency-free real-HTML tag stripper
+(public knowledge, no parser library): comments/script/style/noscript
+dropped with their content, <body> scoped when present, block-level
+tags become newlines, inline tags vanish, entities unescaped.
+``EXTRACTOR_VERSION`` names it in the pages fingerprint, so changing the
+extractor reruns every stage downstream (re-extraction must be
+reproducible per url).
 
-- v1: exactly the corpus contract (sources.pages) — a single literal
-  ``<body>`` whose content is HTML-escaped text; anything else raises
-  NotImplementedError rather than guessing.
-- v2 (default): a dependency-free real-HTML tag stripper (public
-  knowledge, no parser library): comments/script/style/noscript
-  dropped with their content, <body> scoped when present, block-level
-  tags become newlines, inline tags vanish, entities unescaped. On the
-  corpus contract v2 is byte-identical to v1 (pinned by test).
+v1 is exactly the corpus contract (sources.pages) — a single literal
+``<body>`` whose content is HTML-escaped text; anything else raises
+NotImplementedError rather than guessing. It is kept only as the
+reference v2 is pinned byte-identical to on that contract (by test).
 """
 
 from __future__ import annotations
@@ -84,15 +85,11 @@ def extract_text_bytes_v2(html: bytes | None) -> str | None:
     return html_mod.unescape(s)
 
 
-_KERNELS = {"1": extract_text_bytes_v1, "2": extract_text_bytes_v2}
+# the extractor the stage runs; EXTRACTOR_VERSION names it
+extract_text_bytes = extract_text_bytes_v2
 
 
-def extract_text_bytes(html: bytes | None, version: str = EXTRACTOR_VERSION) -> str | None:
-    """Pure kernel: html bytes → extracted text (None-safe, versioned)."""
-    return _KERNELS[version](html)
-
-
-def extract_text(pages: DataFrame, version: str = EXTRACTOR_VERSION) -> DataFrame:
+def extract_text(pages: DataFrame) -> DataFrame:
     """pages → pages with ``text`` filled where null.
 
     Rows that already carry text keep it byte-identically (the
@@ -104,14 +101,13 @@ def extract_text(pages: DataFrame, version: str = EXTRACTOR_VERSION) -> DataFram
     caller repartitions); the per-url invariant is.
     """
     cols = pages.columns
-    kernel = _KERNELS[version]
     have = pages.filter(F.col("text").isNotNull())
     need_rows = pages.filter(F.col("text").isNull())
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["text"] = [kernel(h) for h in pdf["html"]]
+            pdf["text"] = [extract_text_bytes(h) for h in pdf["html"]]
             yield pdf
 
     schema = ", ".join(

@@ -330,42 +330,14 @@ def ngram_jaccard_prefix(
         .distinct()
         .localCheckpoint(eager=True)  # read 3× below (cand_docs + 2 joins)
     )
-    # exact verify via per-candidate-doc shingle SETS (the minhash
-    # verifier's semi-join + collect_set pattern): the former
+    # exact verify via per-candidate-doc shingle SETS: the former
     # cand⋈shingles⋈shingles expansion materialized |cand| × |doc
     # shingles| rows and re-shuffled the full shingle table by
     # (doc_b, shingle) — measured r6 at 163 s of task CPU on the bench
     # corpus where this form is ~2 s. |A∩B| from array_intersect of
     # distinct-shingle sets equals the join-count `common`, and
     # |∪| = |A|+|B|−|∩|, so the jaccard double is bit-identical.
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sets = (
-        sh.join(cand_docs, "doc_id", "semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh"))
-        .localCheckpoint(eager=True)  # joined twice (doc_a / doc_b sides)
-    )
-    jac = (
-        F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-        / F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    )
-    return (
-        cand.join(
-            sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _verify_candidates(cand, sh, threshold)
 
 
 def shared_passages(
@@ -474,15 +446,24 @@ def minhash_lsh_pairs(
         .distinct()
         .localCheckpoint(eager=True)  # read 3× below (cand_docs + 2 joins)
     )
-    # exact-jaccard verify ONLY for candidate pairs: join each side to its
-    # shingle set and intersect arrays. (Verifying via the inverted-index
-    # pair join would enumerate every pair sharing ANY shingle — O(Σ df²),
-    # which explodes on corpora with common shingles; candidates are few.)
-    # Shingle sets are built only for docs that appear in some candidate
-    # pair (semi-join): candidates << corpus at scale.
+    # exact-jaccard verify ONLY for candidate pairs. (Verifying via the
+    # inverted-index pair join would enumerate every pair sharing ANY
+    # shingle — O(Σ df²), which explodes on corpora with common
+    # shingles; candidates are few.)
+    return _verify_candidates(candidates, sh, threshold)
+
+
+def _verify_candidates(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs whose exact
+    shingle jaccard is ≥ ``threshold``, rounded to 6 places after the
+    compare. ``cand`` is a localCheckpointed (doc_a, doc_b) table (read
+    3× here: cand_docs + 2 joins); ``sh`` is (doc_id, shingle). Each
+    side joins to its doc's shingle set and the arrays are intersected;
+    the sets are built only for docs in some candidate pair
+    (semi-join): candidates << corpus at scale."""
     cand_docs = (
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     sets = (
@@ -496,7 +477,7 @@ def minhash_lsh_pairs(
         / F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")
     )
     return (
-        candidates.join(
+        cand.join(
             sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
             "doc_a",
         )

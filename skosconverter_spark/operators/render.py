@@ -4,20 +4,22 @@ Byte-identical re-expressions of the reference's four forward sinks
 (skos_converter.py: to_notion_csv :764-888, to_notion_markdown
 :890-1041, to_xml :1043-1170, to_notion_json :1172-1281).
 
-Split in two layers:
+Every document is the engine's one DFS (plans.local_dfs.dfs_rows_local)
+followed by one of the pure-Python kernels ``render_{csv,markdown,json,
+xml}_rows`` over that document's ordered row list. Golden-path string
+assembly stays in Python (never Spark SQL string functions — §4.3) so
+bytes can't drift. Two entry points reach it:
 
-1. ``document_rows`` — the DFS row table with full concept metadata,
-   from the engine's one DFS (plans.local_dfs, exposed as a DataFrame by
-   plans.hierarchy.dfs_rows). A vocabulary is driver-sized, so this is
-   one guarded collect plus a Python pass; inputs above
-   ``MAX_DRIVER_ROWS`` triples fail loudly (an explicit non-goal).
-   ``sort_path`` is the row's zero-padded emission ordinal.
-2. ``render_{csv,markdown,json,xml}_rows`` — pure-Python kernels over
-   the ordered row list of ONE vocabulary document. Golden-path string
-   assembly stays in Python (never Spark SQL string functions — §4.3)
-   so bytes can't drift. ``render_documents`` runs them inside
-   ``applyInPandas`` — one vocabulary = one group = one Python call; a
-   corpus of many vocabularies renders in parallel across executors.
+- ``render_text_local``: one vocabulary on the driver — one guarded
+  collect of the triples (fails above ``MAX_DRIVER_ROWS``), DFS, kernel.
+- ``render_documents``: the reference's batch mode (one output file per
+  input file — :488-499) as ONE grouped map over the triples keyed by
+  source document: each group runs DFS and kernel in one Python call, so
+  a directory of vocabularies renders in parallel across executors and
+  crosses the Python boundary once per document.
+
+``document_rows`` is the DFS row table as a DataFrame (plans.hierarchy
+.dfs_rows) for callers that want the rows, not a rendered document.
 """
 
 from __future__ import annotations
@@ -27,12 +29,10 @@ import json
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.plans.hierarchy import dfs_rows
 from skosconverter_spark.plans.local_dfs import (  # noqa: F401 - re-exported
-    _DOC_ROWS_SCHEMA,
     MAX_DRIVER_ROWS,
     collect_triples,
     dfs_rows_local,
@@ -319,50 +319,36 @@ _KERNELS = {
 }
 
 
-def _render_rows(rows: list[dict], kernel) -> str:
-    """One document from its row-table dicts: sort_path order, list
-    columns as lists."""
-    rows.sort(key=lambda r: tuple(r["sort_path"]))
-    for r in rows:
-        for c in ("alt_labels", "same_as", "related"):
-            r[c] = [] if r[c] is None else list(r[c])
-    return kernel(rows)
+def render_documents(triples: DataFrame, fmt: str, config: EngineConfig) -> DataFrame:
+    """One rendered document per source document → (vocab_id, payload).
 
-
-def render_documents(
-    doc_rows: DataFrame, fmt: str, vocab_col: str | None = None
-) -> DataFrame:
-    """Render one output document per vocabulary group → (vocab_id, payload).
-
-    ``doc_rows`` is document_rows() output, optionally carrying a
-    ``vocab_col`` grouping column for multi-vocabulary corpora (the
-    reference's batch mode, one output file per input file — :488-499).
-    Grouped-map UDF: each group's rows are sorted by sort_path inside the
-    kernel, so no global sort is needed."""
-    kernel = _KERNELS[fmt]
-    src = doc_rows.withColumn(
-        "vocab_id", F.col(vocab_col) if vocab_col else F.lit("_all")
+    ``triples`` carries ``src_url`` (the document key, returned as
+    ``vocab_id``) beside the six DFS columns. One grouped map: each
+    document's triples go through the DFS and the kernel in one Python
+    call. A document whose DFS emits no row (no scheme, no concept)
+    yields no row, so batch mode writes no file for it."""
+    src = triples.select(
+        "src_url", "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
     )
 
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
-        payload = _render_rows(pdf.to_dict("records"), kernel)
-        return pd.DataFrame({"vocab_id": [pdf["vocab_id"].iloc[0]], "payload": [payload]})
+    def render(pdf):
+        return _render_document(fmt, config, pdf)
 
-    return src.groupBy("vocab_id").applyInPandas(
-        render, "vocab_id string, payload string"
+    return src.groupBy("src_url").applyInPandas(render, "vocab_id string, payload string")
+
+
+def _render_document(fmt: str, config: EngineConfig, pdf: pd.DataFrame) -> pd.DataFrame:
+    # module-level, so the grouped map pickles it by reference and the
+    # executor resolves dfs_rows_local and _KERNELS in its own import
+    rows = dfs_rows_local(
+        zip(
+            pdf["subj"], pdf["pred"], pdf["obj"],
+            pdf["obj_is_literal"], pdf["obj_lang"], pdf["seq"],
+        ),
+        config,
     )
-
-
-def render_document_text(
-    doc_rows: DataFrame, fmt: str, max_rows: int = MAX_DRIVER_ROWS
-) -> str:
-    """Single-vocabulary convenience: the whole corpus as one document.
-
-    A single output document is driver-sized by definition (the
-    reference writes ONE file), so this takes the row table from
-    ``guard_driver_sized`` (one Spark job, Arrow) and runs the kernel
-    driver-side — skipping the one-group shuffle the grouped-map path
-    would force. Misuse on a corpus-sized row table fails loudly instead
-    of OOMing the driver."""
-    rows = guard_driver_sized(doc_rows, "render_document_text", max_rows).to_pylist()
-    return _render_rows(rows, _KERNELS[fmt])
+    if not rows:
+        return pd.DataFrame(columns=["vocab_id", "payload"])
+    return pd.DataFrame(
+        {"vocab_id": [pdf["src_url"].iloc[0]], "payload": [_KERNELS[fmt](rows)]}
+    )

@@ -14,9 +14,9 @@ this kernel, and render.render_text_local) reach it through
 ``collect_triples``: one Spark job through ``guard_driver_sized``, which
 ships the triples as Arrow and fails loudly above ``MAX_DRIVER_ROWS``
 (5M) triples instead of OOMing the driver: vocabularies beyond that are
-an explicit non-goal. The batch path (api.document_rows_per_doc) runs it
+an explicit non-goal. Batch mode (render.render_documents) runs it
 once per document inside a grouped-map call. The golden-byte tests pin
-its renders against the reference's bytes.
+its renders on both paths against the reference's bytes.
 
 ``assemble`` is the reference's build_hierarchy (:664-762) over the
 triple index: schemes, top slots, the concept→scheme assignment, one

@@ -29,17 +29,38 @@ AMBIGUOUS = {"vocab_dup"}
 
 
 def test_batch_convert_matches_goldens(spark, tmp_path):
-    out = str(tmp_path / "out")
-    status = convert_directory(spark, str(DATA), out, fmt="csv", operation="skos2notion")
-    rows = {r.url: r.status for r in status.collect()}
-    assert all(s == "ok" for s in rows.values())
-    for name in ttl_fixture_names():
-        got = (tmp_path / "out" / f"{name}.csv").read_bytes()
-        golden = load_golden_bytes(name, "out.csv")
-        if name in AMBIGUOUS:
-            assert sorted(got.splitlines()) == sorted(golden.splitlines()), name
-        else:
-            assert got == golden, name
+    """Batch mode's grouped-map render, every ttl fixture in all four
+    formats, byte-equal to the reference's documents."""
+    for fmt in ("csv", "md", "json", "xml"):
+        out = tmp_path / fmt
+        status = convert_directory(spark, str(DATA), str(out), fmt=fmt, operation="skos2notion")
+        rows = {r.url: r.status for r in status.collect()}
+        assert all(s == "ok" for s in rows.values())
+        for name in ttl_fixture_names():
+            got = (out / f"{name}.{fmt}").read_bytes()
+            golden = load_golden_bytes(name, f"out.{fmt}")
+            if name in AMBIGUOUS:
+                assert sorted(got.splitlines()) == sorted(golden.splitlines()), (name, fmt)
+            else:
+                assert got == golden, (name, fmt)
+
+
+def test_batch_convert_writes_no_file_for_an_empty_document(spark, tmp_path):
+    """A document that parses but whose DFS emits no row (no scheme, no
+    concept) gets an ok status and no output file, not a header-only
+    one."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "vocab_basic.ttl").write_text(load_fixture_text("vocab_basic"), encoding="utf-8")
+    (src / "no_concepts.ttl").write_text(
+        "@prefix ex: <http://example.org/> .\nex:a ex:b ex:c .\n", encoding="utf-8"
+    )
+    out = tmp_path / "out"
+    status = convert_directory(spark, str(src), str(out), fmt="csv")
+    assert sorted((r.url.rsplit("/", 1)[-1], r.status) for r in status.collect()) == [
+        ("no_concepts.ttl", "ok"), ("vocab_basic.ttl", "ok"),
+    ]
+    assert sorted(p.name for p in out.iterdir()) == ["vocab_basic.csv"]
 
 
 def test_batch_reverse_writes_graph_table(spark, tmp_path):
@@ -87,7 +108,6 @@ def test_driver_size_guards_trip(spark):
         collect_triples,
         document_rows,
         guard_driver_sized,
-        render_document_text,
     )
 
     big = spark.range(50).selectExpr(
@@ -103,9 +123,6 @@ def test_driver_size_guards_trip(spark):
         export_turtle_text(big, max_rows=10)
     # under the gate: passes through
     assert len(collect_triples(big.limit(5), max_rows=10)) == 5
-    # render path: the guard fires before any row is pulled to the driver
-    with pytest.raises(ValueError):
-        render_document_text(big.selectExpr("subj"), "csv", max_rows=10)
     # the DFS row table: a vocabulary over the driver limit is a
     # non-goal that fails in the guard, never a collect
     over = spark.range(MAX_DRIVER_ROWS + 1).selectExpr(
@@ -423,15 +440,16 @@ def test_skos_to_notion_job_count(spark):
 
 def test_convert_directory_job_count(spark, tmp_path):
     """The per-file render runs once: the guard's collect is the only
-    action over the parse → DFS → render grouped map (seven jobs when a
-    count ran it a second time)."""
+    action over the parse → DFS + render grouped map, two Spark jobs in
+    all (three when a second grouped map re-sorted a DFS row table, seven
+    when a count ran it a second time)."""
     _, jobs = _jobs_of(
         spark, "convert_directory_job_count",
         lambda: convert_directory(spark, str(DATA), str(tmp_path / "out"), fmt="csv"),
     )
     for name in ttl_fixture_names():
         assert (tmp_path / "out" / f"{name}.csv").exists(), name
-    assert jobs <= 4, f"convert_directory issued {jobs} Spark jobs"
+    assert jobs == 2, f"convert_directory issued {jobs} Spark jobs"
 
 
 def test_driver_bound_reads_go_through_the_guard():

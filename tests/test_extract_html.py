@@ -1,5 +1,6 @@
-"""HTML → text extractor: v1 (corpus contract) vs v2 (real-HTML tag
-stripper), version gating, and the per-url byte-identity invariant."""
+"""HTML → text extractor: v2 (the real-HTML tag stripper the stage
+runs) against v1 (the corpus contract), and the per-url byte-identity
+invariant."""
 
 from __future__ import annotations
 
@@ -55,34 +56,29 @@ def test_v2_handles_fragments_and_unclosed_body():
 def test_v1_raises_beyond_contract():
     with pytest.raises(NotImplementedError):
         extract_text_bytes_v1(b"<div>no body tag</div>")
-    # versioned dispatcher: default is v2, explicit v1 still available
+    # the stage's extractor is v2
     assert EXTRACTOR_VERSION == "2"
     assert extract_text_bytes(REAL_HTML) == extract_text_bytes_v2(REAL_HTML)
-    with pytest.raises(NotImplementedError):
-        extract_text_bytes(b"<div>x</div>", version="1")
 
 
 def test_extract_text_stage_byte_identity(spark):
     """The per-url sha256 manifest invariant: extraction is a pure
-    function of html bytes for BOTH versions, identical across
-    partitionings, and v1/v2 agree on the corpus."""
+    function of html bytes, identical across partitionings and equal to
+    the corpus's expected text."""
     pages = synthesize_pages(spark, 60, partitions=3)
-    for version in ("1", "2"):
-        a = {
-            r.url: hashlib.sha256(r.text.encode()).hexdigest()
-            for r in extract_text(pages, version=version).collect()
-        }
-        b = {
-            r.url: hashlib.sha256(r.text.encode()).hexdigest()
-            for r in extract_text(
-                synthesize_pages(spark, 60, partitions=7), version=version
-            ).collect()
-        }
-        assert a == b
-        expected = {
-            page_record(i)["url"]: hashlib.sha256(
-                page_record(i)["_expected_text"].encode()
-            ).hexdigest()
-            for i in range(60)
-        }
-        assert a == expected
+    a = {
+        r.url: hashlib.sha256(r.text.encode()).hexdigest()
+        for r in extract_text(pages).collect()
+    }
+    b = {
+        r.url: hashlib.sha256(r.text.encode()).hexdigest()
+        for r in extract_text(synthesize_pages(spark, 60, partitions=7)).collect()
+    }
+    assert a == b
+    expected = {
+        page_record(i)["url"]: hashlib.sha256(
+            page_record(i)["_expected_text"].encode()
+        ).hexdigest()
+        for i in range(60)
+    }
+    assert a == expected

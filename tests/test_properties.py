@@ -1,9 +1,10 @@
 """Property-based tests (SURVEY §5.4): random DAG vocabularies →
 structural invariants of the DFS row table and the markdown round trip.
 Run against the engine's one DFS, the pure-Python kernel in
-plans.local_dfs (its Spark face, document_rows, is byte-pinned to the
-reference by test_render_golden), so hypothesis can explore hundreds of
-cases without Spark job latency."""
+plans.local_dfs (its renders are byte-pinned to the reference by
+test_render_golden, and its Spark face, document_rows, is checked row
+for row against it there), so hypothesis can explore hundreds of cases
+without Spark job latency."""
 
 from __future__ import annotations
 

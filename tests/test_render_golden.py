@@ -1,13 +1,18 @@
 """Golden-byte equality for the four forward sinks, on every ttl
 fixture: the engine's rendered document must equal the bytes the
-reference produced (vendored under tests/golden/)."""
+reference produced (vendored under tests/golden/). Renders go through
+render_text_local, the path skos_to_notion and the CLI run; batch mode's
+grouped map is checked against the same goldens in test_api. The
+DataFrame face of the DFS, document_rows, is checked row for row
+against the kernel."""
 
 from __future__ import annotations
 
 import pytest
 
 from skosconverter_spark.config import EngineConfig
-from skosconverter_spark.operators.render import document_rows, render_document_text
+from skosconverter_spark.operators.render import document_rows, render_text_local
+from skosconverter_spark.plans.local_dfs import collect_triples, dfs_rows_local
 from skosconverter_spark.schemas import DOCS
 from skosconverter_spark.sources.parse_udf import extract_triples, ok_triples
 
@@ -34,10 +39,8 @@ def rendered(spark):
             [(name, name, "ttl", load_fixture_text(name))], schema=DOCS
         )
         triples = ok_triples(extract_triples(docs, cfg)).cache()
-        rows = document_rows(triples, cfg).cache()
         for fmt in FMT_TO_FILE:
-            out[(name, fmt)] = render_document_text(rows, fmt).encode("utf-8")
-        rows.unpersist()
+            out[(name, fmt)] = render_text_local(triples, fmt, cfg).encode("utf-8")
         triples.unpersist()
     return out
 
@@ -62,3 +65,19 @@ def test_render_matches_golden(rendered, name, fmt):
             f"tail ours={ours_l[-3:]} gold={gold_l[-3:]}"
         )
         assert ours == golden, f"{name}/{fmt}: bytes differ (line endings?)"
+
+
+def test_document_rows_face_matches_kernel(spark):
+    """document_rows is the DFS row table as a DataFrame: on every ttl
+    fixture its rows, all 15 columns, equal the kernel's own output."""
+    cfg = EngineConfig()
+    for name in ttl_fixture_names():
+        docs = spark.createDataFrame(
+            [(name, name, "ttl", load_fixture_text(name))], schema=DOCS
+        )
+        triples = ok_triples(extract_triples(docs, cfg)).cache()
+        face = document_rows(triples, cfg).toArrow().to_pylist()
+        kernel = dfs_rows_local(collect_triples(triples), cfg)
+        assert face and len(face[0]) == 15, name
+        assert face == kernel, name
+        triples.unpersist()
