@@ -387,12 +387,12 @@ def q_kg_links(spark, sf_dir):
         F.concat(F.lit("doc:"), F.col("doc_id")).alias("url"), "text"
     )
     triples = _kg_vocab_triples(spark)
-    # one label table for the scanner and the links vocabulary; the
+    # one vocabulary read for the scanner and the links stage; the
     # final aggregation is url-prefixed, so it reuses the links stage's
     # url partitioning
-    lt = label_table(triples).localCheckpoint(eager=True)
-    mentions = scan_mentions(pages, triples, label_tbl=lt).localCheckpoint(eager=True)
-    best = link_stage(mentions, lt, spark.sparkContext.defaultParallelism)
+    labels = label_table(triples)
+    mentions = scan_mentions(pages, triples, labels=labels).localCheckpoint(eager=True)
+    best = link_stage(mentions, labels, spark.sparkContext.defaultParallelism)
     return best.groupBy("url", "norm_surface", "concept_uri").agg(
         F.count("*").alias("n_mentions"),
         F.round(F.min("score"), 6).alias("score"),

@@ -147,8 +147,7 @@ def run(argv: list[str] | None = None, spark=None) -> int:
             op = "notion2skos" if args.command == "to-skos" else "skos2notion"
             fmt = _FMT_BY_COMMAND.get(args.command, ("csv",))[0]
             status = convert_directory(
-                spark, args.batch_dir, args.output_dir, fmt=fmt, operation=op,
-                config=cfg, force=getattr(args, "force", False),
+                spark, args.batch_dir, args.output_dir, fmt=fmt, operation=op, config=cfg
             )
             n_err = status.filter("status = 'error'").count()
             if n_err:

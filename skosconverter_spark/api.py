@@ -80,7 +80,6 @@ def convert_directory(
     fmt: str = "csv",
     operation: str = "skos2notion",
     config: EngineConfig | None = None,
-    force: bool = True,
 ) -> DataFrame:
     """Batch mode: one output per input file, all files in one job.
 
@@ -90,7 +89,8 @@ def convert_directory(
 
     Unlike the reference's sequential loop, parsing is one Arrow job over
     all files and rendering is one grouped-map job — per-file isolation
-    comes from error-status rows, not try/except around a loop.
+    comes from error-status rows, not try/except around a loop. Batch
+    mode renders without the validation gate.
     """
     cfg = config or EngineConfig()
     out_root = Path(output_dir)
@@ -100,7 +100,9 @@ def convert_directory(
     if operation == "skos2notion":
         docs = docs.filter(F.col("fmt") != "md")
     extracted = extract_triples(docs, cfg)
-    errors = doc_errors(extracted).cache()
+    # not cached: Spark matches a cached plan by the directory path, not
+    # the file contents, so a second call would report stale errors
+    errors = doc_errors(extracted)
 
     if operation == "notion2skos":
         write_graph_table(ok_triples(extracted), str(out_root / "triples"))

@@ -40,6 +40,7 @@ from skosconverter_spark.plans.local_dfs import (
     check_driver_sized,
     guard_driver_sized,
 )
+from skosconverter_spark.sources.parse_udf import dedup_triples
 
 
 def _equivalence_pairs(triples: DataFrame) -> DataFrame:
@@ -178,29 +179,13 @@ def canonical_map(triples: DataFrame, max_iterations: int = 25) -> DataFrame:
     return _frame(triples, "subj", _canonical(triples, max_iterations).items(), ("uri", "canonical"))
 
 
-def _dedup(t: DataFrame) -> DataFrame:
-    return (
-        t.groupBy("subj", "pred", "obj", "obj_lang")
-        .agg(
-            # deterministic pick (min-seq discipline, D6) — see
-            # sources.parse_udf.ok_triples
-            F.min(F.struct("seq", "src_url", "obj_is_literal"))[
-                "obj_is_literal"
-            ].alias("obj_is_literal"),
-            F.min("src_url").alias("src_url"),
-            F.min("seq").alias("seq"),
-        )
-        .select("subj", "pred", "obj", "obj_is_literal", "obj_lang", "src_url", "seq")
-    )
-
-
 def canonicalize_triples(triples: DataFrame, max_iterations: int = 25) -> DataFrame:
     """Rewrite subj/obj through the canonical map (identity for nodes
     outside any equivalence class); drop equivalence self-loops; dedup."""
     canon = _canonical(triples, max_iterations)
     if not canon:
         # nothing to rewrite: the dedup aggregation is the whole job
-        return _dedup(triples)
+        return dedup_triples(triples)
     cmap = _frame(triples, "subj", canon.items(), ("uri", "canonical"))
     t = (
         triples.join(
@@ -233,4 +218,4 @@ def canonicalize_triples(triples: DataFrame, max_iterations: int = 25) -> DataFr
             & (F.col("subj") == F.col("obj"))
         )
     )
-    return _dedup(t)
+    return dedup_triples(t)

@@ -4,7 +4,8 @@ Score model (deterministic):
 - candidates are exact dictionary hits: a mention (url, surface,
   norm_surface, begin, end) is a candidate for every concept with a
   label of the same normalized surface (``mention_candidates`` is the
-  same match as an equi-join), so the mention-to-label surface match is
+  same match as an equi-join; both sides are normalized by
+  ``mentions.normalize_surface``), so the mention-to-label surface match is
   always total and contributes the constant 0.5.
 - tf(url, s) counts the page's mention rows of surface s (duplicate rows
   count); df(s) is the number of distinct urls with a mention of s;
@@ -22,10 +23,11 @@ Score model (deterministic):
   highest score with ties to the smaller uri.
 
 Two rounds:
-1. On the driver, two guarded collects of vocabulary-sized tables: idf
-   per surface (df and n_pages in Spark, ``log`` included, so the kernel
-   multiplies the same doubles a Spark plan would), and the label
-   table's (norm_surface, uri) pairs. Both are broadcast.
+1. On the driver, one guarded collect: idf per surface (df and n_pages
+   in Spark, ``log`` included, so the kernel multiplies the same doubles
+   a Spark plan would). The vocabulary side comes from the
+   ``label_table`` rows the caller already holds, with no Spark job.
+   Both are broadcast.
 2. On the executors, one ``mapInArrow`` pass over the mentions,
    hash-partitioned by url and sorted by url within each partition,
    scores each page whole and emits its links.
@@ -55,6 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from skosconverter_spark.kg.mentions import Label
 from skosconverter_spark.plans.local_dfs import guard_driver_sized
 
 _LINK_ARROW = pa.schema(
@@ -71,18 +74,16 @@ _LINK_ARROW = pa.schema(
 
 
 def vocab_score_tables(
-    label_tbl: DataFrame,
+    labels: list[Label],
 ) -> tuple[dict[str, tuple[str, ...]], dict[str, float]]:
     """(concepts, prof_norm): the vocabulary side of the context cosine,
-    from one guarded collect of the label table's (norm_surface, uri)
-    pairs, deduplicated here rather than by a Spark shuffle. ``concepts``
-    maps a normalized surface to its concepts' uris, sorted; ``prof_norm``
-    maps a uri to √|S(c)|, the norm of its distinct surface set as a 0/1
-    vector."""
-    tbl = guard_driver_sized(label_tbl.select("norm_surface", "uri"), "link vocabulary")
+    from ``label_table``'s rows, deduplicated on (norm_surface, uri).
+    ``concepts`` maps a normalized surface to its concepts' uris, sorted;
+    ``prof_norm`` maps a uri to √|S(c)|, the norm of its distinct surface
+    set as a 0/1 vector."""
     concepts: dict[str, list[str]] = defaultdict(list)
     sizes: Counter = Counter()
-    for surface, uri in set(zip(*(c.to_pylist() for c in tbl.columns))):
+    for surface, uri in {(ns, uri) for uri, _, ns, _ in labels}:
         sizes[uri] += 1
         if surface is not None:  # a null surface matches no mention
             concepts[surface].append(uri)
@@ -144,16 +145,16 @@ def _links_batch(links: list[tuple]) -> pa.RecordBatch:
     )
 
 
-def score_candidates(mentions: DataFrame, label_tbl: DataFrame):
-    """Round 1, on the driver: collect idf and the vocabulary, broadcast
-    them, and return the per-page scorer ``score_page(url, rows)`` the
-    kernel runs.
+def score_candidates(mentions: DataFrame, labels: list[Label]):
+    """Round 1, on the driver: collect idf, broadcast it with the
+    vocabulary tables, and return the per-page scorer
+    ``score_page(url, rows)`` the kernel runs.
 
     Contract: the candidates it scores are exact dictionary hits of the
-    same ``label_tbl``, so the surface term of the score is exactly 1.0;
+    same ``labels``, so the surface term of the score is exactly 1.0;
     a looser candidate generator would need its own surface term."""
     tables = mentions.sparkSession.sparkContext.broadcast(
-        (_idf(mentions), *vocab_score_tables(label_tbl))
+        (_idf(mentions), *vocab_score_tables(labels))
     )
     # a partial over a module-level function, so the executor-side
     # closure names no function a tracer may have rebound
@@ -190,12 +191,12 @@ def link_best(mentions: DataFrame, score_page, parts: int) -> DataFrame:
     )
 
 
-def link_stage(mentions: DataFrame, label_tbl: DataFrame, parts: int) -> DataFrame:
+def link_stage(mentions: DataFrame, labels: list[Label], parts: int) -> DataFrame:
     """Mentions → one best concept per mention span: the KG pipeline's
-    30_links and the kg_links query. ``label_tbl`` is ``label_table`` of
-    the vocabulary; the candidates are its exact hits.
+    30_links and the kg_links query. ``labels`` are ``label_table``'s
+    rows for the vocabulary; the candidates are their exact hits.
 
-    Two rounds (module docstring): the statistics and vocabulary
-    collects, then one kernel pass over the mentions — a plan of
+    Two rounds (module docstring): the statistics collect, then one
+    kernel pass over the mentions — a plan of
     Scan → Exchange(url) → Sort → MapInArrow."""
-    return link_best(mentions, score_candidates(mentions, label_tbl), parts)
+    return link_best(mentions, score_candidates(mentions, labels), parts)

@@ -6,23 +6,29 @@ token-trie; an Arrow-batched ``mapInPandas`` slides word windows over
 each page's text and emits mention rows. One Python call per batch; the
 only shuffle in this stage is the caller's salted repartition.
 
+One normalizer: ``label_table`` collects the labels once and normalizes
+them on the driver with ``normalize_surface``, whose ``_WORD_RE`` tokens
+are the scanner's, so every emitted norm_surface is
+``normalize_surface(surface)``. (A Spark twin with Java's Unicode ``\\w``,
+which counts combining marks as word characters, lost every label with one.)
+
 Candidates are the concepts whose label has the mention's normalized
-surface: ``mention_candidates`` states that as an equi-join (broadcast
-hash join — the vocabulary side is small by construction), and
-kg.linking scores them with a lookup in its per-page kernel.
+surface: ``mention_candidates`` states that as an equi-join against the
+label rows, and kg.linking scores them with a lookup in its per-page
+kernel.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import SKOS_ALT_LABEL, SKOS_PREF_LABEL
-from skosconverter_spark.plans.local_dfs import guard_driver_sized
+from skosconverter_spark.plans.local_dfs import arrow_rows, guard_driver_sized
 
 _WORD_RE = re.compile(r"\w+(?:'\w+)?", re.UNICODE)
 
@@ -35,22 +41,26 @@ def normalize_surface(s: str) -> str:
     return " ".join(_WORD_RE.findall(s.lower()))
 
 
-def label_table(triples: DataFrame) -> DataFrame:
-    """(uri, label, norm_surface, kind): the vocabulary's surface forms."""
-    kind = F.when(F.col("pred") == SKOS_PREF_LABEL, "pref").otherwise("alt")
-    lab = triples.filter(F.col("pred").isin(SKOS_PREF_LABEL, SKOS_ALT_LABEL)).select(
-        F.col("subj").alias("uri"), F.col("obj").alias("label"), kind.alias("kind")
-    )
-    # normalization mirrors normalize_surface EXACTLY: extract the same
-    # \w+(?:'\w+)? tokens the scanner uses (a split on [^\w']+ keeps edge
-    # apostrophes the scanner strips, producing trie entries no window
-    # can ever match). (?U) = Java's UNICODE_CHARACTER_CLASS, matching
-    # Python's unicode-aware \w.
-    norm = F.array_join(
-        F.regexp_extract_all(F.lower(F.col("label")), F.lit(r"(?U)\w+(?:'\w+)?"), 0),
-        " ",
-    )
-    return lab.withColumn("norm_surface", norm).distinct()
+class Label(NamedTuple):
+    uri: str | None
+    label: str | None
+    norm_surface: str | None
+    kind: str
+
+
+_KIND = {SKOS_PREF_LABEL: "pref", SKOS_ALT_LABEL: "alt"}
+
+
+def label_table(triples: DataFrame) -> list[Label]:
+    """The vocabulary's distinct ``Label`` rows, from one guarded collect
+    of the pref/alt label triples, each label normalized on the driver by
+    the scanner's own ``normalize_surface``. A null label keeps a null
+    norm_surface; a label that is both pref and alt gives two rows."""
+    labels = triples.filter(F.col("pred").isin(*_KIND)).select("subj", "pred", "obj")
+    return list(dict.fromkeys(
+        Label(uri, obj, obj and normalize_surface(obj), _KIND[pred])
+        for uri, pred, obj in arrow_rows(guard_driver_sized(labels, "label_table"))
+    ))
 
 
 class _Trie:
@@ -173,16 +183,14 @@ def _kernel(trie: "_Trie"):
 
 
 def scan_mentions(
-    pages_text: DataFrame, triples: DataFrame, label_tbl: DataFrame | None = None
+    pages_text: DataFrame, triples: DataFrame, labels: list[Label] | None = None
 ) -> DataFrame:
     """pages(url, text) × broadcast vocabulary → mention rows.
 
-    ``label_tbl`` — a precomputed (optionally checkpointed) label_table
-    of ``triples``: the pipeline computes it once and shares it between
-    the scanner, the candidate join and the scorer, instead of each
-    consumer re-running the filter+regexp+distinct aggregation and its
-    broadcast build (three vocab-sized shuffle+broadcast jobs on the
-    r6-measured critical path).
+    ``labels`` — ``label_table(triples)``, when the caller already holds
+    it: the pipeline reads the vocabulary once and shares the rows
+    between the scanner and the links stage. The trie is built from
+    their distinct non-empty norm_surfaces, with no Spark job.
 
     begin/end are character offsets of the surface in the original text.
 
@@ -202,11 +210,8 @@ def scan_mentions(
     5.0 s (object-dtype .str.* are Python-level maps — a trap), this
     alternation scan 1.3 s with byte-identical output."""
     spark = pages_text.sparkSession
-    lt = label_tbl if label_tbl is not None else label_table(triples)
-    surfaces = guard_driver_sized(
-        lt.select("norm_surface").distinct().filter(F.col("norm_surface") != ""),
-        "scan_mentions surfaces",
-    ).column(0).to_pylist()
+    rows = labels if labels is not None else label_table(triples)
+    surfaces = sorted({ns for _, _, ns, _ in rows if ns})
     trie_bc = spark.sparkContext.broadcast(_Trie(surfaces))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -228,14 +233,14 @@ def scan_mentions(
     )
 
 
-def mention_candidates(
-    mentions: DataFrame, triples: DataFrame, label_tbl: DataFrame | None = None
-) -> DataFrame:
-    """Equi-join mentions to candidate concepts on the normalized surface
-    (broadcast hash join — vocab side is small). ``label_tbl``: optional
-    precomputed label_table (see scan_mentions)."""
-    lt_src = label_tbl if label_tbl is not None else label_table(triples)
-    lt = lt_src.select("norm_surface", "uri", "kind").distinct()
+def mention_candidates(mentions: DataFrame, labels: list[Label]) -> DataFrame:
+    """Equi-join mentions to candidate concepts on the normalized surface:
+    ``labels`` (``label_table`` rows) become a small ``createDataFrame``,
+    joined broadcast."""
+    lt = mentions.sparkSession.createDataFrame(
+        list({(ns, uri, kind) for uri, _, ns, kind in labels}),
+        "norm_surface string, uri string, kind string",
+    )
     return mentions.join(F.broadcast(lt), "norm_surface").select(
         "url", "surface", "norm_surface", "begin", "end",
         F.col("uri").alias("concept_uri"), "kind",

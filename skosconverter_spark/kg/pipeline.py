@@ -11,10 +11,11 @@ Stage graph (north_star):
 
 Scheduling: ``run_pipeline`` builds this graph per call as a node table,
 ``name → (deps, fn(inputs))``, over the input fingerprints, the shared
-label table and the stages. ``_run_graph`` runs it as Dryad does (Isard
-et al., EuroSys 2007): a node starts once its inputs have resolved, and
-no pool thread waits on a sibling. So
-10_extract overlaps the label table, 20_mentions overlaps
+label rows (``label_table``: one guarded collect of the vocabulary's
+labels, normalized on the driver) and the stages. ``_run_graph`` runs
+it as Dryad does (Isard et al., EuroSys 2007): a node starts once its
+inputs have resolved, and no pool thread waits on a sibling. So
+10_extract overlaps the label read, 20_mentions overlaps
 40_page_triples, 30_links starts when 20_mentions is done, and
 50_canonical when 40_page_triples is.
 
@@ -215,7 +216,7 @@ def run_pipeline(
         return salted_repartition(extract_text(pages), parts).drop("html")
 
     def mentions(i):
-        return scan_mentions(i["10_extract"], vocab_triples, label_tbl=i["labels"])
+        return scan_mentions(i["10_extract"], vocab_triples, labels=i["labels"])
 
     def page_triples(i):
         md = i["10_extract"].select(
@@ -241,9 +242,9 @@ def run_pipeline(
         # fingerprint, so a new extractor re-runs every stage downstream.
         "fp_pages": ((), lambda i: f"{fingerprint_of(pages, pages.columns)}|x={EXTRACTOR_VERSION}"),
         "fp_vocab": ((), lambda i: fingerprint_of(vocab_triples, vocab_triples.columns)),
-        # one label table serves the mention scanner and the links
-        # vocabulary: its distinct aggregation runs once
-        "labels": ((), lambda i: label_table(vocab_triples).localCheckpoint(eager=True)),
+        # the vocabulary's label rows, read once (one guarded collect) for
+        # the mention scanner's trie and the links stage's tables
+        "labels": ((), lambda i: label_table(vocab_triples)),
         "10_extract": (("fp_pages",), stage("10_extract", fp_pages, extract)),
         "20_mentions": (
             ("10_extract", "labels", *fps),

@@ -97,12 +97,16 @@ def extract_triples(docs: DataFrame, config: EngineConfig) -> DataFrame:
 
 def ok_triples(extracted: DataFrame) -> DataFrame:
     """Graph-ready triples: drop error rows, dedup set-semantics
-    (rdflib Graph.add dedups; SURVEY §2.7 U5). Dedup is per (s,p,o,lang)
-    across documents — a partial-aggregated groupBy (map-side combine),
-    keeping the earliest seq so insertion-order picks stay exact."""
+    (rdflib Graph.add dedups; SURVEY §2.7 U5)."""
+    return dedup_triples(extracted.filter(F.col("status") == "ok"))
+
+
+def dedup_triples(t: DataFrame) -> DataFrame:
+    """One row per (s,p,o,lang) across documents — a partial-aggregated
+    groupBy (map-side combine), keeping the earliest seq so
+    insertion-order picks stay exact."""
     return (
-        extracted.filter(F.col("status") == "ok")
-        .groupBy("subj", "pred", "obj", "obj_lang")
+        t.groupBy("subj", "pred", "obj", "obj_lang")
         .agg(
             # deterministic literal-ness pick (min-seq discipline, D6): if
             # duplicate (s,p,o,lang) rows disagree — a literal and a URI

@@ -63,6 +63,22 @@ def test_batch_convert_writes_no_file_for_an_empty_document(spark, tmp_path):
     assert sorted(p.name for p in out.iterdir()) == ["vocab_basic.csv"]
 
 
+def test_batch_status_reads_the_current_files(spark, tmp_path):
+    """A second call after a broken file is fixed reports it ok: the
+    status is computed from this call's parse, not a cached plan of the
+    same directory path."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "v.ttl").write_text(load_fixture_text("vocab_basic") + "\nbroken", encoding="utf-8")
+    first = convert_directory(spark, str(src), str(tmp_path / "out1"), fmt="csv")
+    assert [r.status for r in first.collect()] == ["error"]
+    (src / "v.ttl").write_text(load_fixture_text("vocab_basic"), encoding="utf-8")
+    out = tmp_path / "out2"
+    second = convert_directory(spark, str(src), str(out), fmt="csv")
+    assert [(r.status, r.error) for r in second.collect()] == [("ok", None)]
+    assert (out / "v.csv").read_bytes() == load_golden_bytes("vocab_basic", "out.csv")
+
+
 def test_batch_reverse_writes_graph_table(spark, tmp_path):
     out = str(tmp_path / "rev")
     status = convert_directory(
@@ -311,9 +327,10 @@ def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):
 
 def test_run_pipeline_job_count(spark, tmp_path):
     """Spark jobs of run_pipeline over 40 pages, each bound the measured
-    count plus 2: a fresh build 26 (39 with the links stage as one
-    DataFrame plan), a full rerun 6 (12 while every catalog read inferred
-    its schema), a rerun after deleting 30_links 15 (28)."""
+    count: a fresh build 22 (26 while the labels were normalized in Spark,
+    checkpointed and collected twice more; 39 with the links stage as one
+    DataFrame plan), a full rerun 5 (6; 12 while every catalog read
+    inferred its schema), a rerun after deleting 30_links 13 (15; 28)."""
     import shutil
 
     from skosconverter_spark.kg.pipeline import run_pipeline
@@ -333,13 +350,37 @@ def test_run_pipeline_job_count(spark, tmp_path):
         )[1]
 
     fresh = run("run_pipeline_job_count")
-    assert fresh <= 28, f"run_pipeline issued {fresh} Spark jobs"
+    assert fresh <= 22, f"run_pipeline issued {fresh} Spark jobs"
     rerun = run("run_pipeline_rerun_job_count")
-    assert rerun <= 8, f"a full rerun issued {rerun} Spark jobs"
+    assert rerun <= 5, f"a full rerun issued {rerun} Spark jobs"
     shutil.rmtree(root / "30_links")
     relink = run("run_pipeline_relink_job_count")
-    assert relink <= 17, f"a rerun after deleting 30_links issued {relink} Spark jobs"
+    assert relink <= 13, f"a rerun after deleting 30_links issued {relink} Spark jobs"
     pages.unpersist()
+    vocab.unpersist()
+
+
+def test_label_table_is_one_job(spark):
+    """The links vocabulary is read once: label_table is one guarded
+    collect, and the scanner and the links tables take its rows without
+    a Spark job of their own."""
+    from skosconverter_spark.kg.linking import vocab_score_tables
+    from skosconverter_spark.kg.mentions import label_table, scan_mentions
+
+    from .test_kg_pipeline import vocab_ttl
+
+    docs = spark.createDataFrame([("v", "v", "ttl", vocab_ttl())], schema=DOCS)
+    vocab = ok_triples(extract_triples(docs, EngineConfig())).cache()
+    vocab.count()
+    labels, jobs = _jobs_of(spark, "label_table_job_count", lambda: label_table(vocab))
+    assert jobs == 1, f"label_table issued {jobs} Spark jobs"
+    assert labels and all(r.kind in ("pref", "alt") for r in labels)
+    pages = spark.createDataFrame([("u", "a dog")], "url string, text string")
+    _, jobs = _jobs_of(
+        spark, "label_consumers_job_count",
+        lambda: (scan_mentions(pages, vocab, labels=labels), vocab_score_tables(labels)),
+    )
+    assert jobs == 0, f"the label consumers issued {jobs} Spark jobs"
     vocab.unpersist()
 
 

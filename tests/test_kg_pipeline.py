@@ -18,7 +18,7 @@ from skosconverter_spark.kg.canonicalize import (
     transitive_closure,
 )
 from skosconverter_spark.kg.extract import extract_text
-from skosconverter_spark.kg.mentions import mention_candidates, scan_mentions
+from skosconverter_spark.kg.mentions import label_table, mention_candidates, scan_mentions
 from skosconverter_spark.kg.pipeline import run_pipeline
 from skosconverter_spark.schemas import DOCS
 from skosconverter_spark.sources.pages import VOCAB_CONCEPTS, page_record, synthesize_pages
@@ -73,7 +73,7 @@ def test_extract_text_byte_identical_per_url(pages):
 
 def test_mentions_find_known_concepts(spark, pages, vocab):
     pt = extract_text(pages)
-    cands = mention_candidates(scan_mentions(pt, vocab), vocab)
+    cands = mention_candidates(scan_mentions(pt, vocab), label_table(vocab))
     got = {
         (r.url, r.concept_uri.rsplit("#", 1)[1])
         for r in cands.select("url", "concept_uri").distinct().collect()
@@ -88,9 +88,47 @@ def test_multiword_and_altlabel_mentions(spark, vocab):
     pt = spark.createDataFrame(
         [("u1", "A canine and a feline met; Mammalia rejoiced.")], "url string, text string"
     )
-    cands = mention_candidates(scan_mentions(pt, vocab), vocab)
+    cands = mention_candidates(scan_mentions(pt, vocab), label_table(vocab))
     keys = {r.concept_uri.rsplit("#", 1)[1] for r in cands.collect()}
     assert {"dog", "cat", "mammal"} <= keys
+
+
+def test_scanner_and_labels_share_one_normalizer(spark):
+    """Labels with combining marks (an NFD "é", Devanagari matras and a
+    virama) are normalized by the scanner's own normalize_surface: each
+    is found in a page that contains it verbatim, every emitted
+    norm_surface is normalize_surface of its surface, and the rows are
+    the reference trie walk's over the normalized labels."""
+    import unicodedata
+
+    from skosconverter_spark.config import SKOS_ALT_LABEL, SKOS_PREF_LABEL
+    from skosconverter_spark.kg.mentions import _Trie, normalize_surface
+
+    from .test_mention_kernel import reference_walk
+
+    noir_cafe = unicodedata.normalize("NFD", "Noir Café")
+    cafe_noir = unicodedata.normalize("NFD", "Café Noir")
+    hindi = "हिन्दी भाषा"  # U+094D virama in न्द, matras ि ी ा
+    labels = [noir_cafe, cafe_noir, hindi]
+    vocab = spark.createDataFrame(
+        [
+            ("urn:noir-cafe", SKOS_PREF_LABEL, noir_cafe),
+            ("urn:cafe-noir", SKOS_ALT_LABEL, cafe_noir),
+            ("urn:hindi", SKOS_PREF_LABEL, hindi),
+        ],
+        "subj string, pred string, obj string",
+    )
+    texts = [f"We met at the {noir_cafe} for a {cafe_noir}.", f"{hindi} और {hindi}"]
+    urls = ["u1", "u2"]
+    pages = spark.createDataFrame(list(zip(urls, texts)), "url string, text string")
+    got = sorted(
+        (r.url, r.surface, r.norm_surface, r.begin, r.end)
+        for r in scan_mentions(pages, vocab).collect()
+    )
+    assert all(ns == normalize_surface(sf) for _, sf, ns, _, _ in got)
+    want = reference_walk(urls, texts, _Trie([normalize_surface(x) for x in labels]))
+    assert got == want
+    assert {u for u, *_ in got} == {"u1", "u2"} and len(got) == 4
 
 
 def test_connected_components_and_closure(spark):
@@ -413,7 +451,7 @@ def test_link_stage_scores_half_plus_half_context(spark):
     assert links[("p3", 0)][1] == 0.5
     brute = _brute_force_links(
         [tuple(r) for r in mentions.collect()],
-        [(r.uri, r.norm_surface) for r in lt.collect()],
+        [(r.uri, r.norm_surface) for r in lt],
     )
     for (url, begin), (uri, score) in links.items():
         (want_uri, want_score), = [v[:2] for k, v in brute.items() if k[:2] == (url, begin)]
@@ -501,7 +539,7 @@ def test_link_kernel_matches_brute_force(spark):
     ]
     mentions = spark.createDataFrame(rows, MENTION_SCHEMA)
     lt = label_table(vocab)
-    want = _brute_force_links(rows, [(r.uri, r.norm_surface) for r in lt.collect()])
+    want = _brute_force_links(rows, [(r.uri, r.norm_surface) for r in lt])
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(conf)
     runs = []

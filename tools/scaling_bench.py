@@ -76,10 +76,11 @@ def compute_job():
     # busy while any one branch's tail drains
     pt = extract_text(pages).localCheckpoint(eager=True)
     docs = pt.select("url", F.lit("md").alias("fmt"), F.col("text").alias("payload"))
-    m = scan_mentions(pt, vocab).localCheckpoint(eager=True)
+    labels = label_table(vocab)
+    m = scan_mentions(pt, vocab, labels=labels).localCheckpoint(eager=True)
     branches = [
         lambda: ok_triples(extract_triples(docs, cfg)).count(),
-        lambda: link_stage(m, label_table(vocab), cpus).count(),
+        lambda: link_stage(m, labels, cpus).count(),
         lambda: lang_id(pt.selectExpr("monotonically_increasing_id() as doc_id", "text")).count(),
     ]
     with ThreadPoolExecutor(max_workers=3) as pool:
