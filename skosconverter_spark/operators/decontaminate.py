@@ -12,9 +12,10 @@ of documents, the corpus is billions), so its distinct-shingle set is
 broadcast — the corpus is scanned ONCE, shingled, and hash-joined with
 no shuffle of corpus rows at all. The output is the contaminated-doc
 list (doc_id, n_shared), which downstream drops with a broadcast
-anti-join. Tokenization and shingling reuse the dedup operators'
-normalize/split/zip_with machinery (operators/dedup.py), so the
-decontamination gate and the dedup gate agree on what a "token" is.
+anti-join. Tokenization reuses the dedup operators' ``norm_tokens``
+(operators/dedup.py): the exact gate shingles with their expressions,
+the fuzzy gate with their shingle kernel, so the decontamination gates
+and the dedup gate agree on what a "token" is.
 
 Reference scope note: proycon/skosConverter has no corpus operators;
 this extends the engine for the pretraining-pipeline tier (SURVEY.md
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from skosconverter_spark.operators.dedup import doc_shingles
+from skosconverter_spark.operators.dedup import _doc_sets, doc_shingles, minhash_band_rows
 
 N_DECONTAM = 8  # word n-gram length of the overlap gate
 
@@ -81,39 +82,27 @@ def fuzzy_contaminated_docs(
     Same minhash+LSH machinery as the self-dedup (operators/dedup.py),
     pointed ACROSS two tables instead of at one: corpus band rows
     equi-join the broadcast eval band rows (eval sets are tiny — no
-    corpus shuffle), candidates verify with exact shingle jaccard ≥ τ.
-    A band-bucket match implies a shared min-shingle, so every candidate
-    pair shares ≥ 1 shingle and the verify join is an inner join."""
-    from skosconverter_spark.operators.dedup import doc_shingles, minhash_band_rows
-
-    sh_c = doc_shingles(corpus, text_col).localCheckpoint(eager=True)
-    sh_e = doc_shingles(eval_docs, text_col).localCheckpoint(eager=True)
-    bc = minhash_band_rows(sh_c, k, bands)
-    be = minhash_band_rows(sh_e, k, bands).select(
+    corpus shuffle), candidates verify with exact shingle jaccard ≥ τ
+    from the same shingle-kernel sets the band rows came from."""
+    sets_c = _doc_sets(corpus, text_col, 3, k, bands).localCheckpoint(eager=True)
+    sets_e = _doc_sets(eval_docs, text_col, 3, k, bands).localCheckpoint(eager=True)
+    be = minhash_band_rows(sets_e).select(
         F.col("doc_id").alias("eval_doc_id"), "band", "bucket"
     )
     candidates = (
-        bc.join(F.broadcast(be), ["band", "bucket"])
+        minhash_band_rows(sets_c)
+        .join(F.broadcast(be), ["band", "bucket"])
         .select("doc_id", "eval_doc_id")
         .distinct()
-        .localCheckpoint(eager=True)  # read twice below (semi + verify)
-    )
-    sets_c = (
-        sh_c.join(candidates.select("doc_id").distinct(), "doc_id", "semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh_c"), F.count("*").alias("n_c"))
-    )
-    sets_e = sh_e.groupBy("doc_id").agg(
-        F.collect_set("shingle").alias("sh_e"), F.count("*").alias("n_e")
     )
     common = F.size(F.array_intersect(F.col("sh_c"), F.col("sh_e")))
     jac = common.cast("double") / (
-        F.col("n_c") + F.col("n_e") - common
+        F.size("sh_c") + F.size("sh_e") - common
     ).cast("double")
     return (
-        candidates.join(sets_c, "doc_id")
+        candidates.join(sets_c.select("doc_id", F.col("sh").alias("sh_c")), "doc_id")
         .join(
-            F.broadcast(sets_e.select(F.col("doc_id").alias("eval_doc_id"), "sh_e", "n_e")),
+            F.broadcast(sets_e.select(F.col("doc_id").alias("eval_doc_id"), F.col("sh").alias("sh_e"))),
             "eval_doc_id",
         )
         .withColumn("jaccard", F.round(jac, 6))

@@ -18,19 +18,34 @@ so every operator here is verifiable against an ANSI-SQL oracle
 value-for-value. xxhash64 would be faster but is Spark-private; at
 100 TB you'd swap the constant, not the shape.
 
-All expressions are JVM-side (no Python UDFs anywhere).
+There is ONE shingle kernel, ``_doc_sets``: ``norm_tokens`` in a JVM
+projection, one doc_id exchange, then one ``mapInArrow`` pass that gives
+each document its sorted distinct word-n-gram set and its ``bands`` LSH
+band buckets: signature ``h_i = min md5("i:shingle")`` (hex), bucket
+``b`` = md5 of ``h[b*r:(b+1)*r]`` joined by ``|``. The tokens come from
+the same expression as ``shingles``, so the kernel only joins them into
+n-grams; ``tests/test_dedup_kernel.py`` pins its sets and buckets
+against ``shingles`` / ``F.md5``. Everything else here is JVM-side.
 """
 
 from __future__ import annotations
 
+import functools
+from hashlib import md5
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from skosconverter_spark.functions.text import fingerprint
 
 N_MINHASH = 12
 N_BANDS = 4
-ROWS_PER_BAND = 3
+# distinct shingles one document's set may hold in the shingle kernel (the
+# set rides whole through the verify joins); a larger one raises ValueError
+MAX_DOC_SHINGLES = 1_000_000
 
 
 def _regex_quote(sep: str) -> str:
@@ -174,31 +189,110 @@ def incremental_new_docs(
     )
 
 
+def _band_buckets(sh: list[str], k: int, bands: int) -> list[str]:
+    """The ``bands`` md5 band buckets of a shingle set (none for an empty
+    set or k = 0). A min over raw digests is the min over their hex
+    strings, and copying an md5 state that already holds "i:" hashes
+    "i:shingle" without re-encoding the prefix."""
+    if not k or not sh:
+        return []
+    encoded = [s.encode() for s in sh]
+    h = []
+    for i in range(k):
+        prefix = md5(b"%d:" % i)
+        digests = []
+        for e in encoded:
+            m = prefix.copy()
+            m.update(e)
+            digests.append(m.digest())
+        h.append(min(digests).hex())
+    r = k // bands
+    return [md5("|".join(h[b * r : (b + 1) * r]).encode()).hexdigest() for b in range(bands)]
+
+
+def _doc_sets_kernel(
+    schema: pa.Schema, n: int, k: int, bands: int, cap: int,
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """``_doc_sets``' ``mapInArrow`` body over (doc_id, toks) rows sorted by
+    doc_id. A document's rows can span Arrow batches, so the open one is
+    carried across batch boundaries and emitted once its last row is seen;
+    its set is the union over its rows, as a groupBy would merge them."""
+
+    def row(doc, sh: set[str]) -> tuple:
+        ordered = sorted(sh)
+        return doc, ordered, _band_buckets(ordered, k, bands)
+
+    def to_batch(rows: list[tuple]) -> pa.RecordBatch:
+        cols = list(zip(*rows)) or [[], [], []]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+
+    doc, sh, is_open = None, set(), False
+    for batch in batches:
+        rows = []
+        for d, toks in zip(*(c.to_pylist() for c in batch.columns)):
+            if is_open and d != doc:
+                rows.append(row(doc, sh))
+                sh = set()
+            doc, is_open = d, True
+            if toks:
+                sh.update(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+                if len(sh) > cap:
+                    raise ValueError(
+                        f"document {doc!r} has more than {cap:,} distinct "
+                        f"{n}-gram shingles (MAX_DOC_SHINGLES)"
+                    )
+        yield to_batch(rows)
+    if is_open:
+        yield to_batch([row(doc, sh)])
+
+
+def _doc_sets(
+    docs: DataFrame, text_col: str, n: int, k: int, bands: int
+) -> DataFrame:
+    """(doc_id, sh, buckets), one row per distinct doc_id: ``sh`` its
+    sorted distinct word-n-gram set, ``buckets`` its ``bands`` LSH band
+    buckets from a k-md5 min-hash signature (empty when k = 0 or ``sh``
+    is empty). doc_id keeps the input type. A set past
+    ``MAX_DOC_SHINGLES`` raises ``ValueError`` naming the doc_id.
+
+    ``norm_tokens`` runs before the exchange (one token array per row is
+    shipped), then a sort within partitions and one ``mapInArrow`` pass.
+    The kernel is a module-level function bound with ``functools.partial``,
+    so it pickles by reference and never captures a name that a tracer
+    may have rebound."""
+    schema = pa.schema([
+        pa.field("doc_id", to_arrow_type(docs.schema["doc_id"].dataType)),
+        pa.field("sh", pa.list_(pa.string())),
+        pa.field("buckets", pa.list_(pa.string())),
+    ])
+    kernel = functools.partial(_doc_sets_kernel, schema, n, k, bands, MAX_DOC_SHINGLES)
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    return (
+        docs.select("doc_id", norm_tokens(F.col(text_col)).alias("toks"))
+        .repartition(par, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInArrow(kernel, from_arrow_schema(schema))
+    )
+
+
 def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct — the inverted-index input.
+    """(doc_id, shingle) distinct — the inverted-index input of
+    ``contaminated_docs`` and ``ngram_jaccard_pairs``, which explode the
+    shingles at once and never need a document's set whole; the set
+    consumers read ``_doc_sets``. It stays on JVM expressions because
+    timed on the same inputs the kernel's sort + Arrow round trip was
+    the slower form for both callers.
 
-    Two deliberate plan moves (guide §2.3/§2.4, both measured r6):
-
-    - tokenization happens in its own projection BEFORE the exchange, so
-      the n+2 references inside the shingle expression hit a bound
-      attribute instead of re-running the interpreted tokenizer per
-      reference (see shingles_of_tokens), and the shuffle carries one
-      token array per doc rather than n exploded shingle rows;
-    - the exchange hash-partitions BY doc_id, which satisfies the
-      clustered distribution of the dedup aggregation and, when a
-      doc-keyed consumer reads this plan directly (e.g.
-      ``minhash_band_rows(doc_shingles(docs))``), of that consumer too,
-      so it adds no exchange. Before this the signature stage's partial
-      aggregation alone shipped 134 MB of hex partials (docs ×
-      partitions × k rows: round-robin input put every doc in every
-      partition).
-
-    The production callers — ``minhash_lsh_pairs`` and
-    ``ngram_jaccard_pairs`` / ``ngram_jaccard_prefix`` — localCheckpoint
-    this table first. A checkpoint drops the output partitioning, so a
-    doc-keyed aggregation or window after it plans its own exchange: the
-    no-extra-exchange property holds only for the non-checkpointed
-    composition."""
+    Tokenization happens in its own projection BEFORE the exchange, so
+    the n+2 references inside the shingle expression hit a bound
+    attribute instead of re-running the interpreted tokenizer per
+    reference (see shingles_of_tokens), and the shuffle carries one token
+    array per doc rather than n exploded shingle rows. The exchange
+    hash-partitions by doc_id, which satisfies the distinct's clustered
+    distribution, so the dedup adds no exchange of its own."""
     par = docs.sparkSession.sparkContext.defaultParallelism
     toks = docs.select(
         "doc_id", norm_tokens(F.col(text_col)).alias("_toks")
@@ -293,20 +387,20 @@ def ngram_jaccard_prefix(
     cost is Σ df_prefix² over PREFIX occurrences only — rarest-first
     ordering sends precisely the high-df shingles (the Σ df² explosion
     in ``ngram_jaccard_pairs``) out of the prefix. Stages: shingle
-    explode, df hash agg, one doc-keyed window (bounded by a document's
-    own shingle count, never corpus-sized), the rare-key candidate
-    join, and a candidate-restricted exact verify. This is the exact
-    scale path; minhash stays the approximate one."""
+    kernel (k = 0: sets only, no md5), df hash agg, one doc-keyed window
+    (bounded by a document's own shingle count, never corpus-sized), the
+    rare-key candidate join, and the exact verify from the same sets.
+    This is the exact scale path; minhash stays the approximate one."""
     if not 0 < threshold <= 1:
         raise ValueError(
             f"prefix filtering needs 0 < threshold <= 1, got {threshold}"
         )
-    sh = doc_shingles(docs, text_col, n).localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sets = _doc_sets(docs, text_col, n, 0, 0).localCheckpoint(eager=True)
+    sh = sets.select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")
     # the prefix bound's ceiling is computed in EXACT decimal arithmetic
-    # (decimal × bigint is exact in Spark): double arithmetic rounds
+    # (decimal × integer is exact in Spark): double arithmetic rounds
     # ceil(τ·|A|) up past the true ceiling for many (τ, |A|) combos
     # (e.g. 0.405·600 → 244 instead of 243), silently shortening the
     # prefix of an operator documented as lossless. repr() keeps the
@@ -315,7 +409,6 @@ def ngram_jaccard_prefix(
     pref = (
         sh.join(dfreq, "shingle")
         .withColumn("pos", F.row_number().over(w))
-        .join(sizes, "doc_id")
         .filter(
             F.col("pos")
             <= F.col("n_sh") - F.ceil(tau_exact * F.col("n_sh")) + 1
@@ -328,16 +421,8 @@ def ngram_jaccard_prefix(
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)  # read 3× below (cand_docs + 2 joins)
     )
-    # exact verify via per-candidate-doc shingle SETS: the former
-    # cand⋈shingles⋈shingles expansion materialized |cand| × |doc
-    # shingles| rows and re-shuffled the full shingle table by
-    # (doc_b, shingle) — measured r6 at 163 s of task CPU on the bench
-    # corpus where this form is ~2 s. |A∩B| from array_intersect of
-    # distinct-shingle sets equals the join-count `common`, and
-    # |∪| = |A|+|B|−|∩|, so the jaccard double is bit-identical.
-    return _verify_candidates(cand, sh, threshold)
+    return _verify_candidates(cand, sets, threshold)
 
 
 def shared_passages(
@@ -384,43 +469,10 @@ def shared_passages(
     )
 
 
-def minhash_band_rows(
-    sh: DataFrame, k: int = N_MINHASH, bands: int = N_BANDS
-) -> DataFrame:
-    """(doc_id, band, bucket) from a (doc_id, shingle) table: the k
-    md5-min-hash signature, sliced into ``bands`` buckets.
-
-    One (band, bucket) row per band via a single explode — NOT a union
-    of per-band selects, which would re-run the k-md5 signature
-    aggregation once per band. Callers localCheckpoint as needed (the
-    self-join dedup reads it twice; the cross-corpus gate reads each
-    side once)."""
-    r = k // bands
-    aggs = [
-        F.min(
-            F.md5(F.encode(F.concat(F.lit(f"{i}:"), F.col("shingle")), "utf-8"))
-        ).alias(f"h{i}")
-        for i in range(k)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.encode(
-                    F.concat_ws("|", *[F.col(f"h{b * r + j}") for j in range(r)]),
-                    "utf-8",
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    return (
-        sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bb"))
-        .select(
-            "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-    )
+def minhash_band_rows(sets: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) from ``_doc_sets`` rows: one row per band
+    bucket, none for a document without shingles."""
+    return sets.select("doc_id", F.posexplode("buckets").alias("band", "bucket"))
 
 
 def minhash_lsh_pairs(
@@ -433,45 +485,30 @@ def minhash_lsh_pairs(
     """Candidate pairs from LSH band buckets, verified with exact jaccard.
 
     bands × rows = k; a pair is a candidate iff some band's signature
-    slice matches exactly (bucket join per band, unioned, deduped).
-    """
-    sh = doc_shingles(docs, text_col).localCheckpoint(eager=True)
-    band_rows = minhash_band_rows(sh, k, bands).localCheckpoint(eager=True)
-    a = band_rows.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-    b_ = band_rows.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
+    slice matches exactly (one (band, bucket) self-join, deduped). The
+    shingle kernel's sets are checkpointed once and feed both the band
+    rows and the verifier; candidate generation never enumerates pairs
+    that merely share a shingle (that is O(Σ df²))."""
+    sets = _doc_sets(docs, text_col, 3, k, bands).localCheckpoint(eager=True)
+    band_rows = minhash_band_rows(sets)
+    a = band_rows.withColumnRenamed("doc_id", "doc_a")
+    b_ = band_rows.withColumnRenamed("doc_id", "doc_b")
     candidates = (
         a.join(b_, ["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)  # read 3× below (cand_docs + 2 joins)
     )
-    # exact-jaccard verify ONLY for candidate pairs. (Verifying via the
-    # inverted-index pair join would enumerate every pair sharing ANY
-    # shingle — O(Σ df²), which explodes on corpora with common
-    # shingles; candidates are few.)
-    return _verify_candidates(candidates, sh, threshold)
+    return _verify_candidates(candidates, sets, threshold)
 
 
-def _verify_candidates(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+def _verify_candidates(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
     """(doc_a, doc_b, jaccard) for the candidate pairs whose exact
     shingle jaccard is ≥ ``threshold``, rounded to 6 places after the
-    compare. ``cand`` is a localCheckpointed (doc_a, doc_b) table (read
-    3× here: cand_docs + 2 joins); ``sh`` is (doc_id, shingle). Each
-    side joins to its doc's shingle set and the arrays are intersected;
-    the sets are built only for docs in some candidate pair
-    (semi-join): candidates << corpus at scale."""
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sets = (
-        sh.join(cand_docs, "doc_id", "semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh"))
-        .localCheckpoint(eager=True)  # joined twice (doc_a / doc_b sides)
-    )
+    compare. ``cand`` is (doc_a, doc_b); ``sets`` is ``_doc_sets`` rows,
+    joined once per side. The sets are distinct, so |∩| from
+    array_intersect is the join count of shared shingles and |∪| from
+    array_union is |A| + |B| − |∩|: the double is exact in any engine."""
     jac = (
         F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
         / F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")

@@ -493,6 +493,28 @@ def test_convert_directory_job_count(spark, tmp_path):
     assert jobs == 2, f"convert_directory issued {jobs} Spark jobs"
 
 
+def test_near_dup_job_count(spark):
+    """Near-dup over a cached 4-partition corpus of planted copies, output
+    collected: minhash_lsh_pairs checkpoints the shingle kernel's sets once
+    and verifies from them; ngram_jaccard_prefix reads the same sets."""
+    from skosconverter_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_prefix
+
+    words = "spark skos graph label concept scheme broader narrower note term".split()
+    base = [(i, " ".join(words[(i * 7 + j * j) % len(words)] for j in range(12 + i % 9))) for i in range(40)]
+    rows = base + [(i + 1000, t) for i, t in base] + [(i + 2000, t + " the end") for i, t in base]
+    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(4).cache()
+    docs.count()
+    try:
+        lsh, lsh_jobs = _jobs_of(spark, "lsh_job_count", lambda: minhash_lsh_pairs(docs, 0.8).collect())
+        pre, pre_jobs = _jobs_of(spark, "prefix_job_count", lambda: ngram_jaccard_prefix(docs, 0.8).collect())
+    finally:
+        docs.unpersist()
+    assert {(i, i + 1000) for i, _ in base} <= {(r.doc_a, r.doc_b) for r in pre}
+    assert {(r.doc_a, r.doc_b) for r in lsh} <= {(r.doc_a, r.doc_b) for r in pre}
+    # before the shingle kernel: 13 and 15
+    assert (lsh_jobs, pre_jobs) == (6, 8), f"lsh {lsh_jobs} jobs, prefix {pre_jobs} jobs"
+
+
 def test_driver_bound_reads_go_through_the_guard():
     """Every driver-bound table moves through guard_driver_sized. The
     only other driver reads are bounded one-row lookups, named here."""

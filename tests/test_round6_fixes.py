@@ -6,8 +6,7 @@ correctness fix taken from ADVICE.md) to its observable contract:
 - prefix-filter bound: exact decimal ceiling (ADVICE medium — double
   arithmetic overshot the true ceiling for many (τ, |A|) combos)
 - unrolled fixed-dim cosine ≡ interpreted fold, bit for bit
-- doc_id-partitioned shingle table: downstream doc-keyed aggregations
-  plan no additional exchange
+- near-dup band rows: only the shingle kernel's own doc_id exchange
 - catalog adapters record partitioned writes in their manifests
 - snapshot time travel rejects uncommitted orphan ids
 """
@@ -123,30 +122,29 @@ def test_dot_guard_falls_back_for_other_dims(spark):
 
 
 # ---------------------------------------------------------------------------
-# doc_id-partitioned shingles: no extra exchange downstream
+# near-dup band rows: the shingle kernel's one exchange, no other
 # ---------------------------------------------------------------------------
 
 
-def test_doc_shingles_partitioning_feeds_signature_agg(spark):
-    """Composed directly (no checkpoint between them), the minhash
-    signature groupBy(doc_id) reuses doc_shingles' doc_id hash
-    partitioning instead of inserting its own exchange (the 134 MB
-    partial-aggregation pathology of round 6). The production callers
-    (minhash_lsh_pairs, ngram_jaccard_*) localCheckpoint the shingles
-    first, which drops that partitioning; this test does not cover them."""
-    from skosconverter_spark.operators.dedup import doc_shingles, minhash_band_rows
+def test_band_rows_plan_no_requirement_exchange(spark):
+    """The band rows are the shingle kernel's doc_id repartition, its sort
+    and one mapInArrow pass, then a posexplode: no exchange that a
+    doc-keyed aggregation inserts (the groupBy signature this replaced
+    shipped 134 MB of hex partials in round 6 when it did)."""
+    from skosconverter_spark.operators.dedup import _doc_sets, minhash_band_rows
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3} tok{i+4}") for i in range(20)],
         "doc_id long, text string",
     )
-    sig = minhash_band_rows(doc_shingles(docs, "text"))
-    plan = sig._jdf.queryExecution().executedPlan().toString()
+    rows = minhash_band_rows(_doc_sets(docs, "text", 3, 12, 4))
+    plan = rows._jdf.queryExecution().executedPlan().toString()
     ensure = [
         line for line in plan.splitlines()
         if "Exchange" in line and "ENSURE_REQUIREMENTS" in line
     ]
-    assert not ensure, f"signature agg re-shuffled: {ensure}"
+    assert not ensure, f"band rows re-shuffled: {ensure}"
+    assert "MapInArrow" in plan and rows.count() == 20 * 4
 
 
 # ---------------------------------------------------------------------------
