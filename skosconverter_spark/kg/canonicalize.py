@@ -12,13 +12,11 @@
   fails loudly in ``guard_driver_sized``, which ships at most 5M + 1
   pairs before it raises.
 
-- ``transitive_closure``: ancestor reachability over directed
-  (child, parent) edges, the same shape: one guarded collect of the
-  edges, ``closure_local`` (a driver-local BFS from each node), then
-  ``createDataFrame``. The closure can be quadratic in its input, so
-  its output pairs pass the same ``MAX_DRIVER_ROWS`` gate.
-  ``q_skos_closure`` runs ``closure_local`` on the hierarchy assembly's
-  parent map (``local_dfs.assemble``) instead.
+- ``closure_local``: ancestor reachability over directed (child,
+  parent) pairs, a driver-local BFS from each node. The closure can be
+  quadratic in its input, so its output pairs pass the same
+  ``MAX_DRIVER_ROWS`` gate. ``q_skos_closure`` runs it on the hierarchy
+  assembly's parent map (``local_dfs.assemble``).
 
 ``canonicalize_triples`` rewrites subj/obj through the component map so
 all aliases collapse onto the canonical node.
@@ -47,14 +45,6 @@ def _equivalence_pairs(triples: DataFrame) -> DataFrame:
     return triples.filter(F.col("pred").isin(SKOS_EXACT_MATCH, OWL_SAME_AS)).select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-
-
-def equivalence_edges(triples: DataFrame) -> DataFrame:
-    """Undirected (src, dst) pairs from exactMatch/sameAs."""
-    e = _equivalence_pairs(triples)
-    return e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
 
 
 def components_local(pairs, max_iterations: int = 25) -> dict:
@@ -111,7 +101,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     need no rows here (callers coalesce on join). Raises RuntimeError
     past ``max_iterations`` (see ``components_local``) rather than
     silently split a component (e.g. keep near-duplicates in
-    prepare_corpus)."""
+    prepare_corpus_ids)."""
     pairs = arrow_rows(guard_driver_sized(edges.select("src", "dst"), "connected_components"))
     comp = components_local(pairs, max_iterations)
     return _frame(edges, "src", comp.items(), ("uri", "component"))
@@ -146,27 +136,14 @@ def closure_local(pairs, max_iterations: int = 25) -> list[tuple]:
                         nxt.append(v)
                         out.append((start, v))
             frontier, d = nxt, d + 1
-        check_driver_sized(len(out), "transitive_closure", MAX_DRIVER_ROWS)
+        check_driver_sized(len(out), "transitive closure", MAX_DRIVER_ROWS)
     if depth > 2 ** (max_iterations - 1):
         raise RuntimeError(
-            f"transitive_closure did not converge in {max_iterations} "
+            f"transitive closure did not converge in {max_iterations} "
             f"doubling rounds (a shortest path of {depth} hops exceeds "
             f"2^{max_iterations - 1}); raise max_iterations"
         )
     return out
-
-
-def transitive_closure(
-    edges: DataFrame, max_iterations: int = 25
-) -> DataFrame:
-    """(descendant, ancestor) reachability over directed (child, parent)
-    edges, typed like ``child``: a guarded collect of the edges,
-    ``closure_local``, then ``createDataFrame``."""
-    pairs = arrow_rows(guard_driver_sized(
-        edges.select("child", "parent"), "transitive_closure", MAX_DRIVER_ROWS
-    ))
-    reach = closure_local(pairs, max_iterations)
-    return _frame(edges, "child", reach, ("descendant", "ancestor"))
 
 
 def _canonical(triples: DataFrame, max_iterations: int) -> dict:

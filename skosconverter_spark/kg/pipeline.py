@@ -14,8 +14,9 @@ Scheduling: ``run_pipeline`` builds this graph per call as a node table,
 label rows (``label_table``: one guarded collect of the vocabulary's
 labels, normalized on the driver) and the stages. ``_run_graph`` runs
 it as Dryad does (Isard et al., EuroSys 2007): a node starts once its
-inputs have resolved, and no pool thread waits on a sibling. So
-10_extract overlaps the label read, 20_mentions overlaps
+inputs have resolved, and no pool thread waits on a sibling. So once
+the fingerprints are known 10_extract overlaps the label read (skipped
+when 20_mentions and 30_links are both committed), 20_mentions overlaps
 40_page_triples, 30_links starts when 20_mentions is done, and
 50_canonical when 40_page_triples is.
 
@@ -74,6 +75,11 @@ class StageRunner:
     def _base(self, stage: str) -> Path:
         return Path(self.root) / stage
 
+    def is_committed(self, stage: str, input_fingerprint: str) -> bool:
+        """Whether ``stage``'s committed fingerprint is ``input_fingerprint``,
+        i.e. whether ``run_stage`` would load it without building."""
+        return self.catalog.committed_fingerprint(self._base(stage)) == input_fingerprint
+
     def run_stage(
         self,
         stage: str,
@@ -92,7 +98,7 @@ class StageRunner:
         Iceberg snapshot commits on a real deployment — the pipeline
         never touches the storage layer directly."""
         base = self._base(stage)
-        if self.catalog.committed_fingerprint(base) == input_fingerprint:
+        if self.is_committed(stage, input_fingerprint):
             return self.catalog.read(self.spark, base)
         t0 = time.time()
         self.catalog.write(build(), base, partition_by=partition_by)
@@ -215,6 +221,11 @@ def run_pipeline(
         # stage's bytes) never hits the checkpoint disk
         return salted_repartition(extract_text(pages), parts).drop("html")
 
+    def labels(i):
+        if all(runner.is_committed(n, fp_both(i)) for n in ("20_mentions", "30_links")):
+            return None
+        return label_table(vocab_triples)
+
     def mentions(i):
         return scan_mentions(i["10_extract"], vocab_triples, labels=i["labels"])
 
@@ -243,8 +254,9 @@ def run_pipeline(
         "fp_pages": ((), lambda i: f"{fingerprint_of(pages, pages.columns)}|x={EXTRACTOR_VERSION}"),
         "fp_vocab": ((), lambda i: fingerprint_of(vocab_triples, vocab_triples.columns)),
         # the vocabulary's label rows, read once (one guarded collect) for
-        # the mention scanner's trie and the links stage's tables
-        "labels": ((), lambda i: label_table(vocab_triples)),
+        # the mention scanner's trie and the links stage's tables; None
+        # when both stages that read them will load their commits
+        "labels": (fps, labels),
         "10_extract": (("fp_pages",), stage("10_extract", fp_pages, extract)),
         "20_mentions": (
             ("10_extract", "labels", *fps),

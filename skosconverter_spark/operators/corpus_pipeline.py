@@ -16,10 +16,12 @@ the expensive stages see the fewest documents:
                     5M duplicate edges fails its driver-size guard).
 4. optional deterministic downsample (operators.filter.hash_sample)
 
-Everything is a DataFrame composition — one definition serves batch at
-any scale; the whole cascade is value-checked against a single DuckDB
-oracle (quality CTEs + fingerprint dedup + the full minhash pipeline +
-a recursive-CTE connected components) in __spark_entry__.
+``prepare_corpus_ids`` returns the surviving doc_ids; a caller keeps its
+documents with a semi-join on them. Everything is a DataFrame
+composition — one definition serves batch at any scale; the whole
+cascade is value-checked against a single DuckDB oracle (quality CTEs
++ fingerprint dedup + the full minhash pipeline + a recursive-CTE
+connected components) in __spark_entry__.
 """
 
 from __future__ import annotations
@@ -33,26 +35,6 @@ from skosconverter_spark.operators.dedup import minhash_lsh_pairs
 from skosconverter_spark.operators.filter import hash_sample, quality_flags
 
 
-def prepare_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    neardup_threshold: float = 0.8,
-    sample_fraction: float | None = None,
-    salt: str = "",
-    cc_max_iterations: int = 25,
-) -> DataFrame:
-    """docs → the cleaned corpus (original columns, surviving rows).
-
-    Deterministic keep policy at every stage: min doc_id represents an
-    exact-duplicate group and a near-duplicate component."""
-    survivors = prepare_corpus_ids(
-        docs, text_col, min_words, neardup_threshold, sample_fraction, salt,
-        cc_max_iterations,
-    )
-    return docs.join(survivors, "doc_id", "semi")
-
-
 def prepare_corpus_ids(
     docs: DataFrame,
     text_col: str = "text",
@@ -61,19 +43,16 @@ def prepare_corpus_ids(
     sample_fraction: float | None = None,
     salt: str = "",
     cc_max_iterations: int = 25,
-    quality_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id): the surviving ids — the oracle-checkable projection.
+    """(doc_id): the ids that survive the cascade. Deterministic keep
+    policy at every stage: min doc_id represents an exact-duplicate group
+    and a near-duplicate component.
 
     ``cc_max_iterations`` bounds the near-dup clustering: connected_components
     raises when a document sits ``cc_max_iterations`` or more hops from
-    its component's min doc_id (rather than silently split a chain).
-    ``quality_ids`` lets a caller that already materialized the quality
-    pass (corpus_stats) reuse it instead of paying a second scan."""
+    its component's min doc_id (rather than silently split a chain)."""
     passed = (
-        quality_ids
-        if quality_ids is not None
-        else quality_flags(docs, text_col, min_words=min_words)
+        quality_flags(docs, text_col, min_words=min_words)
         .filter(F.col("keep"))
         .select("doc_id")
     )
@@ -105,39 +84,3 @@ def prepare_corpus_ids(
     if sample_fraction is not None:
         survivors = hash_sample(survivors, sample_fraction, "doc_id", salt)
     return survivors
-
-
-def corpus_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    sample_fraction: float | None = None,
-    **kwargs,
-) -> dict[str, int]:
-    """Stage-by-stage row counts — the human-facing report (driver-sized
-    by construction: a handful of integers). Dedup drops and sampling
-    drops are attributed to separate buckets, and the quality pass runs
-    once (counted from the pre-sample survivor set, not recomputed)."""
-    n_input = docs.count()
-    passed = (
-        quality_flags(docs, text_col, min_words=kwargs.get("min_words", 50))
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    n_quality = passed.count()
-    deduped = prepare_corpus_ids(
-        docs, text_col, sample_fraction=None, quality_ids=passed, **kwargs
-    ).localCheckpoint(eager=True)
-    n_dedup = deduped.count()
-    if sample_fraction is not None:
-        n_out = hash_sample(deduped, sample_fraction, "doc_id").count()
-    else:
-        n_out = n_dedup
-    return {
-        "input_docs": n_input,
-        "after_quality": n_quality,
-        "surviving_docs": n_out,
-        "dropped_quality": n_input - n_quality,
-        "dropped_duplicates": n_quality - n_dedup,
-        "dropped_sampled": n_dedup - n_out,
-    }

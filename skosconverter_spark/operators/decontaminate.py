@@ -11,11 +11,11 @@ Plan shape at 100 TB: the EVAL side is tiny (benchmarks are thousands
 of documents, the corpus is billions), so its distinct-shingle set is
 broadcast — the corpus is scanned ONCE, shingled, and hash-joined with
 no shuffle of corpus rows at all. The output is the contaminated-doc
-list (doc_id, n_shared), which downstream drops with a broadcast
-anti-join. Tokenization reuses the dedup operators' ``norm_tokens``
-(operators/dedup.py): the exact gate shingles with their expressions,
-the fuzzy gate with their shingle kernel, so the decontamination gates
-and the dedup gate agree on what a "token" is.
+list (doc_id, n_shared), which a caller drops from the corpus with a
+broadcast anti-join. Tokenization reuses the dedup operators'
+``norm_tokens`` (operators/dedup.py): the exact gate shingles with
+their expressions, the fuzzy gate with their shingle kernel, so the
+decontamination gates and the dedup gate agree on what a "token" is.
 
 Reference scope note: proycon/skosConverter has no corpus operators;
 this extends the engine for the pretraining-pipeline tier (SURVEY.md
@@ -52,18 +52,6 @@ def contaminated_docs(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared"))
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    n: int = N_DECONTAM,
-    text_col: str = "text",
-) -> DataFrame:
-    """The corpus minus contaminated documents (broadcast anti-join on
-    the contaminated-id list — eval-sized, tiny)."""
-    hits = contaminated_docs(corpus, eval_docs, n, text_col).select("doc_id")
-    return corpus.join(F.broadcast(hits), "doc_id", "left_anti")
 
 
 def fuzzy_contaminated_docs(

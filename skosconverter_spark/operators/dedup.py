@@ -58,9 +58,8 @@ def _regex_quote(sep: str) -> str:
 
 
 def norm_tokens(col):
-    return F.filter(
-        F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " "),
-        lambda t: t != F.lit(""),
+    return F.array_remove(
+        F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " "), ""
     )
 
 

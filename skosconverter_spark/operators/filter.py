@@ -4,10 +4,10 @@ Two operators every 100 TB pretraining pipeline runs before anything
 else, both pure Catalyst expressions (no Python, no shuffle except the
 caller's):
 
-- ``quality_flags`` / ``corpus_filter``: document-level quality rules in
-  the publicly documented Gopher/C4 family (Rae et al. 2021 §A1.1;
-  Raffel et al. 2020 §2.2) — word-count bounds, mean word length,
-  alphabetic-word fraction, stopword evidence. Every signal is exact
+- ``quality_flags``: document-level quality rules in the publicly
+  documented Gopher/C4 family (Rae et al. 2021 §A1.1; Raffel et al.
+  2020 §2.2) — word-count bounds, mean word length, alphabetic-word
+  fraction, stopword evidence. Every signal is exact
   integer/rational math so a SQL oracle reproduces the keep/drop
   decision bit-for-bit. Thresholds are parameters; the defaults are the
   published Gopher values where they exist.
@@ -81,12 +81,6 @@ def quality_flags(
         & (F.col("stopword_hits") >= min_stopword_hits)
     )
     return out.withColumn("keep", keep)
-
-
-def corpus_filter(df: DataFrame, text_col: str = "text", **bounds) -> DataFrame:
-    """Documents that pass every quality rule (semi-join on the flags)."""
-    kept = quality_flags(df, text_col, **bounds).filter(F.col("keep")).select("doc_id")
-    return df.join(kept, "doc_id", "semi")
 
 
 def repetition_flags(

@@ -1,12 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Design stance (SURVEY.md / task brief): image/audio/video cells are
-``binary`` columns with a metadata struct; all Spark-side plumbing —
+``binary`` columns with a metadata struct; the Spark-side plumbing —
 schema, Arrow batch shape, partitioning, UDF signatures — is real and
-tested, while the actual media decode is stubbed: the decode kernel
-raises NotImplementedError (the codec libraries are not in this
-container), and a deterministic fake featurizer exercises the identical
-batched path end-to-end.
+tested, while no media is decoded: the codec libraries are not in this
+container, so a deterministic fake featurizer over the raw payload bytes
+exercises the batched path end-to-end.
 
 At 100 TB the pattern is: binary column stays columnar (Parquet/Iceberg
 BINARY), decode happens once inside ``mapInPandas`` per Arrow batch
@@ -67,37 +66,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def _pil():
-    """Soft pillow import: the image decode path activates when the lib
-    exists, and degrades to the loud stub when it doesn't — never a
-    silent fake on a caller who asked for real decode."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_media(payload: bytes, kind: str):
-    """The real-decoder seam. Image payloads decode through pillow WHEN
-    it is installed (returns (width, height, mode, rgb_bytes)); audio/
-    video codecs (ffmpeg/soundfile) are never present here, and without
-    pillow images raise too — a user with real media gets a loud
-    failure, not silently fake features."""
-    Image = _pil()
-    if kind == "image" and Image is not None:
-        import io
-
-        with Image.open(io.BytesIO(payload)) as im:
-            rgb = im.convert("RGB")
-            return rgb.width, rgb.height, "RGB", rgb.tobytes()
-    raise NotImplementedError(
-        f"decoding {kind!r} payloads requires media codecs not present "
-        "in this environment; use fake_features for the plumbing path"
-    )
-
-
 def fake_features(payload: bytes, dims: int = 8) -> list[float]:
     """Deterministic featurizer standing in for decode+embed: a byte
     histogram folded to ``dims`` buckets, L1-normalized."""
@@ -108,21 +76,16 @@ def fake_features(payload: bytes, dims: int = 8) -> list[float]:
     return [b / total for b in buckets]
 
 
-def featurize(media: DataFrame, dims: int = 8, use_real_decode: bool = False) -> DataFrame:
+def featurize(media: DataFrame, dims: int = 8) -> DataFrame:
     """(media_id, kind, n_bytes, features array<double>): the Arrow-batched
-    feature-extraction stage. ``use_real_decode=True`` decodes through
-    ``decode_media`` and featurizes the decoded PIXELS (pillow images
-    when the lib exists; everything else raises — by design)."""
+    feature-extraction stage, ``fake_features`` over each payload."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, sizes = [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
+            for payload in pdf["payload"]:
                 raw = bytes(payload) if payload is not None else b""
-                src = raw
-                if use_real_decode:
-                    _, _, _, src = decode_media(raw, kind)
-                feats.append(fake_features(src, dims))
+                feats.append(fake_features(raw, dims))
                 sizes.append(len(raw))
             yield pd.DataFrame(
                 {
@@ -135,107 +98,6 @@ def featurize(media: DataFrame, dims: int = 8, use_real_decode: bool = False) ->
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         run, "media_id long, kind string, n_bytes long, features array<double>"
-    )
-
-
-def fake_frames(payload: bytes, frame_size: int = 64, step: int = 2) -> list[bytes]:
-    """Deterministic frame sampler standing in for a video decoder: the
-    payload is treated as a stream of fixed-size frames; every ``step``-th
-    one is kept. Real pipelines decode with ffmpeg here — the row shape
-    (one output row per sampled frame) and batch plumbing are identical."""
-    frames = [
-        payload[i : i + frame_size] for i in range(0, len(payload), frame_size)
-    ]
-    return frames[::step]
-
-
-def frame_sample(media: DataFrame, frame_size: int = 64, step: int = 2) -> DataFrame:
-    """(media_id, frame_idx, frame binary, n_frame_bytes): sampled frames
-    per video payload — the one-to-many decode stage. Arrow-batched; at
-    100 TB the fan-out happens executor-side inside the UDF (no explode
-    of a giant array column through the shuffle)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames, sizes = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for j, fr in enumerate(fake_frames(bytes(payload), frame_size, step)):
-                    ids.append(mid)
-                    idxs.append(j)
-                    frames.append(fr)
-                    sizes.append(len(fr))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame": frames,
-                 "n_frame_bytes": sizes}
-            )
-
-    # kind filter stays JVM-side: non-video payloads (~2/3 of the bytes
-    # at scale) must never cross the Arrow boundary just to be dropped
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(
-            run, "media_id long, frame_idx int, frame binary, n_frame_bytes long"
-        )
-    )
-
-
-def fake_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Deterministic thumbnail stand-in for an image resizer: strided
-    byte sampling down to out_w*out_h bytes (padded when short). A real
-    pipeline calls PIL/opencv here; the signature (bytes, target dims →
-    bytes) and the batched path are what the engine owns."""
-    target = out_w * out_h
-    if not payload:
-        return b"\x00" * target
-    stride = max(len(payload) // target, 1)
-    sampled = payload[::stride][:target]
-    return sampled + b"\x00" * (target - len(sampled))
-
-
-def real_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """pillow-backed resizer: decode, RGB-convert, resize, raw bytes out
-    (out_w × out_h × 3). Raises via decode_media when pillow is absent."""
-    import io
-
-    Image = _pil()
-    if Image is None:
-        decode_media(payload, "image")  # raises the disclosed stub error
-    with Image.open(io.BytesIO(payload)) as im:
-        return im.convert("RGB").resize((out_w, out_h)).tobytes()
-
-
-def resize_images(
-    media: DataFrame,
-    out_w: int = 8,
-    out_h: int = 8,
-    use_real_decode: bool = False,
-) -> DataFrame:
-    """(media_id, width, height, thumbnail binary): image-kind payloads
-    resized to a fixed thumbnail — the bounded-output transform stage.
-    ``use_real_decode=True`` routes through the pillow resizer."""
-    resizer = real_resize if use_real_decode else fake_resize
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, thumbs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                ids.append(mid)
-                thumbs.append(resizer(bytes(payload), out_w, out_h))
-            yield pd.DataFrame(
-                {"media_id": ids, "width": out_w, "height": out_h,
-                 "thumbnail": thumbs}
-            )
-
-    # kind filter stays JVM-side — see frame_sample
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "payload")
-        .mapInPandas(run, "media_id long, width int, height int, thumbnail binary")
     )
 
 

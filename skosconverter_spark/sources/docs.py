@@ -1,12 +1,8 @@
-"""Document sources: directory scan and pages-table adapters.
+"""Document source: the directory scan.
 
 Replaces the reference's BatchProcessor directory glob
 (skos_converter.py:473-501): a directory of ``*.ttl`` / ``*.md`` /
 ``*.json(ld)`` files becomes one ``docs`` DataFrame row per file.
-
-For real corpora the input is the ``pages`` table (url, warc_ts, html,
-text, lang) and ``docs_from_pages`` projects it into the same shape, so
-every downstream stage is source-agnostic.
 """
 
 from __future__ import annotations
@@ -42,15 +38,4 @@ def docs_from_directory(
         F.col("path").alias("url"),
         fmt_expr.alias("fmt"),
         F.decode(F.col("content"), "utf-8").alias("payload"),
-    )
-
-
-def docs_from_pages(pages: DataFrame, fmt: str = "md") -> DataFrame:
-    """Project the web-pages table into the docs shape: the extracted
-    ``text`` column is the parse payload."""
-    return pages.select(
-        F.sha1(F.col("url")).alias("doc_id"),
-        "url",
-        F.lit(fmt).alias("fmt"),
-        F.col("text").alias("payload"),
     )

@@ -166,11 +166,6 @@ def test_driver_size_guards_trip(spark):
     )
     with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
         connected_components(over_edges)
-    # and so does the ancestor closure
-    from skosconverter_spark.kg.canonicalize import transitive_closure
-
-    with pytest.raises(ValueError, match=f"gated at {MAX_DRIVER_ROWS} rows"):
-        transitive_closure(over_edges.selectExpr("src child", "dst parent"))
 
 
 def test_document_rows_job_count(spark):
@@ -253,40 +248,17 @@ def test_canonicalize_job_count(spark):
     triples.unpersist()
 
 
-def _chain_edges(spark, n):
-    edges = spark.createDataFrame(
-        [(f"c{i}", f"c{i + 1}") for i in range(n)], "child string, parent string"
-    ).cache()
-    edges.count()
-    return edges
-
-
-def test_transitive_closure_job_count(spark):
-    """The ancestor closure is one guarded collect plus the driver-local
-    kernel, not a checkpoint and a count per doubling round."""
-    from skosconverter_spark.kg.canonicalize import transitive_closure
-
-    edges = _chain_edges(spark, 9)
-    rows, jobs = _jobs_of(
-        spark, "transitive_closure_job_count", lambda: transitive_closure(edges).collect()
-    )
-    assert len(rows) == 9 * 10 // 2
-    assert jobs <= 2, f"transitive_closure issued {jobs} Spark jobs"
-    edges.unpersist()
-
-
-def test_transitive_closure_output_is_gated(spark, monkeypatch):
+def test_transitive_closure_output_is_gated(monkeypatch):
     """A closure can be quadratic in its input, so its output pairs are
     gated like a collect: 9 edges of a chain reach 45 pairs."""
     from skosconverter_spark.kg import canonicalize
 
-    edges = _chain_edges(spark, 9)
+    edges = [(f"c{i}", f"c{i + 1}") for i in range(9)]
     monkeypatch.setattr(canonicalize, "MAX_DRIVER_ROWS", 44)
     with pytest.raises(ValueError, match="gated at 44 rows"):
-        canonicalize.transitive_closure(edges)
+        canonicalize.closure_local(edges)
     monkeypatch.setattr(canonicalize, "MAX_DRIVER_ROWS", 45)
-    assert canonicalize.transitive_closure(edges).count() == 45
-    edges.unpersist()
+    assert len(canonicalize.closure_local(edges)) == 45
 
 
 def test_run_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path):
@@ -329,8 +301,9 @@ def test_run_pipeline_job_count(spark, tmp_path):
     """Spark jobs of run_pipeline over 40 pages, each bound the measured
     count: a fresh build 22 (26 while the labels were normalized in Spark,
     checkpointed and collected twice more; 39 with the links stage as one
-    DataFrame plan), a full rerun 5 (6; 12 while every catalog read
-    inferred its schema), a rerun after deleting 30_links 13 (15; 28)."""
+    DataFrame plan), a full rerun 4 (5 while it read the labels it never
+    used; 12 while every catalog read inferred its schema), a rerun after
+    deleting 30_links 13 (15; 28)."""
     import shutil
 
     from skosconverter_spark.kg.pipeline import run_pipeline
@@ -352,7 +325,7 @@ def test_run_pipeline_job_count(spark, tmp_path):
     fresh = run("run_pipeline_job_count")
     assert fresh <= 22, f"run_pipeline issued {fresh} Spark jobs"
     rerun = run("run_pipeline_rerun_job_count")
-    assert rerun <= 5, f"a full rerun issued {rerun} Spark jobs"
+    assert rerun <= 4, f"a full rerun issued {rerun} Spark jobs"
     shutil.rmtree(root / "30_links")
     relink = run("run_pipeline_relink_job_count")
     assert relink <= 13, f"a rerun after deleting 30_links issued {relink} Spark jobs"
@@ -552,3 +525,62 @@ def test_driver_bound_reads_go_through_the_guard():
     stray = sorted(f for f in found if f[:2] not in allowed)
     assert not stray, f"driver reads outside guard_driver_sized: {stray}"
     assert {f[:2] for f in found} == allowed, "allow-list names a read that is gone"
+
+
+def test_every_public_function_has_a_caller():
+    """Every public top-level function of the package is named somewhere
+    outside tests/: in the package itself, __spark_entry__.py, bench.py,
+    tools/, examples/ or perfbench/ (whose WRAPPED and MATERIALIZED
+    tables name functions by string). A reference is an ast.Name, an
+    ast.Attribute or an import alias; a function's own def and body and
+    every docstring do not count. The allowlist holds the references
+    tests compare against."""
+    import ast
+    from pathlib import Path
+
+    import skosconverter_spark
+
+    allowed = {
+        "precision_recall": "the P/R scoring contract of the triple goldens",
+        "extract_text_bytes_v1": "the reference of test_v2_equals_v1_on_corpus_contract",
+    }
+    pkg = Path(skosconverter_spark.__file__).parent
+    repo = pkg.parent
+    defs, refs = {}, set()
+    sources = [*pkg.rglob("*.py"), repo / "__spark_entry__.py", repo / "bench.py"]
+    for d in ("tools", "examples", "perfbench"):
+        sources += (repo / d).rglob("*.py")
+    for path in sorted(sources):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        if path.is_relative_to(pkg):
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                    defs[node.name] = path.relative_to(pkg).as_posix()
+
+        def visit(node, func):
+            for child in ast.iter_child_nodes(node):
+                name = func
+                if isinstance(child, ast.FunctionDef) and func is None:
+                    name = child.name
+                elif isinstance(child, ast.Name) and child.id != func:
+                    refs.add(child.id)
+                elif isinstance(child, ast.Attribute) and child.attr != func:
+                    refs.add(child.attr)
+                elif isinstance(child, ast.alias):
+                    refs.add(child.name.rsplit(".", 1)[-1])
+                visit(child, name)
+
+        visit(tree, None)
+        if path == repo / "perfbench" / "layers.py":
+            tables = {
+                t.id: ast.literal_eval(node.value)
+                for node in tree.body
+                if isinstance(node, ast.Assign)
+                for t in node.targets
+                if getattr(t, "id", None) in ("WRAPPED", "MATERIALIZED")
+            }
+            refs.update(attr for _, attr, _ in tables["WRAPPED"])
+            refs.update(tables["MATERIALIZED"])
+    uncalled = sorted(f"{defs[n]}::{n}" for n in defs.keys() - refs - allowed.keys())
+    assert not uncalled, f"public functions only tests call: {uncalled}"
+    assert allowed.keys() <= defs.keys() - refs, "allowlist names a function that is gone or called"

@@ -84,10 +84,7 @@ def test_redact_pii_planted(spark):
 
 
 def test_decontaminate_planted(spark):
-    from skosconverter_spark.operators.decontaminate import (
-        contaminated_docs,
-        decontaminate,
-    )
+    from skosconverter_spark.operators.decontaminate import contaminated_docs
 
     bench = "the quick brown fox jumps over the lazy dog tonight"
     ev = docs_df(spark, [(100, bench)])
@@ -103,8 +100,6 @@ def test_decontaminate_planted(spark):
     )
     hits = {r.doc_id: r.n_shared for r in contaminated_docs(corpus, ev, n=8).collect()}
     assert hits == {1: 3}
-    kept = {r.doc_id for r in decontaminate(corpus, ev, n=8).collect()}
-    assert kept == {2, 3}
     # the plan must broadcast the eval side (no corpus shuffle for the join)
     plan = contaminated_docs(corpus, ev, n=8)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan

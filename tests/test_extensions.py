@@ -311,13 +311,6 @@ def test_featurize_histogram_and_empty_payload(spark):
     assert list(got[2].features) == [0.0] * 8
 
 
-def test_decode_media_is_a_disclosed_stub(spark):
-    from skosconverter_spark.operators.multimodal import decode_media
-
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x89PNG", "image")
-
-
 # --------------------------------------------------------------------------
 # events / classic aggregation (through the driver-contract queries)
 # --------------------------------------------------------------------------
@@ -486,16 +479,6 @@ def test_quality_flags_known_values(spark):
     assert got[4].keep is False and got[4].n_words == 4
 
 
-def test_corpus_filter_semi_join(spark):
-    from skosconverter_spark.operators.filter import corpus_filter
-
-    good = "the quick brown fox jumps over a lazy dog in the field " * 5
-    docs = docs_df(spark, [(1, good), (2, "tiny")])
-    kept = corpus_filter(docs, min_words=50).collect()
-    assert [r.doc_id for r in kept] == [1]
-    assert kept[0].text == good  # original columns survive the semi-join
-
-
 def test_hash_sample_deterministic_nested_disjoint(spark):
     from skosconverter_spark.operators.filter import hash_sample
 
@@ -622,38 +605,6 @@ def test_time_rollup_hierarchy_consistent(spark):
     assert len(by_grain["day"]) == 2
 
 
-def test_frame_sample_and_resize_plumbing(spark):
-    """The one-to-many frame sampler and bounded resize stages: real
-    Arrow plumbing + deterministic fakes standing in for codecs (which
-    are absent from this container — decode_media is the disclosed stub)."""
-    from skosconverter_spark.operators.multimodal import (
-        fake_frames,
-        fake_resize,
-        frame_sample,
-        media_from_documents,
-        resize_images,
-    )
-
-    docs = docs_df(spark, [(0, "im" * 100), (2, "vid" * 100), (5, "x" * 300)])
-    media = media_from_documents(docs)  # kinds: 0=image, 2=video, 5=video
-
-    frames = frame_sample(media, frame_size=64, step=2).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert set(by_id) == {2, 5}  # video rows only
-    exp = fake_frames(b"vid" * 100, 64, 2)
-    got = [bytes(r.frame) for r in sorted(by_id[2], key=lambda r: r.frame_idx)]
-    assert got == exp
-    assert all(r.n_frame_bytes == len(bytes(r.frame)) for r in frames)
-
-    thumbs = resize_images(media, 8, 8).collect()
-    assert [r.media_id for r in thumbs] == [0]  # image rows only
-    t = bytes(thumbs[0].thumbnail)
-    assert len(t) == 64 and t == fake_resize(b"im" * 100, 8, 8)
-    assert (thumbs[0].width, thumbs[0].height) == (8, 8)
-
-
 def test_embedding_neardup_srp_properties(spark):
     from skosconverter_spark.operators.similarity import (
         embedding_neardup_pairs,
@@ -686,10 +637,7 @@ def test_embedding_neardup_srp_properties(spark):
 def test_prepare_corpus_cascade(spark):
     """quality -> exact dedup -> near-dup CC -> survivors, planted cases
     for every stage; keep policy = min doc_id throughout."""
-    from skosconverter_spark.operators.corpus_pipeline import (
-        corpus_stats,
-        prepare_corpus,
-    )
+    from skosconverter_spark.operators.corpus_pipeline import prepare_corpus_ids
 
     base = (
         "the quick brown fox jumps over a lazy dog in the green field "
@@ -705,19 +653,11 @@ def test_prepare_corpus_cascade(spark):
             (5, base.replace("fox", "owl").replace("dog", "cat").replace("green", "red").replace("forest", "meadow")),
         ],
     )
-    out = prepare_corpus(docs, min_words=20)
-    kept = {r.doc_id for r in out.collect()}
+    kept = {r.doc_id for r in prepare_corpus_ids(docs, min_words=20).collect()}
     assert 1 in kept and 5 in kept
     assert 2 not in kept      # exact duplicate
     assert 3 not in kept      # near duplicate (same CC component as 1)
     assert 4 not in kept      # failed quality
-    assert set(out.columns) == {"doc_id", "text"}  # original columns survive
-
-    stats = corpus_stats(docs, min_words=20)
-    assert stats["input_docs"] == 5
-    assert stats["after_quality"] == 4
-    assert stats["dropped_duplicates"] == 2
-    assert stats["surviving_docs"] == len(kept)
 
 
 def test_prepare_corpus_with_sampling(spark):

@@ -1,5 +1,5 @@
 """The hierarchy queries, pinned on small hand-built inputs and the ttl
-fixtures: ``transitive_closure`` equals a brute-force closure (never a
+fixtures: ``closure_local`` equals a brute-force closure (never a
 ``(x, x)`` pair, cycles included) and raises exactly when the largest
 shortest-path hop distance D exceeds 2^(max_iterations - 1);
 ``q_skos_best_label`` picks the preferred language, then store order,
@@ -14,7 +14,7 @@ import pytest
 
 import __spark_entry__ as entry
 from skosconverter_spark.config import EngineConfig
-from skosconverter_spark.kg.canonicalize import transitive_closure
+from skosconverter_spark.kg.canonicalize import closure_local
 from skosconverter_spark.plans.local_dfs import collect_triples, dfs_rows_local
 from skosconverter_spark.schemas import DOCS
 from skosconverter_spark.sources.parse_udf import extract_triples, ok_triples
@@ -89,31 +89,23 @@ def _chain(n):
     ],
     ids=["diamond", "cycle_tail", "chain9", "self_loop", "empty"],
 )
-def test_transitive_closure_matches_brute_force(spark, pairs):
-    edges = spark.createDataFrame(pairs, "child string, parent string")
-    out = transitive_closure(edges)
-    assert out.columns == ["descendant", "ancestor"]
-    rows = [(r.descendant, r.ancestor) for r in out.collect()]
+def test_transitive_closure_matches_brute_force(pairs):
+    rows = closure_local(pairs)
     assert len(rows) == len(set(rows))
     assert set(rows) == _closure(pairs)
 
 
 @pytest.mark.parametrize("depth,budget", [(1, 1), (2, 1), (2, 2), (3, 2), (4, 3), (5, 3)])
-def test_transitive_closure_raises_iff_depth_exceeds_budget(spark, depth, budget):
-    edges = spark.createDataFrame(_chain(depth), "child string, parent string")
+def test_transitive_closure_raises_iff_depth_exceeds_budget(depth, budget):
     if depth > 2 ** (budget - 1):
         with pytest.raises(RuntimeError, match="did not converge"):
-            transitive_closure(edges, max_iterations=budget)
+            closure_local(_chain(depth), max_iterations=budget)
     else:
-        got = {(r.descendant, r.ancestor) for r in transitive_closure(edges, budget).collect()}
-        assert got == _closure(_chain(depth))
+        assert set(closure_local(_chain(depth), budget)) == _closure(_chain(depth))
 
 
-def test_transitive_closure_keeps_the_id_type(spark):
-    edges = spark.createDataFrame([(3, 2), (2, 1)], "child long, parent long")
-    out = transitive_closure(edges)
-    assert out.dtypes == [("descendant", "bigint"), ("ancestor", "bigint")]
-    assert {tuple(r) for r in out.collect()} == {(3, 2), (2, 1), (3, 1)}
+def test_transitive_closure_keeps_the_id_type():
+    assert set(closure_local([(3, 2), (2, 1)])) == {(3, 2), (2, 1), (3, 1)}
 
 
 BEST_LABELS_FR = {

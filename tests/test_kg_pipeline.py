@@ -13,9 +13,8 @@ from pyspark.sql import functions as F
 from skosconverter_spark.config import EngineConfig, OWL_SAME_AS, SKOS_EXACT_MATCH
 from skosconverter_spark.kg.canonicalize import (
     canonicalize_triples,
+    closure_local,
     connected_components,
-    equivalence_edges,
-    transitive_closure,
 )
 from skosconverter_spark.kg.extract import extract_text
 from skosconverter_spark.kg.mentions import label_table, mention_candidates, scan_mentions
@@ -142,14 +141,12 @@ def test_connected_components_and_closure(spark):
         "subj string, pred string, obj string, obj_is_literal boolean, "
         "obj_lang string, src_url string, seq long",
     )
-    comp = {r.uri: r.component for r in connected_components(equivalence_edges(t)).collect()}
+    edges = t.selectExpr("subj src", "obj dst")  # every row is exactMatch/sameAs
+    comp = {r.uri: r.component for r in connected_components(edges).collect()}
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["x"] == comp["y"] == "x"
 
-    edges = spark.createDataFrame(
-        [("c1", "p1"), ("p1", "g1"), ("g1", "r1")], "child string, parent string"
-    )
-    reach = {(r.descendant, r.ancestor) for r in transitive_closure(edges).collect()}
+    reach = set(closure_local([("c1", "p1"), ("p1", "g1"), ("g1", "r1")]))
     assert ("c1", "r1") in reach and ("c1", "g1") in reach and len(reach) == 6
 
 

@@ -5,10 +5,8 @@ each pinned so it cannot come back.
 - range_join's exact fractional-second gap contract (sub-second
   timestamps used to slip through a second-truncated filter)
 - asof_join's opt-in right-side (key, ts) uniqueness validation
-- connected_components / transitive_closure raising instead of
+- connected_components / the transitive closure raising instead of
   silently returning a non-converged fixpoint
-- multimodal kind filters staying JVM-side (plan assertion)
-- corpus_stats attributing sampling drops separately from dedup drops
 - validation_report's hard cap on the never-truncated checks
 """
 
@@ -159,41 +157,15 @@ def test_connected_components_nonconvergence_raises(spark):
     assert {r.component for r in comp.collect()} == {"n00"}
 
 
-def test_transitive_closure_nonconvergence_raises(spark):
-    from skosconverter_spark.kg.canonicalize import transitive_closure
+def test_transitive_closure_nonconvergence_raises():
+    from skosconverter_spark.kg.canonicalize import closure_local
 
     # depth-9 chain: 1 doubling round reaches depth 2; closure needs more
-    edges = spark.createDataFrame(
-        [(f"c{i}", f"c{i + 1}") for i in range(9)], "child string, parent string"
-    )
+    edges = [(f"c{i}", f"c{i + 1}") for i in range(9)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        transitive_closure(edges, max_iterations=1)
-    reach = transitive_closure(edges, max_iterations=25)
-    assert reach.count() == 9 * 10 // 2  # all (i<j) pairs
-
-
-# --------------------------------------------------------------------------
-# multimodal: kind filter precedes the Arrow boundary (VERDICT #3)
-# --------------------------------------------------------------------------
-
-
-def test_media_kind_filter_stays_jvm_side(spark):
-    from skosconverter_spark.operators.multimodal import (
-        frame_sample,
-        media_from_documents,
-        resize_images,
-    )
-
-    media = media_from_documents(
-        docs_df(spark, [(i, "payload " * 20) for i in range(9)])
-    )
-    for out, kind in ((frame_sample(media), "video"), (resize_images(media), "image")):
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "MapInPandas" in plan
-        # the kind filter must exist and sit BELOW MapInPandas in the tree
-        # (children print after parents), i.e. run before rows cross Arrow
-        assert f"= {kind}" in plan
-        assert plan.index("MapInPandas") < plan.index(f"= {kind}")
+        closure_local(edges, max_iterations=1)
+    reach = closure_local(edges, max_iterations=25)
+    assert len(reach) == 9 * 10 // 2  # all (i<j) pairs
 
 
 # --------------------------------------------------------------------------
@@ -247,35 +219,6 @@ def test_srp_multiprobe_recall_gate(spark):
     )
     with pytest.raises(ValueError):
         srp_candidates(e, probe_flips=3)
-
-
-# --------------------------------------------------------------------------
-# corpus_stats attribution (ADVICE: sampled rows counted as duplicates)
-# --------------------------------------------------------------------------
-
-
-def test_corpus_stats_sampling_attribution(spark):
-    from skosconverter_spark.operators.corpus_pipeline import corpus_stats
-
-    docs = docs_df(
-        spark,
-        [
-            (i, f"the number {i} sits quietly of a page and it is fine here now")
-            for i in range(100)
-        ]
-        + [(100, "the number 0 sits quietly of a page and it is fine here now")],
-    )
-    stats = corpus_stats(docs, min_words=5, sample_fraction=0.5)
-    assert stats["input_docs"] == 101
-    assert stats["after_quality"] == 101
-    assert stats["dropped_duplicates"] == 1  # ONLY the exact dup of doc 0
-    assert stats["dropped_sampled"] == 100 - stats["surviving_docs"]
-    assert 25 <= stats["surviving_docs"] <= 75
-    # and without sampling the bucket is zero
-    plain = corpus_stats(docs, min_words=5)
-    assert plain["dropped_sampled"] == 0
-    assert plain["dropped_duplicates"] == 1
-    assert plain["surviving_docs"] == 100
 
 
 # --------------------------------------------------------------------------

@@ -464,50 +464,3 @@ def test_lm_scores_rank_gibberish_above_template(spark):
         for r in lm_bigram_scores(docs.repartition(7)).collect()
     }
     assert again == got
-
-
-# ---------------------------------------------------------------------------
-# multimodal: real decode behind a soft pillow import
-# ---------------------------------------------------------------------------
-
-
-def test_real_decode_with_pillow(spark):
-    """When pillow is installed, featurize/resize run REAL decode over a
-    real PNG; skipped (not failed) where the lib is absent."""
-    import pytest
-
-    Image = pytest.importorskip("PIL.Image")
-    import io
-
-    from skosconverter_spark.operators.multimodal import (
-        featurize,
-        resize_images,
-    )
-
-    buf = io.BytesIO()
-    Image.new("RGB", (4, 4), (255, 0, 0)).save(buf, format="PNG")
-    png = buf.getvalue()
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(png))], "media_id long, kind string, payload binary"
-    )
-    feats = featurize(media, dims=8, use_real_decode=True).collect()
-    assert len(feats) == 1 and abs(sum(feats[0].features) - 1.0) < 1e-9
-    thumb = resize_images(media, 2, 2, use_real_decode=True).collect()[0]
-    assert len(bytes(thumb.thumbnail)) == 2 * 2 * 3
-    assert bytes(thumb.thumbnail)[:3] == b"\xff\x00\x00"  # still red
-
-
-def test_decode_still_loud_without_pillow():
-    """Without pillow (this sandbox), real decode stays a loud stub —
-    and audio/video raise regardless."""
-    import pytest
-
-    from skosconverter_spark.operators import multimodal as M
-
-    with pytest.raises(NotImplementedError):
-        M.decode_media(b"\x00" * 16, "audio")
-    if M._pil() is None:
-        with pytest.raises(NotImplementedError):
-            M.decode_media(b"\x89PNG", "image")
-        with pytest.raises(NotImplementedError):
-            M.real_resize(b"\x89PNG", 2, 2)

@@ -1,6 +1,5 @@
 """Coverage for the remaining SURVEY §2 inventory: JSON-LD source (S2),
-directory batch scan (S4), Turtle export sink (S9) round-trip,
-labels-by-language view (A6), uri fragment (C1)."""
+directory batch scan (S4), Turtle export sink (S9) round-trip."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.metrics import canonicalize
 from skosconverter_spark.operators.export import export_turtle_text, write_graph_table
-from skosconverter_spark.plans.views import labels_by_language, uri_fragment_from_label
 from skosconverter_spark.schemas import DOCS
 from skosconverter_spark.sources.docs import docs_from_directory
 from skosconverter_spark.sources.jsonld import parse_jsonld
@@ -114,23 +112,6 @@ def test_graph_table_pred_pruning(spark, tmp_path):
     assert scan.count() == 6  # animals, mammal(en+nl), dog, cat, fungus
     # pred-partitioned layout: the filter becomes a partition filter
     assert "PartitionFilters" in plan and "prefLabel" in plan
-
-
-def test_labels_by_language(spark):
-    docs = spark.createDataFrame(
-        [("v", "v", "ttl", load_fixture_text("vocab_multilang"))], schema=DOCS
-    )
-    triples = ok_triples(extract_triples(docs, EngineConfig()))
-    m = {r.uri: r.labels for r in labels_by_language(triples).collect()}
-    multi = [v for v in m.values() if len(v) > 1]
-    assert multi, "multilang fixture should have a node with several languages"
-
-
-def test_uri_fragment_from_label(spark):
-    df = spark.createDataFrame([("Hello, World!",), ("Tom & Jerry's Show",)], "s string")
-    got = [r.f for r in df.select(uri_fragment_from_label(F.col("s")).alias("f")).collect()]
-    # reference re.sub(r'\s+','_') collapses the double space left by '&' removal
-    assert got == ["hello_world", "tom_jerrys_show"]
 
 
 JSONLD_EXPANDED_DOC = """
