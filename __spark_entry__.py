@@ -30,7 +30,13 @@ def _fan_out(spark, df):
     on one core) serializes until the first shuffle. Fan the tiny scan
     out to the session's parallelism once; a real multi-file corpus
     already carries at least that many scan partitions and this is a
-    no-op with no shuffle added."""
+    no-op with no shuffle added.
+
+    The probe, ``df.rdd.getNumPartitions()``, plans the scan once more.
+    Measured warm at sf0.1 (local[4], 4-CPU box, median of 5 per caller):
+    ``_docs`` 44 ms, ``_emb`` 34 ms, ``_dedup_corpus`` 70 ms, less than
+    the 88–129 ms of the ``spark.read`` it follows. A check that plans
+    nothing would have to re-derive Spark's file splitting, so it stays."""
     par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
@@ -391,7 +397,7 @@ def q_kg_links(spark, sf_dir):
     # final aggregation is url-prefixed, so it reuses the links stage's
     # url partitioning
     labels = label_table(triples)
-    mentions = scan_mentions(pages, triples, labels=labels).localCheckpoint(eager=True)
+    mentions = scan_mentions(pages, labels).localCheckpoint(eager=True)
     best = link_stage(mentions, labels, spark.sparkContext.defaultParallelism)
     return best.groupBy("url", "norm_surface", "concept_uri").agg(
         F.count("*").alias("n_mentions"),

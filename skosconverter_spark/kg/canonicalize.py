@@ -107,27 +107,19 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
     return _frame(edges, "src", comp.items(), ("uri", "component"))
 
 
-def closure_local(pairs, max_iterations: int = 25) -> list[tuple]:
+def closure_local(pairs) -> list[tuple]:
     """(node, reached) for every node reached from ``node`` over one or
     more directed (child, parent) pairs, never (x, x): a BFS from each
-    node. A node's BFS level is its shortest-path hop distance, so the
-    deepest level of any BFS is D, the largest shortest-path distance.
-
-    Raises RuntimeError when D > 2^(max_iterations - 1): path doubling
-    reaches 2^k hops after k rounds and sees no change one round after
-    it has reached D, so that is exactly when it did not converge within
-    ``max_iterations`` rounds. Raises the driver guard's ValueError once
-    the pairs exceed ``MAX_DRIVER_ROWS``."""
+    node. Raises the driver guard's ValueError once the output pairs
+    exceed ``MAX_DRIVER_ROWS``."""
     adj: dict = defaultdict(set)
     for a, b in pairs:
         if a is not None and b is not None:  # null ids reach nothing
             adj[a].add(b)
     out: list[tuple] = []
-    depth = 0
     for start in adj:
-        seen, frontier, d = {start}, [start], 0
+        seen, frontier = {start}, [start]
         while frontier:
-            depth = max(depth, d)
             nxt = []
             for u in frontier:
                 for v in adj.get(u, ()):
@@ -135,14 +127,8 @@ def closure_local(pairs, max_iterations: int = 25) -> list[tuple]:
                         seen.add(v)
                         nxt.append(v)
                         out.append((start, v))
-            frontier, d = nxt, d + 1
+            frontier = nxt
         check_driver_sized(len(out), "transitive closure", MAX_DRIVER_ROWS)
-    if depth > 2 ** (max_iterations - 1):
-        raise RuntimeError(
-            f"transitive closure did not converge in {max_iterations} "
-            f"doubling rounds (a shortest path of {depth} hops exceeds "
-            f"2^{max_iterations - 1}); raise max_iterations"
-        )
     return out
 
 

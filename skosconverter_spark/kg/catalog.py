@@ -15,6 +15,8 @@ stage output        <base>/snap-<v>/ immutable        table commit
                     zstd parquet, one per write       (snapshot)
 commit record       <base>/_MANIFEST.json, replaced   metadata JSON +
                     atomically (temp file, rename)    pointer swap
+parent snapshot     "parent_snapshot_id" in the       parent snapshot id
+                    commit record (lineage)
 input fingerprint   count:hash-sum of the input       input snapshot id
 per-part lineage    (file, rows) from the parquet     manifest-file row
                     footers, read once at write       counts
@@ -29,11 +31,11 @@ on the session, which an offline build cannot have.
 
 ``write`` stages a new snapshot directory and, from the footers, its
 per-file row counts; ``commit`` makes it current by replacing the commit
-record, which names the snapshot, its parent (the snapshot it replaces)
-and the parent's schema. Until then the snapshot is in flight: only the
-adapter instance that wrote it reads it, and a crash leaves an orphan no
-other instance resolves. ``read(snapshot_id=...)`` travels back along
-the retained committed chain, the current snapshot and its parent.
+record, which names the snapshot and its parent (the snapshot it
+replaces). Until then the snapshot is in flight: only the adapter
+instance that wrote it reads it, and a crash leaves an orphan no other
+instance resolves. ``read`` and ``partition_rows`` resolve the same
+snapshot: this instance's in-flight write, else the commit.
 
 Reads plan from the commit record, not from the data: ``write`` notes
 the schema a read-back will have (``read_back_schema``: every field
@@ -144,35 +146,23 @@ class ParquetCatalogAdapter:
             ],
         }
 
-    def _snapshot(self, base: Path, snapshot_id: int | None) -> tuple[int, dict]:
-        """(id, schema JSON) of this instance's in-flight write, else of
-        the committed snapshot; an explicit id resolves only along the
-        in-flight write and the retained committed chain."""
-        inflight = self._inflight.get(str(base), {})
-        record = self.committed(base) or {}
-        for v, schema in (
-            (inflight.get("snapshot_id"), inflight.get("schema")),
-            (record.get("snapshot_id"), record.get("schema")),
-            (record.get("parent_snapshot_id"), record.get("parent_schema")),
-        ):
-            if v is not None and snapshot_id in (None, v):
-                return v, schema
-        if snapshot_id is None:
+    def _current(self, base: Path) -> dict:
+        """This instance's in-flight write at ``base``, else the commit."""
+        snap = self._inflight.get(str(base)) or self.committed(base)
+        if snap is None:
             raise FileNotFoundError(f"no committed stage at {base}")
-        raise ValueError(f"snapshot {snapshot_id} at {base} is not committed")
+        return snap
 
-    def read(
-        self, spark: SparkSession, base: Path, snapshot_id: int | None = None
-    ) -> DataFrame:
-        v, schema = self._snapshot(base, snapshot_id)
-        return spark.read.schema(StructType.fromJson(schema)).parquet(str(base / f"snap-{v}"))
+    def read(self, spark: SparkSession, base: Path) -> DataFrame:
+        snap = self._current(base)
+        schema = StructType.fromJson(snap["schema"])
+        return spark.read.schema(schema).parquet(str(base / f"snap-{snap['snapshot_id']}"))
 
     def partition_rows(self, base: Path) -> list[tuple[int, int]]:
         """(write_partition_id, rows) per output file of the in-flight
         write, else of the committed snapshot: recorded from the footers
         at write time, so no Spark job and no second scan."""
-        snap = self._inflight.get(str(base)) or self.committed(base)
-        return file_rows(snap["files"])
+        return file_rows(self._current(base)["files"])
 
     def commit(
         self, base: Path, stage: str, input_fingerprint: str, rows: int, wall_ms: int
@@ -186,7 +176,6 @@ class ParquetCatalogAdapter:
             "wall_ms": wall_ms,
             **snap,
             "parent_snapshot_id": parent.get("snapshot_id"),
-            "parent_schema": parent.get("schema"),
         }
         tmp = base / f"_MANIFEST.json.{snap['snapshot_id']}.tmp"
         tmp.write_text(json.dumps(record, indent=2))

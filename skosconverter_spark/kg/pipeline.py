@@ -227,7 +227,7 @@ def run_pipeline(
         return label_table(vocab_triples)
 
     def mentions(i):
-        return scan_mentions(i["10_extract"], vocab_triples, labels=i["labels"])
+        return scan_mentions(i["10_extract"], i["labels"])
 
     def page_triples(i):
         md = i["10_extract"].select(

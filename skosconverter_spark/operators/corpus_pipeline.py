@@ -14,7 +14,6 @@ the expensive stages see the fewest documents:
                     component's min doc_id). One driver-local CC kernel
                     for KG canonicalization and dedup clustering (over
                     5M duplicate edges fails its driver-size guard).
-4. optional deterministic downsample (operators.filter.hash_sample)
 
 ``prepare_corpus_ids`` returns the surviving doc_ids; a caller keeps its
 documents with a semi-join on them. Everything is a DataFrame
@@ -32,7 +31,7 @@ from pyspark.sql import functions as F
 from skosconverter_spark.functions.text import fingerprint
 from skosconverter_spark.kg.canonicalize import connected_components
 from skosconverter_spark.operators.dedup import minhash_lsh_pairs
-from skosconverter_spark.operators.filter import hash_sample, quality_flags
+from skosconverter_spark.operators.filter import quality_flags
 
 
 def prepare_corpus_ids(
@@ -40,17 +39,10 @@ def prepare_corpus_ids(
     text_col: str = "text",
     min_words: int = 50,
     neardup_threshold: float = 0.8,
-    sample_fraction: float | None = None,
-    salt: str = "",
-    cc_max_iterations: int = 25,
 ) -> DataFrame:
     """(doc_id): the ids that survive the cascade. Deterministic keep
     policy at every stage: min doc_id represents an exact-duplicate group
-    and a near-duplicate component.
-
-    ``cc_max_iterations`` bounds the near-dup clustering: connected_components
-    raises when a document sits ``cc_max_iterations`` or more hops from
-    its component's min doc_id (rather than silently split a chain)."""
+    and a near-duplicate component."""
     passed = (
         quality_flags(docs, text_col, min_words=min_words)
         .filter(F.col("keep"))
@@ -75,12 +67,8 @@ def prepare_corpus_ids(
         )
         .distinct()
     )
-    comp = connected_components(edges, cc_max_iterations)
+    comp = connected_components(edges)
     drops = comp.filter(F.col("component") < F.col("uri")).select(
         F.col("uri").alias("doc_id")
     )
-    survivors = exact.join(drops, "doc_id", "left_anti")
-
-    if sample_fraction is not None:
-        survivors = hash_sample(survivors, sample_fraction, "doc_id", salt)
-    return survivors
+    return exact.join(drops, "doc_id", "left_anti")

@@ -48,15 +48,6 @@ N_BANDS = 4
 MAX_DOC_SHINGLES = 1_000_000
 
 
-def _regex_quote(sep: str) -> str:
-    """Java-regex-literal quoting (Pattern.quote semantics) for separator
-    strings handed to F.split, which treats its pattern as a Java regex
-    while array_join treats the same string literally — an unquoted '.'
-    or '|' separator would split on every character and reassemble
-    garbage. \\Q...\\E with the standard embedded-\\E break-out."""
-    return "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
 def norm_tokens(col):
     return F.array_remove(
         F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " "), ""
@@ -111,16 +102,16 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def line_dedup(
-    docs: DataFrame, text_col: str = "text", sep: str = "\n"
-) -> DataFrame:
+def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, clean_text, n_kept, n_removed): corpus-wide exact line
     deduplication — the C4/RefinedWeb pass that strips boilerplate
-    repeated across pages (nav bars, cookie banners, footers). Each
-    distinct non-empty line survives only at its FIRST corpus occurrence
-    (min (doc_id, position)); every other occurrence is dropped and the
-    document reassembled from its surviving lines in order. Empty lines
-    are exempt (they are structure, not content).
+    repeated across pages (nav bars, cookie banners, footers). Lines are
+    the text split on "\n", which F.split's Java regex matches literally
+    (a "\r" stays part of its line). Each distinct non-empty line
+    survives only at its FIRST corpus occurrence (min (doc_id,
+    position)); every other occurrence is dropped and the document
+    reassembled from its surviving lines in order. Empty lines are
+    exempt (they are structure, not content).
 
     Plan shape at scale: posexplode (one pass) → per-line winner as a
     hash agg keyed on md5(line) — NEVER the raw text: on a
@@ -133,7 +124,7 @@ def line_dedup(
     total, both on uniform keys; no windows, no all-pairs anything."""
     lines = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), _regex_quote(sep))).alias(
+        F.posexplode(F.split(F.col(text_col), "\n")).alias(
             "pos", "line"
         ),
     )
@@ -161,7 +152,7 @@ def line_dedup(
                     ),
                     lambda s: s["v"],
                 ),
-                sep,
+                "\n",
             ).alias("clean_text"),
             F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_kept"),
             F.sum(F.when(F.col("keep"), 0).otherwise(1)).alias("n_removed"),
@@ -322,24 +313,23 @@ def ngram_jaccard_pairs(
     where shingles repeat — the scale path is ``minhash_lsh_pairs``.
     To stop a caller pointing it at a corpus by accident, one cheap
     hash-agg pass computes Σ df² first and raises when it exceeds
-    ``join_cost_budget`` (pass 0 to disable; the estimate never moves
-    the shingle table anywhere)."""
+    ``join_cost_budget`` (the estimate never moves the shingle table
+    anywhere)."""
     sh = doc_shingles(docs, text_col, n).localCheckpoint(eager=True)
-    if join_cost_budget:
-        cost_row = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .agg(F.sum(F.col("df") * F.col("df")).alias("cost"))
-            .first()
+    cost_row = (
+        sh.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .agg(F.sum(F.col("df") * F.col("df")).alias("cost"))
+        .first()
+    )
+    cost = cost_row.cost or 0
+    if cost > join_cost_budget:
+        raise ValueError(
+            f"ngram_jaccard_pairs is the exact all-pairs verifier; this "
+            f"input's inverted-index self-join would emit ~{cost:,} rows "
+            f"(Σ df² > budget {join_cost_budget:,}). Use minhash_lsh_pairs "
+            "for corpus-sized inputs, or raise join_cost_budget explicitly."
         )
-        cost = cost_row.cost or 0
-        if cost > join_cost_budget:
-            raise ValueError(
-                f"ngram_jaccard_pairs is the exact all-pairs verifier; this "
-                f"input's inverted-index self-join would emit ~{cost:,} rows "
-                f"(Σ df² > budget {join_cost_budget:,}). Use minhash_lsh_pairs "
-                "for corpus-sized inputs, or raise join_cost_budget explicitly."
-            )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.withColumnRenamed("doc_id", "doc_a")
     b = sh.withColumnRenamed("doc_id", "doc_b")

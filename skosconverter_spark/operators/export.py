@@ -27,9 +27,7 @@ from skosconverter_spark.sources.turtle import serialize_turtle
 
 
 def export_turtle_text(
-    triples: DataFrame,
-    prefixes: dict[str, str] | None = None,
-    max_rows: int | None = None,
+    triples: DataFrame, max_rows: int | None = None
 ) -> tuple[str, dict]:
     """(turtle_text, summary) — summary mirrors the reference's logged
     counts (:1567-1573): triples, concepts, schemes. Guarded: one Turtle
@@ -43,7 +41,7 @@ def export_turtle_text(
     ts = [Triple(*r) for r in arrow_rows(tbl)]
     concepts = {t.subj for t in ts if t.pred == RDF_TYPE and t.obj == SKOS_CONCEPT}
     schemes = {t.subj for t in ts if t.pred == RDF_TYPE and t.obj == SKOS_CONCEPT_SCHEME}
-    text = serialize_turtle(ts, prefixes)
+    text = serialize_turtle(ts)
     return text, {
         "triples": len(ts),
         "concepts": len(concepts),

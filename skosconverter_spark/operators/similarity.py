@@ -7,11 +7,13 @@
 - ``ivf_topk``: the scale path — a deterministic IVF variant: coarse
   centroids are a fixed modulus sample of the corpus, every vector is
   assigned to its nearest centroid (one broadcast join), and a query
-  only scans its own centroid's bucket (nprobe=1). Recall < 1 by
-  design; the brute-force operator is the verifier.
-- ``embedding_neardup_pairs``: near-duplicate detection by pairwise
-  cosine ≥ τ over bucket-mates (same IVF bucket), the embedding-space
-  analogue of LSH dedup.
+  only scans its own centroid's bucket. Recall < 1 by design; the
+  brute-force operator is the verifier.
+- ``embedding_neardup_pairs``: the exact near-duplicate verifier,
+  pairwise cosine ≥ τ over all pairs. Its scale paths compare only
+  IVF bucket-mates (``embedding_neardup_bucketed``) or SRP band-bucket
+  mates (``embedding_neardup_srp``), the embedding-space analogues of
+  LSH dedup.
 
 No UDFs: everything compiles to Catalyst expressions.
 """
@@ -54,8 +56,9 @@ def _unrolled_sq(a: Column, n: int) -> Column:
     return acc
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    """The interpreted-fold form: one expression node regardless of dim.
+def dot(a: Column, b: Column) -> Column:
+    """Left-fold dot product in doubles (order-stable across engines):
+    the interpreted-fold form, one expression node regardless of dim.
     Used directly where MANY dots appear in one projection (the b-bit
     SRP signature emits bits-many dots per row; unrolling all of them
     ballooned codegen/compile time past what the per-row win repays —
@@ -65,11 +68,6 @@ def _dot_fold(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Left-fold dot product in doubles (order-stable across engines)."""
-    return _dot_fold(a, b)
 
 
 def norm(a: Column) -> Column:
@@ -86,22 +84,16 @@ def dot_fast(a: Column, b: Column) -> Column:
     the pairwise near-dup verifiers and IVF scoring, where candidate
     counts are quadratic-ish per bucket — while query-sized paths
     (cosine_topk's broadcast top-k) keep the construction-light fold."""
-    fold = _dot_fold(a, b)
-    if not DIM_HINT:
-        return fold
     return F.when(
         (F.size(a) == DIM_HINT) & (F.size(b) == DIM_HINT),
         _unrolled_dot(a, b, DIM_HINT),
-    ).otherwise(fold)
+    ).otherwise(dot(a, b))
 
 
 def norm_fast(a: Column) -> Column:
-    fold = norm(a)
-    if not DIM_HINT:
-        return fold
     return F.when(
         F.size(a) == DIM_HINT, F.sqrt(_unrolled_sq(a, DIM_HINT))
-    ).otherwise(fold)
+    ).otherwise(norm(a))
 
 
 def cosine_fast(a: Column, b: Column) -> Column:
@@ -153,34 +145,18 @@ def ivf_assign(
     centroid_mod: int = 97,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_assign: int = 1,
 ) -> DataFrame:
-    """(vec_id, centroid_id): the ``n_assign`` nearest deterministic
-    centroids per vector (1 = bucket assignment; >1 = the probe list a
-    query scans).
+    """(vec_id, centroid_id): each vector's nearest deterministic
+    centroid, its bucket. Centroids are the vectors whose id ≡ 0 (mod
+    centroid_mod) — a fixed, engine-agnostic coarse quantizer (real
+    deployments train k-means; the assignment plumbing is identical).
 
-    Centroids are the vectors whose id ≡ 0 (mod centroid_mod) — a fixed,
-    engine-agnostic coarse quantizer (real deployments train k-means;
-    the assignment plumbing is identical)."""
-    return _ivf_assign_ranked(vectors, centroid_mod, id_col, vec_col, n_assign).select(
-        id_col, "centroid_id"
-    )
-
-
-def _ivf_assign_ranked(
-    vectors: DataFrame,
-    centroid_mod: int,
-    id_col: str,
-    vec_col: str,
-    n_assign: int,
-) -> DataFrame:
-    """(vec_id, centroid_id, rn) for rn ≤ n_assign — materialized eagerly:
-    the vectors×centroids scoring pass is the expensive stage, and every
-    consumer joins the assignment from two sides (self-join / query+corpus);
-    without the lineage cut the scoring subtree executes once PER side
-    (no ReusedExchange across the window), doubling the dominant cost.
-    The checkpointed table is two longs + a rank per vector — negligible
-    next to re-scoring."""
+    Materialized eagerly: the vectors×centroids scoring pass is the
+    expensive stage, and every consumer joins the assignment from two
+    sides (self-join / query+corpus); without the lineage cut the
+    scoring subtree executes once PER side (no ReusedExchange across the
+    window), doubling the dominant cost. The checkpointed table is two
+    longs per vector — negligible next to re-scoring."""
     cents = vectors.filter((F.col(id_col) % centroid_mod) == 0).select(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("c_vec")
     )
@@ -192,8 +168,8 @@ def _ivf_assign_ranked(
     w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), "centroid_id")
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_assign)
-        .select(id_col, "centroid_id", "rn")
+        .filter(F.col("rn") == 1)
+        .select(id_col, "centroid_id")
         .localCheckpoint(eager=True)
     )
 
@@ -205,24 +181,18 @@ def ivf_topk(
     centroid_mod: int = 97,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nprobe: int = 1,
 ) -> DataFrame:
     """Approximate top-k: each vector lives in exactly ONE centroid
-    bucket; a query scans its ``nprobe`` nearest buckets. nprobe trades
-    scan cost for recall (nprobe = #centroids degenerates to exact
-    brute force — asserted by test); buckets are disjoint so no
-    dedup pass is needed."""
-    # ONE scoring pass covers both sides: vectors live in their rn=1
-    # bucket, queries probe their rn <= nprobe buckets
-    ranked = _ivf_assign_ranked(vectors, centroid_mod, id_col, vec_col, nprobe)
-    assign = ranked.filter(F.col("rn") == 1).select(id_col, "centroid_id")
+    bucket, and a query scans only its own bucket; buckets are disjoint
+    so no dedup pass is needed."""
+    # ONE scoring pass assigns both sides: queries are rows of vectors
+    assign = ivf_assign(vectors, centroid_mod, id_col, vec_col)
     v = vectors.join(assign, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("v_vec"),
         "centroid_id",
     )
-    q_assign = ranked.select(id_col, "centroid_id")
-    q = queries.join(q_assign, id_col).select(
+    q = queries.join(assign, id_col).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         "centroid_id",
@@ -418,7 +388,7 @@ def srp_signature(
     signs = srp_signs(bits, dim)
     bit_cols = [
         F.when(
-            _dot_fold(F.col(vec_col), F.array(*[F.lit(s) for s in signs[j]])) > 0,
+            dot(F.col(vec_col), F.array(*[F.lit(s) for s in signs[j]])) > 0,
             F.lit("1"),
         ).otherwise(F.lit("0"))
         for j in range(bits)
@@ -435,33 +405,10 @@ def srp_candidates(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_flips: int = 0,
 ) -> DataFrame:
-    """(id_a, id_b) candidate pairs from banded SRP signatures.
-
-    ``probe_flips=1`` enables multi-probe (Lv et al. 2007 applied to the
-    Charikar signature): the probe side of the band join additionally
-    visits the r buckets at Hamming distance 1, so a pair is a candidate
-    if some band differs by AT MOST ONE bit instead of zero. Per-band
-    collision rises from p^r to p^r + r·p^(r-1)(1-p) — the recall lever
-    loose thresholds need — while buckets stay r bits fine-grained (the
-    alternative, shorter bands, collapses the bucket space and the
-    Σ|bucket|² candidate cost with it). Multi-probe only pays off with
-    LONG bands: at the flips=0 default (16×4, r=4) probing lifts random
-    pairs to ~0.31 per-band collision (near-all-pairs); use r≥8, e.g.
-    bits=96, bands=12, where the measured operating point on the synthetic
-    corpus is recall 0.81 at τ=0.35 with 36% candidate fraction. Probing
-    replicates ONE join side (r+1)×; one-sided probing suffices because
-    a 1-bit band difference between x and y is repaired by flipping that
-    bit on either side.
-    ``probe_flips=2`` additionally visits the C(r,2) buckets at Hamming
-    distance 2 (replication 1 + r + r(r−1)/2, one-sided for the same
-    repair argument) — the lever that makes LONG bands (r ≥ 12, a much
-    steeper s-curve than r=8) usable at loose thresholds: per-band
-    collision becomes p^r + r·p^(r−1)q + C(r,2)·p^(r−2)q², which decays
-    fast for random pairs (p≈0.5) while staying high for similar ones."""
-    if probe_flips not in (0, 1, 2):
-        raise ValueError(f"probe_flips must be 0, 1 or 2, got {probe_flips}")
+    """(id_a, id_b) candidate pairs from banded SRP signatures: a pair is
+    a candidate iff some band of bits/bands signature bits is equal on
+    both sides — an equi-join on (band, bucket)."""
     r = bits // bands
     sig = srp_signature(vectors, bits, dim, id_col, vec_col)
     band_structs = [
@@ -477,32 +424,6 @@ def srp_candidates(
         .localCheckpoint(eager=True)
     )
     a = band_rows.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    if probe_flips >= 1:
-        flip = lambda c: F.when(c == "1", F.lit("0")).otherwise(F.lit("1"))
-
-        def flipped(positions):
-            # one concat over the bucket with the given 0-based bit
-            # positions inverted (positions sorted ascending)
-            parts, prev = [], 0
-            for p in positions:
-                if p > prev:
-                    parts.append(F.substring("bucket", prev + 1, p - prev))
-                parts.append(flip(F.substring("bucket", p + 1, 1)))
-                prev = p + 1
-            if prev < r:
-                parts.append(F.substring("bucket", prev + 1, r - prev))
-            return F.concat(*parts)
-
-        variants = [F.col("bucket")] + [flipped([i]) for i in range(r)]
-        if probe_flips == 2:
-            variants += [
-                flipped([i, j]) for i in range(r) for j in range(i + 1, r)
-            ]
-        a = band_rows.select(
-            F.col(id_col).alias("id_a"),
-            "band",
-            F.explode(F.array(*variants)).alias("bucket"),
-        )
     b_ = band_rows.select(F.col(id_col).alias("id_b"), "band", "bucket")
     return (
         a.join(b_, ["band", "bucket"])
@@ -520,30 +441,21 @@ def embedding_neardup_srp(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_flips: int = 0,
 ) -> DataFrame:
     """The LSH-bucketed near-dup alternative to the IVF gate: band the
     SRP signature (bands × bits/bands), self-join per band bucket for
-    candidates (optionally multi-probed — see srp_candidates), verify
-    with exact cosine ≥ τ. Identical vectors share every band;
-    near-identical ones share some band with probability following the
-    LSH s-curve. Same shuffle shape as the minhash text dedup — a
-    uniform equi-join on (band, bucket), never all-pairs.
+    candidates (``srp_candidates``), verify with exact cosine ≥ τ.
+    Identical vectors share every band; near-identical ones share some
+    band with probability following the LSH s-curve. Same shuffle shape
+    as the minhash text dedup — a uniform equi-join on (band, bucket),
+    never all-pairs.
 
     Measured on the synthetic sf0.001 corpus at τ=0.35 (recall vs the
-    exact all-pairs verifier; cost = candidate fraction of n²/2):
-    default 16×4 flips=0 → recall 0.54 @ 24%; bits=96, bands=12,
-    probe_flips=1 → recall 0.81 @ 36% (pinned in
-    tests/test_round3_fixes.py); the high-recall gate is bits=288,
-    bands=24, probe_flips=2 (r=12 long bands + 2-bit probing) →
-    recall 0.93 @ 39% (pinned in tests/test_round5_fixes.py) at the
-    price of 79× one-sided probe replication. At this loose a τ, random
-    pairs agree per bit with p≈0.5, so ~1/3 candidate fraction is near
-    the floor; tighter thresholds (τ≥0.8, real near-dup) prune far
-    harder."""
-    candidates = srp_candidates(
-        vectors, bits, bands, dim, id_col, vec_col, probe_flips
-    )
+    exact all-pairs verifier; cost = candidate fraction of n²/2): the
+    default 16×4 gives recall 0.54 @ 24%. At this loose a τ, random
+    pairs agree per bit with p≈0.5; tighter thresholds (τ≥0.8, real
+    near-dup) prune far harder."""
+    candidates = srp_candidates(vectors, bits, bands, dim, id_col, vec_col)
     va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("a_vec"))
     vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("b_vec"))
     return (
@@ -567,8 +479,8 @@ def embedding_neardup_bucketed(
     join in operators.dedup). Only bucket-mates are compared, so the
     candidate count is Σ|bucket|² instead of n²/2 — an equi-join on
     centroid_id that shuffles each vector once. Recall < 1 by design
-    (a near-dup pair straddling a bucket boundary is missed; more
-    probes / coarser centroids trade cost for recall);
+    (a near-dup pair straddling a bucket boundary is missed; coarser
+    centroids trade cost for recall);
     ``embedding_neardup_pairs`` is the exact verifier and the recall
     measurement is pinned in tests."""
     assign = ivf_assign(vectors, centroid_mod, id_col, vec_col)

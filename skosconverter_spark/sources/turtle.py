@@ -189,18 +189,13 @@ def _turtle_escape(s: str) -> str:
     return s.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
 
 
-def serialize_turtle(
-    triples: list[Triple], prefixes: dict[str, str] | None = None
-) -> str:
+def serialize_turtle(triples: list[Triple]) -> str:
     """Deterministic canonical Turtle: prefixes sorted, subjects grouped
     and sorted, predicates sorted within subject, objects sorted within
     predicate (SURVEY.md §2.6 O5). rdflib's serializer is not imitated —
     triple-set equality is the contract, byte layout is ours."""
-    pfx = dict(WELL_KNOWN_PREFIXES)
-    if prefixes:
-        pfx.update(prefixes)
     # longest-namespace-first matching for compaction
-    ns_sorted = sorted(pfx.items(), key=lambda kv: -len(kv[1]))
+    ns_sorted = sorted(WELL_KNOWN_PREFIXES.items(), key=lambda kv: -len(kv[1]))
 
     def compact(iri: str) -> str:
         for name, ns in ns_sorted:
@@ -220,7 +215,7 @@ def serialize_turtle(
     for t in triples:
         by_subj.setdefault(t.subj, {}).setdefault(t.pred, []).append(t)
 
-    lines = [f"@prefix {name}: <{ns}> ." for name, ns in sorted(pfx.items())]
+    lines = [f"@prefix {name}: <{ns}> ." for name, ns in sorted(WELL_KNOWN_PREFIXES.items())]
     lines.append("")
     for subj in sorted(by_subj):
         preds = by_subj[subj]

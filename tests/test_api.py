@@ -351,7 +351,7 @@ def test_label_table_is_one_job(spark):
     pages = spark.createDataFrame([("u", "a dog")], "url string, text string")
     _, jobs = _jobs_of(
         spark, "label_consumers_job_count",
-        lambda: (scan_mentions(pages, vocab, labels=labels), vocab_score_tables(labels)),
+        lambda: (scan_mentions(pages, labels), vocab_score_tables(labels)),
     )
     assert jobs == 0, f"the label consumers issued {jobs} Spark jobs"
     vocab.unpersist()
@@ -361,7 +361,9 @@ def test_traced_benchmark_targets_exist():
     """perfbench's --trace 1 wraps engine functions by (module, attribute)
     from perfbench/layers.py WRAPPED, the ParquetCatalogAdapter methods
     named in CATALOG_METHODS and StageRunner.run_stage; deleting or
-    renaming one makes the traced run fail with AttributeError."""
+    renaming one makes the traced run fail with AttributeError. Every run
+    also imports names from the engine in perfbench/workloads.py and
+    run.py; deleting one of those makes it fail with ImportError."""
     import ast
     import importlib
     from pathlib import Path
@@ -369,7 +371,8 @@ def test_traced_benchmark_targets_exist():
     from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
     from skosconverter_spark.kg.pipeline import StageRunner
 
-    path = Path(__file__).resolve().parents[1] / "perfbench" / "layers.py"
+    perfbench = Path(__file__).resolve().parents[1] / "perfbench"
+    path = perfbench / "layers.py"
     tables = {
         t.id: ast.literal_eval(node.value)
         for node in ast.parse(path.read_text(encoding="utf-8")).body
@@ -378,9 +381,16 @@ def test_traced_benchmark_targets_exist():
         if getattr(t, "id", None) in ("WRAPPED", "CATALOG_METHODS")
     }
     wrapped, catalog_methods = tables["WRAPPED"], tables["CATALOG_METHODS"]
+    imported = [
+        (node.module, alias.name)
+        for name in ("workloads.py", "run.py")
+        for node in ast.walk(ast.parse((perfbench / name).read_text(encoding="utf-8")))
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("skosconverter_spark")
+        for alias in node.names
+    ]
     missing = [
         (module, attr)
-        for module, attr, _ in wrapped
+        for module, attr in [(m, a) for m, a, _ in wrapped] + imported
         if not hasattr(importlib.import_module(module), attr)
     ]
     missing += [
@@ -390,7 +400,9 @@ def test_traced_benchmark_targets_exist():
     ]
     if not hasattr(StageRunner, "run_stage"):
         missing.append(("StageRunner", "run_stage"))
-    assert wrapped and catalog_methods and not missing, f"traced targets gone: {missing}"
+    assert wrapped and catalog_methods and imported and not missing, (
+        f"benchmark targets gone: {missing}"
+    )
 
 
 def _jobs_of(spark, group, fn):

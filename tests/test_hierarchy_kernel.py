@@ -1,7 +1,7 @@
 """The hierarchy queries, pinned on small hand-built inputs and the ttl
 fixtures: ``closure_local`` equals a brute-force closure (never a
-``(x, x)`` pair, cycles included) and raises exactly when the largest
-shortest-path hop distance D exceeds 2^(max_iterations - 1);
+``(x, x)`` pair, cycles included) and raises exactly when its output
+exceeds the driver-size gate;
 ``q_skos_best_label`` picks the preferred language, then store order,
 then the uri's local part; ``q_skos_orphans`` returns the orphan anchors
 the DFS renders, each under the scheme the render shows it in."""
@@ -96,12 +96,18 @@ def test_transitive_closure_matches_brute_force(pairs):
 
 
 @pytest.mark.parametrize("depth,budget", [(1, 1), (2, 1), (2, 2), (3, 2), (4, 3), (5, 3)])
-def test_transitive_closure_raises_iff_depth_exceeds_budget(depth, budget):
-    if depth > 2 ** (budget - 1):
-        with pytest.raises(RuntimeError, match="did not converge"):
-            closure_local(_chain(depth), max_iterations=budget)
+def test_transitive_closure_raises_iff_depth_exceeds_budget(depth, budget, monkeypatch):
+    """The output gate, set to the closure size of a ``budget``-hop chain
+    (budget·(budget + 1)/2 pairs): a ``depth``-hop chain's closure passes
+    it iff depth ≤ budget."""
+    from skosconverter_spark.kg import canonicalize
+
+    monkeypatch.setattr(canonicalize, "MAX_DRIVER_ROWS", budget * (budget + 1) // 2)
+    if depth > budget:
+        with pytest.raises(ValueError, match="gated at"):
+            closure_local(_chain(depth))
     else:
-        assert set(closure_local(_chain(depth), budget)) == _closure(_chain(depth))
+        assert set(closure_local(_chain(depth))) == _closure(_chain(depth))
 
 
 def test_transitive_closure_keeps_the_id_type():

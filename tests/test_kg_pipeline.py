@@ -72,7 +72,8 @@ def test_extract_text_byte_identical_per_url(pages):
 
 def test_mentions_find_known_concepts(spark, pages, vocab):
     pt = extract_text(pages)
-    cands = mention_candidates(scan_mentions(pt, vocab), label_table(vocab))
+    labels = label_table(vocab)
+    cands = mention_candidates(scan_mentions(pt, labels), labels)
     got = {
         (r.url, r.concept_uri.rsplit("#", 1)[1])
         for r in cands.select("url", "concept_uri").distinct().collect()
@@ -87,7 +88,8 @@ def test_multiword_and_altlabel_mentions(spark, vocab):
     pt = spark.createDataFrame(
         [("u1", "A canine and a feline met; Mammalia rejoiced.")], "url string, text string"
     )
-    cands = mention_candidates(scan_mentions(pt, vocab), label_table(vocab))
+    labels = label_table(vocab)
+    cands = mention_candidates(scan_mentions(pt, labels), labels)
     keys = {r.concept_uri.rsplit("#", 1)[1] for r in cands.collect()}
     assert {"dog", "cat", "mammal"} <= keys
 
@@ -122,7 +124,7 @@ def test_scanner_and_labels_share_one_normalizer(spark):
     pages = spark.createDataFrame(list(zip(urls, texts)), "url string, text string")
     got = sorted(
         (r.url, r.surface, r.norm_surface, r.begin, r.end)
-        for r in scan_mentions(pages, vocab).collect()
+        for r in scan_mentions(pages, label_table(vocab)).collect()
     )
     assert all(ns == normalize_surface(sf) for _, sf, ns, _, _ in got)
     want = reference_walk(urls, texts, _Trie([normalize_surface(x) for x in labels]))
@@ -658,10 +660,12 @@ def test_store_keeps_at_most_two_committed_snapshots(spark, tmp_path):
 
     base = tmp_path / "kg" / "10_extract"
     runner = StageRunner(spark, str(tmp_path / "kg"))
-    for i in range(6):
+    outs = [
         runner.run_stage("10_extract", f"fp{i}", lambda i=i: spark.range(i + 1).toDF("x"))
+        for i in range(6)
+    ]
     assert sorted(p.name for p in base.glob("snap-*")) == ["snap-5", "snap-6"]
-    assert runner.catalog.read(spark, base, snapshot_id=5).count() == 5
+    assert outs[4].count() == 5  # the parent snapshot is retained
     inflight = ParquetCatalogAdapter()
     inflight.write(spark.range(3).toDF("x"), base)
     runner.run_stage("10_extract", "fp6", lambda: spark.range(9).toDF("x"))

@@ -11,14 +11,17 @@ texts built to hit every boundary subtlety:
 - multi-token surfaces spanning arbitrary gaps (punctuation, newlines,
   long runs of non-word chars) between consecutive tokens;
 - overlapping surfaces ("new" and "new york" both emitted), and prefix
-  cut-off windows.
+  cut-off windows;
+- combining marks (Unicode Mn/Mc/Me) as word characters: an NFD accent
+  or a Devanagari vowel sign stays inside its word.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import sys
+import unicodedata
 
-from skosconverter_spark.kg.mentions import _WORD_RE, _Trie, _hit_regex
+from skosconverter_spark.kg.mentions import _MARKS, _WORD_RE, _Trie, normalize_surface
 
 
 def reference_walk(urls, texts, trie):
@@ -110,9 +113,44 @@ def test_fast_kernel_matches_on_bench_corpus():
     assert got == ref
 
 
+NOIR_CAFE = unicodedata.normalize("NFD", "Noir Café")  # "e" + U+0301
+HINDI = "हिन्दी भाषा"  # vowel signs (Mc/Mn) and a virama (Mn)
+
+
+def test_combining_marks_stay_in_their_word():
+    """A combining mark belongs to the word it follows, in
+    normalize_surface and in the scanned surface alike; a word that a
+    stray mark precedes is not a token start."""
+    assert normalize_surface(NOIR_CAFE) == NOIR_CAFE.lower()
+    assert normalize_surface(HINDI) == HINDI
+    trie = _Trie([normalize_surface(NOIR_CAFE), normalize_surface(HINDI)])
+    texts = [f"at the {NOIR_CAFE}!", f"{HINDI} और", f"\u0301{NOIR_CAFE}", "Noir Cafe"]
+    urls = [f"u{i}" for i in range(len(texts))]
+    want = [
+        ("u0", NOIR_CAFE, NOIR_CAFE.lower(), 7, 7 + len(NOIR_CAFE)),
+        ("u1", HINDI, HINDI, 0, len(HINDI)),
+    ]
+    assert fast_scan(urls, texts, trie) == want
+    assert reference_walk(urls, texts, trie) == want
+
+
+def test_mark_class_is_unicodedata_mn_mc_me():
+    """The committed mark class is every Mn/Mc/Me code point of this
+    interpreter's unicodedata, as ascending ranges."""
+    ranges: list[list[int]] = []
+    for cp in range(sys.maxunicode + 1):
+        if unicodedata.category(chr(cp)) in ("Mn", "Mc", "Me"):
+            if ranges and ranges[-1][1] == cp - 1:
+                ranges[-1][1] = cp
+            else:
+                ranges.append([cp, cp])
+    want = "".join(chr(a) if a == b else f"{chr(a)}-{chr(b)}" for a, b in ranges)
+    assert _MARKS == want, f"regenerate _MARKS for Unicode {unicodedata.unidata_version}"
+
+
 def test_scan_mentions_end_to_end(spark):
     """The full Spark operator on a tiny vocab + pages frame."""
-    from skosconverter_spark.kg.mentions import scan_mentions
+    from skosconverter_spark.kg.mentions import label_table, scan_mentions
     from skosconverter_spark.config import SKOS_PREF_LABEL, SKOS_ALT_LABEL
 
     triples = spark.createDataFrame(
@@ -132,7 +170,7 @@ def test_scan_mentions_end_to_end(spark):
     )
     got = sorted(
         (r.url, r.surface, r.norm_surface, r.begin, r.end)
-        for r in scan_mentions(pages, triples).collect()
+        for r in scan_mentions(pages, label_table(triples)).collect()
     )
     assert got == [
         ("u1", "Big\nApple", "big apple", 30, 39),

@@ -23,11 +23,12 @@ def _docs(spark, texts):
 def test_ngram_jaccard_guard_trips_and_disables(spark):
     from skosconverter_spark.operators.dedup import ngram_jaccard_pairs
 
+    # 5 shingles, each in all 6 documents: Σ df² = 5 · 36 = 180
     docs = _docs(spark, ["the cat sat on the mat today"] * 6)
     with pytest.raises(ValueError, match="all-pairs verifier"):
-        ngram_jaccard_pairs(docs, 0.5, join_cost_budget=10).count()
-    # budget 0 disables; identical duplicate texts -> all 15 pairs at 1.0
-    got = ngram_jaccard_pairs(docs, 0.5, join_cost_budget=0).collect()
+        ngram_jaccard_pairs(docs, 0.5, join_cost_budget=179).count()
+    # at the budget it runs; identical duplicate texts -> all 15 pairs at 1.0
+    got = ngram_jaccard_pairs(docs, 0.5, join_cost_budget=180).collect()
     assert len(got) == 15 and all(r.jaccard == 1.0 for r in got)
     # default budget unchanged semantics on small input
     assert ngram_jaccard_pairs(docs, 0.5).count() == 15

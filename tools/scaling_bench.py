@@ -77,7 +77,7 @@ def compute_job():
     pt = extract_text(pages).localCheckpoint(eager=True)
     docs = pt.select("url", F.lit("md").alias("fmt"), F.col("text").alias("payload"))
     labels = label_table(vocab)
-    m = scan_mentions(pt, vocab, labels=labels).localCheckpoint(eager=True)
+    m = scan_mentions(pt, labels).localCheckpoint(eager=True)
     branches = [
         lambda: ok_triples(extract_triples(docs, cfg)).count(),
         lambda: link_stage(m, labels, cpus).count(),
